@@ -1,0 +1,3 @@
+"""End-to-end and per-layer benchmark of the sparkolumnar encode/decode
+jobs. Entry point: ``python3 perfbench/run.py --workload <name> --seed <n>
+--seconds <s> --trace <0|1>``; see perfbench/README.md."""
