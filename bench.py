@@ -36,7 +36,7 @@ def build_spark(cpus: str):
         # bound (a NOOP python pass over the same shuffled plan costs ~90%
         # of the fast-encode wall — measured in BENCH/BASELINE.md), so
         # fewer/larger IPC messages directly buy throughput; codec working
-        # sets stay cache-friendly because fsst/split chunk internally
+        # sets stay cache-friendly because zstd frames its input internally
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "32768")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", "1073741824")
@@ -191,7 +191,7 @@ def run_bench(spark, sf_dir: str, pages_rows: int = PAGES_ROWS):
     extras["decode_verify_gbps"] = round(
         raw / 1e9 / timings["pages_decode_verify"], 4)
 
-    # reference-equivalent codec set (no FSST/dict): the raw-throughput mode
+    # reference-equivalent codec set (no zstd/dict): the raw-throughput mode
     clock("pages_encode_fast",
           lambda: encode_table(pages, key="url", snapshot_id="bench_fast",
                                sort_within=True, mode="fast",

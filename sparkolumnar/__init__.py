@@ -3,7 +3,8 @@
 A from-scratch re-creation of the capabilities of loro-dev/columnar
 (`serde_columnar`, Rust) on Spark: per-column codecs (RLE / DeltaRle /
 BoolRle / DeltaOfDelta, byte-compatible with the reference wire format,
-plus dictionary, bit-packing, frame-of-reference and FSST extensions),
+plus dictionary, bit-packing, frame-of-reference and chunked-zstd
+extensions; FSST payloads of older tables stay decodable),
 a statistics-driven codec auto-selector, and a distributed encode /
 decode pipeline built on vectorized Arrow UDFs (`mapInArrow` /
 `applyInPandas`) with per-partition lineage and exactly-once resume.

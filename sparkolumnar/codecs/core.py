@@ -18,7 +18,7 @@ mirroring how the reference stores the strategy in the schema
 
 from __future__ import annotations
 
-from typing import Dict, Tuple
+from typing import Dict, List, Tuple
 
 import numpy as np
 import pyarrow as pa
@@ -177,8 +177,8 @@ class Codec:
         (columnar/src/strategy/rle.rs:165-246) generalized to every codec.
 
         Default: full decode + slice (always correct). Codecs where a true
-        partial decode skips work (rle/delta_rle value expansion, fsst
-        body bytes, split data bytes) override this."""
+        partial decode skips work (rle/delta_rle value expansion, split
+        data bytes, zstd frames past the prefix) override this."""
         if k >= n:
             return self.decode(payload, n, typ)
         return self.decode(payload, n, typ).slice(0, k)
@@ -186,12 +186,12 @@ class Codec:
     def decode_range(self, payload: bytes, n: int, typ: pa.DataType,
                      start: int, stop: int) -> pa.Array:
         """Decode only values [start, stop) — random access into an
-        encoded column (the property FSST is named for; the reference's
-        iterable module exposes the same capability as lazy per-value
-        iterators, columnar/src/iterable.rs).
+        encoded column (the reference's iterable module exposes the same
+        capability as lazy per-value iterators, columnar/src/iterable.rs).
 
-        Default: prefix decode + slice (skips the tail); offset-indexed
-        formats (fsst/split) override to skip the head's bytes too."""
+        Default: prefix decode + slice (skips the tail); indexed formats
+        (split's per-string lengths, zstd's frame table, the decode-only
+        fsst) override to skip the head's bytes too."""
         stop = min(stop, n)
         start = min(start, stop)
         return self.decode_prefix(payload, n, typ, stop).slice(
@@ -215,3 +215,9 @@ def get_codec(name: str) -> Codec:
 
 def codecs_for_domain(domain: str):
     return [c for c in _REGISTRY.values() if domain in c.domains]
+
+
+def encodable_codecs() -> List[str]:
+    """Names of the registered codecs that can encode some domain; the
+    decode-only ones register none."""
+    return sorted(n for n, c in _REGISTRY.items() if c.domains)

@@ -1,557 +1,40 @@
-"""FSST string compression (north-rule extension).
+"""FSST string payloads: decode only.
 
-Design follows the published algorithm (Boncz, Neumann, Leis: "FSST: Fast
-Random Access String Compression", VLDB 2020): a table of up to 255 symbols
-of 1..8 bytes; each input position emits either a 1-byte symbol code or an
-escape (0xFF + literal byte). The symbol table is built on a sample by
-iterative greedy pair-merging; encoding uses longest-match.
+FSST (Boncz, Neumann, Leis: "FSST: Fast Random Access String Compression",
+VLDB 2020) codes each string as a sequence of 1-byte symbol codes, each
+standing for 1..8 bytes of a table of up to 255 symbols, or escapes
+(0xFF + literal byte). Earlier versions of the engine could pick it for
+string columns; zstd and dict beat it on every measured column, so its
+encoder is gone. Blocks written with it stay readable: the codec keeps
+its name and wire format, registers no domain (the selector never
+offers it) and refuses to encode. tests/data/fsst pins the format with
+payloads written by the retired encoder.
 
-This implementation is written for whole-batch numpy execution:
-
-* symbol lengths snap to {1,2,4,8}; longest-match is computed for every
-  byte position with dense contiguous passes whose results merge with a
-  plain np.maximum — every lookup table stores PACKED entries
-  (len << 16) | code, so "longest match wins" is literally the numeric
-  max and no boolean select/scatter ever runs over the full buffer. A
-  single 65536-entry table resolves both 1- and 2-byte symbols in one
-  gather; L=4/8 use single-probe multiply-shift hash tables over pure u32
-  arithmetic, gathering one u64 combo that packs key-verification bytes
-  with the code. Rolling LE keys k2/k4 are built by widening shift-or;
-  all match state is int8/int16/int32 (the passes are memory-bound —
-  dtype width is throughput). String-boundary legality is repaired on the
-  sparse tail positions afterwards instead of being checked densely;
-* the inherently sequential "next token starts after this one ends" chain
-  exploits string independence: one frontier pointer per string advances in
-  lock-step, 8 tokens per round via pointer-doubled composed jumps
-  (J2=J∘J, J4), so Python-level round overhead is ~tokens/8;
-* symbol-table construction vectorizes the gain counting: 8-byte LE keys
-  are gathered at token starts, pair-merge candidate keys are composed by
-  shift-or, and np.unique supplies occurrence counts — no per-token Python;
-* decode classifies escape markers via parity inside 0xFF-runs (split at
-  string boundaries) and assembles output with one vectorized gather.
+Decode classifies escape markers via parity inside 0xFF-runs (split at
+string boundaries) and assembles output with one vectorized gather.
 
 Wire format:
   varint n_symbols, then per symbol (1 byte len, bytes)
   varint n_strings, n_strings varints of *encoded* lengths
   encoded bytes
-
-Matches never cross string boundaries, so any chunking/parallel split at
-string boundaries is safe.
 """
 
 from __future__ import annotations
 
-from typing import List, Optional, Tuple
+from typing import Tuple
 
 import numpy as np
 import pyarrow as pa
 
-from .core import BIN, STR, Codec, from_str_buffers, register, str_buffers
-from .nputil import (CodecError, gather_chunks, uvarint_decode,
-                     uvarint_encode)
+from .core import Codec, from_str_buffers, register
+from .nputil import CodecError, uvarint_decode
 
 ESCAPE = 255
-MAX_SYMBOLS = 255
 MAX_LEN = 8
-SAMPLE_BYTES = 1 << 15  # 32 KiB sample for table construction
-# Encode in string-aligned chunks sized so the chunk plus its rolling-key
-# temporaries stay cache-resident: measured 2.3x higher aggregate
-# throughput at 16 concurrent workers vs 8 MiB chunks (this is what makes
-# many-core scaling near-linear — the match passes stop fighting for DRAM).
+# decode in string-aligned chunks of about this many encoded bytes: a
+# cache-resident working set per chunk keeps concurrent workers from
+# fighting for DRAM
 CHUNK_BYTES = 1 << 20
-# chain walking switches from lock-step rounds to per-chain orbits once
-# this few chains survive (the survivors are the longest strings)
-_CHAIN_TAIL = 24
-
-
-# ---------------------------------------------------------------------------
-# symbol table
-# ---------------------------------------------------------------------------
-
-LENGTHS = (8, 4, 2, 1)  # symbol lengths (power-of-two snap)
-_HASH_BITS = 13
-_HASH_MULT = np.uint64(0x9E3779B97F4A7C15)
-_PAD = 16  # zero padding after the data buffer so LE key views never OOB
-
-# u64 mask keeping the low L bytes, indexed by L (0..8)
-_LEN_MASK = np.array([0] + [(1 << (8 * L)) - 1 for L in range(1, 8)]
-                     + [0xFFFFFFFFFFFFFFFF], dtype=np.uint64)
-
-
-def _pad_buf(data: np.ndarray) -> np.ndarray:
-    """Copy `data` into a buffer with _PAD trailing zero bytes (so strided
-    little-endian key views may read past the last position safely)."""
-    out = np.zeros(len(data) + _PAD, dtype=np.uint8)
-    out[: len(data)] = data
-    return out
-
-
-_IS_LE = __import__("sys").byteorder == "little"
-
-# packed match entry (int16): (rank << 8) | code, where rank 1/2/3/4
-# stands for symbol length 1/2/4/8 and -1 means "no symbol". Longer
-# matches have strictly larger rank and rank dominates the code byte, so
-# "longest match wins" stays a plain numeric max — at HALF the memory
-# traffic of the previous (len << 16) | code int32 packing (the dense
-# match map is the biggest intermediate of the encoder).
-_VLEN_LUT = np.array([1, 1, 1, 2, 4, 8], dtype=np.int8)
-# indexed by (v >> 8) + 1: 0 = no symbol (-1 >> 8 == -1; the escape emits
-# one literal byte so the token still advances 1, same as the old
-# max(len, 1)), 1 unused (rank 0 does not occur), 2..5 = rank 1..4.
-
-
-def _le_view(pad: np.ndarray, dtype) -> np.ndarray:
-    """Little-endian integer view of `pad` at EVERY byte offset (stride 1
-    byte): element p is the dtype-sized LE key starting at byte p. Zero
-    construction cost; replaces materializing rolling-key arrays (which
-    cost two full widening passes each). x86/arm handle the unaligned
-    loads natively; big-endian hosts take the materializing fallback."""
-    w = np.dtype(dtype).itemsize
-    return np.ndarray(shape=(len(pad) - w + 1,), dtype=dtype,
-                      buffer=pad, strides=(1,))
-
-
-def _k2_of(pad: np.ndarray, count: int) -> np.ndarray:
-    if _IS_LE:
-        return _le_view(pad, np.uint16)
-    k2 = pad[:count].astype(np.uint16)
-    k2 |= pad[1:count + 1].astype(np.uint16) << np.uint16(8)
-    return k2
-
-
-def _k4_of(pad: np.ndarray, count: int) -> np.ndarray:
-    if _IS_LE:
-        return _le_view(pad, np.uint32)
-    k2 = _k2_of(pad, count + 2)
-    k4 = k2[:count].astype(np.uint32)
-    k4 |= k2[2:count + 2].astype(np.uint32) << np.uint32(16)
-    return k4
-
-
-class _SymTables:
-    """Match tables: direct-index for L=1/2, single-probe hash for L=4/8.
-
-    All keys are little-endian integers of the symbol bytes, so encode-side
-    probes read them zero-copy from uint16/32/64 views of the data buffer."""
-
-    def __init__(self, symbols: List[bytes]):
-        # packed entry = (rank << 8) | code, -1 = no symbol. tab12 resolves
-        # BOTH 1- and 2-byte symbols with a single gather: slots whose
-        # 2-byte key has no symbol fall back to the 1-byte symbol of the
-        # slot's low (= first) byte.
-        self.tab1p = np.full(256, -1, dtype=np.int16)
-        self.tab12 = np.full(65536, -1, dtype=np.int16)
-        self.hash4 = self._build_hash([s for s in symbols], 4)
-        self.hash8 = self._build_hash([s for s in symbols], 8)
-        self.has = {1: False, 2: False, 4: self.hash4 is not None,
-                    8: self.hash8 is not None}
-        for c, s in enumerate(symbols):
-            if len(s) == 1:
-                self.tab1p[s[0]] = (1 << 8) | c
-                self.tab12[s[0]::256] = (1 << 8) | c
-                self.has[1] = True
-        for c, s in enumerate(symbols):
-            if len(s) == 2:
-                self.tab12[s[0] | (s[1] << 8)] = (2 << 8) | c
-                self.has[2] = True
-
-    def _build_hash(self, symbols, L):
-        """Single-probe hash table over 32-bit arithmetic only.
-
-        L=4: slot = (key32 * A) >> (32 - BITS); L=8: the key is kept as two
-        u32 halves and slot = ((lo * A) ^ (hi * B)) >> (32 - BITS) — the
-        encoder then never materializes 8-byte rolling keys (u32 multiplies
-        halve the memory traffic of the hot probe pass).
-        Returns (keys_lo, keys_hi, codes, A, B); keys_hi is None for L=4."""
-        entries = [(int.from_bytes(s, "little"), c)
-                   for c, s in enumerate(symbols) if len(s) == L]
-        if not entries:
-            return None
-        size = 1 << _HASH_BITS
-        shift = 32 - _HASH_BITS
-        m32 = (1 << 32) - 1
-        # combo packs verification + code into ONE gathered u64:
-        #   L=4: combo = key32          | (code+1) << 32
-        #   L=8: combo = key_hi (u32)   | (code+1) << 32, keys_lo separate
-        # empty slot combo = 0 -> extracted code = -1 (invalid).
-        # occ (bool, 1 byte/slot) drives the two-stage probe: a cheap
-        # 1-byte occupancy gather first, the 8-byte combo fetched only at
-        # candidate positions (~20% on web text — measured 1.4x faster).
-        keys_lo = np.zeros(size, dtype=np.uint32) if L == 8 else None
-        combo = np.zeros(size, dtype=np.uint64)
-        a, b = 0x9E3779B1, 0x85EBCA77
-
-        def fill(a, b, drop_collisions):
-            combo[:] = 0
-            if keys_lo is not None:
-                keys_lo[:] = 0
-            for k, c in entries:
-                lo, hi = k & m32, k >> 32
-                slot = (((lo * a) ^ (hi * b)) & m32) >> shift
-                if combo[slot] != 0:
-                    if drop_collisions:
-                        continue
-                    return False
-                if L == 4:
-                    combo[slot] = lo | ((c + 1) << 32)
-                else:
-                    combo[slot] = hi | ((c + 1) << 32)
-                    keys_lo[slot] = lo
-            return True
-
-        for attempt in range(8):
-            if fill(a, b, drop_collisions=False):
-                return keys_lo, combo, combo != 0, np.uint32(a), np.uint32(b)
-            a = ((a * 0xC2B2AE35 + 2 * attempt + 1) & m32) | 1
-            b = ((b * 0x27D4EB2F + 2 * attempt + 1) & m32) | 1
-        # fall back to dropping colliding symbols (keeps correctness)
-        a, b = 0x9E3779B1, 0x85EBCA77
-        fill(a, b, drop_collisions=True)
-        return keys_lo, combo, combo != 0, np.uint32(a), np.uint32(b)
-
-
-def _match_span(pad: np.ndarray, lo: int, hi: int, out: np.ndarray,
-                k2: np.ndarray, k4: np.ndarray, tables: _SymTables) -> None:
-    """Longest symbol match for positions [lo, hi), written into out[lo:hi]
-    as packed int16 entries (rank << 8) | code, -1 = escape.
-
-    Every pass is dense and contiguous over the span, and the pass results
-    merge with plain assignment in increasing-length order (rank dominates
-    numerically, and the longer probe unconditionally overwrites). tab12
-    resolves 1- and 2-byte symbols in a single gather; the L=4/8 hash
-    probes are pure u32 arithmetic over zero-copy LE key views of the
-    buffer and gather a single u64 combo that packs key-verification bytes
-    together with the code. String-boundary legality is NOT checked here;
-    the at-most-7 tail positions per string whose match could cross the
-    boundary are repaired afterwards with sparse re-probes (_repair_tails).
-    Spans need not align to strings: cross-span key bytes are real buffer
-    bytes either way, and boundary-crossing matches are exactly the ones
-    the tail repair rewrites."""
-    shift = np.uint32(32 - _HASH_BITS)
-    n = hi - lo
-    if n <= 0:
-        return
-    if tables.has[1] or tables.has[2]:
-        out[lo:hi] = tables.tab12[k2[lo:hi]]
-    else:
-        out[lo:hi] = -1
-    v = out[lo:hi]
-    with np.errstate(over="ignore"):
-        # two-stage probes: a 1-byte occupancy gather over all positions,
-        # then combo fetch + key verify only at candidate slots (~20% on
-        # web text), scattered sparsely into v — no dense merge pass
-        if tables.hash4 is not None:
-            _, combo, occ, a, _ = tables.hash4
-            slot = k4[lo:hi] * a
-            np.right_shift(slot, shift, out=slot)
-            idx = np.flatnonzero(occ[slot])
-            if len(idx):
-                sl = slot[idx]
-                got = combo[sl]
-                keq = got.astype(np.uint32) == k4[lo:hi][idx]
-                good = idx[keq]
-                pv = (got[keq] >> np.uint64(32)).astype(np.int32)
-                pv -= 1
-                pv |= 3 << 8  # valid code c -> rank 3 (len 4)
-                # L=4 beats L=1/2 numerically; nothing longer seen yet
-                v[good] = pv.astype(np.int16)
-        if tables.hash8 is not None:
-            keys_lo, combo, occ, a, b = tables.hash8
-            slot = k4[lo:hi] * a
-            slot ^= k4[lo + 4:hi + 4] * b
-            np.right_shift(slot, shift, out=slot)
-            idx = np.flatnonzero(occ[slot])
-            if len(idx):
-                sl = slot[idx]
-                got = combo[sl]
-                keq = keys_lo[sl] == k4[lo:hi][idx]
-                keq &= got.astype(np.uint32) == k4[lo + 4:hi + 4][idx]
-                good = idx[keq]
-                pv = (got[keq] >> np.uint64(32)).astype(np.int32)
-                pv -= 1
-                pv |= 4 << 8  # rank 4 (len 8): longest, wins outright
-                v[good] = pv.astype(np.int16)
-
-
-# dense-match span size: bounds the span's hot intermediates (the int16
-# match map slice plus one u32 slot array) to a cache-friendly working
-# set; the key "arrays" are zero-copy views so spans share one buffer
-_MATCH_SPAN = 1 << 20
-
-
-def _match_all(pad: np.ndarray, n: int, offsets: np.ndarray,
-               tables: _SymTables):
-    """(advance int8 >= 1, packed match int16) for every position.
-
-    The dense probe passes run in cache-sized spans; the per-string tail
-    repair is sparse (at most min(len, 7) candidate positions per string,
-    the only places a greedy match could cross the string boundary)."""
-    if n == 0:
-        return np.ones(0, dtype=np.int8), np.full(0, -1, dtype=np.int16)
-    v = np.empty(n, dtype=np.int16)
-    k2 = _k2_of(pad, n + 8)
-    k4 = _k4_of(pad, n + 4)
-    for lo in range(0, n, _MATCH_SPAN):
-        _match_span(pad, lo, min(n, lo + _MATCH_SPAN), v, k2, k4, tables)
-    adv = _VLEN_LUT[(v >> 8) + 1]  # int8; escapes advance 1
-    # sparse tail repair: candidate positions are the last min(len, 7)
-    # bytes of each string (an 8-byte match at end-7 still fits)
-    str_lens = np.diff(offsets)
-    kmax = np.minimum(str_lens, 7).astype(np.int64)
-    tot = int(kmax.sum())
-    if tot:
-        ends = offsets[1:].astype(np.int64, copy=False)
-        sid = np.repeat(np.arange(len(kmax), dtype=np.int64), kmax)
-        room = np.arange(tot, dtype=np.int64)
-        room -= (np.cumsum(kmax) - kmax)[sid]
-        room += 1  # bytes remaining in-string at the candidate position
-        cand = ends[sid] - room
-        sel = adv[cand] > room
-        bad = cand[sel]
-        if len(bad):
-            r = room[sel]
-            shift = np.uint32(32 - _HASH_BITS)
-            fix = tables.tab1p[pad[bad]]
-            if tables.has[2]:
-                v2 = tables.tab12[k2[bad]]
-                ok2 = _VLEN_LUT[(v2 >> 8) + 1] <= r
-                fix = np.where(ok2, v2, fix)
-            if tables.hash4 is not None:
-                _, combo, _, a, _ = tables.hash4
-                kb = k4[bad]
-                with np.errstate(over="ignore"):
-                    sl = (kb * a) >> shift
-                got = combo[sl]
-                c4 = (got >> np.uint64(32)).astype(np.int32) - 1
-                h4 = (c4 >= 0) & (got.astype(np.uint32) == kb) & (r >= 4)
-                fix = np.where(h4, (c4 | (3 << 8)).astype(np.int16), fix)
-            v[bad] = fix
-            adv[bad] = _VLEN_LUT[(fix >> 8) + 1]
-    return adv, v
-
-
-def _chain_starts(jump: np.ndarray, offsets: np.ndarray, n: int) -> np.ndarray:
-    """Token start positions: per-string frontier chains walked in
-    lock-step, 8 tokens per round via pointer-doubled composed jumps
-    (J2 = J∘J, J4). Emitted positions are marked in a bitmap and recovered
-    with flatnonzero — cheaper than sorting the concatenated rounds."""
-    dt = jump.dtype
-    J1 = np.empty(n + 1, dtype=dt)
-    J1[:n] = jump
-    J1[n] = n  # terminal sink (jump values are clamped <= n by the repair)
-    J2 = J1[J1]
-    J4 = J2[J2]
-    cur = offsets[:-1]
-    ends = offsets[1:]
-    nonempty = ends > cur
-    cur = np.array(cur[nonempty], dtype=dt)
-    ends = np.array(ends[nonempty], dtype=dt)
-    mark = np.zeros(n, dtype=bool)
-    total = 0
-    mat = None
-    while len(cur) > _CHAIN_TAIL:
-        k = len(cur)
-        if mat is None or mat.shape[1] != k:
-            mat = np.empty((8, k), dtype=dt)
-        mat[0] = cur
-        mat[1] = J1[cur]
-        mat[2] = J2[cur]
-        mat[3] = J2[mat[1]]
-        mat[4] = J4[cur]
-        for i in range(1, 4):
-            mat[4 + i] = J4[mat[i]]
-        valid = mat < ends[None, :]
-        mark[mat[valid]] = True
-        total += k * 8
-        if total > 9 * (n + 8):
-            raise CodecError("jump chain does not advance")
-        cur = J4[mat[4]]
-        alive = cur < ends
-        if not alive.all():
-            cur = cur[alive]
-            ends = ends[alive]
-            mat = None
-    # tail: a handful of extra-long chains would otherwise burn hundreds
-    # of tiny lock-step rounds — finish each with a pointer-doubling orbit
-    # over its own local span (log2(tokens) small compositions)
-    if len(cur):
-        from .nputil import orbit
-
-        for c, e in zip(cur.tolist(), ends.tolist()):
-            jloc = J1[c:e].astype(np.int64)
-            jloc -= c
-            seq = orbit(jloc, 0, e - c)
-            mark[seq + c] = True
-    starts = np.flatnonzero(mark)
-    if n < 2**31:
-        starts = starts.astype(np.int32)  # index traffic: starts is
-        #                                   gathered from repeatedly below
-    return starts
-
-
-def _tokenize(pad: np.ndarray, n: int, offsets: np.ndarray,
-              tables: "_SymTables") -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(token starts, per-token advance, per-token packed match) for the
-    whole buffer. pad: padded data buffer (see _pad_buf); offsets:
-    offsets[0]==0, offsets[-1]==n. The packed match is (rank << 8) | code,
-    negative = escape (emit the literal byte)."""
-    if n == 0:
-        return (np.empty(0, np.int32), np.empty(0, np.int8),
-                np.empty(0, np.int16))
-    adv, v = _match_all(pad, n, offsets, tables)
-    dt = np.int32 if n < 2**31 - 8 else np.int64
-    jump = np.arange(n, dtype=dt)
-    jump += adv
-    starts = _chain_starts(jump, offsets, n)
-    return starts, adv[starts], v[starts]
-
-
-def _le64_at(pad: np.ndarray, starts: np.ndarray) -> np.ndarray:
-    """Little-endian 8-byte key gathered at each (byte) position."""
-    if _IS_LE:
-        return _le_view(pad, np.uint64)[starts]
-    k = pad[starts].astype(np.uint64)
-    for i in range(1, 8):
-        k |= pad[starts + i].astype(np.uint64) << np.uint64(8 * i)
-    return k
-
-
-_SNAP = np.array([0, 1, 2, 2, 4, 4, 4, 4, 8], dtype=np.int64)
-
-
-def build_table(data: np.ndarray, offsets: np.ndarray, rounds: int = 3,
-                sample_bytes: Optional[int] = None) -> List[bytes]:
-    """Greedy iterative pair-merge symbol table construction on a sample.
-
-    Gain counting is fully vectorized: tokens and pair-merge candidates are
-    represented as (length, LE-int key) and counted with np.unique; the
-    gain of symbol s is occurrences * len(s), kept when occurrences >= 2.
-
-    Defaults are tuned for per-batch builds; job-level plans pass a larger
-    sample and more rounds (engine/plan.py) since they build once."""
-    if len(data) == 0:
-        return []
-    sample_bytes = sample_bytes or SAMPLE_BYTES
-    # sample: prefix of the buffer, aligned to a string boundary
-    if len(data) > sample_bytes:
-        cut = int(np.searchsorted(offsets, sample_bytes))
-        cut = max(1, min(cut, len(offsets) - 1))
-        s_off = offsets[:cut + 1]
-        s_data = data[: int(s_off[-1])]
-    else:
-        s_off = offsets
-        s_data = data
-    n = len(s_data)
-    if n == 0:
-        return []
-    pad = _pad_buf(s_data)
-    off32 = np.asarray(s_off).astype(np.int32)
-    symbols: List[bytes] = []
-    for _ in range(rounds):
-        starts, lens, codes = _tokenize(pad, n, off32, _SymTables(symbols))
-        t = len(starts)
-        if t == 0:
-            break
-        lens = lens.astype(np.int64)
-        key = _le64_at(pad, starts) & _LEN_MASK[lens]
-        # pair-merge candidates: token i + token i+1, truncated to the
-        # power-of-two snap; pairs must not cross a string boundary — with
-        # contiguous strings that is exactly "next token start < this
-        # token's string end"
-        estr = off32[np.searchsorted(off32, starts, side="right")]
-        nxt = np.empty(t, dtype=starts.dtype)
-        nxt[:-1] = starts[1:]
-        nxt[-1] = n
-        cat_len = _SNAP[np.minimum(lens + np.roll(lens, -1), MAX_LEN)]
-        ok = (nxt < estr) & (cat_len > lens)  # lens[ok] <= 4, shift < 64
-        cat_key = ((key | (np.roll(key, -1) << (lens.astype(np.uint64)
-                                                * np.uint64(8))))[ok]
-                   & _LEN_MASK[cat_len[ok]])
-        cat_len = cat_len[ok]
-        # candidate selection fully in arrays: the final ordering
-        # (-gain, symbol-bytes lex) is reproduced exactly as
-        # (-gain, byteswapped-key u64, length) — a byteswapped LE key is
-        # the zero-padded 8-byte string, whose unsigned order equals
-        # bytes-lex order, with the shorter symbol first on padded ties
-        ck, cl, cg = [], [], []
-        for L in (1, 2, 4, 8):
-            ks = np.concatenate([key[lens == L], cat_key[cat_len == L]])
-            if len(ks) == 0:
-                continue
-            uk, cnt = np.unique(ks, return_counts=True)
-            keep = cnt >= 2  # gain = cnt * L >= 2 * L
-            uk, cnt = uk[keep], cnt[keep]
-            if len(uk) > 2 * MAX_SYMBOLS:
-                # deterministic top slice: sort by (-count, byte-lex key)
-                be = uk.byteswap() >> np.uint64(8 * (8 - L))
-                order = np.lexsort((be, -cnt))[: 2 * MAX_SYMBOLS]
-                uk, cnt = uk[order], cnt[order]
-            ck.append(uk)
-            cl.append(np.full(len(uk), L, dtype=np.int64))
-            cg.append(cnt.astype(np.int64) * L)
-        if not ck:
-            symbols = []
-            continue
-        K = np.concatenate(ck)
-        L_ = np.concatenate(cl)
-        G = np.concatenate(cg)
-        order = np.lexsort((L_, K.byteswap(), -G))[:MAX_SYMBOLS]
-        symbols = [int(K[i]).to_bytes(int(L_[i]), "little") for i in order]
-    return symbols
-
-
-# ---------------------------------------------------------------------------
-# encode / decode
-# ---------------------------------------------------------------------------
-
-def fsst_encode(data: np.ndarray, offsets: np.ndarray,
-                symbols: Optional[List[bytes]] = None) -> bytes:
-    """Encode; `symbols` lets a job-level plan supply a pre-built table
-    (built once from a sample, broadcast to every batch) — the per-batch
-    table build is the expensive part of FSST.
-
-    One global pass: the dense match runs in cache-sized spans inside
-    _match_all, and EVERY string's token chain advances in one lock-step
-    walk — the per-~1MiB-chunk walks this replaces each paid the full
-    longest-string round count in per-round numpy call overhead, which
-    dominated the old encoder's profile."""
-    n_strings = len(offsets) - 1
-    if symbols is None:
-        symbols = build_table(data, offsets)
-    tables = _SymTables(symbols)
-    head = bytearray()
-    head += uvarint_encode(np.array([len(symbols)], dtype=np.uint64))
-    for s in symbols:
-        head.append(len(s))
-        head += s
-    total = int(len(data))
-    n_strings = max(0, n_strings)
-    head += uvarint_encode(np.array([n_strings], dtype=np.uint64))
-    if n_strings == 0 or total == 0:
-        head += uvarint_encode(np.zeros(n_strings, dtype=np.uint64))
-        return bytes(head)
-    pad = _pad_buf(data)
-    off = np.asarray(offsets)
-    starts, advs, vs = _tokenize(pad, total, off, tables)
-    is_code = vs >= 0
-    cum_t = np.int32 if 2 * total < (1 << 31) else np.int64
-    out_len = np.where(is_code, cum_t(1), cum_t(2))
-    cum = np.cumsum(out_len, dtype=cum_t)
-    out_pos = cum - out_len
-    out = np.empty(int(cum[-1]) if len(cum) else 0, dtype=np.uint8)
-    cp = out_pos[is_code]
-    out[cp] = (vs[is_code] & np.int16(0xFF)).astype(np.uint8)
-    esc = ~is_code
-    ep = out_pos[esc]
-    out[ep] = ESCAPE
-    out[ep + 1] = pad[starts[esc]]
-    # encoded length per string: tokens per string via boundaries
-    tok_out_end = np.concatenate([np.zeros(1, cum.dtype), cum])
-    ntok_before = np.searchsorted(starts, off[1:], side="left")
-    enc_end = tok_out_end[ntok_before]
-    enc_lens = np.diff(np.concatenate([np.zeros(1, enc_end.dtype), enc_end]))
-    head += uvarint_encode(enc_lens.astype(np.uint64))
-    return bytes(head) + out.tobytes()
 
 
 def fsst_decode(payload: bytes, n: int, k: int = -1,
@@ -599,8 +82,7 @@ def fsst_decode(payload: bytes, n: int, k: int = -1,
     if ne == 0:
         return np.empty(0, np.uint8), np.concatenate([[0], np.zeros(n, np.int64)]).astype(np.int64)
     enc_off = np.concatenate([[0], np.cumsum(enc_lens)]).astype(np.int64)
-    # decode in string-aligned ~CHUNK_BYTES chunks (cache-resident working
-    # set; same reason as the encoder's chunking)
+    # decode in string-aligned ~CHUNK_BYTES chunks
     ml = max(1, int(sym_lens.max()) if n_sym else 1)
     sym8 = np.zeros((256, ml), dtype=np.uint8)
     for i in range(n_sym):  # <= 255 tiny copies, built once per payload
@@ -695,11 +177,10 @@ def _decode_chunk(buf: np.ndarray, e_base: int, enc_off: np.ndarray,
 
 class FsstCodec(Codec):
     name = "fsst"
-    domains = (STR, BIN)
+    domains = ()
 
-    def encode(self, arr: pa.Array, symbols: Optional[List[bytes]] = None) -> bytes:
-        data, offsets = str_buffers(arr)
-        return fsst_encode(data, offsets, symbols=symbols)
+    def encode(self, arr: pa.Array) -> bytes:
+        raise CodecError("fsst is decode-only: its encoder was retired")
 
     def decode(self, payload: bytes, n: int, typ: pa.DataType) -> pa.Array:
         data, offsets = fsst_decode(payload, n)

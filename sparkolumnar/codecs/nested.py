@@ -6,7 +6,7 @@ fuzz/src/lib.rs:24-27). The Spark-native equivalent: a list column encodes
 as (a) its offsets, delta-RLE'd (lengths are the deltas, so constant-ish
 list sizes collapse), and (b) its flattened child column, recursively run
 through the full codec selector — the child of a list<string> gets dict or
-FSST exactly like a top-level string column.
+zstd exactly like a top-level string column.
 
 Payload:
   varint n_lists

@@ -279,51 +279,6 @@ def orbit(jump: np.ndarray, start: int, limit: int) -> np.ndarray:
     return seq[:limit]
 
 
-def chain_segments(jump: np.ndarray, seg_starts: np.ndarray,
-                   seg_ends: np.ndarray) -> np.ndarray:
-    """Visited positions of many independent jump chains, one per segment.
-
-    Chain i starts at seg_starts[i] and steps pos -> jump[pos] while
-    pos < seg_ends[i] (jump never crosses a segment end). All chains
-    advance in lock-step, one vectorized gather per round, with the active
-    set compacted as chains finish — total work ~ total visited positions.
-    Returns all visited positions sorted ascending (= global order, since
-    segments are disjoint).
-    """
-    lens = seg_ends - seg_starts
-    nonempty = lens > 0
-    cur = seg_starts[nonempty].astype(np.int64, copy=True)
-    ends = seg_ends[nonempty].astype(np.int64, copy=False)
-    chunks = []
-    total = 0
-    while len(cur) > 24:
-        chunks.append(cur)
-        total += len(cur)
-        if total > len(jump) + 1:
-            raise CodecError("jump chain does not advance")
-        cur = jump[cur]
-        alive = cur < ends
-        if not alive.all():
-            cur = cur[alive]
-            ends = ends[alive]
-    # tail: a handful of long chains would otherwise burn one tiny numpy
-    # round per token — walk them in plain Python instead
-    if len(cur):
-        tail = []
-        jl = jump  # local
-        for p, e in zip(cur.tolist(), ends.tolist()):
-            while p < e:
-                tail.append(p)
-                p = jl[p]
-        total += len(tail)
-        if total > len(jump) + 1:
-            raise CodecError("jump chain does not advance")
-        chunks.append(np.array(tail, dtype=np.int64))
-    if not chunks:
-        return np.empty(0, dtype=np.int64)
-    return np.sort(np.concatenate(chunks), kind="stable")
-
-
 # ---------------------------------------------------------------------------
 # big-endian bitstream helpers
 # ---------------------------------------------------------------------------

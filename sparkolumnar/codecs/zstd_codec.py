@@ -2,14 +2,14 @@
 
 Entropy coding for string payloads via the zstd library (RFC 8878,
 Facebook's public zstandard; the C implementation bundled with pyarrow —
-`pyarrow.Codec("zstd")`). On web-text columns it both out-compresses the
-numpy FSST implementation (~0.29x vs ~0.41x raw on the pages fixture)
-and encodes ~25x faster (~260 MB/s/core vs ~10-20), which makes the
+`pyarrow.Codec("zstd")`). On web-text columns it both out-compressed the
+retired numpy FSST encoder (~0.29x vs ~0.41x raw on the pages fixture)
+and encoded ~25x faster (~260 MB/s/core vs ~10-20), which makes the
 encode UDF CPU-bound work drop to near the Arrow-IPC floor (optimization
 guide §4.2: hand whole batches to vectorized native libraries).
 
-The payload is framed so partial decode stays cheap (the property FSST
-exists for — invariant 6):
+The payload is framed so partial decode stays cheap (random access —
+invariant 6):
 
 * frames are STRING-ALIGNED and target ~_FRAME_BYTES of raw data, so
   `decode_prefix(k)` / `decode_range(a, b)` decompress only the frames

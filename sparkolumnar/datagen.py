@@ -21,12 +21,12 @@ import pyarrow as pa
 BASE_TS_US = 1_757_635_200_000_000  # 2025-09-12T00:00:00Z in µs
 N_HOSTS = 1000
 N_LANGS = 30
-_VOCAB_SIZE = 10_000
+_VOCAB_WORDS = 10_000
 
 
 def _vocab(rng: np.random.Generator) -> list:
     letters = np.array(list("abcdefghijklmnopqrstuvwxyz"))
-    lens = rng.integers(2, 10, _VOCAB_SIZE)
+    lens = rng.integers(2, 10, _VOCAB_WORDS)
     return ["".join(rng.choice(letters, L)) for L in lens]
 
 
@@ -78,7 +78,7 @@ def _cell_table(cell: int, seed: int, vocab: np.ndarray) -> pa.Table:
     # ~665-char docs on average (FIXTURES.md: length log-normal(6.5, 0.8))
     n_words = np.maximum(1, r.lognormal(4.5, 0.8, n_rows)).astype(np.int64)
     total_words = int(n_words.sum())
-    word_ids = (r.zipf(1.3, total_words) - 1) % _VOCAB_SIZE
+    word_ids = (r.zipf(1.3, total_words) - 1) % _VOCAB_WORDS
     bounds = np.cumsum(n_words)
     texts = []
     w = vocab[word_ids]

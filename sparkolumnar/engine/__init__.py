@@ -8,4 +8,4 @@ from .direct import (decode_files_direct, encode_files_direct,  # noqa: F401
 from .encode import encode_table  # noqa: F401
 from .maintenance import (compact_snapshot,  # noqa: F401
                           list_snapshots)
-from .selector import BALANCED, FAST, SIZE, select_encode  # noqa: F401
+from .selector import BALANCED, FAST, select_encode  # noqa: F401

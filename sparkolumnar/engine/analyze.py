@@ -116,7 +116,7 @@ def analyze_sample(df: DataFrame, rows: int = 20_000) -> DataFrame:
     """Encode a sample of `df` (driver-side) and report what the selector
     would choose per column, with sizes — the interactive counterpart of
     the reference's FieldAnalyze."""
-    from .selector import SIZE, select_encode
+    from .selector import BALANCED, select_encode
 
     sample = df.limit(rows).toArrow()
     out = []
@@ -127,7 +127,7 @@ def analyze_sample(df: DataFrame, rows: int = 20_000) -> DataFrame:
             arr = arr.drop_null()
         if len(arr) == 0:
             continue
-        choice = select_encode(arr, mode=SIZE)
+        choice = select_encode(arr, mode=BALANCED)
         raw = sum(b.size for b in arr.buffers() if b is not None)
         out.append((fld.name, choice.codec, len(arr), nn, raw,
                     len(choice.payload),

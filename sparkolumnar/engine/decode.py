@@ -1542,8 +1542,8 @@ def decode_blocks(blocks_df: DataFrame, schema: Optional[T.StructType] = None,
     to the window's contiguous coordinate range (a constant-size pushed
     predicate, so other blocks' payload bytes are never read), and inside
     a partially-needed block each codec decodes only the value range
-    (rle/delta_rle cap run expansion, fsst/split touch only the range's
-    body bytes). Partial edge blocks skip checksum verification
+    (rle/delta_rle cap run expansion, split touches only the range's
+    body bytes, zstd only the covering frames). Partial edge blocks skip checksum verification
     (checksums cover whole columns; whole blocks in the window are still
     verified) — a warning is emitted when verify=True is combined with
     limit=. When filters are also given, limit counts MATCHING rows:

@@ -676,9 +676,10 @@ def encode_table_direct_write(df, io: TableIO, key: Optional[str] = None,
 
     from pyspark import TaskContext
 
-    from .encode import layout_for_encode, make_encode_fn
+    from .encode import check_overrides, layout_for_encode, make_encode_fn
     from .selector import FAST
 
+    check_overrides(overrides)
     if sketches is None:
         sketches = mode != FAST
     df = layout_for_encode(df, key=key, partitions=partitions,
@@ -772,8 +773,10 @@ def encode_job_direct_write(spark, input_df, io: TableIO,
     attempt-unique temps + deterministic targets, dynamic-overwrite
     cleanup. Returns the same result dict as encode_files_direct.
     """
+    from .encode import check_overrides
     from .tableio import snapshot_of_input
 
+    check_overrides(overrides)
     snap = snapshot_id or snapshot_of_input(input_df)
     if cluster_by is not None and snapshot_id is None:
         # same identity rule as lineage.encode_job: the cluster layout

@@ -613,6 +613,23 @@ def _cluster_bucket_expr_py4j(cols: List[str], bounds: list):
     return build(0, len(bounds))
 
 
+def check_overrides(overrides) -> None:
+    """Raise ValueError, before any Spark job, for an override no batch
+    could honour: an unknown codec name or a decode-only codec would
+    otherwise write `plain` on every batch without a word. A codec that
+    cannot encode one batch (wrong domain, overflow) still falls back to
+    `plain` for that batch in select_encode."""
+    if not overrides:
+        return
+    from ..codecs import encodable_codecs
+
+    ok = encodable_codecs()
+    bad = {c: name for c, name in overrides.items() if name not in ok}
+    if bad:
+        raise ValueError(f"codec overrides {bad} name no codec that can "
+                         f"encode; choose from: {', '.join(ok)}")
+
+
 def make_encode_fn(snapshot_id: str, mode: str,
                    skip_parts: Optional[Set[int]] = None, plan=None,
                    overrides=None, sketches: bool = True):
@@ -649,7 +666,7 @@ def encode_table(df: DataFrame, key: Optional[str] = None,
     row-reordering lever for RLE effectiveness (cf. "Column Partition and
     Permutation for Run Length Encoding in Columnar Databases", SIGMOD
     2020): url-sorted rows cluster same-host pages, which lengthens runs
-    and sharpens FSST symbol tables on url/html, at the cost of
+    and puts similar url/html next to each other for zstd, at the cost of
     randomizing warc_ts order (DoD pays ~4 B/value instead of <2).
 
     cluster_by: column name (or list of names) to RANGE-cluster the table
@@ -674,12 +691,13 @@ def encode_table(df: DataFrame, key: Optional[str] = None,
     inside each partition.
 
     sketches: build per-block zone-map/bloom pruning metadata. Default:
-    on for size/balanced modes, off for mode="fast" (whose contract is
+    on for mode="balanced", off for mode="fast" (whose contract is
     raw throughput); pass True/False to force either way.
 
     overrides: {column: codec} forces codecs per column (the reference's
-    per-field strategy attribute, applied at runtime).
+    per-field strategy attribute, applied at runtime); see check_overrides.
     """
+    check_overrides(overrides)
     if sketches is None:
         sketches = mode != FAST
     df = layout_for_encode(df, key=key, partitions=partitions,

@@ -27,7 +27,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, functions as F
 
-from .encode import encode_table
+from .encode import check_overrides, encode_table
 from .selector import BALANCED
 from .tableio import TableIO, snapshot_of_input
 
@@ -83,6 +83,7 @@ def encode_job(spark, input_df: DataFrame, io: TableIO, key: Optional[str] = "ur
     boundaries run-to-run), and snapshot_id IS the file-listing hash, so
     partition k's contents are reproducible for a given snapshot.
     """
+    check_overrides(overrides)
     snap = snapshot_id or snapshot_of_input(input_df)
     if cluster_by is not None and snapshot_id is None:
         # fold the cluster layout (columns + version) into the auto

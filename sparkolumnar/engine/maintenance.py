@@ -2,7 +2,7 @@
 
 Streaming encode (streaming/encode_stream.py) writes one snapshot per
 micro-batch, and frequent small batches leave many small blocks — each
-with its own metadata row, sketches and FSST tables, and each a separate
+with its own metadata row, sketches and codec headers, and each a separate
 task at decode time. compact_snapshot rewrites a snapshot's rows into
 fewer, full-size blocks through the NORMAL encode path (same selector,
 same sketches, same exactly-once layout), optionally re-clustering on
@@ -16,7 +16,7 @@ snapshot's parts deterministically).
 
 Layout note: compaction re-runs the row layout from scratch — pass key=
 (hash+sort) or cluster_by= to re-establish row order, or the rewrite is
-storage-ordered and RLE/FSST runs can come out slightly shorter (a
+storage-ordered and RLE runs and zstd matches can come out shorter (a
 4->1-block compact of a url-sorted snapshot measured ~7% larger without
 key="url"; identical rows either way).
 """

@@ -3,14 +3,14 @@ from the north star.
 
 build_plan() samples the input ACROSS partitions (a bounded per-partition
 head take via mapInArrow, collected small to the driver), runs the full
-per-column selector on the sample, and captures anything expensive to
-rebuild per batch — today that is the FSST symbol table. The plan is a tiny
-plain-dict object that rides into the encode UDF closure (an implicit
-broadcast), so per-batch work drops to: encode the planned codec + the
-cheap always-on safety candidates, and never rebuild symbol tables.
+per-column selector on the sample, and records one codec name per column.
+The plan is a tiny plain-dict object that rides into the encode UDF
+closure (an implicit broadcast), so per-batch work on strings drops to:
+encode the planned expensive codec (dict/zstd), if any, plus the cheap
+always-on safety candidates.
 
 Why not `df.limit(n)`: limit pulls from the first partition(s) only, so a
-sorted or per-host-clustered input would mis-plan the FSST/dict decision
+sorted or per-host-clustered input would mis-plan the dict/zstd decision
 for the whole job. The per-partition take spreads the sample over up to
 _SAMPLE_PARTS evenly-strided partitions, which is unbiased w.r.t. any
 partition-level clustering and costs one cheap narrow job (each sampled
@@ -26,40 +26,26 @@ falls back to something <= the reference's own best size.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Dict, List, Optional
+from typing import Dict, Optional
 
 import numpy as np
 import pyarrow as pa
 
-from ..codecs import fsst as fsst_mod
 from ..codecs import get_codec
 from ..codecs.core import BIN, STR, domain_of, str_buffers
 from ..codecs.nputil import CodecError
-from .selector import BALANCED, FAST, SIZE, select_encode
+from .selector import _STR_TIE_RANK, BALANCED, FAST, select_encode
 
 DEFAULT_SAMPLE_ROWS = 8_192
 _SAMPLE_PARTS = 64          # spread the sample over at most this many parts
-# job-level FSST tables are built ONCE, so afford a bigger sample and more
-# merge rounds than the per-batch defaults (measured ~1.3% better ratio
-# than rounds=5/128K); per-column planning runs in a small thread pool
-# (numpy releases the GIL) to keep the plan pass under ~1s of driver CPU
-_JOB_FSST_SAMPLE = 256 << 10
-_JOB_FSST_ROUNDS = 8
-
-
-@dataclass
-class ColumnPlan:
-    codec: str
-    fsst_symbols: Optional[List[bytes]] = None
-    sample_ratio: float = 1.0  # sampled bytes_out / bytes_in
 
 
 @dataclass
 class CodecPlan:
-    columns: Dict[str, ColumnPlan] = field(default_factory=dict)
+    columns: Dict[str, str] = field(default_factory=dict)  # column -> codec
     mode: str = BALANCED
 
-    def get(self, name: str) -> Optional[ColumnPlan]:
+    def get(self, name: str) -> Optional[str]:
         return self.columns.get(name)
 
 
@@ -70,23 +56,16 @@ def _raw_bytes(arr: pa.Array) -> int:
 _PRICE_BYTES = 1 << 20  # price candidates on a bounded slice of the sample
 
 
-def _plan_str_column(arr: pa.Array, mode: str) -> ColumnPlan:
-    """Price every string-domain candidate on the sample, building the
-    job-level FSST symbol table exactly once (the per-batch select_encode
-    path would build a throwaway table first and the job table second).
+def _plan_str_column(arr: pa.Array, mode: str) -> str:
+    """Price every string-domain candidate on the sample.
 
     All candidates are priced on the SAME bounded slice (~1 MB) — enough
     for a stable ratio estimate; the per-batch race still guarantees the
     <=-reference size regardless of what the plan picks."""
-    full_data, full_offsets = str_buffers(arr)
-    if len(full_data) > _PRICE_BYTES:
-        cut = max(1, int(np.searchsorted(full_offsets, _PRICE_BYTES)))
-        arr = arr.slice(0, min(cut, len(arr)))
-    # logical size of the (possibly sliced) pricing window: buffers() on a
-    # slice returns the full parent buffers, which would understate the
-    # recorded ratio for columns larger than _PRICE_BYTES
     data, offsets = str_buffers(arr)
-    raw = len(data) + offsets.nbytes
+    if len(data) > _PRICE_BYTES:
+        cut = max(1, int(np.searchsorted(offsets, _PRICE_BYTES)))
+        arr = arr.slice(0, min(cut, len(arr)))
     sizes: Dict[str, int] = {"split": len(get_codec("split").encode(arr))}
     if len(arr) > 1:
         from ..codecs.rle_family import rle_size_binary
@@ -100,41 +79,18 @@ def _plan_str_column(arr: pa.Array, mode: str) -> ColumnPlan:
             sizes["zstd"] = len(get_codec("zstd").encode(arr))
         except (CodecError, OverflowError):
             pass
-    symbols: Optional[List[bytes]] = None
-    # the job-level FSST table build + pricing pass dominates plan cost
-    # (~0.27 s per big column); BALANCED plans skip it once zstd has
-    # already beaten the raw split layout (measured: zstd-1 both
-    # out-compresses and out-runs the numpy FSST on text — selector.py
-    # applies the same rule per batch). SIZE mode stays exhaustive.
-    zstd_won = sizes.get("zstd", 1 << 62) < sizes["split"]
-    if mode == SIZE or (mode != FAST and not zstd_won):
-        symbols = fsst_mod.build_table(
-            data, offsets, rounds=_JOB_FSST_ROUNDS,
-            sample_bytes=_JOB_FSST_SAMPLE)
-        if symbols:
-            sizes["fsst"] = len(fsst_mod.fsst_encode(
-                data, offsets, symbols=symbols))
-    from .selector import _STR_TIE_RANK
-    best = min(sizes.items(),
+    return min(sizes.items(),
                key=lambda kv: (kv[1], _STR_TIE_RANK.get(kv[0], 9), kv[0]))[0]
-    cp = ColumnPlan(codec=best,
-                    sample_ratio=sizes[best] / max(1, raw))
-    if best == "fsst":
-        cp.fsst_symbols = symbols
-    return cp
 
 
-def _plan_one(arr: pa.Array, mode: str) -> Optional[ColumnPlan]:
+def _plan_one(arr: pa.Array, mode: str) -> Optional[str]:
     try:
         dom = domain_of(arr.type)
     except CodecError:
         return None
     if dom in (STR, BIN):
         return _plan_str_column(arr, mode)
-    choice = select_encode(arr, mode=SIZE if mode != FAST else mode)
-    raw = max(1, _raw_bytes(arr))
-    return ColumnPlan(codec=choice.codec,
-                      sample_ratio=len(choice.payload) / raw)
+    return select_encode(arr, mode=mode).codec
 
 
 def plan_from_sample(sample: pa.Table, mode: str = BALANCED) -> CodecPlan:
@@ -155,9 +111,9 @@ def plan_from_sample(sample: pa.Table, mode: str = BALANCED) -> CodecPlan:
     work.sort(key=lambda w: -_raw_bytes(w[1]))
     with ThreadPoolExecutor(max_workers=min(4, len(work))) as pool:
         results = list(pool.map(lambda w: _plan_one(w[1], mode), work))
-    for (name, _), cp in zip(work, results):
-        if cp is not None:
-            plan.columns[name] = cp
+    for (name, _), codec in zip(work, results):
+        if codec is not None:
+            plan.columns[name] = codec
     return plan
 
 
@@ -289,10 +245,19 @@ def sample_local_parquet(df, sample_rows: int = DEFAULT_SAMPLE_ROWS
     batches = [b for bs in parts for b in bs]
     if not batches:
         return None
-    sample = pa.Table.from_batches(batches)
-    # hive-partition columns (or any reader-schema divergence) live outside
-    # the files; the Spark sample is the one that sees them
-    if set(sample.column_names) != {f.name for f in df.schema.fields}:
+    # the Spark sample is the one that sees what lives outside the files
+    # or differs between them: hive-partition columns, a user schema
+    # (int32 files read as long), files whose schemas differ (widened
+    # types, reordered columns) and the reader's type mapping
+    try:
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        want = to_arrow_schema(df.schema)
+        sample = pa.Table.from_batches(batches)
+    except (pa.ArrowInvalid, TypeError):  # TypeError: no Arrow equivalent
+        return None
+    if (dict(zip(sample.column_names, sample.schema.types))
+            != dict(zip(want.names, want.types))):
         return None
     return sample
 

@@ -8,19 +8,17 @@ block metadata so decode is self-describing (SURVEY.md §4.3).
 Selection contract (the "never lose" rule): for every domain the candidate
 set includes byte-identical implementations of every strategy the reference
 could have chosen for that type, so min(candidates) <= reference size on
-the same batch by construction. Extensions (dict/FSST/FOR/bit-pack) only
+the same batch by construction. Extensions (dict/zstd/FOR/bit-pack) only
 win on top.
 
-Candidates are actually *encoded* and the smallest payload wins — for the
-cheap codecs this costs one vectorized pass each and doubles as an exact
-size oracle; only FSST is gated by a sampled gain estimate because its
-encode pass is the most expensive.
+Candidates are priced exactly — analytically where a byte-exact size
+formula exists, otherwise by encoding — and the smallest payload wins.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Dict, Optional, Tuple
+from typing import Dict, Optional
 
 import numpy as np
 import pyarrow as pa
@@ -28,7 +26,7 @@ import pyarrow.compute as pc
 
 from ..codecs import get_codec
 from ..codecs.core import (BIN, BOOL, DEC128, F64, INT, LIST, MAP, STR,
-                           STRUCT, U64, domain_of, str_buffers)
+                           STRUCT, U64, domain_of)
 
 # container domains route to exactly one composite codec (which recurses
 # through this selector for its children)
@@ -37,12 +35,8 @@ _CONTAINER_CODEC = {LIST: "nested", STRUCT: "struct", MAP: "map",
 from ..codecs.nputil import CodecError, run_segments
 
 # selector modes
-SIZE = "size"          # try everything, smallest wins
-BALANCED = "balanced"  # gate expensive codecs behind sampled-gain estimates
-FAST = "fast"          # cheap codecs only
-
-_FSST_SAMPLE = 1 << 16
-_FSST_MIN_GAIN = 0.75  # sampled fsst size must be < 75% of best cheap size
+BALANCED = "balanced"  # every candidate (dict gated on sampled distincts)
+FAST = "fast"          # cheap codecs only: no zstd/dict on strings
 
 # equal-size tie-break for string codecs: cheapest encode+decode wins.
 # Unique-ish text ties rle with split EXACTLY (an all-literal AnyRle group
@@ -50,7 +44,7 @@ _FSST_MIN_GAIN = 0.75  # sampled fsst size must be < 75% of best cheap size
 # tie-break picked rle — whose binary encode is a full mask-interleave and
 # whose decode walks literal groups in a Python loop — over split's
 # near-memcpy. Size parity is unaffected: ties by definition cost nothing.
-_STR_TIE_RANK = {"split": 0, "zstd": 1, "dict": 2, "fsst": 3, "rle": 4}
+_STR_TIE_RANK = {"split": 0, "zstd": 1, "dict": 2, "rle": 3}
 
 
 @dataclass
@@ -60,24 +54,15 @@ class Choice:
     tried: Dict[str, int]  # codec -> encoded size (for lineage/analyze)
 
 
-def _int_stats(vals: np.ndarray) -> Tuple[int, bool]:
-    """(run_count, sorted-ish) for int arrays."""
-    if len(vals) <= 1:
-        return len(vals), True
-    neq = vals[1:] != vals[:-1]
-    runs = int(neq.sum()) + 1
-    nondec = bool(np.all(vals[1:] >= vals[:-1]))
-    return runs, nondec
-
-
-def select_encode(arr: pa.Array, mode: str = BALANCED, plan=None,
+def select_encode(arr: pa.Array, mode: str = BALANCED,
+                  plan: Optional[str] = None,
                   override: Optional[str] = None) -> Choice:
     """Encode a null-free arrow column chunk with the best codec.
 
-    plan: optional ColumnPlan from a job-level sample pass (engine/plan.py);
-    it pre-decides the expensive candidates (dict/FSST, incl. a pre-built
-    FSST symbol table) while the cheap reference-format candidates always
-    stay in the race for the size-parity guarantee.
+    plan: optional codec name from a job-level sample pass
+    (engine/plan.py); on strings it pre-decides the expensive candidates
+    (dict/zstd) while the cheap reference-format candidates always stay
+    in the race for the size-parity guarantee.
 
     override: force a specific codec for this column — the runtime
     counterpart of the reference's per-field `strategy = "..."` attribute
@@ -104,10 +89,7 @@ def select_encode(arr: pa.Array, mode: str = BALANCED, plan=None,
 
     def run(name: str) -> Optional[bytes]:
         try:
-            if name == "fsst" and plan is not None and plan.fsst_symbols:
-                payload = get_codec(name).encode(arr, symbols=plan.fsst_symbols)
-            else:
-                payload = get_codec(name).encode(arr)
+            payload = get_codec(name).encode(arr)
         except (CodecError, OverflowError):
             return None
         tried[name] = len(payload)
@@ -155,8 +137,6 @@ def select_encode(arr: pa.Array, mode: str = BALANCED, plan=None,
         from ..codecs.plain import split_size
         s_size = split_size(arr)
         tried["split"] = s_size
-        data, offsets = str_buffers(arr)
-        raw = len(data)
         rle_size = None
         if n > 1:
             from ..codecs.rle_family import rle_size_binary
@@ -164,16 +144,14 @@ def select_encode(arr: pa.Array, mode: str = BALANCED, plan=None,
             tried["rle"] = rle_size
         if plan is not None:
             # the job plan already decided the expensive candidates
-            if plan.codec in ("dict", "fsst", "zstd"):
-                p = run(plan.codec)
+            if plan in ("dict", "zstd"):
+                p = run(plan)
                 if p is not None:
-                    payloads[plan.codec] = p
+                    payloads[plan] = p
         else:
             if mode != FAST:
                 # zstd is cheap enough to price EXACTLY on every batch
-                # (~260 MB/s/core): the entropy-coding candidate of first
-                # resort — it both out-compresses and out-runs the numpy
-                # FSST on realistic text (codecs/zstd_codec.py)
+                # (~260 MB/s/core): the entropy-coding candidate
                 p = run("zstd")
                 if p is not None:
                     payloads["zstd"] = p
@@ -186,33 +164,6 @@ def select_encode(arr: pa.Array, mode: str = BALANCED, plan=None,
                     p = run("dict")
                     if p is not None:
                         payloads["dict"] = p
-            # FSST costs 20-50x a zstd pass for (measured) worse ratios on
-            # text, so BALANCED only reaches for it when zstd is absent or
-            # failed to beat the raw split layout (data zstd cannot touch
-            # is data FSST's pair-merge almost never touches either, and
-            # the sampled-gain gate below still bounds that attempt);
-            # SIZE mode stays exhaustive.
-            zstd_won = ("zstd" in payloads
-                        and len(payloads["zstd"]) < s_size)
-            if mode == SIZE or (mode == BALANCED and raw >= 4 * n
-                                and raw > 4096 and not zstd_won):
-                if mode == BALANCED:
-                    # sampled gain estimate before paying for the full pass
-                    cut = int(np.searchsorted(offsets, _FSST_SAMPLE))
-                    cut = max(1, min(cut, n))
-                    sample = arr.slice(0, cut)
-                    try:
-                        s_payload = get_codec("fsst").encode(sample)
-                        s_raw = int(offsets[cut])
-                        gain_ok = len(s_payload) < _FSST_MIN_GAIN * s_raw
-                    except (CodecError, OverflowError):
-                        gain_ok = False
-                else:
-                    gain_ok = True
-                if gain_ok:
-                    p = run("fsst")
-                    if p is not None:
-                        payloads["fsst"] = p
         # pick the winner across encoded payloads + analytic prices, then
         # encode the analytic winner only if it actually won
         cand = {k: len(v) for k, v in payloads.items() if v is not None}

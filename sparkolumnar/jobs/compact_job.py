@@ -36,7 +36,7 @@ def main(argv=None) -> None:
                          "columns): gives a streaming-written table "
                          "zone-map locality after the fact")
     ap.add_argument("--mode", default="balanced",
-                    choices=["size", "balanced", "fast"])
+                    choices=["balanced", "fast"])
     ap.add_argument("--no-verify", action="store_true",
                     help="skip the per-column checksum recompute on the "
                          "decode side (verification is ON by default)")

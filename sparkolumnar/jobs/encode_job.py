@@ -24,7 +24,7 @@ def main(argv=None) -> None:
     ap.add_argument("--output", required=True)
     ap.add_argument("--key", default="url")
     ap.add_argument("--mode", default="balanced",
-                    choices=["size", "balanced", "fast"])
+                    choices=["balanced", "fast"])
     ap.add_argument("--partitions", type=int, default=None)
     ap.add_argument("--cluster-by", default=None,
                     help="range-cluster the layout on these comma-separated "

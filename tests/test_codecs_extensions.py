@@ -1,14 +1,15 @@
 """Round-trip + compression tests for the north-rule extension codecs
-(dict, bitpack, frame-of-reference, FSST)."""
+(dict, bitpack, frame-of-reference), and decode tests of the decode-only
+FSST codec over committed golden payloads (tests/fsst_golden.py)."""
 
 import numpy as np
 import pyarrow as pa
 import pytest
 from hypothesis import given, settings, strategies as st
 
-from sparkolumnar.codecs import get_codec
+import fsst_golden as golden
+from sparkolumnar.codecs import CodecError, get_codec
 from sparkolumnar.codecs.bitpack import pack_uint, unpack_uint
-from sparkolumnar.codecs import fsst as fs
 
 I64 = st.integers(min_value=-(2**63), max_value=2**63 - 1)
 
@@ -61,44 +62,51 @@ def test_dict_compresses_low_cardinality():
     assert c.decode(payload, 50000, pa.string()).to_pylist() == vals
 
 
-@given(st.lists(st.binary(max_size=40), max_size=120))
-@settings(max_examples=150, deadline=None)
-def test_fsst_roundtrip_binary(xs):
-    arr = pa.array(xs, type=pa.binary())
-    c = get_codec("fsst")
-    out = c.decode(c.encode(arr), len(xs), pa.binary())
-    assert out.to_pylist() == xs
+def _check_golden(case):
+    """Full, prefix and range decodes of a committed payload equal the
+    regenerated input (test_partial_decode.py decodes prefixes and ranges
+    from truncated payloads)."""
+    arr, p = golden.inputs(case), golden.payload(case)
+    n, c = len(arr), get_codec("fsst")
+    assert c.decode(p, n, arr.type).equals(arr), case
+    for k in (0, 1, n // 3, n):
+        assert c.decode_prefix(p, n, arr.type, k).equals(arr.slice(0, k))
+    for start, stop in ((n // 4, n // 2), (n // 2, n // 2), (n - 1, n)):
+        start = max(0, start)
+        got = c.decode_range(p, n, arr.type, start, stop)
+        assert got.equals(arr.slice(start, stop - start)), (case, start)
 
 
-@given(st.lists(st.text(max_size=60), max_size=100))
-@settings(max_examples=100, deadline=None)
-def test_fsst_roundtrip_text(xs):
-    arr = pa.array(xs, type=pa.string())
+def test_fsst_roundtrip_binary():
+    """The wire format carries bytes; the Arrow type only labels them, so
+    every golden (string ones included) decodes as binary too."""
     c = get_codec("fsst")
-    out = c.decode(c.encode(arr), len(xs), pa.string())
-    assert out.to_pylist() == xs
+    for case in golden.CASES:
+        arr, p = golden.inputs(case), golden.payload(case)
+        got = c.decode(p, len(arr), pa.binary())
+        assert got.equals(arr.cast(pa.binary())), case
+
+
+def test_fsst_roundtrip_text():
+    _check_golden("web_text")
 
 
 def test_fsst_escape_heavy():
-    # strings full of 0xFF bytes (escape marker collisions)
-    xs = [b"\xff" * k for k in range(10)] + [b"a\xff" * 5, b"\xff\xffa" * 3]
-    arr = pa.array(xs, type=pa.binary())
-    c = get_codec("fsst")
-    assert c.decode(c.encode(arr), len(xs), pa.binary()).to_pylist() == xs
+    """No 0xFF byte is in the golden's symbol table, so the body holds
+    long 0xFF runs (escape marker + literal 0xFF pairs) across string
+    boundaries: the decoder's parity walk must classify every one."""
+    arr, p = golden.inputs("escape_heavy"), golden.payload("escape_heavy")
+    base, _ = golden.body_layout(p, len(arr))
+    assert b"\xff" * 16 in p[base:]
+    _check_golden("escape_heavy")
 
 
 def test_fsst_compresses_web_text():
-    rng = np.random.default_rng(11)
-    vocab = ["the", "quick", "brown", "fox", "jumps", "over", "lazy", "dog",
-             "https://", "example.com", "content", "page", "search"]
-    docs = [" ".join(vocab[i] for i in rng.zipf(1.5, 40) % len(vocab))
-            for _ in range(2000)]
-    arr = pa.array(docs, type=pa.string())
-    raw = sum(len(d.encode()) for d in docs)
-    c = get_codec("fsst")
-    payload = c.encode(arr)
-    assert c.decode(payload, len(docs), pa.string()).to_pylist() == docs
-    assert len(payload) < 0.6 * raw  # must beat plain by a wide margin on text
+    """The stored text payloads are far below their raw size."""
+    for case in ("web_text", "big_text"):
+        arr, p = golden.inputs(case), golden.payload(case)
+        raw = len(arr.buffers()[2])
+        assert len(p) < (0.3 if case == "web_text" else 0.75) * raw, case
 
 
 @given(st.lists(st.floats(allow_nan=False), max_size=150))
@@ -146,42 +154,44 @@ def test_nested_list_fuzz(xs):
 
 
 def test_fsst_adversarial_shapes():
-    """Edge shapes through the FULL fsst path: all-escape bytes, empty
-    strings, single giant string crossing the chunk limit, 1-byte strings,
-    and a string of repeated escapes."""
-    import numpy as np
+    """Edge shapes: no strings, only empty strings, and a body over
+    1 MiB that the decoder splits into several chunks."""
+    from sparkolumnar.codecs import fsst
 
-    from sparkolumnar.codecs import fsst as fsst_mod
-
-    c = get_codec("fsst")
-    cases = [
-        pa.array(["\xff" * 3, "", "\xff\xff\xff\xff"] * 40),
-        pa.array([""] * 100),
-        pa.array(["x"] * 5000),
-        pa.array(["ab" * (1 << 19)]),  # one string > CHUNK_BYTES
-        pa.array(["q"] + ["the quick brown fox"] * 300 + [""]),
-        pa.array([chr(i % 256) for i in range(1, 512)]),
-    ]
-    for arr in cases:
-        arr = arr.cast(pa.string()) if arr.type == pa.string() else arr
-        p = c.encode(arr)
-        out = c.decode(p, len(arr), arr.type)
-        assert out.to_pylist() == arr.to_pylist()
-        k = max(1, len(arr) // 2)
-        pre = c.decode_prefix(p, len(arr), arr.type, k)
-        assert pre.to_pylist() == arr.slice(0, k).to_pylist()
+    for case in ("no_strings", "all_empty", "big_text"):
+        _check_golden(case)
+    arr, p = golden.inputs("big_text"), golden.payload("big_text")
+    base, _ = golden.body_layout(p, len(arr))
+    assert len(p) - base > 1.1 * fsst.CHUNK_BYTES
 
 
 def test_fsst_binary_random_bytes():
-    import numpy as np
+    _check_golden("random_binary")
 
-    rng = np.random.default_rng(123)
-    vals = [rng.integers(0, 256, rng.integers(0, 300)).astype("u1").tobytes()
-            for _ in range(400)]
-    arr = pa.array(vals, type=pa.binary())
+
+def test_fsst_corrupt_payloads_raise():
+    """Damaged FSST payloads raise CodecError instead of decoding to
+    wrong strings."""
     c = get_codec("fsst")
-    p = c.encode(arr)
-    assert c.decode(p, len(arr), arr.type).to_pylist() == vals
+    arr, p = golden.inputs("escape_heavy"), golden.payload("escape_heavy")
+    n, typ = len(arr), arr.type
+    bad = [
+        (p[:-1], n),                    # body shorter than the lengths say
+        (p + b"x", n),                  # body longer than the lengths say
+        (p, n + 1),                     # string count mismatch
+        (b"\x01\x09" + p[2:], n),       # symbol length 9 > 8
+        # no symbols, one string of one encoded byte: an escape marker
+        # whose literal is missing, and a code byte with no symbol
+        (b"\x00\x01\x01\xff", 1),
+        (b"\x00\x01\x01\x05", 1),
+    ]
+    for payload, count in bad:
+        with pytest.raises(CodecError):
+            c.decode(payload, count, typ)
+    with pytest.raises(CodecError):   # a range past a truncated body
+        c.decode_range(golden.cut_after(p, n, 10), n, typ, 5, 20)
+    with pytest.raises(CodecError):   # decode-only: encoding is refused
+        c.encode(arr)
 
 
 def test_split_size_is_byte_exact():

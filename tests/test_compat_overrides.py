@@ -270,6 +270,31 @@ def test_codec_override_invalid_falls_back_to_plain(spark, small_df):
     assert out[7]["s"] == "s2"
 
 
+@pytest.mark.parametrize("codec", ["fsst", "zsdt"])
+def test_codec_override_that_cannot_encode_raises(spark, small_df, tmp_path,
+                                                  codec):
+    """A decode-only codec (fsst) or a misspelled name fails loudly
+    before any Spark job, listing the codecs that can encode, instead of
+    writing plain on every batch."""
+    from sparkolumnar.engine.lineage import encode_job
+    from sparkolumnar.engine.tableio import TableIO
+
+    sc = spark.sparkContext
+    sc.setJobGroup("override-check", "override validation")
+    try:
+        with pytest.raises(ValueError, match="choose from") as err:
+            encode_job(spark, small_df, TableIO(spark, str(tmp_path)),
+                       key=None, overrides={"s": codec})
+        with pytest.raises(ValueError, match="choose from"):
+            encode_table(small_df, overrides={"v": "dod", "s": codec})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("override-check") == []
+    listed = str(err.value).split("choose from:")[1]
+    assert "zstd" in listed and "split" in listed
+    assert "fsst" not in listed
+
+
 def test_decimal_columns_roundtrip(spark):
     from decimal import Decimal
 

@@ -6,6 +6,7 @@ import numpy as np
 import pyarrow as pa
 import pytest
 
+import fsst_golden as golden
 from sparkolumnar.codecs import get_codec
 from sparkolumnar.engine.selector import select_encode
 
@@ -52,28 +53,15 @@ def test_split_prefix_needs_only_prefix_bytes():
 
 
 def test_fsst_prefix_needs_only_prefix_bytes():
-    strs = pa.array([f"the quick brown fox {i} jumps over the lazy dog"
-                     for i in range(400)])
-    p = get_codec("fsst").encode(strs)
-    full = get_codec("fsst").decode(p, 400, strs.type)
-    for k in (0, 1, 50, 400):
-        got = get_codec("fsst").decode_prefix(p, 400, strs.type, k)
-        assert got.to_pylist() == full.slice(0, k).to_pylist()
-    # truncated payload: keep header + first 50 strings' bytes only
-    from sparkolumnar.codecs import fsst as fs
-    from sparkolumnar.codecs.nputil import uvarint_decode
-    buf = np.frombuffer(p, np.uint8)
-    cnt, used = uvarint_decode(buf, 1)
-    pos = used
-    for _ in range(int(cnt[0])):
-        pos += 1 + int(buf[pos])
-    _, u2 = uvarint_decode(buf[pos:], 1)
-    pos += u2
-    enc_lens, u3 = uvarint_decode(buf[pos:], 400)
-    pos += u3
-    cut = pos + int(enc_lens[:50].sum())
-    got = get_codec("fsst").decode_prefix(p[:cut], 400, strs.type, 50)
-    assert got.to_pylist() == full.slice(0, 50).to_pylist()
+    """The decode-only FSST codec over its committed golden payloads:
+    a prefix decodes from a payload cut right after the prefix's bytes."""
+    for case in golden.CASES:
+        arr, p = golden.inputs(case), golden.payload(case)
+        n = len(arr)
+        for k in (0, 1, n // 2, n):
+            got = get_codec("fsst").decode_prefix(
+                golden.cut_after(p, n, k), n, arr.type, k)
+            assert got.equals(arr.slice(0, k)), (case, k)
 
 
 def test_default_prefix_fallback():
@@ -153,8 +141,9 @@ def test_decode_prefix_property_all_codecs():
 
 
 def test_decode_range_random_access():
-    """decode_range(start, stop) == decode()[start:stop] for all codecs;
-    fsst/split skip both head and tail body bytes (proven by truncation)."""
+    """decode_range(start, stop) == decode()[start:stop] for all codecs
+    that encode (the decode-only fsst is covered by its golden payloads:
+    test_fsst_range_needs_only_range_bytes)."""
     rng = np.random.default_rng(21)
     arrays = [
         ("rle", pa.array(np.repeat(rng.integers(0, 4, 50),
@@ -162,8 +151,6 @@ def test_decode_range_random_access():
         ("delta_rle", pa.array(np.arange(0, 3000, 7, dtype=np.int64))),
         ("split", pa.array([f"value {i} {'y' * (i % 11)}"
                             for i in range(300)])),
-        ("fsst", pa.array(["the quick brown fox jumps"] * 200
-                          + [f"tail {i}" for i in range(50)])),
         ("zstd", pa.array(["the quick brown fox jumps"] * 200
                           + [f"tail {i}" for i in range(50)])),
     ]
@@ -179,24 +166,15 @@ def test_decode_range_random_access():
 
 
 def test_fsst_range_needs_only_range_bytes():
-    strs = pa.array([f"doc {i} with words" for i in range(200)])
-    c = get_codec("fsst")
-    p = c.encode(strs)
-    full = c.decode(p, 200, strs.type)
-    from sparkolumnar.codecs.nputil import uvarint_decode
-    buf = np.frombuffer(p, np.uint8)
-    cnt, used = uvarint_decode(buf, 1)
-    pos = used
-    for _ in range(int(cnt[0])):
-        pos += 1 + int(buf[pos])
-    _, u2 = uvarint_decode(buf[pos:], 1)
-    pos += u2
-    enc_lens, u3 = uvarint_decode(buf[pos:], 200)
-    pos += u3
-    # truncate right after string 120's bytes; decode strings [80, 120)
-    cut = pos + int(enc_lens[:120].sum())
-    got = c.decode_range(p[:cut], 200, strs.type, 80, 120)
-    assert got.to_pylist() == full.slice(80, 40).to_pylist()
+    """A range of a golden FSST payload decodes from the payload cut right
+    after the range's bytes."""
+    for case in golden.CASES:
+        arr, p = golden.inputs(case), golden.payload(case)
+        n = len(arr)
+        start, stop = n * 2 // 5, n * 3 // 5
+        got = get_codec("fsst").decode_range(
+            golden.cut_after(p, n, stop), n, arr.type, start, stop)
+        assert got.equals(arr.slice(start, stop - start)), case
 
 
 def test_prefix_budgets_distributed_large_offset(spark):

@@ -90,7 +90,56 @@ def test_plan_picks_fsst_on_clustered_input(spark):
     natural = build_plan(pages)
     clustered = build_plan(pages.repartition(8).sortWithinPartitions("lang"))
     for col in ("text", "html", "url"):
-        assert clustered.columns[col].codec == natural.columns[col].codec
+        assert clustered.columns[col] == natural.columns[col]
+
+
+def _plans_agree_via_spark_sample(df):
+    """The driver-side sampler declines df, and build_plan's plan is the
+    one the Spark sample gives."""
+    from sparkolumnar.engine.plan import (build_plan, plan_from_sample,
+                                          sample_local_parquet, sample_table)
+
+    assert sample_local_parquet(df) is None
+    assert build_plan(df).columns == plan_from_sample(
+        sample_table(df)).columns
+
+
+def test_plan_heterogeneous_file_schemas(spark, tmp_path):
+    """Files whose schemas differ cannot be concatenated driver-side:
+    build_plan must fall back to the Spark sample, both when a column is
+    widened (int32 in one file, int64 in the other, read as long) and
+    when the files order their columns differently."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n = 3000
+    s0 = pa.array([f"v{i % 5}" for i in range(n)])
+    s1 = pa.array([f"w{i % 3}" for i in range(n)])
+    for name, x0, x1 in (("widened", pa.int32(), pa.int64()),
+                         ("reordered", pa.int64(), pa.int64())):
+        d = tmp_path / name
+        d.mkdir()
+        pq.write_table(pa.table({"x": pa.array(np.arange(n) % 7, x0),
+                                 "s": s0}), d / "part-0.parquet")
+        pq.write_table(pa.table({"s": s1,
+                                 "x": pa.array(np.arange(n) // 3, x1)}),
+                       d / "part-1.parquet")
+        df = spark.read.schema("x long, s string").parquet(str(d))
+        _plans_agree_via_spark_sample(df)
+
+
+def test_plan_user_schema_differs_from_files(spark, tmp_path):
+    """int32 files read with a user schema `x long`: the pyarrow sample
+    would carry int32, so the Spark sample (int64) must be used."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table({"x": pa.array(np.arange(3000) % 9, pa.int32())}),
+                   tmp_path / "part-0.parquet")
+    _plans_agree_via_spark_sample(
+        spark.read.schema("x long").parquet(str(tmp_path)))
 
 
 def test_zone_map_block_pruning(spark, tmp_path):

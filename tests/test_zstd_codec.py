@@ -84,9 +84,8 @@ def test_zstd_wrong_count_raises():
 
 
 def test_selector_prefers_zstd_on_text_and_keeps_parity():
-    """BALANCED picks zstd for web text (cheaper AND smaller than the
-    numpy FSST), while the reference candidates stay priced so the
-    <=-reference guarantee is intact."""
+    """BALANCED picks zstd for web text, while the reference candidates
+    stay priced so the <=-reference guarantee is intact."""
     arr = _web_text()
     ch = select_encode(arr)
     assert ch.codec == "zstd", ch.tried
