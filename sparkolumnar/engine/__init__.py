@@ -2,7 +2,7 @@
 
 from .blocks import blocks_schema  # noqa: F401
 from .decode import (decode_blocks, schema_of_blocks,  # noqa: F401
-                     union_schema_of_blocks, zone_filter, zone_filter_eq)
+                     union_schema_of_blocks)
 from .direct import (decode_files_direct, encode_files_direct,  # noqa: F401
                      encode_job_direct_write, encode_table_direct_write)
 from .encode import encode_table  # noqa: F401

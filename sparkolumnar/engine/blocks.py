@@ -217,7 +217,7 @@ def bloom_positions(value: bytes) -> tuple:
     """The _BLOOM_K bit positions of a value (sha256-derived, so the
     driver-side probe and the executor-side build always agree).
     Memoized: encode probes each distinct categorical value once per
-    block, and the direct decode's block_keep_py probes each filter
+    block, and the decode's block_keep_py probes each filter
     value once per block — both repeat values heavily."""
     d = hashlib.sha256(value).digest()
     return tuple(int.from_bytes(d[8 * i: 8 * i + 8], "big") % _BLOOM_BITS

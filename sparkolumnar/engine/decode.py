@@ -150,6 +150,16 @@ def decode_block_row(row: dict, verify: bool = False,
 _BASE_COLS = ("block_id", "snapshot_id", "part_id", "seq", "n_rows",
               "columns")
 
+
+def _scan_columns(blocks_df: DataFrame, cols) -> DataFrame:
+    """blocks_df projected to the block metadata plus the payload and
+    validity fields of `cols` — the scan never reads other columns'
+    bytes."""
+    have = set(blocks_df.columns)
+    return blocks_df.select(*_BASE_COLS, *[
+        f for c in cols for f in (payload_field(c), validity_field(c))
+        if f in have])
+
 # merge-on-read deletes (engine/deletes.py): the OR-aggregated position
 # bitmap joined onto the block scan, its popcount (budget pass only), and
 # the physically-unique block coordinates the join is keyed by
@@ -165,8 +175,13 @@ _DELETE_CLOSURE_MAX_BYTES = 32 << 20
 def make_decode_fn(verify: bool = False, columns: Optional[List[str]] = None,
                    target: Optional[pa.Schema] = None,
                    budgets: Optional[dict] = None,
-                   del_masks: Optional[dict] = None):
-    """budgets (partial decode): {(snapshot_id, part_id, seq): (skip, take)}
+                   del_masks: Optional[dict] = None,
+                   groups: Optional[list] = None,
+                   session_tz: Optional[str] = None):
+    """mapInArrow fn decoding block rows into the requested `columns`
+    (None = every column; `target` = compat decode, see decode_block_row).
+
+    budgets (partial decode): {(snapshot_id, part_id, seq): (skip, take)}
     — keyed by the physically-unique block coordinates, NOT block_id:
     block_id is content-addressed, so two byte-identical batches in one
     snapshot share one, and a block_id-keyed window would silently decode
@@ -176,10 +191,16 @@ def make_decode_fn(verify: bool = False, columns: Optional[List[str]] = None,
     part_id, seq): OR'd position bitmap} shipped in the task closure —
     the multi-MB payload binaries then never traverse a join operator
     (decode_blocks falls back to joining a _del_mask column onto the
-    scan only when the aggregated bitmaps are too many to ship)."""
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import numpy as np
+    scan only when the aggregated bitmaps are too many to ship).
 
+    groups (normalized filters=, see _normalize_filters): the filter
+    runs here, per block, on every read path — block_keep_py on the
+    metadata before any payload buffer is touched, then the projection
+    plus the filter's root columns decode, exact_filter_mask_py masks
+    the rows, and the columns only the filter needed are dropped, so
+    the batches carry exactly the requested columns. session_tz: the
+    Spark session timezone the filter literals are read in."""
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
             names = b.schema.names
             # metadata columns go through to_pylist (small structs); the
@@ -200,6 +221,10 @@ def make_decode_fn(verify: bool = False, columns: Optional[List[str]] = None,
                         (row["snapshot_id"], row["part_id"], row["seq"]))
                     if budget is None:
                         continue
+                if groups and not block_keep_py(
+                        row["columns"], groups, session_tz=session_tz,
+                        n_rows=row["n_rows"]):
+                    continue
                 dmask = row.pop(DELETE_MASK_COL, None)
                 if dmask is None and del_masks is not None:
                     dmask = del_masks.get(
@@ -208,29 +233,44 @@ def make_decode_fn(verify: bool = False, columns: Optional[List[str]] = None,
                     s = col[j]
                     row[name] = (memoryview(s.as_buffer())
                                  if s.is_valid else None)
-                if dmask is None:
+                if dmask is None and not groups:
                     out = decode_block_row(row, verify=verify,
                                            columns=columns, target=target,
                                            budget=budget)
                 else:
-                    # merge-on-read deletes: decode the WHOLE block (so
-                    # verify still checksums the stored columns), mask
-                    # deleted rows out, and only then apply any (skip,
-                    # take) budget — budgets count LIVE rows when deletes
-                    # are present (decode_blocks computed them from
-                    # n_rows - n_deleted)
-                    out = decode_block_row(row, verify=verify,
-                                           columns=columns, target=target)
-                    bits = np.unpackbits(
-                        np.frombuffer(dmask, np.uint8))[:row["n_rows"]]
-                    out = out.filter(pa.array(~bits.astype(bool)))
+                    out = _decode_masked(row, verify, columns, target,
+                                         dmask, groups, session_tz)
                     if budget is not None:
-                        skip, take = budget
-                        out = out.slice(skip, take)
+                        out = out.slice(*budget)
                 if out.num_rows:
                     yield out
 
     return fn
+
+
+def _decode_masked(row, verify, columns, target, dmask, groups,
+                   session_tz) -> pa.RecordBatch:
+    """Decode the WHOLE block (so verify still checksums the stored
+    columns), drop its deleted rows, then the rows failing the filter.
+    A (skip, take) budget applies only after this — budgets count LIVE
+    rows when deletes are present (decode_blocks computed them from
+    n_rows - n_deleted)."""
+    extra = []
+    if groups and columns is not None:
+        extra = [c for c in filter_root_columns_of(
+            groups, {m["name"] for m in row["columns"]})
+            if c not in columns]
+    out = decode_block_row(row, verify=verify,
+                           columns=list(columns) + extra if extra
+                           else columns, target=target)
+    if dmask is not None:
+        bits = np.unpackbits(np.frombuffer(dmask, np.uint8))[:row["n_rows"]]
+        out = out.filter(pa.array(~bits.astype(bool)))
+    if groups:
+        out = out.filter(exact_filter_mask_py(out, groups, session_tz))
+        if target is None:  # a compat target keeps them: its own fields
+            out = out.drop_columns(extra)
+    return out
 
 
 def schema_of_blocks(blocks_df: DataFrame,
@@ -474,137 +514,10 @@ def _budget_range_pred(lo: tuple, hi: tuple):
     return ge(lo) & le(hi)
 
 
-def _col_cond(column: str, per_elem):
-    """Block-keep condition: the metadata element for `column` satisfies
-    per_elem(c). A column unknown to a block's metadata never prunes it
-    (a typo'd name must not silently drop every block)."""
-    from pyspark.sql import functions as F
-
-    has = F.exists(F.col("columns"), lambda c: c["name"] == F.lit(column))
-    ok = F.exists(
-        F.col("columns"),
-        lambda c: (c["name"] == F.lit(column)) & per_elem(c))
-    return ~has | ok
-
-
-def _range_elem(lo, hi, use_float: bool):
-    """Per-element keep condition: the block's numeric zone map overlaps
-    [lo, hi] (or carries no bounds — pruning is only ever sound)."""
-    from pyspark.sql import functions as F
-
-    mn, mx = ("min_f64", "max_f64") if use_float else ("min_i64", "max_i64")
-
-    def g(c):
-        cond = None
-        if lo is not None:
-            cond = c[mx] >= F.lit(lo)
-        if hi is not None:
-            upper = c[mn] <= F.lit(hi)
-            cond = upper if cond is None else (cond & upper)
-        if cond is None:
-            return F.lit(True)
-        return c[mn].isNull() | cond
-
-    return g
-
-
-def _str_range_elem(lo, hi):
-    """Per-element keep condition for string/binary RANGE predicates over
-    the truncated-prefix bounds (min_bin <= values <= max_bin, see
-    blocks.prefix_lower/prefix_upper). Spark's BinaryType comparison is
-    unsigned lexicographic — the same order as the raw utf-8 bytes and as
-    the string's code points, so `url >= lo` prunes correctly. Each side
-    degrades independently when its bound is null (old table, or the
-    upper-bound increment overflowed)."""
-    from pyspark.sql import functions as F
-
-    def g(c):
-        conds = []
-        if hi is not None:
-            # prune when min_bin > hi: min_bin <= true min, so true min > hi
-            conds.append(c["min_bin"].isNull() | (c["min_bin"] <= F.lit(hi)))
-        if lo is not None:
-            # prune when max_bin < lo: max_bin >= true max, so true max < lo
-            conds.append(c["max_bin"].isNull() | (c["max_bin"] >= F.lit(lo)))
-        if not conds:
-            return F.lit(True)
-        out = conds[0]
-        for e in conds[1:]:
-            out = out & e
-        return out
-
-    return g
-
-
-def _bloom_elem(value: bytes):
-    """Per-element keep condition: the block's bloom sketch may contain
-    `value` (all of its bit positions set), or the block has no bloom.
-    Bit tests are plain JVM shift/and expressions over the metadata."""
-    from pyspark.sql import functions as F
-
-    from .blocks import bloom_positions
-
-    positions = bloom_positions(value)
-
-    def g(c):
-        bits = None
-        for pos in positions:
-            bit = (F.shiftright(c["bloom"][pos // 64], pos % 64)
-                   .bitwiseAND(F.lit(1)) == 1)
-            bits = bit if bits is None else (bits & bit)
-        return c["bloom"].isNull() | bits
-
-    return g
-
-
-def zone_filter(blocks_df: DataFrame, column: str, lo, hi) -> DataFrame:
-    """Block-level predicate pushdown via zone maps: keep only blocks
-    whose per-block min/max for `column` overlaps [lo, hi]. Integer-like
-    columns use canonical-int64 bounds (for timestamps pass epoch
-    micros); float columns use float bounds (pass lo/hi as floats).
-    Blocks without bounds (unsupported domains, NaN-containing floats,
-    old tables) are kept — pruning is only ever sound. The predicate runs
-    on the metadata struct leaves, so the scan reads no payload bytes for
-    pruned blocks; exact row filtering remains the caller's .filter on
-    the decoded output (or use decode_blocks(filters=) which does both).
-
-    lo=None / hi=None leave that side unbounded (one-sided predicates)."""
-    use_float = isinstance(lo, float) or isinstance(hi, float)
-    return blocks_df.where(_col_cond(column, _range_elem(lo, hi, use_float)))
-
-
-def _meta_fields_of(blocks_df: DataFrame) -> frozenset:
-    """Field names available in the per-column metadata struct — older
-    snapshots (written before a sketch family existed, e.g. pre-prefix-
-    bounds tables) lack some fields, and referencing an absent struct
-    field is an ANALYSIS error in Spark, not a null. Pruning degrades
-    per sketch family on these tables instead of failing the query."""
-    try:
-        t = blocks_df.schema["columns"].dataType.elementType
-        return frozenset(t.fieldNames())
-    except Exception:
-        return frozenset()
-
-
-def zone_filter_eq(blocks_df: DataFrame, column: str, value) -> DataFrame:
-    """Block-level EQUALITY pushdown via the per-block bloom sketch: keep
-    only blocks whose bloom for `column` has all of the value's bits set
-    (or no bloom at all — pruning is only ever sound), AND whose prefix
-    zone bounds admit the value (when the table carries them). Pruned
-    blocks' payload bytes are never read. Exact row filtering remains
-    the caller's .filter on the decoded output."""
-    if isinstance(value, str):
-        value = value.encode("utf-8", "surrogatepass")
-    cond = _col_cond(column, _bloom_elem(value))
-    if {"min_bin", "max_bin"} <= _meta_fields_of(blocks_df):
-        cond = cond & _col_cond(column, _str_range_elem(value, value))
-    return blocks_df.where(cond)
-
-
 def _canon_zone_value(value, arrow_type_str: str, session_tz=None):
-    """Memoizing front for _canon_zone_value_impl: the direct decode
-    path evaluates the same filter leaves once PER BLOCK (block_keep_py
-    in the task loop), and re-parsing an ISO timestamp or re-scaling a
+    """Memoizing front for _canon_zone_value_impl: every read path
+    evaluates the same filter leaves once PER BLOCK (block_keep_py in
+    the task loop), and re-parsing an ISO timestamp or re-scaling a
     Decimal 10^5 times per part is pure overhead. Predicate values are
     hashable in practice (str/int/float/datetime/date/Decimal/bytes);
     anything unhashable falls through to the direct computation."""
@@ -724,7 +637,6 @@ _FILTER_OPS = ("between", "=", "==", "!=", ">=", "<=", ">", "<", "in",
                "not in", "is_null", "is_not_null", "starts_with")
 _NULLARY_OPS = ("is_null", "is_not_null")
 _STR_TYPES = ("string", "large_string", "binary", "large_binary")
-_PREPASS_MAX_PARTS = 4096  # isin cap before degrading to a min/max range
 
 
 def _normalize_filters(filters):
@@ -777,11 +689,12 @@ def filter_columns_of(filters) -> List[str]:
     return out
 
 
-def filter_root_columns_of(filters, types: dict) -> List[str]:
+def filter_root_columns_of(filters, types) -> List[str]:
     """Top-level DECODE columns the filter leaves need: a dotted leaf
     ("meta.n_chars", a struct-child sketch) decodes its root column —
     the child has no payload of its own. A dotted name that is itself a
-    top-level column (no root entry in the metadata) stays as-is."""
+    top-level column (no root entry in `types`, any container of the
+    metadata's column names) stays as-is."""
     seen, out = set(), []
     for c in filter_columns_of(filters):
         root = c.split(".", 1)[0]
@@ -815,203 +728,21 @@ def _prefix_excl_upper(b: bytes):
     return None
 
 
-_ALL_META_FIELDS = frozenset((
-    "name", "codec", "arrow_type", "n_nulls", "bytes_in", "bytes_out",
-    "checksum_in", "min_i64", "max_i64", "min_f64", "max_f64", "bloom",
-    "min_bin", "max_bin"))
-
-
-def _eq_block_cond(col: str, v, t: str, is_str: bool,
-                   fields: frozenset = _ALL_META_FIELDS,
-                   session_tz=None):
-    """Block-keep condition for `col == v`, or None (no pruning)."""
-    if is_str:
-        b = _str_probe_bytes(v)
-        if b is None:
-            return None
-        conds = []
-        if "bloom" in fields:
-            conds.append(_col_cond(col, _bloom_elem(bytes(b))))
-        if {"min_bin", "max_bin"} <= fields:
-            conds.append(_col_cond(col, _str_range_elem(bytes(b),
-                                                        bytes(b))))
-        if not conds:
-            return None
-        out = conds[0]
-        for c in conds[1:]:
-            out = out & c
-        return out
-    c = _canon_zone_value(v, t, session_tz)
-    if c is None:
-        return None
-    return _col_cond(col, _range_elem(c, c, isinstance(c, float)))
-
-
-def _not_all_null_elem(c):
-    """Per-element keep: the block holds at least one NON-null value.
-    Sound extra prune for every value-comparison op (=, <, between, in,
-    !=, not in): SQL null comparisons never match, so an all-null block
-    (n_nulls == n_rows) cannot satisfy any of them. n_rows is the
-    block row's top-level column — an outer reference inside the
-    exists() lambda."""
-    from pyspark.sql import functions as F
-
-    return c["n_nulls"].isNull() | (c["n_nulls"] < F.col("n_rows"))
-
-
-def _const_block_ne_elem(col_vals, t, is_str, session_tz):
-    """Per-element keep condition for `col != v` / `col NOT IN vals`:
-    prune a block only when it is PROVABLY constant-equal to a listed
-    value — zone min == max == v with zero nulls. For string/binary the
-    proof needs untruncated bounds: min_bin == max_bin == v with
-    len(v) < prefix width implies the true min and max both equal v
-    (a longer true min would leave a full-width prefix; an incremented
-    truncated upper bound strictly exceeds the true max). Inconvertible
-    values are skipped (no pruning from them), never pruned on.
-    Returns the elem lambda, or None if no value yields a proof."""
-    from pyspark.sql import functions as F
-
-    from .blocks import _ZONE_PREFIX_BYTES
-
-    checks = []  # (mn_field, mx_field, lit) triples proving constancy
-    for v in col_vals:
-        if is_str:
-            b = _str_probe_bytes(v)
-            if b is None or len(b) >= _ZONE_PREFIX_BYTES:
-                continue
-            checks.append(("min_bin", "max_bin", F.lit(bytes(b))))
-        else:
-            cv = _canon_zone_value(v, t, session_tz)
-            if cv is None:
-                continue
-            mn, mx = (("min_f64", "max_f64") if isinstance(cv, float)
-                      else ("min_i64", "max_i64"))
-            checks.append((mn, mx, F.lit(cv)))
-    if not checks:
-        return None
-
-    def g(c):
-        const_eq = None
-        for mn, mx, lit in checks:
-            e = (c[mn] == lit) & (c[mx] == lit)
-            const_eq = e if const_eq is None else (const_eq | e)
-        allv = (c["n_nulls"] == 0) & const_eq
-        # null zone fields (sketchless older block) must KEEP: guard
-        # before negating, or ~null -> null reads as prune in exists()
-        return c["n_nulls"].isNull() | ~F.coalesce(allv, F.lit(False))
-
-    return g
-
-
-def _leaf_block_cond(flt, types: dict,
-                     fields: frozenset = _ALL_META_FIELDS,
-                     session_tz=None):
-    """Block-keep condition for one (col, op, ...) filter, or None when
-    the combination supports no pruning (unknown column, value not
-    convertible to the column's canonical domain) — the exact post-filter
-    then carries the predicate alone, which is always sound."""
-    from pyspark.sql import functions as F
-
-    col, op, vals = flt[0], flt[1], list(flt[2:])
-    t = types.get(col)
-    if t is None:
-        return None
-    has_nn = "n_nulls" in fields
-    if op == "is_null":
-        # a block with zero nulls in this column cannot match
-        if not has_nn:
-            return None
-        return _col_cond(col, lambda c: (c["n_nulls"].isNull()
-                                         | (c["n_nulls"] > 0)))
-    if op == "is_not_null":
-        if not has_nn:
-            return None
-        return _col_cond(col, _not_all_null_elem)
-    # every remaining op is a value comparison: an all-null block can
-    # never match it, whatever the zone maps say
-    nan_cond = (_col_cond(col, _not_all_null_elem) if has_nn else None)
-
-    def with_nan(cond):
-        if cond is None:
-            return nan_cond
-        return cond if nan_cond is None else (cond & nan_cond)
-
-    is_str = t in _STR_TYPES
-    if op in ("!=", "not in"):
-        values = vals[0] if op == "not in" else [vals[0]]
-        if not values:  # NOT IN (): vacuously true, even for nulls
-            return None
-        elem = _const_block_ne_elem(values, t, is_str, session_tz)
-        return with_nan(_col_cond(col, elem) if elem is not None else None)
-    if op == "in":
-        # bloom/zone-probe each value, union the survivors: a block is
-        # kept iff SOME listed value may be present in it
-        conds = []
-        for v in vals[0]:
-            c = _eq_block_cond(col, v, t, is_str, fields, session_tz)
-            if c is None:
-                return with_nan(None)
-            conds.append(c)
-        if not conds:  # IN () matches nothing: prune every block
-            return F.lit(False)
-        out = conds[0]
-        for c in conds[1:]:
-            out = out | c
-        return with_nan(out)
-    if op in ("=", "=="):
-        return with_nan(
-            _eq_block_cond(col, vals[0], t, is_str, fields, session_tz))
-    if op == "starts_with":
-        # prefix probe == the range [p, incremented-prefix) over the
-        # truncated string zone bounds; non-string columns get no
-        # pruning (the exact filter alone carries the predicate)
-        if not is_str or not ({"min_bin", "max_bin"} <= fields):
-            return with_nan(None)
-        b = _str_probe_bytes(vals[0])
-        if b is None:
-            return with_nan(None)
-        return with_nan(_col_cond(col, _str_range_elem(
-            bytes(b), _prefix_excl_upper(bytes(b)))))
-    lo = hi = None
-    if op == "between":
-        lo, hi = vals
-    elif op in (">=", ">"):
-        lo = vals[0]
-    else:
-        hi = vals[0]
-    # strict ops keep the closed zone bound (sound: may keep one
-    # boundary block too many, never drops a needed one)
-    if is_str:
-        if not ({"min_bin", "max_bin"} <= fields):
-            # pre-prefix-bounds table: no string range pruning
-            return with_nan(None)
-        lo_b = _str_probe_bytes(lo) if lo is not None else None
-        hi_b = _str_probe_bytes(hi) if hi is not None else None
-        if lo_b is None and hi_b is None:
-            return with_nan(None)
-        return with_nan(_col_cond(col, _str_range_elem(
-            bytes(lo_b) if lo_b is not None else None,
-            bytes(hi_b) if hi_b is not None else None)))
-    lo_c = _canon_zone_value(lo, t, session_tz) if lo is not None else None
-    hi_c = _canon_zone_value(hi, t, session_tz) if hi is not None else None
-    if lo_c is None and hi_c is None:
-        return with_nan(None)
-    use_float = isinstance(lo_c, float) or isinstance(hi_c, float)
-    return with_nan(_col_cond(col, _range_elem(lo_c, hi_c, use_float)))
-
-
 def block_keep_py(cols_meta, filters, types: dict = None,
                   session_tz=None, n_rows=None) -> bool:
-    """Driver/task-side Python twin of _apply_block_filters for ONE
+    """The one block-pruning meaning of a filters= value, for ONE
     block's metadata (`cols_meta`: the block row's `columns` list of
-    dicts): True when the block may hold matching rows. Same soundness
-    rules as the Spark expressions — unknown columns, missing sketches
-    and inconvertible values never prune. Used by the zero-IPC direct
-    decode path, where pruning must run inside the task against pyarrow
-    metadata rows instead of in a Spark where(). types defaults to the
-    block's own self-describing metadata; session_tz carries the Spark
-    session timezone so naive datetime/ISO values canonicalize exactly
-    as the Spark-side pruning does (see _canon_zone_value)."""
+    dicts): True when the block may hold matching rows. Pruning is only
+    ever sound — unknown columns, missing sketches (older snapshots) and
+    inconvertible values never prune; within an AND-group every
+    prunable leaf must admit the block, and the block survives if any
+    OR-group does. Every read path runs it in-task before a payload
+    buffer is touched (make_decode_fn), and batch reads also run it in
+    the metadata-only pass that bounds the payload scan (_prune_blocks).
+    types defaults to the block's own self-describing metadata;
+    session_tz carries the Spark session timezone so naive datetime/ISO
+    values canonicalize exactly as exact_filter_mask_py coerces them
+    (see _canon_zone_value)."""
     from .blocks import bloom_positions
 
     groups = _normalize_filters(filters)
@@ -1065,8 +796,12 @@ def block_keep_py(cols_meta, filters, types: dict = None,
 
     def const_ne_keep(c, values, t, is_str):
         """!= / NOT IN verdict: prune only a provably constant block
-        whose single value is listed (see _const_block_ne_elem for the
-        string untruncated-bounds proof); inconvertible values skip."""
+        (zero nulls, zone min == max) whose single value is listed;
+        inconvertible values skip. For strings the proof needs
+        untruncated bounds: min_bin == max_bin == v with len(v) below
+        the prefix width means the true min and max both equal v (a
+        longer true min would leave a full-width prefix; an incremented
+        truncated upper bound strictly exceeds the true max)."""
         from .blocks import _ZONE_PREFIX_BYTES
 
         if c.get("n_nulls") != 0:
@@ -1106,8 +841,7 @@ def block_keep_py(cols_meta, filters, types: dict = None,
             return nn < n_rows
         # NOT IN () is vacuously TRUE for every row — nulls included — so
         # it must escape the all-null prune below (exact_filter_mask_py
-        # keeps every row of an all-null block for it; _leaf_block_cond
-        # already ordered these checks this way)
+        # keeps every row of an all-null block for it)
         if op == "not in" and not vals[0]:
             return None
         # value comparisons never match an all-null block
@@ -1210,11 +944,19 @@ def _coerce_py_value(v, typ, session_tz=None):
 
 def exact_filter_mask_py(batch, filters, session_tz=None):
     """pyarrow boolean mask applying `filters` exactly to a decoded
-    RecordBatch (SQL semantics: null comparisons never match; a literal
-    that cannot be cast to the column type matches nothing, as Spark's
-    cast-to-null does) — the task-side twin of _exact_filter_expr for
-    the direct decode path. session_tz: see _coerce_py_value."""
+    RecordBatch — the one row-level meaning of a filters= value, run
+    in-task on every read path (make_decode_fn) and by delete_where.
+    Spark SQL semantics: null comparisons never match; a literal that
+    cannot be cast to the column type matches nothing, as Spark's
+    cast-to-null does; floats follow Spark's (and DuckDB's) total order,
+    where NaN equals NaN and sorts above every other value.
+    session_tz: see _coerce_py_value."""
+    import math
+
     import pyarrow.compute as pc
+
+    ieee = {"=": pc.equal, "!=": pc.not_equal, ">=": pc.greater_equal,
+            "<=": pc.less_equal, ">": pc.greater, "<": pc.less}
 
     def resolve(col):
         idx = batch.schema.get_field_index(col)
@@ -1255,12 +997,38 @@ def exact_filter_mask_py(batch, filters, session_tz=None):
 
     def leaf(flt):
         col, op, vals = flt[0], flt[1], list(flt[2:])
+        op = "=" if op == "==" else op
         a = resolve(col)
         none_match = pa.array([False] * len(a), pa.bool_())
 
         def sc(v):
             return pa.scalar(_coerce_py_value(v, a.type, session_tz),
                              type=a.type)
+
+        def cmp(op, v):
+            s = sc(v)
+            if not pa.types.is_floating(a.type):
+                return ieee[op](a, s)
+            # IEEE comparisons are false for every NaN operand; Spark's
+            # order differs only where a NaN must compare high or equal.
+            # A null leaf result reads as False (fill_null below, and no
+            # negation above the leaves), so nulls need no care here.
+            nan = pc.is_nan(a)
+            x = s.as_py()
+            if x is not None and math.isnan(x):
+                return {"=": nan, ">=": nan, "!=": pc.invert(nan),
+                        "<": pc.invert(nan), "<=": pc.is_valid(a),
+                        ">": none_match}[op]
+            out = ieee[op](a, s)
+            return pc.or_kleene(out, nan) if op in (">", ">=") else out
+
+        def is_in(vlist):
+            vs = pa.array(vlist, type=a.type)
+            if not pa.types.is_floating(a.type):
+                return pc.is_in(a, value_set=vs)
+            # hashing tells -0.0 from 0.0, which compare equal; adding
+            # 0.0 maps -0.0 to 0.0 and keeps NaN (is_in matches NaN)
+            return pc.is_in(pc.add(a, 0.0), value_set=pc.add(vs, 0.0))
 
         try:
             if op == "is_null":
@@ -1288,17 +1056,10 @@ def exact_filter_mask_py(batch, filters, session_tz=None):
                     vlist.append(cv)
                 if not vlist:  # NOT IN (): vacuously true, nulls too
                     return pa.array([True] * len(a), pa.bool_())
-                return pc.and_kleene(
-                    pc.invert(pc.is_in(a, value_set=pa.array(
-                        vlist, type=a.type))),
-                    pc.is_valid(a))
+                return pc.and_kleene(pc.invert(is_in(vlist)),
+                                     pc.is_valid(a))
             if op == "between":
-                return pc.and_kleene(pc.greater_equal(a, sc(vals[0])),
-                                     pc.less_equal(a, sc(vals[1])))
-            if op in ("=", "=="):
-                return pc.equal(a, sc(vals[0]))
-            if op == "!=":
-                return pc.not_equal(a, sc(vals[0]))
+                return pc.and_kleene(cmp(">=", vals[0]), cmp("<=", vals[1]))
             if op == "starts_with":
                 v = vals[0]
                 if pa.types.is_string(a.type) \
@@ -1334,10 +1095,8 @@ def exact_filter_mask_py(batch, filters, session_tz=None):
                         continue
                 if not vlist:
                     return none_match
-                return pc.is_in(a, value_set=pa.array(vlist, type=a.type))
-            fn = {">=": pc.greater_equal, "<=": pc.less_equal,
-                  ">": pc.greater, "<": pc.less}[op]
-            return fn(a, sc(vals[0]))
+                return is_in(vlist)
+            return cmp(op, vals[0])
         except (ValueError, pa.lib.ArrowInvalid, pa.lib.ArrowTypeError):
             return none_match
 
@@ -1352,126 +1111,79 @@ def exact_filter_mask_py(batch, filters, session_tz=None):
     return pc.fill_null(or_mask, False)
 
 
-def _apply_block_filters(blocks_df: DataFrame, filters, types: dict):
-    """Block-level pruning for decode_blocks(filters=): every leaf is
-    translated to its zone-map / bloom / prefix-bound pushdown where the
-    type supports one; leaves within a group AND, groups OR. Pruning is
-    only ever sound — a group with no prunable leaf disables pruning
-    entirely (any block might satisfy that OR-branch), and the exact
-    post-filter always applies. Accepts raw or normalized filters.
-    Sketch families absent from the table's metadata struct (older
-    snapshots) simply don't prune — never an analysis error."""
-    groups = _normalize_filters(filters)
-    fields = _meta_fields_of(blocks_df)
-    try:
-        session_tz = blocks_df.sparkSession.conf.get(
-            "spark.sql.session.timeZone")
-    except Exception:
-        session_tz = None
-    or_cond = None
-    for g in groups:
-        gc = None
-        for flt in g:
-            c = _leaf_block_cond(flt, types, fields, session_tz)
-            if c is not None:
-                gc = c if gc is None else (gc & c)
-        if gc is None:
-            return blocks_df
-        or_cond = gc if or_cond is None else (or_cond | gc)
-    if or_cond is None:
-        return blocks_df
-    return blocks_df.where(or_cond)
+_PRUNE_MAX_PARTS = 4096  # isin cap before degrading to a min/max range
+_PRUNE_MAX_BLOCKS = 4096  # coordinate cap of the exact block predicate
 
 
-def _partition_prepass(pruned_df: DataFrame) -> DataFrame:
-    """Metadata pre-pass turning block-level pruning into PARTITION
-    pruning: one driver-small job over the metadata leaves (payload
-    columns pruned away by the wide layout) finds the lexicographic
-    (snapshot_id, part_id) range that still holds surviving blocks, and
-    the payload scan is additionally bounded to that range. The blocks
-    table is written partitioned by (snapshot_id, part_id)
-    (engine/tableio.py), so this predicate prunes whole DIRECTORIES at
-    the scan — with a range-clustered encode (encode_table cluster_by=)
-    a narrow time-range probe then never lists, opens, or reads the
-    payload bytes of the other partitions. Sound for any filter: the
-    partition set only ever over-approximates the surviving blocks, and
-    the block-level zone/bloom predicate still applies inside it.
+def _session_tz(df: DataFrame) -> str:
+    """The Spark session timezone filter literals are read in."""
+    return df.sparkSession.conf.get("spark.sql.session.timeZone")
 
-    The surviving partitions are enumerated exactly (an isin on the
-    partition columns, bounded by the number of physical partitions, not
-    blocks); beyond _PREPASS_MAX_PARTS the pre-pass degrades to the
-    lexicographic (snapshot_id, part_id) min/max range so the predicate
-    stays constant-size."""
+
+def _prune_blocks(blocks_df: DataFrame, filters) -> DataFrame:
+    """The metadata-only pruning pass of a batch read: one mapInArrow
+    over (snapshot_id, part_id, seq, n_rows, columns) — payload columns
+    pruned away by the wide layout — runs block_keep_py per block and
+    collects the surviving coordinates, grouped per partition in-task so
+    the driver receives a row per (snapshot_id, part_id), not per block.
+    The payload scan is then restricted to them:
+
+    * an isin on the partition columns per snapshot — the blocks table
+      is written partitioned by (snapshot_id, part_id)
+      (engine/tableio.py), so on a range-clustered table a narrow probe
+      never lists, opens or reads the other partitions' directories;
+      beyond _PRUNE_MAX_PARTS partitions it degrades to their
+      lexicographic min/max range so the predicate stays constant-size;
+    * while at most _PRUNE_MAX_BLOCKS blocks survive, the exact
+      (snapshot_id, part_id, seq) set, so pruned blocks' payloads never
+      reach the decode UDF.
+
+    Above the caps the in-task block_keep_py keeps the result exact."""
     from pyspark.sql import functions as F
 
-    rows = (pruned_df.select("snapshot_id", "part_id").distinct()
-            .limit(_PREPASS_MAX_PARTS + 1).collect())
+    groups = _normalize_filters(filters)
+    session_tz = _session_tz(blocks_df)
+
+    def keep(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            mask = [block_keep_py(r["columns"], groups,
+                                  session_tz=session_tz, n_rows=r["n_rows"])
+                    for r in b.select(["n_rows", "columns"]).to_pylist()]
+            kept = pa.Table.from_batches([b.select(COORD_COLS)]).filter(
+                pa.array(mask, pa.bool_()))
+            yield from kept.group_by(["snapshot_id", "part_id"]).aggregate(
+                [("seq", "list")]).select(
+                    ["snapshot_id", "part_id", "seq_list"]).to_batches()
+
+    rows = (blocks_df.select(*COORD_COLS, "n_rows", "columns")
+            .mapInArrow(keep, "snapshot_id string, part_id int, "
+                              "seq_list array<int>").collect())
     if not rows:  # every block pruned
-        return pruned_df.where(F.lit(False))
+        return blocks_df.where(F.lit(False))
+    seqs: dict = {}
+    for r in rows:
+        seqs.setdefault((r["snapshot_id"], r["part_id"]), []).extend(
+            r["seq_list"])
     s, p = F.col("snapshot_id"), F.col("part_id")
-    if len(rows) > _PREPASS_MAX_PARTS:
-        row = (pruned_df
-               .agg(F.min(F.struct("snapshot_id", "part_id")).alias("lo"),
-                    F.max(F.struct("snapshot_id", "part_id")).alias("hi"))
-               .collect()[0])
-        lo, hi = row["lo"], row["hi"]
+    if len(seqs) > _PRUNE_MAX_PARTS:
+        lo, hi = min(seqs), max(seqs)
         ge = (s > lo[0]) | ((s == lo[0]) & (p >= lo[1]))
         le = (s < hi[0]) | ((s == hi[0]) & (p <= hi[1]))
-        return pruned_df.where(ge & le)
+        return blocks_df.where(ge & le)
     by_snap: dict = {}
-    for r in rows:
-        by_snap.setdefault(r["snapshot_id"], []).append(r["part_id"])
+    for snap, part in seqs:
+        by_snap.setdefault(snap, []).append(part)
     pred = None
     for snap, parts in by_snap.items():
         e = (s == snap) & p.isin(parts)
         pred = e if pred is None else (pred | e)
-    return pruned_df.where(pred)
-
-
-def _exact_filter_expr(filters):
-    """The row-exact predicate equivalent of a filters= value (AND
-    within a group, OR across groups). Accepts raw or normalized."""
-    from pyspark.sql import functions as F
-
-    groups = _normalize_filters(filters)
-    or_expr = None
-    for g in groups:
-        expr = None
-        for flt in g:
-            col, op, vals = F.col(flt[0]), flt[1], list(flt[2:])
-            if op == "between":
-                e = col.between(vals[0], vals[1])
-            elif op in ("=", "=="):
-                e = col == vals[0]
-            elif op == "!=":
-                e = col != vals[0]
-            elif op == "in":
-                vlist = list(vals[0])
-                e = col.isin(vlist) if vlist else F.lit(False)
-            elif op == "not in":
-                # Spark's native semantics: a null column value — or a
-                # literal its cast nulls out — makes the NOT IN unknown,
-                # so the row never matches; NOT IN () is vacuously true
-                vlist = list(vals[0])
-                e = ~col.isin(vlist) if vlist else F.lit(True)
-            elif op == "is_null":
-                e = col.isNull()
-            elif op == "is_not_null":
-                e = col.isNotNull()
-            elif op == "starts_with":
-                # F.startswith supports STRING and BINARY natively
-                e = F.startswith(col, F.lit(vals[0]))
-            elif op == ">=":
-                e = col >= vals[0]
-            elif op == "<=":
-                e = col <= vals[0]
-            elif op == ">":
-                e = col > vals[0]
-            else:
-                e = col < vals[0]
-            expr = e if expr is None else (expr & e)
-        or_expr = expr if or_expr is None else (or_expr | expr)
-    return or_expr
+    if sum(map(len, seqs.values())) <= _PRUNE_MAX_BLOCKS:
+        # part_id and seq are ints, so the key parses uniquely from the
+        # right whatever the snapshot id holds
+        pred = pred & F.concat_ws("/", s, p, "seq").isin(
+            [f"{snap}/{part}/{q}" for (snap, part), qs in seqs.items()
+             for q in qs])
+    return blocks_df.where(pred)
 
 
 def decode_blocks(blocks_df: DataFrame, schema: Optional[T.StructType] = None,
@@ -1481,7 +1193,6 @@ def decode_blocks(blocks_df: DataFrame, schema: Optional[T.StructType] = None,
                   limit: Optional[int] = None,
                   offset: int = 0,
                   filters=None,
-                  prepass: bool = True,
                   deletes: Optional[DataFrame] = None) -> DataFrame:
     """Decode a blocks DataFrame back into the original table.
 
@@ -1497,26 +1208,27 @@ def decode_blocks(blocks_df: DataFrame, schema: Optional[T.StructType] = None,
         (column, "not in", [v1, ...])  null literals match nothing
         (column, "is_null")            prunes every n_nulls == 0 block
         (column, "is_not_null")        prunes every all-null block
+        (column, "starts_with", p)
     ANDed together — or a LIST OF SUCH LISTS, meaning OR of the AND
     groups (pyarrow's parquet-filters DNF convention). Every predicate
-    is applied EXACTLY on the decoded rows, and — this is the point of
-    passing it here instead of .filter()ing the decoded output — the
-    engine first prunes whole blocks via the per-block zone maps
+    is applied EXACTLY on the decoded rows inside the decode task
+    (exact_filter_mask_py, Spark SQL semantics), and — this is the point
+    of passing it here instead of .filter()ing the decoded output —
+    whole blocks are pruned first via the per-block zone maps
     (range/equality on integer-like and float columns; truncated-prefix
-    bounds for ranges on string/binary columns such as url) and bloom
+    bounds for ranges on string/binary columns such as url), bloom
     sketches (equality/IN on string/binary columns — each IN value is
-    probed and the surviving blocks unioned), so pruned blocks' payload
-    bytes are never read or decoded.
+    probed and the surviving blocks unioned) and null counts
+    (block_keep_py). A metadata-only pass bounds the payload scan to
+    the surviving partitions and blocks (_prune_blocks), so pruned
+    blocks' payloads never reach the decode UDF, and rows failing the
+    filter never cross IPC back to the JVM. Filter columns outside the
+    projection decode in-task and are dropped there.
     Timestamp/date/decimal values are converted to the canonical zone
     bounds automatically; pass the natural Python values (datetime,
     date, Decimal, int, float, str). At 100 TB this is the difference
     between scanning 1% and 100% of the payloads; a .filter() above the
-    opaque decode UDF cannot prune anything. prepass=True (default) adds
-    a metadata-only pre-pass that bounds the payload scan to the
-    surviving (snapshot_id, part_id) range — directory-level partition
-    pruning on range-clustered tables (see _partition_prepass); pass
-    prepass=False to keep the decode fully lazy (no driver job at plan
-    time).
+    opaque decode UDF cannot prune anything.
 
     compat=True enables schema evolution against the provided `schema`:
     block columns unknown to the schema are ignored, schema columns missing
@@ -1553,23 +1265,46 @@ def decode_blocks(blocks_df: DataFrame, schema: Optional[T.StructType] = None,
 
     target = None
     budgets = None
-    schema_src = blocks_df  # infer the schema before any pruning can
-    #                         empty the frame (limit past EOF, filters
-    #                         pruning everything) — empty result, not error
-    exact = None
+    groups = _normalize_filters(filters)
+    session_tz = None
     del_agg = None
     if deletes is not None:
         from .deletes import aggregate_deletes
 
         del_agg = aggregate_deletes(deletes)
-    if filters:
-        groups = _normalize_filters(filters)
+    if schema is None:
+        # inferred before pruning or a limit window can empty the frame:
+        # an empty result, not an error
+        schema = schema_of_blocks(blocks_df, columns)
+    elif compat:
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        target = pa.schema([pa.field(f.name, to_arrow_type(f.dataType))
+                            for f in schema.fields])
+    # the scan projection: the output columns plus the filter's roots
+    wanted = list(columns) if columns is not None else None
+    if wanted is None and target is not None:
+        wanted = [f.name for f in target]
+    if groups:
         types = _blocks_arrow_types(blocks_df)
-        blocks_df = _apply_block_filters(blocks_df, groups, types)
-        if prepass:
-            blocks_df = _partition_prepass(blocks_df)
-        exact = _exact_filter_expr(groups)
-    if limit is not None and exact is None:
+        roots = filter_root_columns_of(groups, types)
+        if target is not None:
+            missing = [c for c in roots if c not in target.names]
+            if missing:
+                raise ValueError(
+                    f"compat decode with filters: filter columns {missing} "
+                    f"must be part of the provided schema")
+        elif types:
+            unknown = [c for c in roots if c not in types]
+            if unknown:
+                raise ValueError(
+                    f"filter columns {unknown} not in the blocks table "
+                    f"(available: {sorted(types)})")
+        if wanted is not None:
+            wanted += [c for c in roots if c not in wanted]
+        session_tz = _session_tz(blocks_df)
+        blocks_df = _prune_blocks(blocks_df, groups)
+    if limit is not None and not groups:
         budget_src = blocks_df
         if del_agg is not None:
             # budgets count LIVE rows: subtract each block's delete
@@ -1594,44 +1329,8 @@ def decode_blocks(blocks_df: DataFrame, schema: Optional[T.StructType] = None,
                 "edge blocks skip checksum verification (checksums cover "
                 "whole columns); whole blocks in the window are verified",
                 stacklevel=2)
-    if schema is None:
-        schema = schema_of_blocks(schema_src, columns)
-    elif compat:
-        from pyspark.sql.pandas.types import to_arrow_type
-
-        target = pa.schema([pa.field(f.name, to_arrow_type(f.dataType))
-                            for f in schema.fields])
-    # projection: filter columns must be decoded for the exact predicate;
-    # add them to the decode set, then drop them after filtering
-    out_cols = None
-    dec_columns = columns
-    if exact is not None and target is not None:
-        missing = [c for c in filter_root_columns_of(filters, types)
-                   if c not in {fl.name for fl in target}]
-        if missing:
-            raise ValueError(
-                f"compat decode with filters: filter columns {missing} "
-                f"must be part of the provided schema")
-    if exact is not None and columns is not None:
-        # dotted struct-child leaves decode their ROOT column
-        fcols = filter_root_columns_of(filters, types)
-        missing = [c for c in fcols if c not in columns]
-        if missing:
-            out_cols = list(columns)
-            dec_columns = list(columns) + missing
-            schema = schema_of_blocks(schema_src, dec_columns)
-    wanted = None
-    if dec_columns is not None:
-        wanted = list(dec_columns)
-    elif compat and target is not None:
-        wanted = [f.name for f in target]
     if wanted is not None:
-        base = list(_BASE_COLS)
-        have = set(blocks_df.columns)
-        keep = base + [f for c in wanted
-                       for f in (payload_field(c), validity_field(c))
-                       if f in have]
-        blocks_df = blocks_df.select(*keep)
+        blocks_df = _scan_columns(blocks_df, wanted)
     del_masks = None
     if del_agg is not None:
         # preferred: ship the OR'd bitmaps in the task closure (they are
@@ -1660,14 +1359,10 @@ def decode_blocks(blocks_df: DataFrame, schema: Optional[T.StructType] = None,
                 F.broadcast(del_agg.select(*COORD_COLS, DELETE_MASK_COL)),
                 COORD_COLS, "left")
     out = blocks_df.mapInArrow(
-        make_decode_fn(verify, dec_columns, target, budgets,
-                       del_masks=del_masks), schema)
-    if exact is not None:
-        out = out.where(exact)
-        if out_cols is not None:
-            out = out.select(*out_cols)
-        if limit is not None:
-            if offset:
-                out = out.offset(offset)
-            out = out.limit(limit)
+        make_decode_fn(verify, columns, target, budgets, del_masks,
+                       groups, session_tz), schema)
+    if groups and limit is not None:
+        if offset:
+            out = out.offset(offset)
+        out = out.limit(limit)
     return out

@@ -4,7 +4,7 @@
 delete_where() never rewrites a data block: it decodes ONLY the
 predicate's columns from blocks that survive the same zone/bloom/prefix
 pruning as a filtered read, evaluates the predicate exactly (the same
-exact_filter_mask_py the direct decode path uses), and emits ONE small
+exact_filter_mask_py every read path uses), and emits ONE small
 row per MATCHED block: the block coordinates plus an MSB-first position
 bitmap (bit i set = row i of the block is deleted). Readers OR all
 bitmaps per block and mask rows out AFTER decode — and after checksum
@@ -44,7 +44,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .blocks import payload_field, validity_field
 from .decode import COORD_COLS, DELETE_COUNT_COL, DELETE_MASK_COL
 
 DELETES_SCHEMA = T.StructType([
@@ -77,7 +76,8 @@ def _mark_rows_fn(groups, fcols, null_fill: dict, session_tz):
     predicate root columns to their arrow type so a schema generation
     that predates the column evaluates it as all-null (the same
     cross-generation semantics the filtered read has)."""
-    from .decode import _BASE_COLS, decode_block_row, exact_filter_mask_py
+    from .decode import (_BASE_COLS, block_keep_py, decode_block_row,
+                         exact_filter_mask_py)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.compute as pc
@@ -90,6 +90,10 @@ def _mark_rows_fn(groups, fcols, null_fill: dict, session_tz):
                         if n not in _BASE_COLS]
             out = {f.name: [] for f in _DELETES_ARROW}
             for j, row in enumerate(meta_rows):
+                if not block_keep_py(row["columns"], groups,
+                                     session_tz=session_tz,
+                                     n_rows=row["n_rows"]):
+                    continue
                 for name, col in pay_cols:
                     s = col[j]
                     row[name] = (memoryview(s.as_buffer())
@@ -130,13 +134,13 @@ def _mark_rows_fn(groups, fcols, null_fill: dict, session_tz):
     return fn
 
 
-def compute_deletes(blocks_df: DataFrame, filters,
-                    prepass: bool = True) -> DataFrame:
+def compute_deletes(blocks_df: DataFrame, filters) -> DataFrame:
     """Position-delete rows (DELETES_SCHEMA) for every block row matching
     `filters` (decode_blocks' predicate grammar, DNF). Pure-DataFrame:
-    blocks are pruned with the SAME zone/bloom/prefix sketch machinery as
-    a filtered read, so untouched blocks never have a payload byte read;
-    survivors decode ONLY the predicate's root columns.
+    blocks are pruned by the SAME metadata-only pass as a filtered read
+    (decode._prune_blocks, then block_keep_py again in-task), so
+    untouched blocks' payloads never reach the task; survivors decode
+    ONLY the predicate's root columns.
 
     A block whose schema generation predates a predicate column
     evaluates that column as all-null (null comparisons never match —
@@ -152,10 +156,9 @@ def compute_deletes(blocks_df: DataFrame, filters,
     partition ids (Spark concatenates union partitions), silently
     producing bitmaps that match no block at read time. Stored tables
     pin their coordinates at write; that is the supported shape."""
-    from .decode import (_BASE_COLS, _apply_block_filters,
-                         _blocks_arrow_types, _normalize_filters,
-                         _partition_prepass, arrow_type_from_str,
-                         filter_root_columns_of)
+    from .decode import (_blocks_arrow_types, _normalize_filters,
+                         _prune_blocks, _scan_columns, _session_tz,
+                         arrow_type_from_str, filter_root_columns_of)
 
     if not filters:
         raise ValueError("delete_where needs a predicate — refusing to "
@@ -169,21 +172,9 @@ def compute_deletes(blocks_df: DataFrame, filters,
             f"delete predicate columns {unknown} not in the blocks table "
             f"(available: {sorted(types)})")
     null_fill = {c: arrow_type_from_str(types[c]) for c in fcols}
-    try:
-        session_tz = blocks_df.sparkSession.conf.get(
-            "spark.sql.session.timeZone")
-    except Exception:
-        session_tz = None
-    pruned = _apply_block_filters(blocks_df, groups, types)
-    if prepass:
-        pruned = _partition_prepass(pruned)
-    have = set(pruned.columns)
-    keep = list(_BASE_COLS) + [f for c in fcols
-                               for f in (payload_field(c),
-                                         validity_field(c))
-                               if f in have]
-    return pruned.select(*keep).mapInArrow(
-        _mark_rows_fn(groups, fcols, null_fill, session_tz),
+    pruned = _prune_blocks(blocks_df, groups)
+    return _scan_columns(pruned, fcols).mapInArrow(
+        _mark_rows_fn(groups, fcols, null_fill, _session_tz(blocks_df)),
         DELETES_SCHEMA)
 
 
@@ -311,7 +302,7 @@ def compute_deletes_by_keys(blocks_df: DataFrame, keys_df: DataFrame,
     semantics). Blocks from a schema generation missing a key column
     cannot match. blocks_df must be materialized blocks (see
     compute_deletes)."""
-    from .decode import _blocks_arrow_types
+    from .decode import _blocks_arrow_types, _scan_columns
 
     ons = [on] if isinstance(on, str) else list(on)
     types = _blocks_arrow_types(blocks_df)
@@ -322,9 +313,7 @@ def compute_deletes_by_keys(blocks_df: DataFrame, keys_df: DataFrame,
     if list(keys_df.columns) != ons:
         keys_df = keys_df.select(*ons)
     keys_df = keys_df.distinct()
-    have = set(blocks_df.columns)
-    keep = list(_base_and_payload(ons, have))
-    scan = blocks_df.select(*keep)
+    scan = _scan_columns(blocks_df, ons)
     if len(ons) == 1:
         n_keys = keys_df.count()
         if n_keys <= broadcast_threshold:
@@ -371,18 +360,6 @@ def compute_deletes_by_keys(blocks_df: DataFrame, keys_df: DataFrame,
     meta = blocks_df.select(*COORD_COLS, "block_id")
     return (packed.join(F.broadcast(meta), COORD_COLS, "inner")
             .select(*[f.name for f in DELETES_SCHEMA]))
-
-
-def _base_and_payload(cols, have):
-    from .decode import _BASE_COLS
-
-    cols = [cols] if isinstance(cols, str) else list(cols)
-    out = list(_BASE_COLS)
-    for c in cols:
-        for f in (payload_field(c), validity_field(c)):
-            if f in have:
-                out.append(f)
-    return out
 
 
 def _spark_type_of(arrow_type_str: str):

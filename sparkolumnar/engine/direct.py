@@ -409,13 +409,14 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
     (= == != < <= > >= between / IN lists / OR-of-conjunction groups),
     evaluated ENTIRELY inside the task: a cheap metadata-only pass over
     each file (payload columns never read) runs the zone-map / bloom /
-    string-prefix block pruning in Python (decode.block_keep_py), the
-    payload read is then restricted to the surviving blocks' row groups
-    via a pyarrow `seq IN (...)` dataset filter (the direct writers emit
-    one row group per block, so pruned blocks' payload bytes stay on
-    disk), and the exact row predicate applies to the decoded batches
-    before the write. The two flagship 100 TB features — zero-IPC decode
-    and automatic pruning — compose.
+    string-prefix block pruning (decode.block_keep_py), the payload read
+    is then restricted to the surviving blocks' row groups via a pyarrow
+    `seq IN (...)` dataset filter (the direct writers emit one row group
+    per block, so pruned blocks' payload bytes stay on disk), and the
+    shared decode function (make_decode_fn) applies the exact row
+    predicate and drops the filter-only columns before the write — the
+    output holds exactly `columns`, as on the IPC path. The two flagship
+    100 TB features — zero-IPC decode and automatic pruning — compose.
 
     schema: optional Spark StructType for SCHEMA-EVOLVED tables (snapshots
     with different column sets). Every task then decodes compat against
@@ -433,7 +434,7 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
     the deletes partition key, so the pyarrow scan prunes directories),
     ORs the bitmaps per block and masks deleted rows out after decode —
     the in-task twin of decode_blocks(deletes=), zero IPC preserved."""
-    from .decode import (block_keep_py, exact_filter_mask_py,
+    from .decode import (block_keep_py, filter_root_columns_of,
                          make_decode_fn, _normalize_filters)
 
     compat_target = None
@@ -465,32 +466,9 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
             session_tz = spark.conf.get("spark.sql.session.timeZone")
         except Exception:
             session_tz = None
-        if columns is not None:
-            from .decode import filter_root_columns_of
-
-            # one first-block metadata probe so dotted struct-child
-            # leaves resolve to their ROOT decode column
-            types = {}
-            if files:
-                import pyarrow.parquet as _pq
-
-                f0fs, f0 = _fs_for(files[0], filesystem)
-                t0 = _pq.ParquetFile(f0fs.open_input_file(f0)).read(
-                    columns=["columns"]).column("columns")
-                if len(t0):
-                    types = {c["name"]: c["arrow_type"]
-                             for c in t0[0].as_py()}
-            missing = [c for c in filter_root_columns_of(filters, types)
-                       if c not in columns]
-            # filter columns must decode; keep them in the output too
-            # (the direct path writes files, dropping them afterwards
-            # would mean a second pass — document instead)
-            columns = list(columns) + missing
         if compat_target is not None:
-            from .decode import filter_root_columns_of as _froots
-
-            names = {f.name for f in compat_target}
-            bad = [c for c in _froots(filters, dict.fromkeys(names))
+            names = set(compat_target.names)
+            bad = [c for c in filter_root_columns_of(filters, names)
                    if c not in names]
             if bad:
                 raise ValueError(
@@ -532,7 +510,8 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
         from .blocks import payload_field, validity_field
 
         fn = make_decode_fn(verify=verify, columns=columns,
-                            target=compat_target)
+                            target=compat_target, groups=filters,
+                            session_tz=session_tz)
         del_cache: dict = {}  # (snapshot_id, part_id) -> {seq: bitmap}
         for b in batches:
             for row in b.to_pylist():
@@ -551,17 +530,7 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
                                 deletes_path, *coords,
                                 filesystem=filesystem)
                         seq_masks = del_cache[coords] or None
-                    have = set(pf.schema_arrow.names)
-                    read_cols = None
-                    if scan_want is not None:
-                        # projection reaches the pyarrow scan: unrequested
-                        # columns' payload bytes are never read from disk
-                        read_cols = (
-                            [c for c in ("block_id", "seq", "n_rows",
-                                         "columns") if c in have]
-                            + [f for c in scan_want
-                               for f in (payload_field(c),
-                                         validity_field(c)) if f in have])
+                    want = scan_want
                     if filters:
                         # metadata-only pruning pass: columns/seq leaves
                         # only, zero payload bytes
@@ -576,30 +545,39 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
                                                  session_tz=session_tz,
                                                  n_rows=nr)]
                         blocks_read += len(keep)
-                        pf.close()
                         if not keep:
+                            pf.close()
                             continue
+                        if want is not None:
+                            # the filter's root columns decode in-task too
+                            want = list(want) + [
+                                c for c in filter_root_columns_of(
+                                    filters, {m["name"] for m in metas[0]})
+                                if c not in want]
+                    else:
+                        blocks_total += pf.metadata.num_rows
+                        blocks_read += pf.metadata.num_rows
+                    read_cols = None
+                    if want is not None:
+                        # projection reaches the pyarrow scan: unrequested
+                        # columns' payload bytes are never read from disk
+                        have = set(pf.schema_arrow.names)
+                        read_cols = (
+                            [c for c in ("block_id", "seq", "n_rows",
+                                         "columns") if c in have]
+                            + [f for c in want
+                               for f in (payload_field(c),
+                                         validity_field(c)) if f in have])
+                    if filters:
                         # surviving blocks only: one row group per block
                         # (direct writers), so the seq filter prunes at
                         # row-group granularity via parquet statistics
-                        dset = pads.dataset(rpath, format="parquet",
-                                            filesystem=rfs)
-                        it = dset.to_batches(
-                            columns=read_cols,
-                            filter=pads.field("seq").isin(keep))
-                        if seq_masks:
-                            it = _append_del_masks(it, seq_masks)
-                        for out in fn(it):
-                            mask = exact_filter_mask_py(out, filters,
-                                                        session_tz)
-                            out = out.filter(mask)
-                            if out.num_rows:
-                                out_batches.append(out)
-                                n += out.num_rows
-                        continue
-                    blocks_total += pf.metadata.num_rows
-                    blocks_read += pf.metadata.num_rows
-                    it = pf.iter_batches(columns=read_cols)
+                        it = pads.dataset(
+                            rpath, format="parquet", filesystem=rfs
+                        ).to_batches(columns=read_cols,
+                                     filter=pads.field("seq").isin(keep))
+                    else:
+                        it = pf.iter_batches(columns=read_cols)
                     if seq_masks:
                         it = _append_del_masks(it, seq_masks)
                     for out in fn(it):

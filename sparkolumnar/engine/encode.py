@@ -230,7 +230,7 @@ def _zone_minmax(vals: pa.Array):
     """Per-block zone map bounds for integer-like columns (canonical int64
     — same mapping as the codecs), else (None, None). Two vectorized
     reductions per block; the decode-side range predicate prunes whole
-    blocks on these (engine/decode.zone_filter)."""
+    blocks on these (engine/decode.block_keep_py)."""
     from ..codecs.core import INT, domain_of, to_int64
     from ..codecs.nputil import CodecError
 
@@ -286,7 +286,7 @@ def _zone_strbounds(vals: pa.Array):
 
 def _zone_bloom(vals: pa.Array):
     """Per-block bloom sketch over a string/binary column's DISTINCT
-    values (equality pruning, engine/decode.zone_filter_eq); None for
+    values (equality pruning, engine/decode.block_keep_py); None for
     other domains or when the block is too high-cardinality."""
     from ..codecs.core import BIN, STR, domain_of
     from ..codecs.nputil import CodecError

@@ -19,7 +19,8 @@ from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession, types as T
 
-from ..engine.decode import make_decode_fn, schema_of_blocks
+from ..engine.decode import (_normalize_filters, make_decode_fn,
+                             schema_of_blocks)
 
 
 def decode_stream(spark: SparkSession, blocks_path: str,
@@ -32,59 +33,31 @@ def decode_stream(spark: SparkSession, blocks_path: str,
     The decoded-output schema must be known up front for a stream; it is
     inferred from the existing blocks (or pass `schema`).
 
-    filters: same predicate list as decode_blocks(filters=) — the
-    zone-map/bloom block pruning is a STATELESS where() on metadata
-    leaves, so it composes with the micro-batch engine unchanged: pruned
-    blocks of every arriving file are dropped before their payloads reach
-    the decode UDF, and the exact row filter applies after. (The
-    partition prepass is a driver-side metadata job and does not apply to
-    a stream.)
+    filters: same predicate list as decode_blocks(filters=), evaluated
+    in the decode task exactly as on the batch paths: block_keep_py
+    skips a pruned block before any of its payload is decoded, the
+    exact row mask applies to the decoded rows, and filter columns
+    outside `columns` decode in-task and are dropped there — the stream
+    emits exactly the requested columns. (The batch path's metadata pass
+    that keeps pruned payloads out of the scan is a driver-side job and
+    does not apply to a stream.)
     """
+    groups = _normalize_filters(filters)
     static = spark.read.parquet(blocks_path)
-    out_cols = None
-    if filters and columns is not None:
-        from ..engine.decode import filter_columns_of
-
-        missing = [c for c in filter_columns_of(filters)
-                   if c not in columns]
-        if missing:  # filter columns must be decoded; dropped after
-            out_cols = list(columns)
-            columns = list(columns) + missing
-            if schema is not None:
-                # mirror decode_blocks: a user-supplied schema that lacks
-                # the filter columns cannot be the mapInArrow output
-                # schema (the decoded batches carry the extra columns) —
-                # re-infer from the extended column set
-                schema = None
     if schema is None:
         schema = schema_of_blocks(static, columns)
     stream = (spark.readStream.schema(static.schema)
               .option("maxFilesPerTrigger", 16)
               .parquet(blocks_path))
-    exact = None
-    if filters:
-        from ..engine.decode import (_apply_block_filters,
-                                     _blocks_arrow_types,
-                                     _exact_filter_expr,
-                                     _normalize_filters)
-
-        groups = _normalize_filters(filters)
-        types = _blocks_arrow_types(static)
-        stream = _apply_block_filters(stream, groups, types)
-        exact = _exact_filter_expr(groups)
     if columns is not None:
-        from ..engine.blocks import payload_field, validity_field
+        from ..engine.decode import (_blocks_arrow_types, _scan_columns,
+                                     filter_root_columns_of)
 
-        base = ["block_id", "snapshot_id", "part_id", "seq", "n_rows",
-                "columns"]
-        have = set(stream.columns)
-        keep = base + [f for c in columns
-                       for f in (payload_field(c), validity_field(c))
-                       if f in have]
-        stream = stream.select(*keep)
-    out = stream.mapInArrow(make_decode_fn(verify, columns), schema)
-    if exact is not None:
-        out = out.where(exact)
-        if out_cols is not None:
-            out = out.select(*out_cols)
-    return out
+        roots = filter_root_columns_of(groups, _blocks_arrow_types(static))
+        stream = _scan_columns(
+            stream, list(columns) + [c for c in roots if c not in columns])
+    session_tz = (spark.conf.get("spark.sql.session.timeZone")
+                  if groups else None)
+    return stream.mapInArrow(
+        make_decode_fn(verify, columns, groups=groups,
+                       session_tz=session_tz), schema)

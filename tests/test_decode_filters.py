@@ -9,9 +9,22 @@ from pyspark.sql import functions as F
 
 from sparkolumnar.datagen import pages_df
 from sparkolumnar.engine import decode_blocks, encode_table
-from sparkolumnar.engine.decode import (_apply_block_filters,
-                                        _blocks_arrow_types)
+from sparkolumnar.engine.decode import (_blocks_arrow_types, _prune_blocks,
+                                        block_keep_py)
 from sparkolumnar.engine.tableio import TableIO
+
+
+def _assert_pruning_sound(blocks, filters, pred, n_match):
+    """Block pruning is sound: the blocks the batch read's metadata pass
+    keeps (exactly block_keep_py's survivors) hold all n_match rows that
+    Spark's own .filter(pred) matches."""
+    kept = _prune_blocks(blocks, filters)
+    n_keep = sum(1 for r in blocks.select("n_rows", "columns").collect()
+                 if block_keep_py([c.asDict() for c in r["columns"]],
+                                  filters, n_rows=r["n_rows"]))
+    assert kept.count() == n_keep, filters
+    got = decode_blocks(kept).filter(pred).count() if n_keep else 0
+    assert got == n_match, filters
 
 
 @pytest.fixture(scope="module")
@@ -44,9 +57,8 @@ def test_cluster_by_prune_rate_at_least_90pct(spark, clustered_blocks):
     assert blocks.select("part_id").distinct().count() == 4
     b = pages.selectExpr("min(warc_ts) lo", "max(warc_ts) hi").collect()[0]
     hi = b["lo"] + (b["hi"] - b["lo"]) / 20
-    types = _blocks_arrow_types(blocks)
-    surviving = _apply_block_filters(
-        blocks, [("warc_ts", "between", b["lo"], hi)], types).count()
+    surviving = _prune_blocks(
+        blocks, [("warc_ts", "between", b["lo"], hi)]).count()
     assert surviving / n_blocks <= 0.10, (surviving, n_blocks)
     assert surviving >= 1
 
@@ -90,17 +102,34 @@ def test_filters_prune_everything_returns_empty(spark, clustered_blocks):
 
 def test_partition_prepass_prunes_directories(spark, clustered_blocks):
     """With a range-clustered persisted table, the filters= metadata
-    pre-pass bounds the payload scan to the surviving (snapshot_id,
-    part_id) range — visible as PartitionFilters on the scan (the blocks
-    table is laid out as snapshot_id=/part_id=/ directories)."""
+    pass bounds the payload scan to the surviving (snapshot_id,
+    part_id) partitions — visible as PartitionFilters on the scan (the
+    blocks table is laid out as snapshot_id=/part_id=/ directories)."""
     pages, blocks = clustered_blocks
     b = pages.selectExpr("min(warc_ts) lo", "max(warc_ts) hi").collect()[0]
     hi = b["lo"] + (b["hi"] - b["lo"]) / 20
     out = decode_blocks(blocks, filters=[("warc_ts", "between", b["lo"], hi)])
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "part_id" in plan, plan
-    # and the zone predicate on the metadata leaves is below the decode UDF
-    assert "columns" in plan
+    # and the surviving blocks' coordinate predicate is below the UDF
+    below_udf = plan.split("MapInArrow", 1)[1]
+    assert "Filter" in below_udf and "seq" in below_udf, plan
+
+
+def test_pruned_payloads_never_reach_the_decode_udf(spark, clustered_blocks):
+    """On the batch IPC path the rows entering the decode UDF are exactly
+    the blocks block_keep_py keeps: the scan is restricted to their
+    coordinates, so pruned blocks' payloads never cross into Python."""
+    pages, blocks = clustered_blocks
+    b = pages.selectExpr("min(warc_ts) lo", "max(warc_ts) hi").collect()[0]
+    flt = [("warc_ts", "between", b["lo"], b["lo"] + (b["hi"] - b["lo"]) / 4)]
+    out = decode_blocks(blocks, filters=flt)
+    scan = out._jdf.queryExecution().executedPlan().children().head()
+    entering = scan.execute().count()
+    kept = sum(1 for r in blocks.select("n_rows", "columns").collect()
+               if block_keep_py([c.asDict() for c in r["columns"]], flt,
+                                n_rows=r["n_rows"]))
+    assert 1 <= entering == kept < blocks.count()
 
 
 def test_filters_limit_counts_matching_rows(spark, clustered_blocks):
@@ -113,11 +142,12 @@ def test_filters_limit_counts_matching_rows(spark, clustered_blocks):
 
 def test_filters_unknown_column_never_prunes_blocks(spark, clustered_blocks):
     """A typo'd filter column must not silently drop blocks at the
-    pruning layer (the exact filter will then fail loudly instead)."""
+    pruning layer (the read then fails loudly instead)."""
     pages, blocks = clustered_blocks
-    types = _blocks_arrow_types(blocks)
-    kept = _apply_block_filters(blocks, [("nope", "=", "x")], types).count()
+    kept = _prune_blocks(blocks, [("nope", "=", "x")]).count()
     assert kept == blocks.count()
+    with pytest.raises(ValueError, match="nope"):
+        decode_blocks(blocks, filters=[("nope", "=", "x")])
 
 
 def test_filters_date_decimal_float_types(spark):
@@ -232,9 +262,7 @@ def test_url_range_prune_rate_at_least_90pct(spark, url_clustered_blocks):
     assert n_blocks >= 8
     urls = sorted(r["url"] for r in pages.select("url").collect())
     lo, hi = urls[len(urls) // 3], urls[len(urls) // 3 + len(urls) // 200]
-    types = _blocks_arrow_types(blocks)
-    surviving = _apply_block_filters(
-        blocks, [("url", "between", lo, hi)], types).count()
+    surviving = _prune_blocks(blocks, [("url", "between", lo, hi)]).count()
     assert surviving / n_blocks <= 0.10, (surviving, n_blocks)
     assert surviving >= 1
     got = decode_blocks(blocks, filters=[("url", "between", lo, hi)])
@@ -264,9 +292,7 @@ def test_in_filter_prunes_and_matches(spark, clustered_blocks):
     assert got.exceptAll(want).count() == 0
     # empty IN matches nothing (and prunes every block)
     assert decode_blocks(blocks, filters=[("lang", "in", [])]).count() == 0
-    types = _blocks_arrow_types(blocks)
-    assert _apply_block_filters(
-        blocks, [("lang", "in", [])], types).count() == 0
+    assert _prune_blocks(blocks, [("lang", "in", [])]).count() == 0
 
 
 def test_in_filter_int_column(spark, clustered_blocks):
@@ -292,9 +318,8 @@ def test_or_of_conjunctions(spark, clustered_blocks):
     assert got.count() == want.count() > 0
     assert got.exceptAll(want).count() == 0
     # OR still prunes: both branches are range probes on the clustered key
-    types = _blocks_arrow_types(blocks)
-    surviving = _apply_block_filters(blocks, [
-        [("warc_ts", "<=", early)], [("warc_ts", ">=", late)]], types).count()
+    surviving = _prune_blocks(blocks, [
+        [("warc_ts", "<=", early)], [("warc_ts", ">=", late)]]).count()
     assert surviving < blocks.count()
 
 
@@ -423,16 +448,14 @@ def _exact_pred(filters):
 def test_filters_property_random_dnf(spark):
     """Property sweep over RANDOM DNF filters on a mixed-type clustered
     table: (1) decode_blocks(filters=) equals plain decode + the same
-    predicate, and (2) the task-side Python pruning twin (block_keep_py)
-    keeps exactly the blocks the Spark metadata expressions keep — for
-    arbitrary combinations of range/eq/IN/!= over int, string and
-    timestamp columns, including out-of-range and garbage values."""
+    predicate, and (2) block pruning (block_keep_py) is sound — every
+    block holding a matching row survives — for arbitrary combinations
+    of range/eq/IN/!= over int, string and timestamp columns, including
+    out-of-range and garbage values."""
     import datetime as dt
     import random
 
     import pandas as pd
-
-    from sparkolumnar.engine.decode import block_keep_py
 
     rng = random.Random(20260817)
     base = dt.datetime(2025, 1, 1)
@@ -446,9 +469,6 @@ def test_filters_property_random_dnf(spark):
     df = spark.createDataFrame(pdf, "k long, v long, s string, t timestamp")
     blocks = encode_table(df, cluster_by=["s", "k"], partitions=2,
                           snapshot_id="dnf").cache()
-    types = _blocks_arrow_types(blocks)
-    meta = [(r["part_id"], r["seq"], [c.asDict() for c in r["columns"]])
-            for r in blocks.select("part_id", "seq", "columns").collect()]
 
     def rand_leaf():
         col = rng.choice(["v", "s", "t"])
@@ -498,13 +518,9 @@ def test_filters_property_random_dnf(spark):
                   for _ in range(rng.randrange(1, 3))]
         got = decode_blocks(blocks, filters=groups)
         want = full.filter(spark_pred(groups))
-        assert got.count() == want.count(), groups
-        spark_keep = {(r["part_id"], r["seq"]) for r in
-                      _apply_block_filters(blocks, groups, types)
-                      .select("part_id", "seq").collect()}
-        py_keep = {(p, q) for p, q, m in meta
-                   if block_keep_py(m, groups, types)}
-        assert py_keep == spark_keep, groups
+        n_match = want.count()
+        assert got.count() == n_match, groups
+        _assert_pruning_sound(blocks, groups, spark_pred(groups), n_match)
 
 
 def test_filters_timestamp_pruning_in_non_utc_session(spark, tmp_path):
@@ -574,9 +590,6 @@ def test_null_ops_exact_and_n_nulls_pruning(spark, tmp_path):
     IS NOT NULL prunes all-null blocks, and != / NOT IN prune blocks
     provably constant-equal to a listed value."""
     from sparkolumnar.datagen import pages_df
-    from sparkolumnar.engine.decode import (_apply_block_filters,
-                                            _blocks_arrow_types,
-                                            block_keep_py)
 
     pages = pages_df(spark, 12_000).select(
         "url", "lang", "warc_ts",
@@ -585,7 +598,6 @@ def test_null_ops_exact_and_n_nulls_pruning(spark, tmp_path):
                           snapshot_id="nullops").cache()
     total = blocks.count()
     assert total >= 8
-    types = _blocks_arrow_types(blocks)
     dec_all = decode_blocks(blocks).cache()
     cases = [
         ([("lang_n", "is_null")], F.col("lang_n").isNull()),
@@ -597,24 +609,20 @@ def test_null_ops_exact_and_n_nulls_pruning(spark, tmp_path):
         ([("lang_n", "is_not_null"), ("lang_n", "!=", "de")],
          F.col("lang_n").isNotNull() & (F.col("lang_n") != "de")),
     ]
-    meta = blocks.select("part_id", "seq", "n_rows", "columns").collect()
     for filters, pred in cases:
         got = decode_blocks(blocks, filters=filters)
         want = dec_all.filter(pred)
-        assert got.count() == want.count() > 0, filters
+        n_match = want.count()
+        assert got.count() == n_match > 0, filters
         assert got.exceptAll(want).count() == 0, filters
-        surv = _apply_block_filters(blocks, filters, types).count()
-        pyk = sum(1 for r in meta
-                  if block_keep_py([c.asDict() for c in r["columns"]],
-                                   filters, types, n_rows=r["n_rows"]))
-        assert pyk == surv, (filters, pyk, surv)
+        _assert_pruning_sound(blocks, filters, pred, n_match)
     # the metadata prunes actually bite on this clustered layout:
     # IS NULL drops zero-null blocks, IS NOT NULL drops all-null ones,
     # != 'en' drops constant-'en' blocks
     for filters in ([("lang_n", "is_null")],
                     [("lang_n", "is_not_null")],
                     [("lang", "!=", "en")]):
-        surv = _apply_block_filters(blocks, filters, types).count()
+        surv = _prune_blocks(blocks, filters).count()
         assert surv < total, (filters, surv, total)
     # inconvertible NOT IN literal, task-side twin: a cast-to-null
     # literal makes NOT IN unknown for every row -> matches nothing
@@ -673,8 +681,6 @@ def test_struct_child_zone_maps_prune_and_match(spark):
     exact results match plain decode + predicate; Spark and task-side
     pruning twins agree; decode(verify=True) is unaffected by the
     payload-less sketch entries; clustering ON a struct child works."""
-    from sparkolumnar.engine.decode import block_keep_py
-
     df = spark.range(8000).select(
         F.col("id"),
         F.struct((F.col("id") * 3).cast("long").alias("n_chars"),
@@ -688,7 +694,6 @@ def test_struct_child_zone_maps_prune_and_match(spark):
     assert types.get("meta.n_chars") == "int64"
     assert types.get("meta.lang") == "string"
     dec = decode_blocks(blocks).cache()
-    meta = blocks.select("part_id", "seq", "n_rows", "columns").collect()
     cases = [
         ([("meta.n_chars", ">", 20000)], F.col("meta.n_chars") > 20000),
         ([("meta.n_chars", "between", 30, 90)],
@@ -700,16 +705,13 @@ def test_struct_child_zone_maps_prune_and_match(spark):
     for filters, pred in cases:
         got = decode_blocks(blocks, filters=filters)
         want = dec.filter(pred)
-        assert got.count() == want.count(), filters
+        n_match = want.count()
+        assert got.count() == n_match, filters
         assert got.exceptAll(want).count() == 0, filters
-        surv = _apply_block_filters(blocks, filters, types).count()
-        pyk = sum(1 for r in meta
-                  if block_keep_py([c.asDict() for c in r["columns"]],
-                                   filters, types, n_rows=r["n_rows"]))
-        assert pyk == surv, (filters, pyk, surv)
+        _assert_pruning_sound(blocks, filters, pred, n_match)
     # pruning BITES on the child-clustered layout
-    surv = _apply_block_filters(
-        blocks, [("meta.n_chars", "between", 30, 90)], types).count()
+    surv = _prune_blocks(
+        blocks, [("meta.n_chars", "between", 30, 90)]).count()
     assert surv < total / 2, (surv, total)
     # projection + child filter: the ROOT column auto-decodes, output
     # keeps only the requested columns
@@ -740,20 +742,20 @@ def test_struct_child_filters_direct_path(spark, tmp_path):
     assert res["n_rows"] == 200
     assert res["n_blocks_read"] < res["n_blocks_total"]
     got = spark.read.parquet(out)
-    assert got.filter(F.col("meta.n_chars") >= 600).count() == 0
+    # the filter's root column decodes in-task but is not written
+    assert got.columns == ["id"]
+    assert got.filter(F.col("id") >= 200).count() == 0
 
 
 def test_filters_property_random_dnf_with_null_ops(spark):
     """Property sweep extending the random-DNF test to the r5 ops
     (is_null / is_not_null / NOT IN / !=) over a table with REAL nulls:
-    decode_blocks(filters=) equals plain decode + predicate, and the
-    Spark metadata pruning and the task-side Python twin (block_keep_py
-    with n_rows) keep exactly the same blocks."""
+    decode_blocks(filters=) equals plain decode + predicate, and block
+    pruning (block_keep_py with n_rows) keeps every block holding a
+    matching row."""
     import random
 
     import pandas as pd
-
-    from sparkolumnar.engine.decode import block_keep_py
 
     rng = random.Random(20260818)
     n = 6000
@@ -767,11 +769,6 @@ def test_filters_property_random_dnf_with_null_ops(spark):
     df = spark.createDataFrame(pdf, "k long, v long, s string")
     blocks = encode_table(df, cluster_by=["s", "k"], partitions=2,
                           snapshot_id="dnfnull").cache()
-    types = _blocks_arrow_types(blocks)
-    meta = [(r["part_id"], r["seq"], r["n_rows"],
-             [c.asDict() for c in r["columns"]])
-            for r in blocks.select("part_id", "seq", "n_rows",
-                                   "columns").collect()]
 
     def rand_leaf():
         col = rng.choice(["v", "s"])
@@ -811,13 +808,9 @@ def test_filters_property_random_dnf_with_null_ops(spark):
                   for _ in range(rng.randrange(1, 3))]
         got = decode_blocks(blocks, filters=groups)
         want = full.filter(spark_pred(groups))
-        assert got.count() == want.count(), groups
-        spark_keep = {(r["part_id"], r["seq"]) for r in
-                      _apply_block_filters(blocks, groups, types)
-                      .select("part_id", "seq").collect()}
-        py_keep = {(p, q) for p, q, nr, m in meta
-                   if block_keep_py(m, groups, types, n_rows=nr)}
-        assert py_keep == spark_keep, groups
+        n_match = want.count()
+        assert got.count() == n_match, groups
+        _assert_pruning_sound(blocks, groups, spark_pred(groups), n_match)
     full.unpersist()
     blocks.unpersist()
 
@@ -827,8 +820,6 @@ def test_map_key_zone_maps_prune_and_match(spark):
     per-KEY sketch entries ("attrs.source"), so dotted filters prune
     blocks exactly like struct children — with Spark's GetMapValue
     null semantics (absent key / null map read as null)."""
-    from sparkolumnar.engine.decode import block_keep_py
-
     df = spark.range(8000).select(
         F.col("id"),
         F.when(F.col("id") % 11 != 0, F.create_map(
@@ -843,7 +834,6 @@ def test_map_key_zone_maps_prune_and_match(spark):
     types = _blocks_arrow_types(blocks)
     assert types.get("attrs.source") == "string"
     dec = decode_blocks(blocks).cache()
-    meta = blocks.select("part_id", "seq", "n_rows", "columns").collect()
     cases = [
         ([("attrs.source", "=", "s3")], F.col("attrs.source") == "s3"),
         ([("attrs.source", "is_null")], F.col("attrs.source").isNull()),
@@ -861,15 +851,10 @@ def test_map_key_zone_maps_prune_and_match(spark):
         assert got.count() == want.count(), filters
         assert (got.select(*flat).exceptAll(want.select(*flat))
                 .count() == 0), filters
-        surv = _apply_block_filters(blocks, filters, types).count()
-        pyk = sum(1 for r in meta
-                  if block_keep_py([c.asDict() for c in r["columns"]],
-                                   filters, types, n_rows=r["n_rows"]))
-        assert pyk == surv, (filters, pyk, surv)
+        _assert_pruning_sound(blocks, filters, pred, want.count())
     # the id-clustered layout makes source ~constant per block: the
     # per-key bloom/zone entries actually prune equality probes
-    surv = _apply_block_filters(blocks, [("attrs.source", "=", "s3")],
-                                types).count()
+    surv = _prune_blocks(blocks, [("attrs.source", "=", "s3")]).count()
     assert surv < total, (surv, total)
     # unbounded key sets emit no per-key sketches (cap), sound fallback
     big = spark.range(2000).select(
@@ -897,30 +882,21 @@ def test_prefix_excl_upper_unit():
 def test_starts_with_prunes_and_matches(spark, url_clustered_blocks):
     """starts_with (url prefix scan, the bread-and-butter web-corpus
     probe): pruned as the range [p, incremented-prefix) over the
-    truncated string zone bounds, matching F.startswith exactly; the
-    task-side block_keep_py twin keeps the very same blocks."""
-    from sparkolumnar.engine.decode import block_keep_py
-
+    truncated string zone bounds, matching F.startswith exactly; every
+    block holding a matching url survives the pruning."""
     pages, blocks = url_clustered_blocks
     n_blocks = blocks.count()
-    types = _blocks_arrow_types(blocks)
     host = pages.select("url").limit(1).collect()[0]["url"]
     p = host.split("/p/")[0] + "/p/"  # one host's namespace
     flt = [("url", "starts_with", p)]
-    surviving_df = _apply_block_filters(blocks, flt, types)
-    surviving = surviving_df.count()
+    surviving = _prune_blocks(blocks, flt).count()
     assert 1 <= surviving <= n_blocks // 2, (surviving, n_blocks)
     got = decode_blocks(blocks, filters=flt)
     want = decode_blocks(blocks).filter(F.col("url").startswith(p))
-    assert got.count() == want.count() > 0
+    n_match = want.count()
+    assert got.count() == n_match > 0
     assert got.exceptAll(want).count() == 0
-    meta = [(r["part_id"], r["seq"], [c.asDict() for c in r["columns"]])
-            for r in blocks.select("part_id", "seq", "columns").collect()]
-    spark_keep = {(r["part_id"], r["seq"])
-                  for r in surviving_df.select("part_id", "seq").collect()}
-    py_keep = {(pid, q) for pid, q, m in meta
-               if block_keep_py(m, flt, types)}
-    assert py_keep == spark_keep
+    _assert_pruning_sound(blocks, flt, F.col("url").startswith(p), n_match)
 
 
 def test_starts_with_edges(spark, url_clustered_blocks):
@@ -975,12 +951,7 @@ def test_starts_with_direct_decode_path(spark, tmp_path):
 
 
 def _kept_blocks(blocks, flt):
-    from sparkolumnar.engine.decode import (_apply_block_filters,
-                                            _blocks_arrow_types,
-                                            _normalize_filters)
-
-    return _apply_block_filters(blocks, _normalize_filters(flt),
-                                _blocks_arrow_types(blocks)).count()
+    return _prune_blocks(blocks, flt).count()
 
 
 def test_zorder_prunes_every_clustered_dimension(spark):
@@ -1087,3 +1058,60 @@ def test_not_in_edge_semantics_pruning_sound():
     # and without the NULL literal, ordinary three-valued behavior
     assert exact_filter_mask_py(b, [("s", "not in", ["b"])]).to_pylist() \
         == [False, True]
+
+
+def test_nan_float_order_agrees_on_every_path(spark, tmp_path):
+    """Floats follow Spark's (and DuckDB's) total order — NaN equals NaN
+    and sorts above every other value — on every path: the IPC read,
+    the direct read and delete_where select exactly the rows Spark's own
+    .filter does, for every comparison op and a NaN literal too."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from sparkolumnar.engine.deletes import delete_where
+    from sparkolumnar.engine.direct import decode_files_direct
+
+    nan = float("nan")
+    vals = [1.0, nan, 5.0, None, 2.0, nan, -1.0, 3.0, 0.0, -0.0, None, 7.5]
+    df = spark.createDataFrame(list(enumerate(vals)), "k long, v double")
+    io = TableIO(spark, str(tmp_path / "t"))
+    # clustered on k: blocks with and without NaNs (NaN blocks carry no
+    # zone bounds, NaN-free ones prune)
+    io.write_blocks(encode_table(df, cluster_by="k", partitions=3,
+                                 snapshot_id="nan"))
+    blocks = io.read_blocks()
+    v = F.col("v")
+    cases = [
+        (("v", ">=", 2.0), v >= 2.0),
+        (("v", ">", 2.0), v > 2.0),
+        (("v", "<", 2.0), v < 2.0),
+        (("v", "<=", 2.0), v <= 2.0),
+        (("v", "=", 0.0), v == 0.0),
+        (("v", "!=", 5.0), v != 5.0),
+        (("v", "between", 2.0, 8.0), v.between(2.0, 8.0)),
+        (("v", "=", nan), v == nan),
+        (("v", "!=", nan), v != nan),
+        (("v", ">", nan), v > nan),
+        (("v", ">=", nan), v >= nan),
+        (("v", "<", nan), v < nan),
+        (("v", "<=", nan), v <= nan),
+        (("v", "between", 0.0, nan), v.between(0.0, nan)),
+        (("v", "in", [nan, 1.0]), v.isin([nan, 1.0])),
+        (("v", "not in", [nan, 5.0]), ~v.isin([nan, 5.0])),
+    ]
+    all_k = set(range(len(vals)))
+    for flt, pred in cases:
+        want = {r["k"] for r in df.filter(pred).collect()}
+        ipc = {r["k"] for r in decode_blocks(blocks, filters=[flt])
+               .collect()}
+        out = tmp_path / "dec"
+        decode_files_direct(spark, io, str(out), filters=[flt])
+        direct = {k for f in out.glob("*.parquet")
+                  for k in pq.read_table(f).column("k").to_pylist()}
+        delete_where(io, [flt])
+        live = decode_blocks(io.read_blocks(), deletes=io.read_deletes())
+        deleted = all_k - {r["k"] for r in live.collect()}
+        shutil.rmtree(io.deletes_path, ignore_errors=True)
+        assert ipc == direct == deleted == want, (flt, ipc, direct,
+                                                   deleted, want)

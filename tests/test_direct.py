@@ -180,7 +180,7 @@ def test_direct_encoded_blocks_support_filters_pruning(spark, pages_dir,
                                                        tmp_path):
     """Direct-written blocks carry the same zone/bloom sketches, so
     decode_blocks(filters=) prunes them too — including the partition
-    prepass over the direct-written snapshot_id=/part_id= directories
+    pruning over the direct-written snapshot_id=/part_id= directories
     (the fixture's storage order IS warc_ts order, so file-per-part
     encoding yields disjoint time ranges per partition)."""
     import datetime as dt
@@ -197,11 +197,9 @@ def test_direct_encoded_blocks_support_filters_pruning(spark, pages_dir,
     assert got.count() == want.count() > 0
     assert got.select("url").exceptAll(want.select("url")).count() == 0
     # pruning actually happened at the block level
-    from sparkolumnar.engine.decode import (_apply_block_filters,
-                                            _blocks_arrow_types)
-    types = _blocks_arrow_types(blocks)
-    surviving = _apply_block_filters(
-        blocks, [("warc_ts", "between", b["lo"], hi)], types).count()
+    from sparkolumnar.engine.decode import _prune_blocks
+    surviving = _prune_blocks(
+        blocks, [("warc_ts", "between", b["lo"], hi)]).count()
     assert surviving < blocks.count()
 
 
@@ -387,47 +385,49 @@ def test_direct_decode_with_filters_prunes_and_matches(spark, pages_dir,
     assert res2["n_rows"] == got2.count() == want2.count() > 0
 
 
-def test_block_keep_py_agrees_with_spark_pruning(spark, pages_dir,
-                                                 tmp_path):
-    """Property: the task-side Python pruning twin keeps EXACTLY the
-    blocks the Spark metadata expressions keep, for every op family."""
-    import datetime as dt
-
-    from sparkolumnar.engine.decode import (_apply_block_filters,
-                                            _blocks_arrow_types,
-                                            block_keep_py)
+def test_block_keep_py_pruning_is_sound(spark, pages_dir, tmp_path):
+    """Property: block_keep_py keeps every block holding a row that
+    Spark's own .filter matches, for every op family (an unknown column
+    prunes nothing)."""
+    from sparkolumnar.engine.decode import block_keep_py
 
     src = _pages_path(pages_dir)
     io = TableIO(spark, str(tmp_path / "t"))
     encode_files_direct(spark, src, io, run_id="kp")
     blocks = io.read_blocks()
-    types = _blocks_arrow_types(blocks)
     meta = blocks.select("part_id", "seq", "columns").collect()
     pages = spark.read.parquet(src)
     b = pages.selectExpr("min(warc_ts) lo", "max(warc_ts) hi").collect()[0]
     mid = b["lo"] + (b["hi"] - b["lo"]) / 3
     url0 = pages.select("url").limit(1).collect()[0]["url"]
+    ts, lang, url = F.col("warc_ts"), F.col("lang"), F.col("url")
 
     cases = [
-        [("warc_ts", "between", b["lo"], mid)],
-        [("warc_ts", ">", mid)],
-        [("lang", "=", "en")],
-        [("lang", "in", ["en", "l03", "l07"])],
-        [("url", ">=", url0)],
-        [("url", "<", url0)],
-        [[("lang", "=", "en"), ("warc_ts", "<=", mid)],
-         [("lang", "=", "l09")]],
-        [("nope_col", "=", "x")],
-        [("lang", "!=", "en")],
+        ([("warc_ts", "between", b["lo"], mid)], ts.between(b["lo"], mid)),
+        ([("warc_ts", ">", mid)], ts > mid),
+        ([("lang", "=", "en")], lang == "en"),
+        ([("lang", "in", ["en", "l03", "l07"])],
+         lang.isin(["en", "l03", "l07"])),
+        ([("url", ">=", url0)], url >= url0),
+        ([("url", "<", url0)], url < url0),
+        ([[("lang", "=", "en"), ("warc_ts", "<=", mid)],
+          [("lang", "=", "l09")]],
+         ((lang == "en") & (ts <= mid)) | (lang == "l09")),
+        ([("nope_col", "=", "x")], None),
+        ([("lang", "!=", "en")], lang != "en"),
     ]
-    for filters in cases:
-        spark_keep = {(r["part_id"], r["seq"]) for r in
-                      _apply_block_filters(blocks, filters, types)
-                      .select("part_id", "seq").collect()}
-        py_keep = {(r["part_id"], r["seq"]) for r in meta
-                   if block_keep_py([c.asDict() for c in r["columns"]],
-                                    filters, types)}
-        assert py_keep == spark_keep, filters
+    full = decode_blocks(blocks).cache()
+    for filters, pred in cases:
+        keep = ["%s/%s" % (r["part_id"], r["seq"]) for r in meta
+                if block_keep_py([c.asDict() for c in r["columns"]],
+                                 filters)]
+        if pred is None:  # unknown column: nothing may be pruned
+            assert len(keep) == len(meta)
+            continue
+        kept = blocks.where(F.concat_ws("/", "part_id", "seq").isin(keep))
+        got = decode_blocks(kept).filter(pred).count() if keep else 0
+        assert got == full.filter(pred).count(), filters
+    full.unpersist()
 
 
 def test_exact_filter_mask_py_matches_sql_semantics(spark):

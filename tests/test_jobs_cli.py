@@ -78,6 +78,27 @@ def test_decode_job_merge_schema_flag(spark, tmp_path, capsys):
     assert [r["b"] for r in got4] == [None] * 10 + list(range(10))
 
 
+def test_decode_job_direct_writes_only_requested_columns(spark, tmp_path,
+                                                         capsys):
+    """--direct --columns url --eq lang=en: the filter column decodes
+    in-task but is dropped before the write, as on the IPC path."""
+    import pyarrow.parquet as pq
+
+    from sparkolumnar.jobs import decode_job
+
+    pages = pages_df(spark, 3000)
+    io = TableIO(spark, str(tmp_path / "t"))
+    io.write_blocks(encode_table(pages, snapshot_id="dp", partitions=2))
+    out = tmp_path / "dec"
+    decode_job.main(["--blocks", str(tmp_path / "t" / "blocks"),
+                     "--output", str(out), "--columns", "url",
+                     "--eq", "lang=en", "--direct"])
+    res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    files = sorted(out.glob("*.parquet"))
+    assert files and all(pq.read_schema(f).names == ["url"] for f in files)
+    assert res["rows"] == pages.filter(F.col("lang") == "en").count() > 0
+
+
 def test_compact_job_cli(spark, tmp_path, capsys):
     from sparkolumnar.jobs import compact_job
 

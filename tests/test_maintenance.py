@@ -44,12 +44,13 @@ def test_compact_recluster_and_delete_old(spark, tmp_path):
     assert dec.select("url", "text").exceptAll(
         pages.select("url", "text")).count() == 0
     # clustered layout: lang equality now prunes blocks
-    from sparkolumnar.engine import zone_filter_eq
+    from sparkolumnar.engine.decode import _prune_blocks
 
     blocks = io.read_blocks()
     rare = (pages.groupBy("lang").count().orderBy("count")
             .limit(1).collect()[0]["lang"])
-    assert zone_filter_eq(blocks, "lang", rare).count() < blocks.count()
+    assert _prune_blocks(blocks, [("lang", "=", rare)]).count() \
+        < blocks.count()
 
 
 def test_compact_rejects_same_id_and_missing(spark, tmp_path):

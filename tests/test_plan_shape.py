@@ -146,7 +146,8 @@ def test_zone_map_block_pruning(spark, tmp_path):
     """Zone maps: a ts-range decode must skip blocks whose [min, max]
     cannot overlap, read no payload bytes for them, and still return
     exactly the rows an unpruned decode + filter returns."""
-    from sparkolumnar.engine import decode_blocks, encode_table, zone_filter
+    from sparkolumnar.engine import decode_blocks, encode_table
+    from sparkolumnar.engine.decode import _prune_blocks
     from sparkolumnar.engine.tableio import TableIO
 
     # warc_ts increases with row id -> sorting gives disjoint block ranges
@@ -157,18 +158,9 @@ def test_zone_map_block_pruning(spark, tmp_path):
     blocks = io.read_blocks()
     n_blocks = blocks.count()
     assert n_blocks > 1
-    import datetime as dt
-
     b = pages.selectExpr("min(warc_ts) lo", "max(warc_ts) hi").collect()[0]
-
-    def us(d):  # naive timestamp -> canonical epoch micros (NTZ-as-UTC)
-        epoch = dt.datetime(1970, 1, 1)
-        return int((d - epoch).total_seconds() * 1_000_000)
-
-    lo_us = us(b["lo"])
-    hi_us = lo_us + (us(b["hi"]) - lo_us) // 10  # first ~10% of time
-    hi_dt = b["lo"] + dt.timedelta(microseconds=hi_us - lo_us)
-    pruned = zone_filter(blocks, "warc_ts", lo_us, hi_us)
+    hi_dt = b["lo"] + (b["hi"] - b["lo"]) / 10  # first ~10% of time
+    pruned = _prune_blocks(blocks, [("warc_ts", "between", b["lo"], hi_dt)])
     assert 0 < pruned.count() < n_blocks  # real pruning happened
     got = (decode_blocks(pruned)
            .filter(F.col("warc_ts").between(b["lo"], hi_dt)))
@@ -176,17 +168,17 @@ def test_zone_map_block_pruning(spark, tmp_path):
             .filter(F.col("warc_ts").between(b["lo"], hi_dt)))
     assert got.count() == want.count()
     assert got.exceptAll(want).count() == 0
-    # the pruning predicate reads metadata leaves only (no payload bytes)
+    # the metadata pass's surviving coordinates restrict the payload scan
     plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "columns" in plan
+    assert "PartitionFilters" in plan and "seq" in plan, plan
 
 
 def test_bloom_zone_eq_pruning(spark, tmp_path):
     """Bloom sketch equality pruning: lang-clustered blocks, an equality
     probe keeps only blocks that may contain the value, results match the
     unpruned decode + filter exactly."""
-    from sparkolumnar.engine import (decode_blocks, encode_table,
-                                     zone_filter_eq)
+    from sparkolumnar.engine import decode_blocks, encode_table
+    from sparkolumnar.engine.decode import _prune_blocks
     from sparkolumnar.engine.tableio import TableIO
 
     pages = (pages_df(spark, 20_000).coalesce(1)
@@ -199,19 +191,20 @@ def test_bloom_zone_eq_pruning(spark, tmp_path):
     # a rare lang lives in few blocks; 'en' (l00) is the hot one
     rare = (pages.groupBy("lang").count().orderBy("count")
             .limit(1).collect()[0]["lang"])
-    pruned = zone_filter_eq(blocks, "lang", rare)
+    pruned = _prune_blocks(blocks, [("lang", "=", rare)])
     assert 0 < pruned.count() < n_blocks
     got = decode_blocks(pruned).filter(F.col("lang") == rare)
     want = decode_blocks(blocks).filter(F.col("lang") == rare)
     assert got.count() == want.count() > 0
     assert got.exceptAll(want).count() == 0
     # a value that exists nowhere prunes every bloom-carrying block
-    none = zone_filter_eq(blocks, "lang", "definitely-not-a-lang")
+    none = _prune_blocks(blocks, [("lang", "=", "definitely-not-a-lang")])
     assert none.count() < n_blocks
 
 
 def test_float_zone_map_pruning(spark, tmp_path):
-    from sparkolumnar.engine import decode_blocks, encode_table, zone_filter
+    from sparkolumnar.engine import decode_blocks, encode_table
+    from sparkolumnar.engine.decode import _prune_blocks
     from sparkolumnar.engine.tableio import TableIO
 
     df = (spark.range(30_000)
@@ -222,7 +215,7 @@ def test_float_zone_map_pruning(spark, tmp_path):
     blocks = io.read_blocks()
     n_blocks = blocks.count()
     assert n_blocks > 1
-    pruned = zone_filter(blocks, "v", 10.0, 20.0)
+    pruned = _prune_blocks(blocks, [("v", "between", 10.0, 20.0)])
     assert 0 < pruned.count() < n_blocks
     got = decode_blocks(pruned).filter(F.col("v").between(10.0, 20.0))
     want = df.filter(F.col("v").between(10.0, 20.0))
@@ -231,7 +224,8 @@ def test_float_zone_map_pruning(spark, tmp_path):
 
 def test_zone_filter_unknown_column_keeps_all(spark, tmp_path):
     """A typo'd column name must not silently prune every block."""
-    from sparkolumnar.engine import encode_table, zone_filter, zone_filter_eq
+    from sparkolumnar.engine import encode_table
+    from sparkolumnar.engine.decode import _prune_blocks
     from sparkolumnar.engine.tableio import TableIO
 
     pages = pages_df(spark, 2000)
@@ -239,8 +233,9 @@ def test_zone_filter_unknown_column_keeps_all(spark, tmp_path):
     io.write_blocks(encode_table(pages, snapshot_id="u1", partitions=2))
     blocks = io.read_blocks()
     n = blocks.count()
-    assert zone_filter(blocks, "no_such_column", 0, 10).count() == n
-    assert zone_filter_eq(blocks, "no_such_column", "x").count() == n
+    assert _prune_blocks(
+        blocks, [("no_such_column", "between", 0, 10)]).count() == n
+    assert _prune_blocks(blocks, [("no_such_column", "=", "x")]).count() == n
 
 
 def test_bucket_sql_matches_py4j_tree(spark):

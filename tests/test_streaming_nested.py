@@ -251,10 +251,8 @@ def test_streaming_decode_with_filters(spark, tmp_path):
 
 def test_streaming_decode_filters_with_explicit_schema(spark, tmp_path):
     """An explicitly-passed schema combined with filters on a column
-    OUTSIDE the projection: the stream must re-infer its mapInArrow
-    output schema from the extended column set (the decoded batches
-    carry the filter column) instead of failing with an Arrow schema
-    mismatch at runtime — mirroring decode_blocks."""
+    OUTSIDE the projection: the decode task drops the filter column, so
+    the batches match the passed schema exactly."""
     from pyspark.sql import functions as F, types as T
 
     from sparkolumnar.datagen import pages_df
@@ -277,6 +275,32 @@ def test_streaming_decode_filters_with_explicit_schema(spark, tmp_path):
     want = decode_blocks(io.read_blocks(),
                          filters=[("lang", "=", "en")]).select("url")
     assert len(rows) == want.count() > 0
+
+
+def test_streaming_decode_struct_child_filter_with_projection(spark,
+                                                             tmp_path):
+    """A struct-child filter outside the projection: the stream decodes
+    the child's ROOT column in-task, filters on the child, and emits only
+    the requested columns."""
+    from pyspark.sql import functions as F
+
+    from sparkolumnar.streaming import decode_stream
+
+    df = spark.range(3000).select(
+        F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
+        F.struct((F.col("id") * 3).alias("n_chars")).alias("meta"))
+    io = TableIO(spark, str(tmp_path / "sinkc"))
+    io.write_blocks(encode_table(df, cluster_by=["meta.n_chars"],
+                                 partitions=2, snapshot_id="sc"))
+    out = decode_stream(spark, io.blocks_path, columns=["url"],
+                        filters=[("meta.n_chars", ">", 5)])
+    q = (out.writeStream.format("memory").queryName("dec_child")
+         .option("checkpointLocation", str(tmp_path / "ckc"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(180)
+    rows = spark.sql("select * from dec_child").collect()
+    assert rows and set(rows[0].asDict()) == {"url"}
+    assert {r["url"] for r in rows} == {f"u{i}" for i in range(2, 3000)}
 
 
 def test_streaming_decode_with_in_and_or_filters(spark, tmp_path):
