@@ -6,27 +6,28 @@ table bytes pay the JVM->Python Arrow IPC serialization on the way in and
 the encoded payloads pay it again on the way out. At 100 TB that double
 serialization is the dominant cost the engine controls.
 
-The direct paths remove BOTH crossings for shuffle-free jobs: Spark
-distributes only the parquet FILE LIST (driver-small rows), and each task
+Every encode task writes its own blocks file through ONE writer
+(_write_part) and returns only a per-part metadata row to the driver:
 
-  * opens its files with pyarrow directly (no JVM scan, no IPC-in),
-  * encodes/decodes batches with the same codec engine,
-  * writes its output parquet file itself (no IPC-out, no JVM writer),
+  * encode_table_direct_write: the Spark plan owns the layout (hash
+    shuffle / range clustering — row transport), the task writes. This
+    is how lineage.encode_job lands blocks on a path-level TableIO, so
+    the encoded payloads never cross the IPC-out leg nor the JVM writer.
+  * encode_files_direct: shuffle-free storage-order encode — Spark
+    distributes only the parquet FILE LIST and each task also opens its
+    files with pyarrow (no JVM scan, no IPC-in).
+  * decode_files_direct: decode-to-parquet, the same shape in reverse.
 
-returning only per-partition metadata to the driver. This is the right
-shape whenever the job needs no row shuffle: encode in storage order
-(or on an input that is already clustered), decode-to-parquet. The
-shuffled layouts (key= / cluster_by=) inherently require row transport
-and keep the mapInArrow path.
-
-Exactly-once: the task's output file name is a pure function of
-(snapshot_id, part_id); writes go to a temp file + os.replace (atomic on
-posix), so a retried task idempotently overwrites its own output, and the
-checkpoint protocol is the same as engine/lineage.py — file groups are
-the partitions. The blocks files land inside TableIO's hive layout
+Exactly-once: a part's blocks file name is a pure function of
+(snapshot_id, part_id); the writer stages it under an attempt-unique
+hidden temp, sweeps the part directory's other visible files (residue of
+a crashed, never-checkpointed attempt) and publishes with an atomic
+move, so a retried task idempotently replaces its own output. The
+checkpoint rows come from the tasks' metadata (lineage.commit_parts).
+The blocks files land inside TableIO's hive layout
 (blocks/snapshot_id=<s>/part_id=<p>/) WITHOUT the two partition columns
 in the file, exactly as Spark writes them, so read_blocks()/decode_blocks
-see one coherent table regardless of which path produced each partition.
+see one coherent table regardless of which writer produced each part.
 
 At real scale the local-path file access generalizes: pyarrow.dataset
 speaks s3/hdfs/gcs through fsspec/Arrow filesystems; only _local_path's
@@ -36,14 +37,14 @@ scheme handling would grow.
 from __future__ import annotations
 
 import hashlib
-import os
+import posixpath
+from dataclasses import asdict
 from typing import List, Optional, Sequence
 
 import pyarrow as pa
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession
 
-from .blocks import arrow_blocks_schema
 from .encode import encode_batch
 from .selector import BALANCED
 from .tableio import TableIO
@@ -183,7 +184,7 @@ def _task_attempt_token() -> str:
     """Attempt-unique token for temp file names: with speculative
     execution or a zombie attempt surviving a stage retry, two attempts
     of the same partition may run concurrently — a shared deterministic
-    temp path would interleave their writes and os.replace could publish
+    temp path would interleave their writes and the move could publish
     a corrupt file. Unique temp + deterministic target keeps the publish
     atomic: whichever attempt renames last wins with a COMPLETE file."""
     from pyspark import TaskContext
@@ -192,31 +193,74 @@ def _task_attempt_token() -> str:
     return str(ctx.taskAttemptId()) if ctx is not None else "local"
 
 
-def _atomic_write_parquet(table: pa.Table, target: str,
-                          filesystem=None) -> None:
-    import posixpath
+def _temp_path(target: str) -> str:
+    """Attempt-unique temp next to `target`. Dot-prefixed: Spark/pyarrow
+    dataset readers IGNORE hidden files, so a task that dies mid-write
+    never leaves a half-written file a later scan would try to parse
+    (vacuum_table reclaims the bytes)."""
+    d, base = posixpath.split(target)
+    return posixpath.join(d, f".{base}.{_task_attempt_token()}.inprogress")
 
+
+_PART_META = pa.schema([
+    pa.field("part_id", pa.int32()), pa.field("n_blocks", pa.int64()),
+    pa.field("n_rows", pa.int64()), pa.field("bytes_in", pa.int64()),
+    pa.field("bytes_out", pa.int64())])
+_PART_META_DDL = ("part_id int, n_blocks long, n_rows long, bytes_in long, "
+                  "bytes_out long")
+
+
+def _write_part(blocks, fs, blocks_root: str, snap: str, pid: int) -> dict:
+    """THE blocks-file writer: stream one part's encoded block rows
+    (encode_batch output, one row each) into
+    <blocks_root>/snapshot_id=<snap>/part_id=<pid>/direct-<snap>-<pid>
+    .parquet, holding one block at a time, and return the part's
+    metadata row (n_blocks == 0: nothing written, nothing swept).
+
+    One row group per block, so per-row-group `seq` statistics let a
+    filtered decode (decode_files_direct filters=) skip pruned blocks'
+    payload BYTES at the scan; block rows are MB-sized, so per-row-group
+    overhead is noise. Statistics on `seq` ONLY and no dictionary: the
+    payloads are already entropy-coded, and min/max stats of every
+    binary payload leaf in every footer and page header would bloat the
+    stored bytes for nothing (same rationale as the UNCOMPRESSED write)."""
     import pyarrow.parquet as pq
+    from pyarrow import fs as pafs
 
-    fs, path = _fs_for(target, filesystem)
-    d, base = posixpath.split(path)
-    fs.create_dir(d, recursive=True)
-    # dot-prefixed temp name: Spark/pyarrow dataset readers IGNORE hidden
-    # files, so a task that dies mid-write can never leave a half-written
-    # file that a later scan would try to parse (a plain suffix would);
-    # attempt-unique so concurrent attempts never share a temp path
-    tmp = posixpath.join(
-        d, "." + base + f".{_task_attempt_token()}.inprogress")
-    # payloads are already entropy-coded: parquet re-compression is pure
-    # waste (same rationale as TableIO.write_blocks).
-    # row_group_size=1: ONE ROW GROUP PER BLOCK ROW, so per-row-group
-    # parquet statistics carry each block's seq and a filtered decode
-    # (decode_files_direct filters=) skips pruned blocks' payload BYTES
-    # at the scan, not just their rows after materialization. Block rows
-    # are MB-sized, so per-row-group overhead is noise.
-    pq.write_table(table, tmp, filesystem=fs, compression="none",
-                   row_group_size=1)
-    fs.move(tmp, path)
+    part_dir = posixpath.join(blocks_root, f"snapshot_id={snap}",
+                              f"part_id={pid}")
+    target = posixpath.join(part_dir, f"direct-{snap}-{pid}.parquet")
+    tmp = _temp_path(target)
+    meta = {"part_id": pid, "n_blocks": 0, "n_rows": 0, "bytes_in": 0,
+            "bytes_out": 0}
+    writer = None
+    try:
+        for enc in blocks:
+            row = enc.drop_columns(["snapshot_id", "part_id"])
+            if writer is None:
+                fs.create_dir(part_dir, recursive=True)
+                writer = pq.ParquetWriter(tmp, row.schema, filesystem=fs,
+                                          compression="none",
+                                          write_statistics=["seq"],
+                                          use_dictionary=False)
+            writer.write_batch(row)
+            cols = enc.column("columns")[0].as_py()
+            meta["n_blocks"] += 1
+            meta["n_rows"] += enc.column("n_rows")[0].as_py()
+            meta["bytes_in"] += sum(c["bytes_in"] for c in cols)
+            meta["bytes_out"] += sum(c["bytes_out"] for c in cols)
+    finally:
+        if writer is not None:
+            writer.close()
+    if writer is not None:
+        # per-part dynamic overwrite: clear this part directory's other
+        # visible files (only a crashed, never-checkpointed attempt can
+        # have left any), then publish atomically
+        for info in fs.get_file_info(pafs.FileSelector(part_dir)):
+            if info.path != target and not info.base_name.startswith("."):
+                fs.delete_file(info.path)
+        fs.move(tmp, target)
+    return meta
 
 
 def encode_files_direct(spark: SparkSession, input_path: str, io: TableIO,
@@ -258,20 +302,18 @@ def encode_files_direct(spark: SparkSession, input_path: str, io: TableIO,
     Returns {"snapshot_id", "parts_done_before", "parts_encoded",
     "n_blocks", "n_rows", "bytes_in", "bytes_out"}.
     """
-    files = list_parquet_files(spark, input_path, filesystem)
-    if columns is None:
-        if filesystem is not None:
-            import pyarrow.parquet as pq
+    from .lineage import commit_parts
 
-            pf = pq.ParquetFile(filesystem.open_input_file(files[0]))
-            col_names = list(pf.schema_arrow.names)
-            pf.close()
-        else:
-            first_schema = spark.read.parquet(input_path).schema
-            col_names = [f.name for f in first_schema.fields]
-    else:
-        col_names = list(columns)
+    files = list_parquet_files(spark, input_path, filesystem)
     snap = snapshot_id or _snapshot_of_files(files, files_per_task)
+    groups = [files[i:i + files_per_task]
+              for i in range(0, len(files), files_per_task)]
+    done = io.committed_parts(snap)
+    pending = [(pid, grp) for pid, grp in enumerate(groups)
+               if pid not in done
+               and (only_parts is None or pid in only_parts)]
+    if not pending:
+        return asdict(commit_parts(spark, io, snap, len(done), [], run_id))
     if plan == "auto":
         if filesystem is not None:
             # driver-side bounded sample through the filesystem (Spark
@@ -301,89 +343,39 @@ def encode_files_direct(spark: SparkSession, input_path: str, io: TableIO,
             if columns is not None:
                 df = df.select(*columns)
             plan = build_plan(df, mode=mode)
-    groups = [files[i:i + files_per_task]
-              for i in range(0, len(files), files_per_task)]
-    done = io.committed_parts(snap)
-    pending = [(pid, grp) for pid, grp in enumerate(groups)
-               if pid not in done
-               and (only_parts is None or pid in only_parts)]
-    result = {"snapshot_id": snap, "parts_done_before": len(done),
-              "parts_encoded": 0, "n_blocks": 0, "n_rows": 0,
-              "bytes_in": 0, "bytes_out": 0}
-    if not pending:
-        return result
     if blocks_root is None:
         blocks_root = io.blocks_path
-    file_schema = pa.schema(
-        [f for f in arrow_blocks_schema(col_names)
-         if f.name not in ("snapshot_id", "part_id")])
-    meta_schema = pa.schema([
-        pa.field("part_id", pa.int32()), pa.field("n_blocks", pa.int64()),
-        pa.field("n_rows", pa.int64()), pa.field("bytes_in", pa.int64()),
-        pa.field("bytes_out", pa.int64()), pa.field("task_sec", pa.float64())])
 
-    def work(batches):
-        import time as _time
-
+    def encoded(paths, pid):
         import pyarrow.parquet as pq
 
-        for b in batches:
-            for row in b.to_pylist():
-                _t0 = _time.time()
-                pid, paths = int(row["part_id"]), row["paths"]
-                out_batches = []
-                n_rows = bytes_in = bytes_out = 0
-                seq = 0
-                for path in paths:
-                    rfs, rpath = _fs_for(path, filesystem)
-                    pf = pq.ParquetFile(rfs.open_input_file(rpath))
-                    for batch in pf.iter_batches(batch_size=batch_rows,
-                                                 columns=columns):
-                        if batch.num_rows == 0:
-                            continue
-                        enc = encode_batch(batch, snap, pid, seq, mode,
+        seq = 0
+        for path in paths:
+            rfs, rpath = _fs_for(path, filesystem)
+            with pq.ParquetFile(rfs.open_input_file(rpath)) as pf:
+                for batch in pf.iter_batches(batch_size=batch_rows,
+                                             columns=columns):
+                    if batch.num_rows:
+                        yield encode_batch(batch, snap, pid, seq, mode,
                                            plan=plan)
                         seq += 1
-                        n_rows += batch.num_rows
-                        meta = enc.column("columns")[0].as_py()
-                        bytes_in += sum(c["bytes_in"] for c in meta)
-                        bytes_out += sum(c["bytes_out"] for c in meta)
-                        out_batches.append(
-                            enc.select([f.name for f in file_schema]))
-                    pf.close()
-                target = os.path.join(
-                    blocks_root, f"snapshot_id={snap}", f"part_id={pid}",
-                    f"direct-{snap}-{pid}.parquet")
-                _atomic_write_parquet(
-                    pa.Table.from_batches(out_batches, schema=file_schema),
-                    target, filesystem=filesystem)
-                yield pa.RecordBatch.from_pylist([{
-                    "part_id": pid, "n_blocks": seq, "n_rows": n_rows,
-                    "bytes_in": bytes_in, "bytes_out": bytes_out,
-                    "task_sec": _time.time() - _t0,
-                }], schema=meta_schema)
 
-    rows = [(pid, grp) for pid, grp in pending]
+    def work(batches):
+        bfs, broot = _fs_for(blocks_root, filesystem)
+        for b in batches:
+            for row in b.to_pylist():
+                pid = int(row["part_id"])
+                # an empty part is still committed (no file is written)
+                yield pa.RecordBatch.from_pylist(
+                    [_write_part(encoded(row["paths"], pid), bfs, broot,
+                                 snap, pid)], schema=_PART_META)
+
     # round-robin repartition: exactly-even one-row-per-task placement
     # (hashing part_id would collide ~37% of groups onto shared tasks)
-    fdf = (spark.createDataFrame(rows, "part_id int, paths array<string>")
-           .repartition(len(rows)))
-    meta = fdf.mapInArrow(
-        work, "part_id int, n_blocks long, n_rows long, bytes_in long, "
-              "bytes_out long, task_sec double").collect()
-    cp = spark.createDataFrame(
-        [(snap, r["part_id"], r["n_blocks"], r["n_rows"], r["bytes_in"],
-          r["bytes_out"], run_id, "committed") for r in meta],
-        "snapshot_id string, part_id int, n_blocks long, n_rows long, "
-        "bytes_in long, bytes_out long, run_id string, status string")
-    io.append_checkpoint(cp)
-    for r in meta:
-        result["parts_encoded"] += 1
-        result["n_blocks"] += r["n_blocks"]
-        result["n_rows"] += r["n_rows"]
-        result["bytes_in"] += r["bytes_in"]
-        result["bytes_out"] += r["bytes_out"]
-    return result
+    fdf = (spark.createDataFrame(pending, "part_id int, paths array<string>")
+           .repartition(len(pending)))
+    meta = fdf.mapInArrow(work, _PART_META_DDL).collect()
+    return asdict(commit_parts(spark, io, snap, len(done), meta, run_id))
 
 
 def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
@@ -492,13 +484,12 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
     # with more parts (larger files_per_task, a since-shrunk blocks
     # listing) would leave its higher-numbered part files mixing stale
     # or unfiltered rows into the result
-    import posixpath
     from pyarrow import fs as pafs
 
     valid = {f"part-{pid:05d}.parquet" for pid in range(len(groups))}
     sel = pafs.FileSelector(out_root, allow_not_found=True)
     for info in out_fs.get_file_info(sel):
-        base = posixpath.basename(info.path)
+        base = info.base_name
         if (base.startswith("part-") and base.endswith(".parquet")
                 and base not in valid):
             out_fs.delete_file(info.path)
@@ -587,13 +578,9 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
                 wfs, wroot = _fs_for(output_path, filesystem)
                 target = f"{wroot}/part-{pid:05d}.parquet"
                 if out_batches:
-                    import pyarrow.parquet as _pq
-
-                    tmp = (f"{wroot}/.part-{pid:05d}.parquet"
-                           f".{_task_attempt_token()}.inprogress")
-                    _pq.write_table(
-                        pa.Table.from_batches(out_batches), tmp,
-                        filesystem=wfs, compression="snappy")
+                    tmp = _temp_path(target)
+                    pq.write_table(pa.Table.from_batches(out_batches), tmp,
+                                   filesystem=wfs, compression="snappy")
                     wfs.move(tmp, target)
                 else:
                     # this part produced no rows (e.g. filters pruned
@@ -630,20 +617,20 @@ def encode_table_direct_write(df, io: TableIO, key: Optional[str] = None,
                               skip_parts=None,
                               sketches: Optional[bool] = None,
                               filesystem=None):
-    """HYBRID encode: the Spark plan still owns the layout (salted-hash
-    shuffle / deterministic range clustering — row transport that a
-    scan-in-UDF path cannot do), but each task WRITES its partition's
-    blocks file itself and returns only metadata rows. Compared to
-    encode_table + io.write_blocks this removes the IPC-out leg (the
-    encoded payloads never travel back to the JVM) and the JVM parquet
-    writer — roughly half the remaining serialization of the
-    write-inclusive encode job (see BENCH/BASELINE.md "IPC floor").
+    """Encode with task-side blocks writes: the Spark plan still owns the
+    layout (salted-hash shuffle / deterministic range clustering — row
+    transport that a scan-in-UDF path cannot do), but each task WRITES
+    its partition's blocks file itself (_write_part) and returns only
+    metadata rows. Compared to encode_table + io.write_blocks this
+    removes the IPC-out leg (the encoded payloads never travel back to
+    the JVM) and the JVM parquet writer. lineage.encode_job runs it on
+    every path-level TableIO.
 
-    Exactly-once matches TableIO's dynamic partition overwrite: the
-    output file name is a pure function of (snapshot_id, partitionId),
-    the write is temp+atomic-rename, and any stale files of the same
-    partition directory (artifacts of a crashed, never-checkpointed
-    attempt) are removed before the rename.
+    Exactly-once: the output file name is a pure function of
+    (snapshot_id, partitionId), the write is temp + atomic move, and any
+    stale files of the same partition directory are removed before the
+    move. Parts in skip_parts and parts with no rows write nothing and
+    return no row.
 
     Returns a driver-small metadata DataFrame
     (part_id, n_blocks, n_rows, bytes_in, bytes_out); call .collect()
@@ -663,130 +650,16 @@ def encode_table_direct_write(df, io: TableIO, key: Optional[str] = None,
     df = layout_for_encode(df, key=key, partitions=partitions,
                            sort_within=sort_within, cluster_by=cluster_by,
                            cluster_layout=cluster_layout)
-    col_names = [f.name for f in df.schema.fields]
-    file_schema = pa.schema(
-        [f for f in arrow_blocks_schema(col_names)
-         if f.name not in ("snapshot_id", "part_id")])
-    file_names = [f.name for f in file_schema]
     blocks_root = io.blocks_path
     snap = snapshot_id
     inner = make_encode_fn(snap, mode, skip_parts, plan, overrides, sketches)
 
     def work(batches):
-        import posixpath
-
-        import pyarrow.parquet as pq
-        from pyarrow import fs as pafs
-
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else 0
-        attempt = str(ctx.taskAttemptId()) if ctx is not None else "local"
         bfs, broot = _fs_for(blocks_root, filesystem)
-        part_dir = posixpath.join(broot, f"snapshot_id={snap}",
-                                  f"part_id={pid}")
-        target = posixpath.join(part_dir, f"direct-{snap}-{pid}.parquet")
-        # attempt-unique temp: a zombie attempt surviving a stage retry
-        # must never interleave writes into a live attempt's temp file;
-        # the deterministic TARGET keeps the publish idempotent
-        tmp = posixpath.join(part_dir,
-                             f".direct-{snap}-{pid}.{attempt}.inprogress")
-        writer = None
-        n_blocks = n_rows = bytes_in = bytes_out = 0
-        for enc in inner(batches):
-            if writer is None:
-                bfs.create_dir(part_dir, recursive=True)
-                writer = pq.ParquetWriter(tmp, file_schema, filesystem=bfs,
-                                          compression="none")
-            writer.write_table(
-                pa.Table.from_batches([enc.select(file_names)]))
-            n_blocks += 1
-            n_rows += enc.column("n_rows")[0].as_py()
-            meta = enc.column("columns")[0].as_py()
-            bytes_in += sum(c["bytes_in"] for c in meta)
-            bytes_out += sum(c["bytes_out"] for c in meta)
-        if writer is not None:
-            writer.close()
-            # dynamic-overwrite semantics: clear stale files of THIS
-            # partition (only a crashed, never-checkpointed attempt can
-            # have left any), then publish atomically
-            sel = pafs.FileSelector(part_dir, allow_not_found=True)
-            for info in bfs.get_file_info(sel):
-                base = posixpath.basename(info.path)
-                if base != posixpath.basename(tmp) \
-                        and not base.startswith("."):
-                    bfs.delete_file(info.path)
-            bfs.move(tmp, target)
-            yield pa.RecordBatch.from_pylist([{
-                "part_id": pid, "n_blocks": n_blocks, "n_rows": n_rows,
-                "bytes_in": bytes_in, "bytes_out": bytes_out,
-            }], schema=pa.schema([
-                pa.field("part_id", pa.int32()),
-                pa.field("n_blocks", pa.int64()),
-                pa.field("n_rows", pa.int64()),
-                pa.field("bytes_in", pa.int64()),
-                pa.field("bytes_out", pa.int64())]))
+        meta = _write_part(inner(batches), bfs, broot, snap, pid)
+        if meta["n_blocks"]:
+            yield pa.RecordBatch.from_pylist([meta], schema=_PART_META)
 
-    return df.mapInArrow(
-        work, "part_id int, n_blocks long, n_rows long, bytes_in long, "
-              "bytes_out long")
-
-
-def encode_job_direct_write(spark, input_df, io: TableIO,
-                            key: Optional[str] = "url",
-                            snapshot_id: Optional[str] = None,
-                            mode: str = BALANCED,
-                            partitions: Optional[int] = None,
-                            sort_within: bool = True,
-                            run_id: str = "r0", plan="auto",
-                            overrides=None, cluster_by=None,
-                            cluster_layout: str = "range",
-                            filesystem=None) -> dict:
-    """Checkpointed HYBRID encode job — the production recipe with the
-    IPC-out leg removed: Spark owns the layout (salted url-hash shuffle
-    or deterministic range clustering, the row transport a scan-in-UDF
-    path cannot do), each task writes its partition's blocks file itself
-    (encode_table_direct_write), and the exactly-once protocol is
-    lineage.encode_job's verbatim: snapshot-keyed checkpoint skip-set
-    evaluated inside the encode UDF, content-addressed blocks,
-    attempt-unique temps + deterministic targets, dynamic-overwrite
-    cleanup. Returns the same result dict as encode_files_direct.
-    """
-    from .encode import check_overrides
-    from .tableio import snapshot_of_input
-
-    check_overrides(overrides)
-    snap = snapshot_id or snapshot_of_input(input_df)
-    if cluster_by is not None and snapshot_id is None:
-        # same identity rule as lineage.encode_job: the cluster layout
-        # (columns + version) is part of the snapshot — see
-        # encode.clustered_snapshot_id
-        from .encode import clustered_snapshot_id
-
-        snap = clustered_snapshot_id(snap, cluster_by, cluster_layout)
-    if plan == "auto":
-        from .plan import build_plan
-
-        plan = build_plan(input_df, mode=mode)
-    done = io.committed_parts(snap)
-    p = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    meta = encode_table_direct_write(
-        input_df, io, key=None if cluster_by else key, partitions=p,
-        sort_within=sort_within, snapshot_id=snap, mode=mode, plan=plan,
-        overrides=overrides, cluster_by=cluster_by,
-        cluster_layout=cluster_layout,
-        skip_parts=set(done), filesystem=filesystem).collect()
-    result = {"snapshot_id": snap, "parts_done_before": len(done),
-              "parts_encoded": len(meta),
-              "n_blocks": sum(r["n_blocks"] for r in meta),
-              "n_rows": sum(r["n_rows"] for r in meta),
-              "bytes_in": sum(r["bytes_in"] for r in meta),
-              "bytes_out": sum(r["bytes_out"] for r in meta)}
-    if meta:
-        cp = spark.createDataFrame(
-            [(snap, int(r["part_id"]), int(r["n_blocks"]),
-              int(r["n_rows"]), int(r["bytes_in"]), int(r["bytes_out"]),
-              run_id, "committed") for r in meta],
-            "snapshot_id string, part_id int, n_blocks long, n_rows long, "
-            "bytes_in long, bytes_out long, run_id string, status string")
-        io.append_checkpoint(cp)
-    return result
+    return df.mapInArrow(work, _PART_META_DDL)

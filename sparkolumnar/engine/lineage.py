@@ -10,14 +10,19 @@ Protocol:
  2. A run skips partitions already present in the checkpoint table for this
     snapshot (the skip set is evaluated INSIDE the encode UDF — zero rows
     flow for completed partitions).
- 3. Blocks land with dynamic partition overwrite; re-encoding a partition
-    replaces its own files byte-for-byte (content-addressed block_ids), so
-    a crash between blocks-commit and checkpoint-commit cannot duplicate
-    data — the retry overwrites idempotently. Exactly-once output follows
-    without any coordination beyond the checkpoint append.
- 4. The checkpoint row carries the per-partition metrics; fine-grained
-    per-column lineage is a payload-pruned projection of the blocks table
-    itself (lineage_of).
+ 3. Each encode task writes its partition's blocks file itself
+    (direct._write_part: attempt-unique hidden temp, sweep of the part
+    directory's stale files, atomic move onto a name that is a pure
+    function of (snapshot, partition)) and returns the part's metrics.
+    Re-encoding a partition replaces its own file byte-for-byte
+    (content-addressed block_ids), so a crash between blocks-commit and
+    checkpoint-commit cannot duplicate data — the retry overwrites
+    idempotently. Exactly-once output follows without any coordination
+    beyond the checkpoint append. A TableIO without path-level access
+    (Iceberg) lands blocks through its own write_blocks commit instead.
+ 4. The checkpoint row carries the per-partition metrics the tasks
+    returned (commit_parts); fine-grained per-column lineage is a
+    payload-pruned projection of the blocks table itself (lineage_of).
 """
 
 from __future__ import annotations
@@ -25,8 +30,11 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Optional
 
+import pyarrow as pa
+
 from pyspark.sql import DataFrame, functions as F
 
+from .direct import encode_table_direct_write
 from .encode import check_overrides, encode_table
 from .selector import BALANCED
 from .tableio import TableIO, snapshot_of_input
@@ -99,39 +107,62 @@ def encode_job(spark, input_df: DataFrame, io: TableIO, key: Optional[str] = "ur
     skip = set(done)
     if only_parts is not None:
         skip |= {i for i in range(p) if i not in only_parts}
-    blocks = encode_table(input_df, key=None if cluster_by else key,
-                          partitions=p,
-                          sort_within=sort_within, snapshot_id=snap,
-                          mode=mode, skip_parts=skip, plan=plan,
-                          overrides=overrides, cluster_by=cluster_by,
-                          cluster_layout=cluster_layout)
-    io.write_blocks(blocks)
-    # derive checkpoint rows from what actually landed (metadata-only read)
-    landed = io.read_blocks()
-    per_part = (landed.filter(F.col("snapshot_id") == snap)
-                .groupBy("part_id")
-                .agg(F.count("*").alias("n_blocks"),
-                     F.sum("n_rows").alias("n_rows")))
-    new_parts = per_part.filter(~F.col("part_id").isin(list(done)) if done else F.lit(True))
-    metrics = (lineage_of(landed.filter(F.col("snapshot_id") == snap))
-               .groupBy("part_id")
-               .agg(F.sum("bytes_in").alias("bytes_in"),
-                    F.sum("bytes_out").alias("bytes_out")))
-    cp = (new_parts.join(metrics, "part_id")
-          .withColumn("snapshot_id", F.lit(snap))
-          .withColumn("run_id", F.lit(run_id))
-          .withColumn("status", F.lit("committed"))
-          .select("snapshot_id", "part_id", "n_blocks", "n_rows",
-                  "bytes_in", "bytes_out", "run_id", "status"))
-    io.append_checkpoint(cp)
-    agg = cp.agg(F.count("*"), F.sum("n_blocks"), F.sum("n_rows"),
-                 F.sum("bytes_in"), F.sum("bytes_out")).collect()[0]
+    kw = dict(key=None if cluster_by else key, partitions=p,
+              sort_within=sort_within, snapshot_id=snap, mode=mode,
+              skip_parts=skip, plan=plan, overrides=overrides,
+              cluster_by=cluster_by, cluster_layout=cluster_layout)
+    if getattr(io, "path_level", False):
+        parts = encode_table_direct_write(input_df, io, **kw).collect()
+    else:
+        io.write_blocks(encode_table(input_df, **kw))
+        parts = _landed_parts(io, snap, skip)
+    return commit_parts(spark, io, snap, len(done), parts, run_id)
+
+
+def _landed_parts(io: TableIO, snap: str, skip: set) -> list:
+    """Per-part metadata rows (as the writing tasks return them) of the
+    blocks this run landed through io.write_blocks: the table-format
+    path, where the commit must go through the format, not task files.
+    Metadata-only: the payload columns are never read."""
+    def col_sum(field):
+        return F.aggregate("columns", F.lit(0).cast("long"),
+                           lambda acc, c: acc + c[field])
+
+    landed = io.read_blocks().filter(F.col("snapshot_id") == snap)
+    if skip:
+        landed = landed.filter(~F.col("part_id").isin(sorted(skip)))
+    return (landed.groupBy("part_id")
+            .agg(F.count("*").alias("n_blocks"),
+                 F.sum("n_rows").alias("n_rows"),
+                 F.sum(col_sum("bytes_in")).alias("bytes_in"),
+                 F.sum(col_sum("bytes_out")).alias("bytes_out"))
+            .collect())
+
+
+_CHECKPOINT_SCHEMA = pa.schema([
+    ("snapshot_id", pa.string()), ("part_id", pa.int32()),
+    ("n_blocks", pa.int64()), ("n_rows", pa.int64()),
+    ("bytes_in", pa.int64()), ("bytes_out", pa.int64()),
+    ("run_id", pa.string()), ("status", pa.string())])
+_PART_METRICS = ("n_blocks", "n_rows", "bytes_in", "bytes_out")
+
+
+def commit_parts(spark, io: TableIO, snap: str, parts_done_before: int,
+                 parts, run_id: str) -> EncodeJobResult:
+    """The one checkpoint commit of every encode job: append a committed
+    row per part from the metadata rows its writing tasks returned
+    (part_id, n_blocks, n_rows, bytes_in, bytes_out) — only after those
+    blocks are published — and total them into the job's result."""
+    rows = [{c: int(r[c]) for c in ("part_id",) + _PART_METRICS}
+            for r in parts]
+    if rows:
+        # from an Arrow table, not a list of tuples: a Python-list
+        # DataFrame runs a Python-worker job whose second worker daemon
+        # stays resident and slows every later Python task on the host
+        io.append_checkpoint(spark.createDataFrame(pa.Table.from_pylist(
+            [dict(r, snapshot_id=snap, run_id=run_id, status="committed")
+             for r in rows], schema=_CHECKPOINT_SCHEMA)))
     return EncodeJobResult(
-        snapshot_id=snap,
-        parts_done_before=len(done),
-        parts_encoded=agg[0] or 0,
-        n_blocks=agg[1] or 0,
-        n_rows=agg[2] or 0,
-        bytes_in=agg[3] or 0,
-        bytes_out=agg[4] or 0,
-    )
+        snapshot_id=snap, parts_done_before=parts_done_before,
+        parts_encoded=len(rows),
+        **{c: sum(r[c] for r in rows) for c in _PART_METRICS})

@@ -82,7 +82,7 @@ def compact_snapshot(io: TableIO, snapshot_id: str,
     # deletes physical — the rewritten snapshot has no delete rows, and
     # the old ones are purged with their snapshot directories below.
     dels = (io.read_deletes()
-            if getattr(io, "supports_deletes", False) else None)
+            if getattr(io, "path_level", False) else None)
     n_deleted = 0
     if dels is not None:
         dels = dels.where(F.col("snapshot_id").isin(ids))
@@ -232,13 +232,13 @@ def vacuum_table(io: TableIO, min_age_sec: float = 3600.0) -> dict:
     long-lived table format ships (Iceberg's remove-orphan-files /
     Delta's VACUUM, re-expressed for the blocks layout):
 
-    * **stale in-progress temps**: the direct/hybrid write paths stage
-      each output as `.<name>.<attempt>.inprogress` + atomic move — a
-      task killed mid-write leaves the temp behind. Any such file older
-      than min_age_sec is deleted (the age guard keeps a RUNNING job's
-      in-flight temps safe — same contract as Delta's retention check;
-      dotfile temps are already invisible to every reader, this
-      reclaims the bytes);
+    * **stale in-progress temps**: the task-side writers (engine/
+      direct.py) stage each output as `.<name>.<attempt>.inprogress` +
+      atomic move — a task killed mid-write leaves the temp behind. Any
+      such file older than min_age_sec is deleted (the age guard keeps
+      a RUNNING job's in-flight temps safe — same contract as Delta's
+      retention check; dotfile temps are already invisible to every
+      reader, this reclaims the bytes);
     * **orphaned delete rows**: a crash between compaction's
       blocks-directory drop and deletes-directory drop leaves delete
       bitmaps whose snapshot no longer exists. Their coordinates match

@@ -4,10 +4,13 @@ The production design targets Iceberg tables (snapshot ids, atomic
 overwrite-by-partition, metadata-only reads). This sandbox has no Iceberg
 jars, so the same semantics are provided over parquet directories:
 
-* blocks are written partitionBy(part_id) with DYNAMIC partition overwrite
-  — re-running a partition replaces exactly its own files (idempotent,
+* blocks live in a (snapshot_id, part_id) hive layout. The encode jobs
+  write each part's file in-task (engine/direct._write_part) and publish
+  it with a per-part sweep plus atomic move; write_blocks (DML,
+  compaction) uses Spark's DYNAMIC partition overwrite. Either way
+  re-running a partition replaces exactly its own files (idempotent,
   because block contents are deterministic functions of the input
-  partition), which is the parquet equivalent of an Iceberg
+  partition) — the parquet equivalent of an Iceberg
   overwrite-partitions commit;
 * the input "snapshot id" is synthesized from the input file listing, the
   parquet stand-in for an Iceberg snapshot id.
@@ -33,12 +36,13 @@ def snapshot_of_input(df: DataFrame) -> str:
 
 
 class TableIO:
-    # capability flag: DML (position-delete bitmaps), compaction and
-    # vacuum need path-level access (blocks_path/deletes_path); callers
-    # gate on this instead of hasattr (inherited methods made hasattr
-    # guards vacuously true — an IcebergTableIO would then die with
-    # AttributeError mid-job instead of a clear error up front)
-    supports_deletes = True
+    # capability flag: task-side blocks writes (encode_job), DML
+    # (position-delete bitmaps), compaction and vacuum need path-level
+    # access (blocks_path/deletes_path); callers gate on this instead of
+    # hasattr (inherited methods made hasattr guards vacuously true — an
+    # IcebergTableIO would then die with AttributeError mid-job instead
+    # of a clear error up front)
+    path_level = True
 
     def __init__(self, spark: SparkSession, base: str):
         self.spark = spark
@@ -137,9 +141,9 @@ class IcebergTableIO(TableIO):
                    checkpoint_table="cat.db.checkpoint").
     """
 
-    supports_deletes = False  # Iceberg v2 position deletes go through the
-    #                           table format's own commit path, which this
-    #                           seam does not implement yet
+    path_level = False  # Iceberg commits (blocks, v2 position deletes) go
+    #                     through the table format's own commit path;
+    #                     encode_job lands blocks via write_blocks here
 
     def __init__(self, spark: SparkSession, blocks_table: str,
                  checkpoint_table: str):

@@ -117,7 +117,7 @@ def update_where(io, filters, assignments: Dict[str, str],
         schema = union_schema_of_blocks(old_blocks)
         compat = True
     deletes = (io.read_deletes()
-               if getattr(io, "supports_deletes", False) else None)
+               if getattr(io, "path_level", False) else None)
     matched = decode_blocks(old_blocks, schema=schema, compat=compat,
                             filters=filters, deletes=deletes)
     types = {f.name: f.dataType for f in matched.schema.fields}

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import argparse
 import json
+from dataclasses import asdict
 
 
 def main(argv=None) -> None:
@@ -50,12 +51,9 @@ def main(argv=None) -> None:
                          "zero table bytes over JVM<->Python IPC. "
                          "Incompatible with --key/--cluster-by ordering")
     ap.add_argument("--hybrid", action="store_true",
-                    help="write-in-UDF hybrid encode: Spark owns the "
-                         "layout (--key shuffle or --cluster-by range "
-                         "clustering), but each task writes its blocks "
-                         "file itself — the encoded payloads never cross "
-                         "JVM<->Python IPC nor the JVM parquet writer. "
-                         "Same exactly-once checkpoint protocol")
+                    help="same as the default path, which already writes "
+                         "each part's blocks file in-task under the "
+                         "Spark layout; kept for existing command lines")
     ap.add_argument("--run-id", default="cli")
     ap.add_argument("--overrides", default=None,
                     help="per-column codec overrides, e.g. 'ts=dod,lang=dict' "
@@ -78,10 +76,6 @@ def main(argv=None) -> None:
     if args.overrides:
         overrides = dict(kv.split("=", 1) for kv in args.overrides.split(","))
     cluster_by = args.cluster_by.split(",") if args.cluster_by else None
-    if args.direct and args.hybrid:
-        raise ValueError("--direct (storage-order scan-in-UDF) and "
-                         "--hybrid (Spark layout + write-in-UDF) are "
-                         "mutually exclusive")
     if args.direct:
         if cluster_by or overrides:
             raise ValueError(
@@ -91,35 +85,15 @@ def main(argv=None) -> None:
 
         d = encode_files_direct(spark, args.input, io, mode=args.mode,
                                 run_id=args.run_id)
-        d["ratio"] = (d["bytes_out"] / d["bytes_in"]) if d["bytes_in"] else None
-        print(json.dumps(d))
-        return
-    if args.hybrid:
-        from sparkolumnar.engine.direct import encode_job_direct_write
-
-        d = encode_job_direct_write(
-            spark, df, io, key=args.key, mode=args.mode,
-            partitions=args.partitions, sort_within=not args.no_sort,
-            run_id=args.run_id, overrides=overrides, cluster_by=cluster_by,
-            cluster_layout=args.cluster_layout)
-        d["ratio"] = (d["bytes_out"] / d["bytes_in"]) if d["bytes_in"] else None
-        print(json.dumps(d))
-        return
-    res = encode_job(spark, df, io, key=args.key, mode=args.mode,
-                     partitions=args.partitions,
-                     sort_within=not args.no_sort, run_id=args.run_id,
-                     overrides=overrides, cluster_by=cluster_by,
-                     cluster_layout=args.cluster_layout)
-    print(json.dumps({
-        "snapshot_id": res.snapshot_id,
-        "parts_done_before": res.parts_done_before,
-        "parts_encoded": res.parts_encoded,
-        "n_blocks": res.n_blocks,
-        "n_rows": res.n_rows,
-        "bytes_in": res.bytes_in,
-        "bytes_out": res.bytes_out,
-        "ratio": (res.bytes_out / res.bytes_in) if res.bytes_in else None,
-    }))
+    else:
+        d = asdict(encode_job(spark, df, io, key=args.key, mode=args.mode,
+                              partitions=args.partitions,
+                              sort_within=not args.no_sort,
+                              run_id=args.run_id, overrides=overrides,
+                              cluster_by=cluster_by,
+                              cluster_layout=args.cluster_layout))
+    d["ratio"] = (d["bytes_out"] / d["bytes_in"]) if d["bytes_in"] else None
+    print(json.dumps(d))
 
 
 if __name__ == "__main__":

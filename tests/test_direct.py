@@ -478,15 +478,15 @@ def test_exact_filter_mask_py_coerces_string_literals(spark):
 
 
 def test_hybrid_job_resume_and_crash_recovery(spark, tmp_path):
-    """encode_job_direct_write: exactly-once across reruns, and a
-    crashed-before-checkpoint attempt (blocks written, checkpoint rows
-    never appended) is idempotently overwritten by the next run — the
-    dynamic-overwrite cleanup plus content-addressed blocks."""
+    """lineage.encode_job (task-side blocks writes): exactly-once across
+    reruns, and a crashed-before-checkpoint attempt (blocks written,
+    checkpoint rows never appended) is idempotently overwritten by the
+    next run — the per-part sweep plus content-addressed blocks."""
     from pyspark.sql import functions as F
 
     from sparkolumnar.datagen import pages_df
-    from sparkolumnar.engine import (encode_job_direct_write,
-                                     encode_table_direct_write)
+    from sparkolumnar.engine import encode_table_direct_write
+    from sparkolumnar.engine.lineage import encode_job
 
     pages = pages_df(spark, 3000, cache_dir=str(tmp_path / "pg"))
     io = TableIO(spark, str(tmp_path / "t"))
@@ -499,14 +499,12 @@ def test_hybrid_job_resume_and_crash_recovery(spark, tmp_path):
     # the "crashed" snapshot has blocks but zero checkpointed parts
     assert io.committed_parts("crash") == set()
 
-    r1 = encode_job_direct_write(spark, pages, io, key="url",
-                                 snapshot_id="crash", partitions=4,
-                                 run_id="redo")
-    assert r1["parts_done_before"] == 0 and r1["parts_encoded"] == 4
-    r2 = encode_job_direct_write(spark, pages, io, key="url",
-                                 snapshot_id="crash", partitions=4,
-                                 run_id="again")
-    assert r2["parts_encoded"] == 0 and r2["parts_done_before"] == 4
+    r1 = encode_job(spark, pages, io, key="url", snapshot_id="crash",
+                    partitions=4, run_id="redo")
+    assert r1.parts_done_before == 0 and r1.parts_encoded == 4
+    r2 = encode_job(spark, pages, io, key="url", snapshot_id="crash",
+                    partitions=4, run_id="again")
+    assert r2.parts_encoded == 0 and r2.parts_done_before == 4
 
     blocks = io.read_blocks().filter(F.col("snapshot_id") == "crash")
     dec = decode_blocks(blocks, verify=True).select("url", "text")
