@@ -10,9 +10,15 @@ already carries per-column bytes_in/bytes_out/codec.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from .lineage import lineage_of
+
+_ANALYZE_SCHEMA = pa.schema([
+    ("column", pa.string()), ("codec", pa.string()), ("n_rows", pa.int64()),
+    ("n_nulls", pa.int64()), ("bytes_in", pa.int64()),
+    ("bytes_out", pa.int64()), ("tried", pa.map_(pa.string(), pa.int64()))])
 
 
 def analyze(blocks: DataFrame) -> DataFrame:
@@ -129,10 +135,12 @@ def analyze_sample(df: DataFrame, rows: int = 20_000) -> DataFrame:
             continue
         choice = select_encode(arr, mode=BALANCED)
         raw = sum(b.size for b in arr.buffers() if b is not None)
-        out.append((fld.name, choice.codec, len(arr), nn, raw,
-                    len(choice.payload),
-                    {k: int(v) for k, v in sorted(choice.tried.items())}))
-    spark = df.sparkSession
-    return spark.createDataFrame(
-        out, "column string, codec string, n_rows long, n_nulls long, "
-             "bytes_in long, bytes_out long, tried map<string,long>")
+        out.append({"column": fld.name, "codec": choice.codec,
+                    "n_rows": len(arr), "n_nulls": nn, "bytes_in": raw,
+                    "bytes_out": len(choice.payload),
+                    "tried": [(k, int(v))
+                              for k, v in sorted(choice.tried.items())]})
+    # from an Arrow table, not a Python list (which would run a
+    # Python-RDD job and leave a second worker daemon resident)
+    return df.sparkSession.createDataFrame(pa.Table.from_pylist(
+        out, schema=_ANALYZE_SCHEMA))

@@ -474,22 +474,56 @@ def _prefix_budgets(blocks_df: DataFrame, limit: int,
            .select("snapshot_id", "part_id", "seq", "n_rows").collect())
     blk.sort(key=lambda r: (r["snapshot_id"], int(r["part_id"]),
                             int(r["seq"])))
+    return _window_budgets(
+        (((r["snapshot_id"], int(r["part_id"]), int(r["seq"])),
+          int(r["n_rows"])) for r in blk), offset - rows_before, limit)
+
+
+def _window_budgets(blocks, to_skip: int, limit: int) -> dict:
+    """THE row-window walk: (skip, take) per block covering `limit` rows
+    after the first `to_skip`, over (coordinate, row count) pairs in
+    coordinate order. Blocks before and after the window get no entry."""
     budgets: dict = {}
-    to_skip = offset - rows_before
     left = limit
-    for r in blk:
-        nb = int(r["n_rows"])
+    for key, nb in blocks:
         if to_skip >= nb:
             to_skip -= nb
             continue
         take = min(left, nb - to_skip)
-        budgets[(r["snapshot_id"], int(r["part_id"]), int(r["seq"]))] = (
-            int(to_skip), int(take))
+        budgets[key] = (int(to_skip), int(take))
         to_skip = 0
         left -= take
         if left <= 0:
             break
     return budgets
+
+
+def _limit_budgets(blocks_df: DataFrame, limit: int, offset: int,
+                   del_agg: Optional[DataFrame] = None,
+                   verify: bool = False) -> dict:
+    """The limit window of a predicate-free read (decode_blocks and
+    direct.decode_files_direct): _prefix_budgets over `blocks_df`, with
+    each block's row count reduced by its delete popcount when `del_agg`
+    (deletes.aggregate_deletes) is given, so budgets count LIVE rows —
+    the decode fn mirrors this by masking first, then slicing the
+    (skip, take) window."""
+    from pyspark.sql import functions as F
+
+    if del_agg is not None:
+        blocks_df = (blocks_df.join(
+            F.broadcast(del_agg.select(*COORD_COLS, DELETE_COUNT_COL)),
+            COORD_COLS, "left")
+            .withColumn("n_rows", F.col("n_rows") - F.coalesce(
+                F.col(DELETE_COUNT_COL), F.lit(0))))
+    if verify:
+        import warnings
+
+        warnings.warn(
+            "decode with limit= and verify=True: partially-decoded edge "
+            "blocks skip checksum verification (checksums cover whole "
+            "columns); whole blocks in the window are verified",
+            stacklevel=3)
+    return _prefix_budgets(blocks_df, limit, offset)
 
 
 def _budget_range_pred(lo: tuple, hi: tuple):
@@ -1305,30 +1339,12 @@ def decode_blocks(blocks_df: DataFrame, schema: Optional[T.StructType] = None,
         session_tz = _session_tz(blocks_df)
         blocks_df = _prune_blocks(blocks_df, groups)
     if limit is not None and not groups:
-        budget_src = blocks_df
-        if del_agg is not None:
-            # budgets count LIVE rows: subtract each block's delete
-            # popcount before the prefix walk (the decode fn mirrors this
-            # by masking first, then slicing the (skip, take) window)
-            budget_src = (blocks_df.join(
-                F.broadcast(del_agg.select(*COORD_COLS, DELETE_COUNT_COL)),
-                COORD_COLS, "left")
-                .withColumn("n_rows", F.col("n_rows") - F.coalesce(
-                    F.col(DELETE_COUNT_COL), F.lit(0))))
-        budgets = _prefix_budgets(budget_src, limit, offset)
+        budgets = _limit_budgets(blocks_df, limit, offset, del_agg, verify)
         if budgets:
             keys = list(budgets)  # insertion order == sorted block order
             blocks_df = blocks_df.where(_budget_range_pred(keys[0], keys[-1]))
         else:
             blocks_df = blocks_df.where(F.lit(False))
-        if verify:
-            import warnings
-
-            warnings.warn(
-                "decode_blocks(limit=) with verify=True: partially-decoded "
-                "edge blocks skip checksum verification (checksums cover "
-                "whole columns); whole blocks in the window are verified",
-                stacklevel=2)
     if wanted is not None:
         blocks_df = _scan_columns(blocks_df, wanted)
     del_masks = None

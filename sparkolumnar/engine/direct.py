@@ -44,6 +44,7 @@ from typing import List, Optional, Sequence
 import pyarrow as pa
 
 from pyspark.sql import SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from .encode import encode_batch
 from .selector import BALANCED
@@ -206,16 +207,58 @@ _PART_META = pa.schema([
     pa.field("part_id", pa.int32()), pa.field("n_blocks", pa.int64()),
     pa.field("n_rows", pa.int64()), pa.field("bytes_in", pa.int64()),
     pa.field("bytes_out", pa.int64())])
-_PART_META_DDL = ("part_id int, n_blocks long, n_rows long, bytes_in long, "
-                  "bytes_out long")
+_DECODE_META = pa.schema([pa.field("part_id", pa.int32()),
+                          pa.field("n_rows", pa.int64()),
+                          pa.field("n_blocks_read", pa.int64()),
+                          pa.field("n_blocks_total", pa.int64())])
+_MATCH_COUNTS = pa.schema([pa.field("snapshot_id", pa.string()),
+                           pa.field("part_id", pa.int32()),
+                           pa.field("seq", pa.int32()),
+                           pa.field("n", pa.int64())])
+
+
+def _publish(batches, fs, target: str, sweep: bool = False,
+             **writer_opts) -> bool:
+    """THE task-side parquet writer: stream `batches` through one
+    ParquetWriter into an attempt-unique hidden temp next to `target`
+    (holding one batch at a time) and publish it with an atomic move.
+    sweep=True first deletes the target directory's other visible files
+    (per-part dynamic overwrite). No batch: nothing is written or swept,
+    and the result is False."""
+    import pyarrow.parquet as pq
+    from pyarrow import fs as pafs
+
+    target_dir = posixpath.dirname(target)
+    tmp = _temp_path(target)
+    writer = None
+    try:
+        for b in batches:
+            if writer is None:
+                fs.create_dir(target_dir, recursive=True)
+                writer = pq.ParquetWriter(tmp, b.schema, filesystem=fs,
+                                          **writer_opts)
+            writer.write_batch(b)
+    finally:
+        if writer is not None:
+            writer.close()
+    if writer is None:
+        return False
+    if sweep:
+        for info in fs.get_file_info(pafs.FileSelector(target_dir)):
+            if info.path != target and not info.base_name.startswith("."):
+                fs.delete_file(info.path)
+    fs.move(tmp, target)
+    return True
 
 
 def _write_part(blocks, fs, blocks_root: str, snap: str, pid: int) -> dict:
     """THE blocks-file writer: stream one part's encoded block rows
     (encode_batch output, one row each) into
     <blocks_root>/snapshot_id=<snap>/part_id=<pid>/direct-<snap>-<pid>
-    .parquet, holding one block at a time, and return the part's
-    metadata row (n_blocks == 0: nothing written, nothing swept).
+    .parquet and return the part's metadata row (n_blocks == 0: nothing
+    written, nothing swept). Only a crashed, never-checkpointed attempt
+    can have left other visible files in the part directory; they are
+    swept before the publish.
 
     One row group per block, so per-row-group `seq` statistics let a
     filtered decode (decode_files_direct filters=) skip pruned blocks'
@@ -224,43 +267,51 @@ def _write_part(blocks, fs, blocks_root: str, snap: str, pid: int) -> dict:
     payloads are already entropy-coded, and min/max stats of every
     binary payload leaf in every footer and page header would bloat the
     stored bytes for nothing (same rationale as the UNCOMPRESSED write)."""
-    import pyarrow.parquet as pq
-    from pyarrow import fs as pafs
-
-    part_dir = posixpath.join(blocks_root, f"snapshot_id={snap}",
-                              f"part_id={pid}")
-    target = posixpath.join(part_dir, f"direct-{snap}-{pid}.parquet")
-    tmp = _temp_path(target)
+    target = posixpath.join(blocks_root, f"snapshot_id={snap}",
+                            f"part_id={pid}", f"direct-{snap}-{pid}.parquet")
     meta = {"part_id": pid, "n_blocks": 0, "n_rows": 0, "bytes_in": 0,
             "bytes_out": 0}
-    writer = None
-    try:
+
+    def rows():
         for enc in blocks:
-            row = enc.drop_columns(["snapshot_id", "part_id"])
-            if writer is None:
-                fs.create_dir(part_dir, recursive=True)
-                writer = pq.ParquetWriter(tmp, row.schema, filesystem=fs,
-                                          compression="none",
-                                          write_statistics=["seq"],
-                                          use_dictionary=False)
-            writer.write_batch(row)
             cols = enc.column("columns")[0].as_py()
             meta["n_blocks"] += 1
             meta["n_rows"] += enc.column("n_rows")[0].as_py()
             meta["bytes_in"] += sum(c["bytes_in"] for c in cols)
             meta["bytes_out"] += sum(c["bytes_out"] for c in cols)
-    finally:
-        if writer is not None:
-            writer.close()
-    if writer is not None:
-        # per-part dynamic overwrite: clear this part directory's other
-        # visible files (only a crashed, never-checkpointed attempt can
-        # have left any), then publish atomically
-        for info in fs.get_file_info(pafs.FileSelector(part_dir)):
-            if info.path != target and not info.base_name.startswith("."):
-                fs.delete_file(info.path)
-        fs.move(tmp, target)
+            yield enc.drop_columns(["snapshot_id", "part_id"])
+
+    _publish(rows(), fs, target, sweep=True, compression="none",
+             write_statistics=["seq"], use_dictionary=False)
     return meta
+
+
+def _run_parts(spark: SparkSession, parts, fn, schema: pa.Schema) -> list:
+    """Run fn(part_id, paths) -> RecordBatch of `schema` for each
+    (part_id, paths) of `parts`, one Spark task per part, and collect
+    the batches' rows. The tasks scan a range of part indices cut into
+    as many partitions, which places exactly one part on each task (a
+    round-robin repartition of a task-list DataFrame put 4 parts on 3
+    tasks), needs no shuffle and runs no Python-RDD job (a Python-list
+    DataFrame does, and its second worker daemon stays resident and
+    slows every later Python task on the host). The paths ride in the
+    task closure."""
+    if not parts:
+        return []
+
+    def work(batches):
+        for b in batches:
+            for i in b.column(0).to_pylist():
+                yield fn(*parts[i])
+
+    return spark.range(0, len(parts), 1, len(parts)).mapInArrow(
+        work, from_arrow_schema(schema)).collect()
+
+
+def _file_groups(files: Sequence[str], files_per_task: int) -> list:
+    """[(part_id, files)]: consecutive runs of `files_per_task` files."""
+    return [(k, list(files[i:i + files_per_task])) for k, i in
+            enumerate(range(0, len(files), files_per_task))]
 
 
 def encode_files_direct(spark: SparkSession, input_path: str, io: TableIO,
@@ -306,10 +357,9 @@ def encode_files_direct(spark: SparkSession, input_path: str, io: TableIO,
 
     files = list_parquet_files(spark, input_path, filesystem)
     snap = snapshot_id or _snapshot_of_files(files, files_per_task)
-    groups = [files[i:i + files_per_task]
-              for i in range(0, len(files), files_per_task)]
+    groups = _file_groups(files, files_per_task)
     done = io.committed_parts(snap)
-    pending = [(pid, grp) for pid, grp in enumerate(groups)
+    pending = [(pid, grp) for pid, grp in groups
                if pid not in done
                and (only_parts is None or pid in only_parts)]
     if not pending:
@@ -360,22 +410,53 @@ def encode_files_direct(spark: SparkSession, input_path: str, io: TableIO,
                                            plan=plan)
                         seq += 1
 
-    def work(batches):
+    def work(pid, paths):
+        # an empty part is still committed (no file is written)
         bfs, broot = _fs_for(blocks_root, filesystem)
-        for b in batches:
-            for row in b.to_pylist():
-                pid = int(row["part_id"])
-                # an empty part is still committed (no file is written)
-                yield pa.RecordBatch.from_pylist(
-                    [_write_part(encoded(row["paths"], pid), bfs, broot,
-                                 snap, pid)], schema=_PART_META)
+        return pa.RecordBatch.from_pylist(
+            [_write_part(encoded(paths, pid), bfs, broot, snap, pid)],
+            schema=_PART_META)
 
-    # round-robin repartition: exactly-even one-row-per-task placement
-    # (hashing part_id would collide ~37% of groups onto shared tasks)
-    fdf = (spark.createDataFrame(pending, "part_id int, paths array<string>")
-           .repartition(len(pending)))
-    meta = fdf.mapInArrow(work, _PART_META_DDL).collect()
+    meta = _run_parts(spark, pending, work, _PART_META)
     return asdict(commit_parts(spark, io, snap, len(done), meta, run_id))
+
+
+def _first_block_columns(files: Sequence[str], filesystem=None) -> list:
+    """Column metadata of the first block in `files` ([] for an empty
+    table), read driver-side from one row group's `columns` leaf: what a
+    decode's requested and filter columns are checked against, the same
+    one-block sample as decode.schema_of_blocks."""
+    import pyarrow.parquet as pq
+
+    for f in files:
+        fs, path = _fs_for(f, filesystem)
+        with pq.ParquetFile(fs.open_input_file(path)) as pf:
+            for b in pf.iter_batches(batch_size=1, columns=["columns"]):
+                if b.num_rows:
+                    return b.column(0)[0].as_py()
+    return []
+
+
+def _count_blocks(files: Sequence[str], filesystem=None) -> int:
+    """Blocks in `files`, from their footers (one row per block)."""
+    import pyarrow.parquet as pq
+
+    n = 0
+    for f in files:
+        fs, path = _fs_for(f, filesystem)
+        with fs.open_input_file(path) as fh:
+            n += pq.read_metadata(fh).num_rows
+    return n
+
+
+def _append_coords(batch_iter, sid: str, pid: int):
+    """Append a blocks file's (snapshot_id, part_id) — hive directory
+    names, not file columns — for make_decode_fn's budget lookup."""
+    for bb in batch_iter:
+        n = bb.num_rows
+        yield (bb.append_column("snapshot_id",
+                                pa.array([sid] * n, pa.string()))
+               .append_column("part_id", pa.array([pid] * n, pa.int32())))
 
 
 def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
@@ -387,15 +468,25 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
                         blocks_root: Optional[str] = None,
                         schema=None,
                         deletes_path: Optional[str] = None,
-                        snapshots: Optional[Sequence[str]] = None) -> dict:
-    """Direct decode-to-parquet: each task reads its blocks files with
-    pyarrow, decodes (reusing the engine's make_decode_fn — including
-    verify's canonical-sha256 recomputation), and writes its output
-    parquet file itself. The decoded table bytes never cross JVM<->Python
-    IPC nor the JVM parquet writer — the counterpart of the measured
-    decode floor, where shipping decoded rows back for a count was most
-    of the wall. Output files are one per task (part-<id>.parquet),
-    overwritten idempotently on retry.
+                        snapshots: Optional[Sequence[str]] = None,
+                        limit: Optional[int] = None,
+                        offset: int = 0) -> dict:
+    """Direct decode-to-parquet, the decode_job writer: each task reads
+    its blocks files with pyarrow, decodes them (the engine's
+    make_decode_fn — including verify's canonical-sha256 recomputation)
+    and streams the decoded batches through one parquet writer into its
+    own output file (part-<k>.parquet, published by an atomic move of an
+    attempt-unique temp, so a retried task idempotently replaces it).
+    The decoded table bytes never cross JVM<->Python IPC nor the JVM
+    parquet writer. Files, and so output parts, are in (snapshot_id,
+    part_id) order. The output directory is overwritten: visible parquet
+    files this run does not write (an earlier decode's, or a Spark
+    job's part files) are deleted before any task starts; a read that
+    returns no rows leaves no parquet file.
+
+    Requested columns, and the filter's root columns, are checked on the
+    driver before any task starts (against `schema` when given, else one
+    block's metadata); an unknown one raises ValueError.
 
     filters: same predicate language as decode_blocks(filters=)
     (= == != < <= > >= between / IN lists / OR-of-conjunction groups),
@@ -407,8 +498,21 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
     per block, so pruned blocks' payload bytes stay on disk), and the
     shared decode function (make_decode_fn) applies the exact row
     predicate and drops the filter-only columns before the write — the
-    output holds exactly `columns`, as on the IPC path. The two flagship
-    100 TB features — zero-IPC decode and automatic pruning — compose.
+    output holds exactly `columns`, as on the IPC path.
+
+    limit=n (optionally with offset=m) writes only rows [m, m + n) in
+    (snapshot_id, part_id, seq, row) order, as decode_blocks(limit=):
+    without filters the window is decode._limit_budgets' per-block
+    (skip, take) map (live rows under deletes), edge blocks decode only
+    their range and verify skips them (checksums cover whole columns);
+    with filters the limit counts MATCHING rows — a first in-task pass
+    decodes only the filter's root columns of the blocks block_keep_py
+    keeps and returns their match counts, the driver turns them into
+    windows over matching rows, and the decode pass slices each block
+    after its exact mask. Either way only the window's (snapshot_id,
+    part_id) files are listed into tasks and only its blocks' row groups
+    are read; blocks_read is then the window's block count and
+    blocks_total is counted from the files' footers.
 
     schema: optional Spark StructType for SCHEMA-EVOLVED tables (snapshots
     with different column sets). Every task then decodes compat against
@@ -425,187 +529,239 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
     hive path, reads ONLY those coordinates' delete rows (snapshot_id is
     the deletes partition key, so the pyarrow scan prunes directories),
     ORs the bitmaps per block and masks deleted rows out after decode —
-    the in-task twin of decode_blocks(deletes=), zero IPC preserved."""
-    from .decode import (block_keep_py, filter_root_columns_of,
-                         make_decode_fn, _normalize_filters)
+    the in-task twin of decode_blocks(deletes=), zero IPC preserved.
 
-    compat_target = None
-    if schema is not None:
-        from pyspark.sql.pandas.types import to_arrow_type
+    Returns {"n_rows", "n_parts", "n_blocks_read", "n_blocks_total"}."""
+    from pyarrow import fs as pafs
 
-        compat_target = pa.schema([pa.field(f.name,
-                                            to_arrow_type(f.dataType))
-                                   for f in schema.fields])
+    from .blocks import SKETCH_CODEC
+    from .decode import (_limit_budgets, _normalize_filters, _window_budgets,
+                         block_keep_py, filter_root_columns_of,
+                         make_decode_fn)
 
     if filesystem is not None and blocks_root is not None:
         files = list_parquet_files(spark, blocks_root, filesystem)
     else:
-        files = sorted(_local_path(f)
-                       for f in io.read_blocks().inputFiles())
+        files = [_local_path(f) for f in io.read_blocks().inputFiles()]
     if snapshots is not None:
         # snapshot-scoped read: snapshot_id is the first hive partition
         # key, so this prunes whole directories before any task launches
-        want = {str(s) for s in snapshots}
-        files = [f for f in files if _path_block_coords(f)[0] in want]
+        snaps = {str(s) for s in snapshots}
+        files = [f for f in files if _path_block_coords(f)[0] in snaps]
+    files.sort(key=lambda f: (_path_block_coords(f), f))
+    groups = _normalize_filters(filters)
+    target = None
+    if schema is not None:
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        target = pa.schema([pa.field(f.name, to_arrow_type(f.dataType))
+                            for f in schema.fields])
+    roots: List[str] = []
+    if columns is not None or groups:
+        if target is not None:
+            names = decodable = set(target.names)
+        else:
+            metas = _first_block_columns(files, filesystem)
+            names = {m["name"] for m in metas}
+            decodable = {m["name"] for m in metas
+                         if m["codec"] != SKETCH_CODEC}
+        roots = filter_root_columns_of(groups, names)
+        if names:  # an empty table has nothing to check or decode
+            missing = [c for c in columns or () if c not in decodable]
+            if missing:
+                raise ValueError(
+                    f"requested columns {missing} not in the blocks table "
+                    f"(available: {sorted(decodable)})")
+            bad = [c for c in roots if c not in names]
+            if bad and target is not None:
+                raise ValueError(
+                    f"compat decode with filters: filter columns {bad} "
+                    f"must be part of the provided schema")
+            if bad:
+                raise ValueError(
+                    f"filter columns {bad} not in the blocks table "
+                    f"(available: {sorted(names)})")
+    out_cols = None
+    if target is not None and columns is not None:
+        # compat decode fills every target field: decode the requested
+        # and filter columns only, and write the requested ones
+        target = pa.schema([f for f in target
+                            if f.name in columns or f.name in roots])
+        out_cols = [f.name for f in target if f.name in columns]
     session_tz = None
-    if filters:
-        # validate + normalize ONCE on the driver: the task loop calls
-        # block_keep_py per block, and re-normalizing (plus re-parsing
-        # leaf values) 10^5 times per part would be pure waste — the
-        # canonicalization itself is also lru-cached (decode.py)
-        filters = _normalize_filters(filters)
+    if groups:
         try:
             session_tz = spark.conf.get("spark.sql.session.timeZone")
         except Exception:
             session_tz = None
-        if compat_target is not None:
-            names = set(compat_target.names)
-            bad = [c for c in filter_root_columns_of(filters, names)
-                   if c not in names]
-            if bad:
-                raise ValueError(
-                    f"compat decode with filters: filter columns {bad} "
-                    f"must be part of the provided schema")
-    # scan projection source: explicit columns, else the compat target's
-    # fields (other generations' payload bytes then stay on disk)
+    # scan projection: explicit columns, else the compat target's fields
+    # (other generations' payload bytes then stay on disk), plus the
+    # filter's root columns, which decode in-task too
     scan_want = columns
-    if scan_want is None and compat_target is not None:
-        scan_want = [f.name for f in compat_target]
-    groups = [files[i:i + files_per_task]
-              for i in range(0, len(files), files_per_task)]
-    meta_schema = pa.schema([pa.field("part_id", pa.int32()),
-                             pa.field("n_rows", pa.int64()),
-                             pa.field("n_blocks_read", pa.int64()),
-                             pa.field("n_blocks_total", pa.int64())])
-    out_fs, out_root = _fs_for(output_path, filesystem)
-    out_fs.create_dir(out_root, recursive=True)
-    # sweep STALE parts up front: tasks below overwrite/delete only the
-    # part ids of THIS run, so a prior decode into the same directory
-    # with more parts (larger files_per_task, a since-shrunk blocks
-    # listing) would leave its higher-numbered part files mixing stale
-    # or unfiltered rows into the result
-    from pyarrow import fs as pafs
+    if scan_want is None and target is not None:
+        scan_want = target.names
+    if scan_want is not None:
+        scan_want = list(scan_want) + [c for c in roots
+                                       if c not in scan_want]
 
-    valid = {f"part-{pid:05d}.parquet" for pid in range(len(groups))}
-    sel = pafs.FileSelector(out_root, allow_not_found=True)
-    for info in out_fs.get_file_info(sel):
-        base = info.base_name
-        if (base.startswith("part-") and base.endswith(".parquet")
-                and base not in valid):
-            out_fs.delete_file(info.path)
-
-    def work(batches):
+    def block_batches(path, want, seqs, cnt, del_cache, coords=False):
+        """One blocks file's block rows for the decode fn: the payload
+        and validity fields of `want` (None = all) of the blocks in
+        `seqs`, or without `seqs` of those block_keep_py keeps (a
+        metadata-only pass first), delete bitmaps and (coords=True) the
+        file's coordinates appended. Counts blocks into `cnt`."""
         import pyarrow.dataset as pads
         import pyarrow.parquet as pq
 
         from .blocks import payload_field, validity_field
 
-        fn = make_decode_fn(verify=verify, columns=columns,
-                            target=compat_target, groups=filters,
-                            session_tz=session_tz)
-        del_cache: dict = {}  # (snapshot_id, part_id) -> {seq: bitmap}
-        for b in batches:
-            for row in b.to_pylist():
-                pid, paths = int(row["part_id"]), row["paths"]
-                out_batches = []
-                n = 0
-                blocks_read = blocks_total = 0
-                for path in paths:
-                    rfs, rpath = _fs_for(path, filesystem)
-                    pf = pq.ParquetFile(rfs.open_input_file(rpath))
-                    seq_masks = None
-                    if deletes_path is not None:
-                        coords = _path_block_coords(path)
-                        if coords not in del_cache:
-                            del_cache[coords] = _load_seq_masks(
-                                deletes_path, *coords,
-                                filesystem=filesystem)
-                        seq_masks = del_cache[coords] or None
-                    want = scan_want
-                    if filters:
-                        # metadata-only pruning pass: columns/seq leaves
-                        # only, zero payload bytes
-                        meta = pf.read(columns=["seq", "n_rows",
-                                                "columns"])
-                        seqs = meta.column("seq").to_pylist()
-                        nrows = meta.column("n_rows").to_pylist()
-                        metas = meta.column("columns").to_pylist()
-                        blocks_total += len(seqs)
-                        keep = [s for s, nr, m in zip(seqs, nrows, metas)
-                                if block_keep_py(m, filters,
-                                                 session_tz=session_tz,
-                                                 n_rows=nr)]
-                        blocks_read += len(keep)
-                        if not keep:
-                            pf.close()
-                            continue
-                        if want is not None:
-                            # the filter's root columns decode in-task too
-                            want = list(want) + [
-                                c for c in filter_root_columns_of(
-                                    filters, {m["name"] for m in metas[0]})
-                                if c not in want]
-                    else:
-                        blocks_total += pf.metadata.num_rows
-                        blocks_read += pf.metadata.num_rows
-                    read_cols = None
-                    if want is not None:
-                        # projection reaches the pyarrow scan: unrequested
-                        # columns' payload bytes are never read from disk
-                        have = set(pf.schema_arrow.names)
-                        read_cols = (
-                            [c for c in ("block_id", "seq", "n_rows",
-                                         "columns") if c in have]
-                            + [f for c in want
-                               for f in (payload_field(c),
-                                         validity_field(c)) if f in have])
-                    if filters:
-                        # surviving blocks only: one row group per block
-                        # (direct writers), so the seq filter prunes at
-                        # row-group granularity via parquet statistics
-                        it = pads.dataset(
-                            rpath, format="parquet", filesystem=rfs
-                        ).to_batches(columns=read_cols,
-                                     filter=pads.field("seq").isin(keep))
-                    else:
-                        it = pf.iter_batches(columns=read_cols)
-                    if seq_masks:
-                        it = _append_del_masks(it, seq_masks)
-                    for out in fn(it):
-                        out_batches.append(out)
-                        n += out.num_rows
-                    pf.close()
-                wfs, wroot = _fs_for(output_path, filesystem)
-                target = f"{wroot}/part-{pid:05d}.parquet"
-                if out_batches:
-                    tmp = _temp_path(target)
-                    pq.write_table(pa.Table.from_batches(out_batches), tmp,
-                                   filesystem=wfs, compression="snappy")
-                    wfs.move(tmp, target)
-                else:
-                    # this part produced no rows (e.g. filters pruned
-                    # everything): a part file from a PRIOR run into the
-                    # same directory would otherwise survive and mix
-                    # unfiltered rows into the result
-                    try:
-                        wfs.delete_file(target)
-                    except (FileNotFoundError, OSError):
-                        pass
-                yield pa.RecordBatch.from_pylist(
-                    [{"part_id": pid, "n_rows": n,
-                      "n_blocks_read": blocks_read,
-                      "n_blocks_total": blocks_total}], schema=meta_schema)
+        rfs, rpath = _fs_for(path, filesystem)
+        with pq.ParquetFile(rfs.open_input_file(rpath)) as pf:
+            cnt["total"] += pf.metadata.num_rows
+            if seqs is None and groups:
+                meta = pf.read(columns=["seq", "n_rows", "columns"])
+                seqs = [s for s, nr, m in zip(
+                    meta.column("seq").to_pylist(),
+                    meta.column("n_rows").to_pylist(),
+                    meta.column("columns").to_pylist())
+                    if block_keep_py(m, groups, session_tz=session_tz,
+                                     n_rows=nr)]
+            n_read = pf.metadata.num_rows if seqs is None else len(seqs)
+            cnt["read"] += n_read
+            if not n_read:
+                return
+            read_cols = None
+            if want is not None:
+                # projection reaches the pyarrow scan: unrequested
+                # columns' payload bytes are never read from disk
+                have = set(pf.schema_arrow.names)
+                read_cols = (
+                    [c for c in ("block_id", "seq", "n_rows", "columns")
+                     if c in have]
+                    + [f for c in want
+                       for f in (payload_field(c), validity_field(c))
+                       if f in have])
+            if seqs is None:
+                it = pf.iter_batches(columns=read_cols)
+            else:
+                # one row group per block (direct writers), so the seq
+                # filter prunes at row-group granularity via statistics
+                it = pads.dataset(
+                    rpath, format="parquet", filesystem=rfs
+                ).to_batches(columns=read_cols,
+                             filter=pads.field("seq").isin(seqs))
+            sid, pid = _path_block_coords(path)
+            if deletes_path is not None:
+                if (sid, pid) not in del_cache:
+                    del_cache[(sid, pid)] = _load_seq_masks(
+                        deletes_path, sid, pid, filesystem=filesystem)
+                if del_cache[(sid, pid)]:
+                    it = _append_del_masks(it, del_cache[(sid, pid)])
+            if coords:
+                it = _append_coords(it, sid, pid)
+            yield from it
 
-    rows = list(enumerate(groups))
-    fdf = (spark.createDataFrame(rows, "part_id int, paths array<string>")
-           .repartition(len(rows)))
-    meta = fdf.mapInArrow(
-        work, "part_id int, n_rows long, n_blocks_read long, "
-              "n_blocks_total long").collect()
-    return {"n_rows": sum(r["n_rows"] for r in meta),
-            "n_parts": len(meta),
-            "n_blocks_read": sum(r["n_blocks_read"] for r in meta),
-            "n_blocks_total": sum(r["n_blocks_total"] for r in meta)}
+    budgets = window = None
+    n_read = n_total = None  # limit reads count blocks on the driver
+    if limit is not None:
+        if groups:
+            def count(_, paths):
+                # per kept block, the rows the exact filter (and the
+                # delete bitmaps) let through; only root columns decode
+                fn = make_decode_fn(columns=roots, target=target,
+                                    groups=groups, session_tz=session_tz)
+                cnt, del_cache, found = {"read": 0, "total": 0}, {}, []
+                for path in paths:
+                    sid, pid = _path_block_coords(path)
+                    for bb in block_batches(path, roots, None, cnt,
+                                            del_cache):
+                        for j, q in enumerate(bb.column("seq").to_pylist()):
+                            n = sum(o.num_rows for o in fn([bb.slice(j, 1)]))
+                            if n:
+                                found.append({"snapshot_id": sid,
+                                              "part_id": pid, "seq": q,
+                                              "n": n})
+                return pa.RecordBatch.from_pylist(found, schema=_MATCH_COUNTS)
+
+            counts = _run_parts(spark, _file_groups(files, files_per_task),
+                                count, _MATCH_COUNTS)
+            budgets = _window_budgets(sorted(
+                ((r["snapshot_id"], r["part_id"], r["seq"]), r["n"])
+                for r in counts), offset, limit)
+        else:
+            blocks_df = io.read_blocks()
+            if snapshots is not None:
+                from pyspark.sql import functions as F
+
+                blocks_df = blocks_df.where(
+                    F.col("snapshot_id").isin(sorted(snaps)))
+            del_agg = None
+            if deletes_path is not None:
+                from .deletes import aggregate_deletes
+
+                del_agg = aggregate_deletes(spark.read.parquet(deletes_path))
+            budgets = {(str(s), int(p), int(q)): w for (s, p, q), w in
+                       _limit_budgets(blocks_df, limit, offset, del_agg,
+                                      verify).items()}
+        n_read, n_total = len(budgets), _count_blocks(files, filesystem)
+        window = {}
+        for s, p, q in budgets:
+            window.setdefault((s, p), []).append(q)
+        files = [f for f in files if _path_block_coords(f) in window]
+    parts = _file_groups(files, files_per_task)
+    out_fs, out_root = _fs_for(output_path, filesystem)
+    out_fs.create_dir(out_root, recursive=True)
+    # overwrite semantics, swept up front: tasks below replace or delete
+    # only the part files of THIS run, so any other visible parquet file
+    # (an earlier decode with more parts, a Spark-written output) and
+    # any crashed attempt's temp would otherwise mix into the result
+    valid = {f"part-{k:05d}.parquet" for k, _ in parts}
+    for info in out_fs.get_file_info(
+            pafs.FileSelector(out_root, allow_not_found=True)):
+        if (info.type == pafs.FileType.File
+                and info.base_name.endswith((".parquet", ".inprogress"))
+                and info.base_name not in valid):
+            out_fs.delete_file(info.path)
+
+    def decode(k, paths):
+        fn = make_decode_fn(verify=verify, columns=columns, target=target,
+                            budgets=budgets, groups=groups,
+                            session_tz=session_tz)
+        wfs, wroot = _fs_for(output_path, filesystem)
+        cnt = {"rows": 0, "read": 0, "total": 0}
+        del_cache: dict = {}  # (snapshot_id, part_id) -> {seq: bitmap}
+
+        def decoded():
+            for path in paths:
+                seqs = (None if window is None
+                        else window[_path_block_coords(path)])
+                for out in fn(block_batches(path, scan_want, seqs, cnt,
+                                            del_cache,
+                                            coords=budgets is not None)):
+                    if out_cols is not None:
+                        out = out.select(out_cols)
+                    cnt["rows"] += out.num_rows
+                    yield out
+
+        part = f"{wroot}/part-{k:05d}.parquet"
+        if not _publish(decoded(), wfs, part, compression="snappy"):
+            # no rows: a same-named file of a PRIOR run into this
+            # directory would otherwise survive into the result
+            try:
+                wfs.delete_file(part)
+            except (FileNotFoundError, OSError):
+                pass
+        return pa.RecordBatch.from_pylist(
+            [{"part_id": k, "n_rows": cnt["rows"],
+              "n_blocks_read": cnt["read"],
+              "n_blocks_total": cnt["total"]}], schema=_DECODE_META)
+
+    meta = _run_parts(spark, parts, decode, _DECODE_META)
+    if n_read is None:
+        n_read = sum(r["n_blocks_read"] for r in meta)
+        n_total = sum(r["n_blocks_total"] for r in meta)
+    return {"n_rows": sum(r["n_rows"] for r in meta), "n_parts": len(meta),
+            "n_blocks_read": n_read, "n_blocks_total": n_total}
 
 
 def encode_table_direct_write(df, io: TableIO, key: Optional[str] = None,
@@ -662,4 +818,4 @@ def encode_table_direct_write(df, io: TableIO, key: Optional[str] = None,
         if meta["n_blocks"]:
             yield pa.RecordBatch.from_pylist([meta], schema=_PART_META)
 
-    return df.mapInArrow(work, _PART_META_DDL)
+    return df.mapInArrow(work, from_arrow_schema(_PART_META))

@@ -3,13 +3,21 @@
 Usage:
   spark-submit --py-files sparkolumnar.zip -m sparkolumnar.jobs.decode_job \
       --blocks /path/to/engine_dir/blocks --output /path/to/decoded \
-      [--columns url,text] [--verify] [--limit N]
+      [--columns url,text] [--verify] [--limit N [--offset M]]
 
---limit N decodes only the first N rows (blocks ordered by part_id, seq):
-the payload scan is filtered to the needed blocks' coordinate range and
-partially-needed blocks prefix-decode (the reference's take_n_finalize) —
-a preview read never materializes the whole table's payloads. Combined
-with --eq, the limit counts MATCHING rows (filter first, then limit).
+Every read runs engine.direct.decode_files_direct: each task reads its
+blocks files with pyarrow, decodes them and writes its own output parquet
+file, so decoded rows never cross JVM<->Python IPC, and the job prints one
+JSON line {"rows", "blocks_read", "blocks_total"}. --output is
+overwritten. Requested and predicate columns are checked before any task
+starts.
+
+--limit N decodes only the first N rows in (snapshot_id, part_id, seq)
+order: only the window's blocks are read and partially-needed blocks
+prefix-decode (the reference's take_n_finalize) — a preview read never
+materializes the whole table's payloads. With merge-on-read deletes the
+window counts live rows; combined with predicates, the limit counts
+MATCHING rows (filter first, then limit).
 """
 
 from __future__ import annotations
@@ -28,8 +36,9 @@ def main(argv=None) -> None:
     ap.add_argument("--verify", action="store_true",
                     help="recompute canonical checksums while decoding")
     ap.add_argument("--limit", type=int, default=None,
-                    help="decode only N rows (partial decode); with --eq, "
-                         "N MATCHING rows (the limit applies after the "
+                    help="decode only N rows in (snapshot_id, part_id, "
+                         "seq) order (partial decode); with predicates, N "
+                         "MATCHING rows (the limit applies after the "
                          "exact filter)")
     ap.add_argument("--offset", type=int, default=0,
                     help="with --limit: skip this many rows first")
@@ -100,12 +109,10 @@ def main(argv=None) -> None:
                          "masked out of every decode; this flag reads "
                          "the stored rows as written")
     ap.add_argument("--direct", action="store_true",
-                    help="write-in-UDF direct decode: tasks read blocks "
-                         "files with pyarrow and write the decoded "
-                         "parquet themselves — decoded bytes never cross "
-                         "JVM<->Python IPC. Combines with --eq (in-task "
-                         "zone/bloom pruning + row-group skip); "
-                         "incompatible with --limit/--offset")
+                    help="accepted for compatibility and ignored: every "
+                         "decode writes in-task (tasks read blocks files "
+                         "with pyarrow and write the decoded parquet "
+                         "themselves)")
     args = ap.parse_args(argv)
 
     spark = (SparkSession.builder.appName("sparkolumnar-decode")
@@ -113,8 +120,6 @@ def main(argv=None) -> None:
              .config("spark.sql.execution.arrow.pyspark.enabled", "true")
              .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", "1073741824")
              .getOrCreate())
-
-    from sparkolumnar.engine.decode import decode_blocks
 
     cols = args.columns.split(",") if args.columns else None
     flist = []
@@ -147,12 +152,12 @@ def main(argv=None) -> None:
     filters = flist or None
     # merge-on-read deletes apply by DEFAULT — a reader must not see
     # deleted rows unless it explicitly opts into the stored bytes
-    import os as _os
+    import os
 
-    from sparkolumnar.engine.tableio import TableIO as _TIO
+    from sparkolumnar.engine.tableio import TableIO
 
-    _io = _TIO(spark, _os.path.dirname(args.blocks.rstrip("/")))
-    deletes = None if args.ignore_deletes else _io.read_deletes()
+    io = TableIO(spark, os.path.dirname(args.blocks.rstrip("/")))
+    deletes = None if args.ignore_deletes else io.read_deletes()
     snaps = args.snapshot.split(",") if args.snapshot else None
     if snaps is not None:
         # validate up front (one metadata-only distinct) so a typo'd id
@@ -175,9 +180,9 @@ def main(argv=None) -> None:
         return blocks_df.where(F.col("snapshot_id").isin(snaps))
 
     if args.stats:
-        if filters or args.limit is not None or args.direct:
-            raise ValueError("--stats does not combine with predicates, "
-                             "--limit or --direct (it never decodes)")
+        if filters or args.limit is not None:
+            raise ValueError("--stats does not combine with predicates or "
+                             "--limit (it never decodes)")
         from sparkolumnar.engine.analyze import metadata_stats
 
         blocks = _scope(spark.read.parquet(args.blocks))
@@ -194,65 +199,28 @@ def main(argv=None) -> None:
                    if deletes is not None else {}))
             for r in rows}}))
         return
-    if args.direct:
-        if args.limit is not None:
-            raise ValueError("--direct does not combine with "
-                             "--limit/--offset (use the IPC path)")
-        import os
+    from sparkolumnar.engine.direct import decode_files_direct
 
-        from sparkolumnar.engine.direct import decode_files_direct
-        from sparkolumnar.engine.tableio import TableIO
-
-        io = TableIO(spark, os.path.dirname(args.blocks.rstrip("/")))
-        schema = None
-        if args.merge_schema:
-            from sparkolumnar.engine.decode import union_schema_of_blocks
-
-            # schema-evolved table: every task decodes compat against the
-            # union schema so the output directory is ONE parquet schema
-            schema = union_schema_of_blocks(
-                spark.read.option("mergeSchema", "true")
-                .parquet(args.blocks))
-        res = decode_files_direct(spark, io, args.output, columns=cols,
-                                  verify=args.verify, filters=filters,
-                                  schema=schema,
-                                  deletes_path=(io.deletes_path
-                                                if deletes is not None
-                                                else None),
-                                  snapshots=snaps)
-        print(json.dumps({"rows": res["n_rows"],
-                          "blocks_read": res["n_blocks_read"],
-                          "blocks_total": res["n_blocks_total"]}))
-        return
+    schema = None
     if args.merge_schema:
         from sparkolumnar.engine.decode import union_schema_of_blocks
 
-        # schema-evolved table: merge footers so every generation's payload
-        # columns survive the scan, infer the UNION schema from all blocks'
-        # metadata, and decode compat (older blocks null-fill added columns)
-        blocks = _scope(spark.read.option("mergeSchema", "true")
-                        .parquet(args.blocks))
-        schema = union_schema_of_blocks(blocks)
-        if cols is not None:
-            have = {f.name for f in schema.fields}
-            missing = [c for c in cols if c not in have]
-            if missing:
-                raise ValueError(
-                    f"requested columns {missing} not in the blocks table "
-                    f"(available: {sorted(have)})")
-            schema = type(schema)([f for f in schema.fields
-                                   if f.name in cols])
-        out = decode_blocks(blocks, schema=schema, compat=True,
-                            verify=args.verify, limit=args.limit,
-                            offset=args.offset, filters=filters,
-                            deletes=deletes)
-    else:
-        blocks = _scope(spark.read.parquet(args.blocks))
-        out = decode_blocks(blocks, verify=args.verify, columns=cols,
-                            limit=args.limit, offset=args.offset,
-                            filters=filters, deletes=deletes)
-    out.write.mode("overwrite").parquet(args.output)
-    print(json.dumps({"rows": spark.read.parquet(args.output).count()}))
+        # schema-evolved table: merge footers so every generation's
+        # columns are seen, and decode every block compat against the
+        # UNION schema (older blocks null-fill added columns), so the
+        # output directory is ONE parquet schema
+        schema = union_schema_of_blocks(_scope(
+            spark.read.option("mergeSchema", "true").parquet(args.blocks)))
+    res = decode_files_direct(spark, io, args.output, columns=cols,
+                              verify=args.verify, filters=filters,
+                              schema=schema,
+                              deletes_path=(io.deletes_path
+                                            if deletes is not None else None),
+                              snapshots=snaps, limit=args.limit,
+                              offset=args.offset)
+    print(json.dumps({"rows": res["n_rows"],
+                      "blocks_read": res["n_blocks_read"],
+                      "blocks_total": res["n_blocks_total"]}))
 
 
 if __name__ == "__main__":

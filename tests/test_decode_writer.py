@@ -1,0 +1,379 @@
+"""The one decode writer (direct.decode_files_direct): decode_job runs it on
+every read, --limit included; what it writes, what it checks before any
+task starts, and how a retried writing task behaves."""
+
+import glob
+import json
+import os
+import subprocess
+import sys
+import textwrap
+
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+import pytest
+
+from sparkolumnar.engine import encode_table_direct_write
+from sparkolumnar.engine.decode import decode_block_row, decode_blocks
+from sparkolumnar.engine.tableio import TableIO
+
+N = 6000
+BLOCK_ROWS = 400
+LANGS = ["en", "de", "fr", "es", "it"]
+
+
+def _encode(spark, base):
+    """Task-written blocks table: 3 parts of ~5 blocks each."""
+    pdf = pd.DataFrame({"k": range(N),
+                        "lang": [LANGS[i * 7 % 11 % 5] for i in range(N)],
+                        "txt": [f"row {i} " * (i % 4) for i in range(N)]})
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(BLOCK_ROWS))
+    try:
+        io = TableIO(spark, base)
+        encode_table_direct_write(spark.createDataFrame(pdf), io, key="k",
+                                  partitions=3, snapshot_id="w1").collect()
+    finally:
+        spark.conf.set(key, old)
+    return io
+
+
+@pytest.fixture(scope="module")
+def table(spark, tmp_path_factory):
+    return _encode(spark, str(tmp_path_factory.mktemp("dec_writer") / "t"))
+
+
+@pytest.fixture(scope="module")
+def deleted_table(spark, tmp_path_factory):
+    from sparkolumnar.engine.deletes import delete_where
+
+    io = _encode(spark, str(tmp_path_factory.mktemp("dec_writer_del") / "t"))
+    delete_where(io, [("lang", "=", "de")])
+    delete_where(io, [("k", "between", 1000, 1999)])
+    return io
+
+
+def _in_coordinate_order(io) -> pa.Table:
+    """The table's live rows in (snapshot_id, part_id, seq, row) order,
+    decoded driver-side block by block."""
+    import pyarrow.dataset as pads
+
+    from sparkolumnar.engine.decode import DELETE_MASK_COL
+    from sparkolumnar.engine.deletes import aggregate_deletes
+
+    masks = {}
+    if io.read_deletes() is not None:
+        masks = {(r["snapshot_id"], r["part_id"], r["seq"]):
+                 r[DELETE_MASK_COL]
+                 for r in aggregate_deletes(io.read_deletes()).collect()}
+    rows = pads.dataset(io.blocks_path, format="parquet",
+                        partitioning="hive").to_table().to_pylist()
+    out = []
+    for r in sorted(rows, key=lambda r: (r["snapshot_id"], r["part_id"],
+                                         r["seq"])):
+        b = decode_block_row(r)
+        m = masks.get((r["snapshot_id"], r["part_id"], r["seq"]))
+        if m is not None:
+            bits = np.unpackbits(np.frombuffer(m, np.uint8))[:r["n_rows"]]
+            b = b.filter(pa.array(~bits.astype(bool)))
+        out.append(b)
+    return pa.Table.from_batches(out)
+
+
+def _read_parts(out) -> pa.Table:
+    """decode_job's output, part files in name order."""
+    files = sorted(glob.glob(os.path.join(out, "part-*.parquet")))
+    return pa.concat_tables([pq.read_table(f) for f in files])
+
+
+def _decode_job(argv, capsys):
+    from sparkolumnar.jobs import decode_job
+
+    decode_job.main(argv)
+    return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+
+def _forbid_ipc_decode(monkeypatch):
+    """decode_job must reach neither the lazy-DataFrame decode nor the
+    JVM parquet writer."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    import sparkolumnar.engine.decode as dec
+
+    def forbidden(*a, **k):
+        raise AssertionError("decode_job used the IPC decode or JVM writer")
+
+    monkeypatch.setattr(dec, "decode_blocks", forbidden)
+    monkeypatch.setattr(DataFrameWriter, "parquet", forbidden)
+
+
+@pytest.fixture
+def no_ipc_decode(monkeypatch):
+    _forbid_ipc_decode(monkeypatch)
+
+
+def test_limit_window_counts_live_rows_under_deletes(spark, deleted_table,
+                                                     tmp_path, capsys):
+    io = deleted_table
+    live = _in_coordinate_order(io)
+    assert 0 < live.num_rows < N
+    dels = io.read_deletes()
+    for limit, offset in [(25, 0), (700, 130), (50, live.num_rows - 20)]:
+        want = live.slice(offset, limit)
+        out = str(tmp_path / f"lim{limit}_{offset}")
+        res = _decode_job(["--blocks", io.blocks_path, "--output", out,
+                           "--limit", str(limit), "--offset", str(offset),
+                           "--verify"], capsys)
+        got = _read_parts(out)
+        assert res["rows"] == got.num_rows == want.num_rows
+        assert got.to_pylist() == want.to_pylist()
+        assert 0 < res["blocks_read"] < res["blocks_total"]
+        ipc = decode_blocks(io.read_blocks(), deletes=dels, limit=limit,
+                            offset=offset).toArrow()
+        assert (sorted(ipc.column("k").to_pylist())
+                == sorted(got.column("k").to_pylist()))
+
+
+def test_limit_with_predicate_counts_matching_rows(spark, table, tmp_path,
+                                                   capsys, no_ipc_decode):
+    full = _in_coordinate_order(table)
+    match = full.filter(pc.equal(full.column("lang"), "en"))
+    for limit, offset in [(17, 0), (450, 333)]:
+        out = str(tmp_path / f"eq{limit}")
+        res = _decode_job(["--blocks", table.blocks_path, "--output", out,
+                           "--eq", "lang=en", "--limit", str(limit),
+                           "--offset", str(offset), "--columns", "k,txt"],
+                          capsys)
+        got = _read_parts(out)
+        keys = got.column("k").to_pylist()
+        assert res["rows"] == len(keys) == len(set(keys)) == limit
+        assert got.column_names == ["k", "txt"]
+        assert got.to_pylist() == match.select(["k", "txt"]).slice(
+            offset, limit).to_pylist()
+
+
+def test_offset_past_the_end_leaves_no_part_files(spark, table, tmp_path,
+                                                  capsys, no_ipc_decode):
+    out = str(tmp_path / "dec")
+    res = _decode_job(["--blocks", table.blocks_path, "--output", out],
+                      capsys)
+    assert res["rows"] == N and glob.glob(out + "/part-*.parquet")
+    res = _decode_job(["--blocks", table.blocks_path, "--output", out,
+                       "--limit", "10", "--offset", str(N)], capsys)
+    assert res["rows"] == 0 and res["blocks_read"] == 0
+    assert res["blocks_total"] > 0
+    assert glob.glob(out + "/*.parquet") == []
+
+
+def test_output_overwrites_a_spark_written_directory(spark, table, tmp_path,
+                                                     capsys, monkeypatch):
+    out = str(tmp_path / "dec")
+    spark.range(0, 50, numPartitions=3).selectExpr(
+        "id AS k", "'stale' AS lang").write.parquet(out)
+    assert len(glob.glob(out + "/part-*.parquet")) == 3
+    _forbid_ipc_decode(monkeypatch)
+    res = _decode_job(["--blocks", table.blocks_path, "--output", out,
+                       "--eq", "lang=fr"], capsys)
+    got = spark.read.parquet(out)
+    assert got.count() == res["rows"] > 0
+    assert {r["lang"] for r in got.select("lang").distinct().collect()} == {
+        "fr"}
+
+
+@pytest.mark.parametrize("argv, match", [
+    (["--columns", "k,nope"], r"requested columns \['nope'\]"),
+    (["--columns", "nope", "--merge-schema"], r"requested columns \['nope'\]"),
+    (["--eq", "nope=x"], r"filter columns \['nope'\]"),
+    (["--eq", "nope=x", "--merge-schema"], "must be part of the provided"),
+])
+def test_unknown_columns_fail_before_any_task(spark, table, tmp_path,
+                                              monkeypatch, argv, match):
+    import sparkolumnar.engine.direct as direct
+    from sparkolumnar.jobs import decode_job
+
+    def no_tasks(*a, **k):
+        raise AssertionError("decode tasks were started")
+
+    monkeypatch.setattr(direct, "_run_parts", no_tasks)
+    with pytest.raises(ValueError, match=match):
+        decode_job.main(["--blocks", table.blocks_path,
+                         "--output", str(tmp_path / "dec")] + argv)
+
+
+def test_decode_output_streams_one_row_group_per_block(spark, table,
+                                                       tmp_path):
+    """A multi-block part streams into several row groups, and its rows
+    equal what one buffered write of the part's decoded blocks holds."""
+    import pyarrow.dataset as pads
+
+    from sparkolumnar.engine.direct import decode_files_direct
+
+    out = str(tmp_path / "dec")
+    res = decode_files_direct(spark, table, out, verify=True)
+    assert res["n_rows"] == N and res["n_parts"] == 3
+    blocks = pads.dataset(table.blocks_path, format="parquet",
+                          partitioning="hive").to_table()
+    for k in range(3):
+        part = os.path.join(out, f"part-{k:05d}.parquet")
+        rows = sorted((r for r in blocks.to_pylist() if r["part_id"] == k),
+                      key=lambda r: r["seq"])
+        assert len(rows) > 1
+        assert pq.ParquetFile(part).num_row_groups == len(rows)
+        buffered = str(tmp_path / f"buffered-{k}.parquet")
+        pq.write_table(pa.Table.from_batches(
+            [decode_block_row(r) for r in rows]), buffered)
+        assert pq.read_table(part).equals(pq.read_table(buffered))
+
+
+def test_no_engine_dataframe_from_a_python_list(spark, table, tmp_path,
+                                                monkeypatch, capsys):
+    """A Python-list createDataFrame runs a Python-RDD job (via
+    SparkContext.parallelize) that leaves a second worker daemon
+    resident: no decode, direct encode or analyze_sample may build one."""
+    from pyspark import SparkContext
+
+    from sparkolumnar.datagen import pages_df, write_pages_parquet
+    from sparkolumnar.engine.analyze import analyze_sample
+    from sparkolumnar.jobs import encode_job
+
+    src = write_pages_parquet(str(tmp_path / "pages"), 2000, n_files=2)
+    pages = pages_df(spark, 2000, cache_dir=str(tmp_path / "pdf"))
+
+    def banned(*a, **k):
+        raise AssertionError("SparkContext.parallelize called")
+
+    monkeypatch.setattr(SparkContext, "parallelize", banned)
+    for argv in (["--verify"], ["--eq", "lang=en"], ["--limit", "77"]):
+        res = _decode_job(["--blocks", table.blocks_path,
+                           "--output", str(tmp_path / "dec")] + argv, capsys)
+        assert res["rows"] > 0
+    encode_job.main(["--input", src, "--output", str(tmp_path / "enc"),
+                     "--direct"])
+    enc = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert enc["n_rows"] == 2000 and enc["parts_encoded"] == 2
+    got = {r["column"]: r for r in analyze_sample(pages, rows=500).collect()}
+    assert got["url"]["n_rows"] == 500 and got["url"]["tried"]
+
+
+_RETRY_SCRIPT = textwrap.dedent("""
+    import glob, os, sys
+    base = sys.argv[1]
+    import pyarrow as pa, pyarrow.parquet as pq
+    from pyarrow import fs as pafs
+    from pyspark import TaskContext
+    from pyspark.sql import SparkSession
+    spark = (SparkSession.builder.master("local[2,2]")
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate())
+    from sparkolumnar.engine import (decode_files_direct,
+                                     encode_table_direct_write)
+    from sparkolumnar.engine.tableio import TableIO
+
+    class Flaky(pafs.FileSystemHandler):
+        # the local filesystem, except that on a task's first attempt an
+        # output stream raises once `fail_after` bytes have been written
+        # (half a clean part file): the decode writer dies with its first
+        # row groups in the temp
+        def __init__(self):
+            self.fs = pafs.LocalFileSystem()
+        def __eq__(self, other):
+            return isinstance(other, Flaky)
+        def __ne__(self, other):
+            return not self == other
+        def get_type_name(self):
+            return "flaky"
+        def normalize_path(self, path):
+            return path
+        def get_file_info(self, paths):
+            return self.fs.get_file_info(paths)
+        def get_file_info_selector(self, selector):
+            return self.fs.get_file_info(selector)
+        def create_dir(self, path, recursive):
+            self.fs.create_dir(path, recursive=recursive)
+        def delete_dir(self, path):
+            self.fs.delete_dir(path)
+        def delete_dir_contents(self, path, missing_dir_ok=False):
+            self.fs.delete_dir_contents(path, missing_dir_ok=missing_dir_ok)
+        def delete_root_dir_contents(self):
+            raise NotImplementedError
+        def delete_file(self, path):
+            self.fs.delete_file(path)
+        def move(self, src, dest):
+            self.fs.move(src, dest)
+        def copy_file(self, src, dest):
+            self.fs.copy_file(src, dest)
+        def open_input_stream(self, path):
+            return self.fs.open_input_stream(path)
+        def open_input_file(self, path):
+            return self.fs.open_input_file(path)
+        def open_append_stream(self, path, metadata):
+            return self.fs.open_append_stream(path, metadata=metadata)
+        def open_output_stream(self, path, metadata):
+            ctx = TaskContext.get()
+            if ctx is None or ctx.attemptNumber() > 0:
+                return self.fs.open_output_stream(path, metadata=metadata)
+            return pa.PythonFile(Dying(self.fs.open_output_stream(path),
+                                       ctx.partitionId()), mode="w")
+
+    class Dying:
+        def __init__(self, sink, part):
+            self.sink, self.part, self.n = sink, part, 0
+            self.closed = False
+        def write(self, data):
+            if self.n + len(data) > fail_after:
+                open(os.path.join(base, f"failed-{self.part}"), "w").close()
+                raise IOError("injected first-attempt write failure")
+            self.n += len(data)
+            return self.sink.write(data)
+        def flush(self):
+            self.sink.flush()
+        def close(self):
+            self.closed = True
+            self.sink.close()
+
+    N = 2000
+    io = TableIO(spark, os.path.join(base, "t"))
+    src = spark.range(0, N, numPartitions=2).selectExpr(
+        "id", "cast(id * 7 % 13 AS string) AS s")
+    encode_table_direct_write(src, io, key=None, partitions=None,
+                              snapshot_id="s").collect()
+    clean = os.path.join(base, "clean")
+    decode_files_direct(spark, io, clean, verify=True)
+    fail_after = min(os.path.getsize(f) for f in
+                     glob.glob(os.path.join(clean, "part-*.parquet"))) // 2
+    out = os.path.join(base, "retry")
+    res = decode_files_direct(spark, io, out, verify=True,
+                              filesystem=pafs.PyFileSystem(Flaky()))
+    assert len(glob.glob(os.path.join(base, "failed-*"))) == 2
+    assert res["n_rows"] == N and res["n_parts"] == 2, res
+    for k in range(2):
+        name = f"part-{k:05d}.parquet"
+        assert pq.ParquetFile(os.path.join(clean, name)).num_row_groups > 1
+        assert pq.read_table(os.path.join(out, name)).equals(
+            pq.read_table(os.path.join(clean, name))), name
+    visible = sorted(f for f in os.listdir(out) if not f.startswith("."))
+    assert visible == ["part-00000.parquet", "part-00001.parquet"], visible
+    spark.stop()
+    print("RETRY_OK")
+""")
+
+
+def test_decode_writer_retry_is_exactly_once(tmp_path):
+    """A decode task whose first attempt dies mid-write, after its first
+    row groups reached the temp file: the retried job succeeds, counts
+    every row once, writes a clean run's rows and publishes no partial
+    file. Fresh JVM: local[2,2] allows one task retry."""
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        [os.path.dirname(os.path.dirname(os.path.abspath(__file__)))]
+        + [env.get("PYTHONPATH", "")])
+    out = subprocess.run(
+        [sys.executable, "-c", _RETRY_SCRIPT, str(tmp_path)],
+        capture_output=True, text=True, timeout=600, env=env)
+    assert out.returncode == 0, out.stderr[-4000:]
+    assert "RETRY_OK" in out.stdout
