@@ -277,25 +277,3 @@ def orbit(jump: np.ndarray, start: int, limit: int) -> np.ndarray:
         seq = np.concatenate([seq, nxt])
         J = J[J]
     return seq[:limit]
-
-
-# ---------------------------------------------------------------------------
-# big-endian bitstream helpers
-# ---------------------------------------------------------------------------
-
-def bits_of(buf: np.ndarray) -> np.ndarray:
-    """uint8 buffer -> array of bits (MSB first), dtype uint8."""
-    return np.unpackbits(np.asarray(buf, dtype=np.uint8))
-
-
-def pack_bits(bits: np.ndarray) -> np.ndarray:
-    """bit array (MSB first) -> uint8 buffer (zero-padded to a byte)."""
-    return np.packbits(np.asarray(bits, dtype=np.uint8))
-
-
-def read_fields(bits: np.ndarray, starts: np.ndarray, width: int) -> np.ndarray:
-    """Read `width`-bit big-endian unsigned fields at bit offsets `starts`."""
-    out = np.zeros(len(starts), dtype=np.uint64)
-    for j in range(width):
-        out = (out << np.uint64(1)) | bits[starts + j].astype(np.uint64)
-    return out

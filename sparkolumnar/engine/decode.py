@@ -273,29 +273,32 @@ def _decode_masked(row, verify, columns, target, dmask, groups,
     return out
 
 
+def decodable_fields(metas, columns=None) -> List[pa.Field]:
+    """Arrow fields of one block's decodable columns, from its `columns`
+    metadata entries in stored order: sketch-only entries (struct-child
+    zone maps, no payload) skipped, restricted to `columns` when given."""
+    return [pa.field(m["name"], arrow_type_from_str(m["arrow_type"]))
+            for m in metas if m["codec"] != SKETCH_CODEC
+            and (columns is None or m["name"] in columns)]
+
+
 def schema_of_blocks(blocks_df: DataFrame,
                      columns: Optional[List[str]] = None) -> T.StructType:
     """Spark schema of the decoded table, read from one block's metadata
     (driver-side, payload columns pruned away)."""
-    row = (blocks_df.selectExpr("columns.name as names",
-                                "columns.arrow_type as types",
-                                "columns.codec as codecs")
-           .limit(1).collect())
+    row = (blocks_df.selectExpr(
+        "transform(columns, c -> named_struct('name', c.name, "
+        "'arrow_type', c.arrow_type, 'codec', c.codec)) AS metas")
+        .limit(1).collect())
     if not row:
         raise ValueError("blocks table is empty; pass an explicit schema")
-    fields = []
-    for name, ts, codec in zip(row[0]["names"], row[0]["types"],
-                               row[0]["codecs"]):
-        if codec == SKETCH_CODEC:
-            continue  # struct-child sketch entry: not a decodable column
-        if columns is not None and name not in columns:
-            continue
-        fields.append(T.StructField(
-            name, from_arrow_type(arrow_type_from_str(ts)), True))
+    metas = row[0]["metas"]
+    fields = [T.StructField(f.name, from_arrow_type(f.type), True)
+              for f in decodable_fields(metas, columns)]
     if columns is not None and not fields:
         raise ValueError(
             f"none of the requested columns {list(columns)} exist in the "
-            f"blocks table (available: {list(row[0]['names'])})")
+            f"blocks table (available: {[m['name'] for m in metas]})")
     return T.StructType(fields)
 
 

@@ -415,16 +415,25 @@ def delete_where(io, filters, merge_schema: bool = False) -> dict:
 
     merge_schema=True: evolve-aware scan, needed when the predicate
     column was added by a later schema generation."""
-    dels = compute_deletes(io.read_blocks(merge_schema=merge_schema),
-                           filters).persist()
+    n_blocks, n_rows = commit_deletes(
+        io, compute_deletes(io.read_blocks(merge_schema=merge_schema),
+                            filters))
+    written = io.read_deletes()
+    return {"n_blocks_matched": n_blocks, "n_rows_matched": n_rows,
+            "delete_rows_total": int(written.count()) if written is not None
+            else 0}
+
+
+def commit_deletes(io, dels) -> tuple:
+    """Append delete rows to io's deletes file set and return the
+    (blocks, stored rows) they match, counted from the same persisted
+    rows (the delete commit of delete_where, update_where and
+    merge_upsert)."""
+    dels = dels.persist()
     try:
         io.write_deletes(dels)
         stats = dels.agg(F.count("*").alias("b"),
                          F.sum("n_deleted").alias("r")).collect()[0]
     finally:
         dels.unpersist()
-    written = io.read_deletes()
-    return {"n_blocks_matched": int(stats["b"] or 0),
-            "n_rows_matched": int(stats["r"] or 0),
-            "delete_rows_total": int(written.count()) if written is not None
-            else 0}
+    return int(stats["b"] or 0), int(stats["r"] or 0)

@@ -11,8 +11,11 @@ Every encode task writes its own blocks file through ONE writer
 
   * encode_table_direct_write: the Spark plan owns the layout (hash
     shuffle / range clustering — row transport), the task writes. This
-    is how lineage.encode_job lands blocks on a path-level TableIO, so
-    the encoded payloads never cross the IPC-out leg nor the JVM writer.
+    is how lineage.encode_job lands blocks on a path-level TableIO, and
+    through write_snapshot (staged, all-or-nothing) how DML
+    (updates.update_where/merge_upsert) and compaction
+    (maintenance.compact_snapshot) do, so the encoded payloads never
+    cross the IPC-out leg nor the JVM writer.
   * encode_files_direct: shuffle-free storage-order encode — Spark
     distributes only the parquet FILE LIST and each task also opens its
     files with pyarrow (no JVM scan, no IPC-in).
@@ -91,7 +94,8 @@ def list_parquet_files(spark: SparkSession, input_path: str,
     partitioning; sorted => part ids are deterministic => resume-safe).
     With an explicit filesystem the listing runs through it too (paths
     stay fs-native, e.g. SubTreeFileSystem-relative), so no Spark-side
-    path resolution is involved anywhere in the direct pipeline."""
+    path resolution is involved anywhere in the direct pipeline. Hidden
+    files and directories are skipped, as in Spark's listing."""
     if filesystem is not None:
         from pyarrow import fs as pafs
 
@@ -101,7 +105,8 @@ def list_parquet_files(spark: SparkSession, input_path: str,
             i.path for i in infos
             if i.type == pafs.FileType.File
             and i.path.endswith(".parquet")
-            and not i.base_name.startswith((".", "_")))
+            and not any(c.startswith((".", "_")) for c in
+                        i.path[len(input_path.rstrip("/")):].split("/")))
     return sorted(_local_path(f)
                   for f in spark.read.parquet(input_path).inputFiles())
 
@@ -217,16 +222,34 @@ _MATCH_COUNTS = pa.schema([pa.field("snapshot_id", pa.string()),
                            pa.field("n", pa.int64())])
 
 
+def _sweep(fs, target: str) -> None:
+    """Delete the other visible files of `target`'s directory: the
+    per-part dynamic overwrite before a publish."""
+    from pyarrow import fs as pafs
+
+    for info in fs.get_file_info(
+            pafs.FileSelector(posixpath.dirname(target))):
+        if info.path != target and not info.base_name.startswith("."):
+            fs.delete_file(info.path)
+
+
+def _drop_dir(fs, path: str) -> None:
+    """Remove a directory tree if it exists."""
+    from pyarrow import fs as pafs
+
+    if fs.get_file_info(path).type != pafs.FileType.NotFound:
+        fs.delete_dir(path)
+
+
 def _publish(batches, fs, target: str, sweep: bool = False,
-             **writer_opts) -> bool:
+             **writer_opts) -> None:
     """THE task-side parquet writer: stream `batches` through one
     ParquetWriter into an attempt-unique hidden temp next to `target`
     (holding one batch at a time) and publish it with an atomic move.
     sweep=True first deletes the target directory's other visible files
-    (per-part dynamic overwrite). No batch: nothing is written or swept,
-    and the result is False."""
+    (per-part dynamic overwrite). No batch: nothing is written or
+    swept."""
     import pyarrow.parquet as pq
-    from pyarrow import fs as pafs
 
     target_dir = posixpath.dirname(target)
     tmp = _temp_path(target)
@@ -242,13 +265,16 @@ def _publish(batches, fs, target: str, sweep: bool = False,
         if writer is not None:
             writer.close()
     if writer is None:
-        return False
+        return
     if sweep:
-        for info in fs.get_file_info(pafs.FileSelector(target_dir)):
-            if info.path != target and not info.base_name.startswith("."):
-                fs.delete_file(info.path)
+        _sweep(fs, target)
     fs.move(tmp, target)
-    return True
+
+
+def _part_file(snap: str, pid: int) -> str:
+    """A blocks part's file, relative to the blocks root."""
+    return (f"snapshot_id={snap}/part_id={pid}/"
+            f"direct-{snap}-{pid}.parquet")
 
 
 def _write_part(blocks, fs, blocks_root: str, snap: str, pid: int) -> dict:
@@ -267,8 +293,7 @@ def _write_part(blocks, fs, blocks_root: str, snap: str, pid: int) -> dict:
     payloads are already entropy-coded, and min/max stats of every
     binary payload leaf in every footer and page header would bloat the
     stored bytes for nothing (same rationale as the UNCOMPRESSED write)."""
-    target = posixpath.join(blocks_root, f"snapshot_id={snap}",
-                            f"part_id={pid}", f"direct-{snap}-{pid}.parquet")
+    target = posixpath.join(blocks_root, _part_file(snap, pid))
     meta = {"part_id": pid, "n_blocks": 0, "n_rows": 0, "bytes_in": 0,
             "bytes_out": 0}
 
@@ -479,10 +504,12 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
     attempt-unique temp, so a retried task idempotently replaces it).
     The decoded table bytes never cross JVM<->Python IPC nor the JVM
     parquet writer. Files, and so output parts, are in (snapshot_id,
-    part_id) order. The output directory is overwritten: visible parquet
-    files this run does not write (an earlier decode's, or a Spark
-    job's part files) are deleted before any task starts; a read that
-    returns no rows leaves no parquet file.
+    part_id) order. The output directory is overwritten: its visible
+    parquet files (an earlier decode's, or a Spark job's part files)
+    are deleted before any task starts; a read of a
+    non-empty table that returns no rows writes one empty
+    part-00000.parquet carrying the output schema, so the directory
+    still reads back as a (zero-row) table.
 
     Requested columns, and the filter's root columns, are checked on the
     driver before any task starts (against `schema` when given, else one
@@ -534,10 +561,9 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
     Returns {"n_rows", "n_parts", "n_blocks_read", "n_blocks_total"}."""
     from pyarrow import fs as pafs
 
-    from .blocks import SKETCH_CODEC
     from .decode import (_limit_budgets, _normalize_filters, _window_budgets,
-                         block_keep_py, filter_root_columns_of,
-                         make_decode_fn)
+                         block_keep_py, decodable_fields,
+                         filter_root_columns_of, make_decode_fn)
 
     if filesystem is not None and blocks_root is not None:
         files = list_parquet_files(spark, blocks_root, filesystem)
@@ -557,14 +583,14 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
         target = pa.schema([pa.field(f.name, to_arrow_type(f.dataType))
                             for f in schema.fields])
     roots: List[str] = []
+    metas = None  # the first block's column metadata, read once if needed
     if columns is not None or groups:
         if target is not None:
             names = decodable = set(target.names)
         else:
             metas = _first_block_columns(files, filesystem)
             names = {m["name"] for m in metas}
-            decodable = {m["name"] for m in metas
-                         if m["codec"] != SKETCH_CODEC}
+            decodable = {f.name for f in decodable_fields(metas)}
         roots = filter_root_columns_of(groups, names)
         if names:  # an empty table has nothing to check or decode
             missing = [c for c in columns or () if c not in decodable]
@@ -707,20 +733,20 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
         window = {}
         for s, p, q in budgets:
             window.setdefault((s, p), []).append(q)
-        files = [f for f in files if _path_block_coords(f) in window]
-    parts = _file_groups(files, files_per_task)
+    parts = _file_groups(
+        files if window is None
+        else [f for f in files if _path_block_coords(f) in window],
+        files_per_task)
     out_fs, out_root = _fs_for(output_path, filesystem)
     out_fs.create_dir(out_root, recursive=True)
-    # overwrite semantics, swept up front: tasks below replace or delete
-    # only the part files of THIS run, so any other visible parquet file
-    # (an earlier decode with more parts, a Spark-written output) and
-    # any crashed attempt's temp would otherwise mix into the result
-    valid = {f"part-{k:05d}.parquet" for k, _ in parts}
+    # overwrite semantics, swept up front: tasks below publish only the
+    # parts that hold rows, so any earlier parquet file (a decode with
+    # more parts or rows, a Spark-written output) and any crashed
+    # attempt's temp would otherwise mix into the result
     for info in out_fs.get_file_info(
             pafs.FileSelector(out_root, allow_not_found=True)):
         if (info.type == pafs.FileType.File
-                and info.base_name.endswith((".parquet", ".inprogress"))
-                and info.base_name not in valid):
+                and info.base_name.endswith((".parquet", ".inprogress"))):
             out_fs.delete_file(info.path)
 
     def decode(k, paths):
@@ -743,14 +769,8 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
                     cnt["rows"] += out.num_rows
                     yield out
 
-        part = f"{wroot}/part-{k:05d}.parquet"
-        if not _publish(decoded(), wfs, part, compression="snappy"):
-            # no rows: a same-named file of a PRIOR run into this
-            # directory would otherwise survive into the result
-            try:
-                wfs.delete_file(part)
-            except (FileNotFoundError, OSError):
-                pass
+        _publish(decoded(), wfs, f"{wroot}/part-{k:05d}.parquet",
+                 compression="snappy")
         return pa.RecordBatch.from_pylist(
             [{"part_id": k, "n_rows": cnt["rows"],
               "n_blocks_read": cnt["read"],
@@ -760,7 +780,18 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
     if n_read is None:
         n_read = sum(r["n_blocks_read"] for r in meta)
         n_total = sum(r["n_blocks_total"] for r in meta)
-    return {"n_rows": sum(r["n_rows"] for r in meta), "n_parts": len(meta),
+    n_rows = sum(r["n_rows"] for r in meta)
+    if not n_rows and n_total:
+        # every row filtered, pruned or offset away: one empty part keeps
+        # the output readable, with the schema a decode writes (the compat
+        # target, else the first block's decodable columns) projected
+        fields = (list(target) if target is not None else decodable_fields(
+            metas or _first_block_columns(files, filesystem)))
+        empty = pa.RecordBatch.from_pylist([], schema=pa.schema(
+            [f for f in fields if columns is None or f.name in columns]))
+        _publish([empty], out_fs, f"{out_root}/part-00000.parquet",
+                 compression="snappy")
+    return {"n_rows": n_rows, "n_parts": len(meta),
             "n_blocks_read": n_read, "n_blocks_total": n_total}
 
 
@@ -772,15 +803,16 @@ def encode_table_direct_write(df, io: TableIO, key: Optional[str] = None,
                               cluster_layout: str = "range",
                               skip_parts=None,
                               sketches: Optional[bool] = None,
-                              filesystem=None):
+                              filesystem=None,
+                              blocks_root: Optional[str] = None):
     """Encode with task-side blocks writes: the Spark plan still owns the
     layout (salted-hash shuffle / deterministic range clustering — row
     transport that a scan-in-UDF path cannot do), but each task WRITES
     its partition's blocks file itself (_write_part) and returns only
     metadata rows. Compared to encode_table + io.write_blocks this
     removes the IPC-out leg (the encoded payloads never travel back to
-    the JVM) and the JVM parquet writer. lineage.encode_job runs it on
-    every path-level TableIO.
+    the JVM) and the JVM parquet writer. lineage.encode_job, DML and
+    compaction run it on every path-level TableIO.
 
     Exactly-once: the output file name is a pure function of
     (snapshot_id, partitionId), the write is temp + atomic move, and any
@@ -790,8 +822,9 @@ def encode_table_direct_write(df, io: TableIO, key: Optional[str] = None,
 
     Returns a driver-small metadata DataFrame
     (part_id, n_blocks, n_rows, bytes_in, bytes_out); call .collect()
-    (or aggregate) to run the job. The blocks land in io.blocks_path and
-    read back through io.read_blocks() like any other snapshot.
+    (or aggregate) to run the job. The blocks land in io.blocks_path (or
+    blocks_root, as in encode_files_direct) and read back through
+    io.read_blocks() like any other snapshot.
     """
     import pyarrow.parquet  # noqa: F401  (fail fast on driver if missing)
 
@@ -806,7 +839,7 @@ def encode_table_direct_write(df, io: TableIO, key: Optional[str] = None,
     df = layout_for_encode(df, key=key, partitions=partitions,
                            sort_within=sort_within, cluster_by=cluster_by,
                            cluster_layout=cluster_layout)
-    blocks_root = io.blocks_path
+    blocks_root = blocks_root or io.blocks_path
     snap = snapshot_id
     inner = make_encode_fn(snap, mode, skip_parts, plan, overrides, sketches)
 
@@ -819,3 +852,30 @@ def encode_table_direct_write(df, io: TableIO, key: Optional[str] = None,
             yield pa.RecordBatch.from_pylist([meta], schema=_PART_META)
 
     return df.mapInArrow(work, from_arrow_schema(_PART_META))
+
+
+def write_snapshot(df, io: TableIO, snapshot_id: str, **layout) -> list:
+    """All-or-nothing encode of `df` as one snapshot (DML, compaction):
+    the tasks write their parts into a job-unique hidden staging
+    directory, and only once all succeeded does the driver move each
+    part file into place (sweeping its part directory). A failed job
+    publishes nothing; a zombie attempt leaves only hidden files, which
+    vacuum_table reclaims. Returns the tasks' metadata rows."""
+    import uuid
+
+    stage = f"{io.blocks_path.rstrip('/')}/.stage-{uuid.uuid4().hex[:16]}"
+    fs, stage_root = _fs_for(stage)
+    _, root = _fs_for(io.blocks_path)
+    try:
+        parts = encode_table_direct_write(
+            df, io, snapshot_id=snapshot_id, blocks_root=stage,
+            **layout).collect()
+        for r in parts:
+            rel = _part_file(snapshot_id, r["part_id"])
+            target = posixpath.join(root, rel)
+            fs.create_dir(posixpath.dirname(target), recursive=True)
+            _sweep(fs, target)
+            fs.move(posixpath.join(stage_root, rel), target)
+    finally:
+        _drop_dir(fs, stage_root)
+    return parts

@@ -426,21 +426,6 @@ def _zorder_rank_bounds(df: DataFrame, cols: List[str], bits: int):
     return per_col, sample_cols
 
 
-def _py_rank(bounds: list, v):
-    """Python twin of the rank CASE tree: |{b : v > b}| = bisect_left
-    over the sorted deduped 1-tuple boundaries; nulls take the ELSE
-    branch everywhere = rank 0. Used only to derive z-bucket boundaries
-    from the sample — the per-row assignment is the JVM expression, so
-    exact parity is not a correctness requirement, but this IS the same
-    formula (the vectorized _zorder_py_z is searchsorted of the same
-    thing)."""
-    if v is None:
-        return 0
-    import bisect
-
-    return bisect.bisect_left([b[0] for b in bounds], v)
-
-
 def _zorder_value_sql(rank_cols: List[str], bits: int) -> str:
     """Morton/Z-value from per-column rank columns: bit i of rank c
     lands at interleaved position i*ncols + c. Pure JVM integer ops —

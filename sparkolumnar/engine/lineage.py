@@ -111,7 +111,7 @@ def encode_job(spark, input_df: DataFrame, io: TableIO, key: Optional[str] = "ur
               sort_within=sort_within, snapshot_id=snap, mode=mode,
               skip_parts=skip, plan=plan, overrides=overrides,
               cluster_by=cluster_by, cluster_layout=cluster_layout)
-    if getattr(io, "path_level", False):
+    if io.path_level:
         parts = encode_table_direct_write(input_df, io, **kw).collect()
     else:
         io.write_blocks(encode_table(input_df, **kw))

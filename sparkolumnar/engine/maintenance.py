@@ -10,9 +10,10 @@ the way — the routine production maintenance any 100 TB table needs.
 
 Safety order: the new snapshot is fully written and row-count-verified
 against the old snapshot's metadata BEFORE the old directory is removed
-(delete_old=True); a crash mid-compact leaves both snapshots readable
-and the compact re-runnable (dynamic overwrite replaces the new
-snapshot's parts deterministically).
+(delete_old=True). The write is staged (engine/direct.write_snapshot):
+a failed compaction job publishes no part, and a crash mid-compact
+leaves the old snapshots readable and the compact re-runnable (each
+part of the new snapshot is replaced deterministically).
 
 Layout note: compaction re-runs the row layout from scratch — pass key=
 (hash+sort) or cluster_by= to re-establish row order, or the rewrite is
@@ -27,8 +28,9 @@ from typing import Optional
 from pyspark.sql import functions as F
 
 from .decode import decode_blocks
-from .encode import BALANCED, encode_table
-from .tableio import TableIO
+from .direct import _drop_dir, _fs_for, write_snapshot
+from .selector import BALANCED
+from .tableio import TableIO, require_path_level
 
 
 def compact_snapshot(io: TableIO, snapshot_id: str,
@@ -57,6 +59,7 @@ def compact_snapshot(io: TableIO, snapshot_id: str,
     columns null-filled, narrower numerics widened. The default
     rejects mixed schemas loudly instead, because unification is a
     rewrite the operator should opt into."""
+    require_path_level(io, "compact_snapshot")
     ids = ([snapshot_id] if isinstance(snapshot_id, str)
            else list(snapshot_id))
     if not ids:
@@ -81,8 +84,7 @@ def compact_snapshot(io: TableIO, snapshot_id: str,
     # coordinates match no delete bitmap). Compaction is also what makes
     # deletes physical — the rewritten snapshot has no delete rows, and
     # the old ones are purged with their snapshot directories below.
-    dels = (io.read_deletes()
-            if getattr(io, "path_level", False) else None)
+    dels = io.read_deletes()
     n_deleted = 0
     if dels is not None:
         dels = dels.where(F.col("snapshot_id").isin(ids))
@@ -117,11 +119,8 @@ def compact_snapshot(io: TableIO, snapshot_id: str,
                 "pass unify_schema=True to migrate them into the union "
                 "schema, or compact each schema generation separately")
         rows_df = decode_blocks(blocks, verify=verify, deletes=dels)
-    new_blocks = encode_table(rows_df, key=key, partitions=partitions,
-                              sort_within=key is not None,
-                              cluster_by=cluster_by, mode=mode,
-                              snapshot_id=new_id)
-    io.write_blocks(new_blocks)
+    write_snapshot(rows_df, io, new_id, key=key, sort_within=key is not None,
+                   partitions=partitions, cluster_by=cluster_by, mode=mode)
     new = (io.read_blocks().where(F.col("snapshot_id") == new_id)
            .agg(F.count("*").alias("b"), F.sum("n_rows").alias("r"),
                 F.sum(bytes_out).alias("o")).collect()[0])
@@ -131,13 +130,13 @@ def compact_snapshot(io: TableIO, snapshot_id: str,
             f"deleted -> {new['r']} (old snapshots untouched)")
     if delete_old:
         for sid in ids:
-            _delete_snapshot_dir(io, sid)
             # purge the snapshot's delete rows with it (atomic directory
             # drop — the deletes table is partitioned by snapshot_id, so
             # other snapshots' rows are never rewritten). Orphaned rows
             # from a crash here are harmless: their coordinates match no
             # surviving block.
-            _delete_deletes_dir(io, sid)
+            for root in (io.blocks_path, io.deletes_path):
+                _drop_dir(*_fs_for(f"{root}/snapshot_id={sid}"))
     out = {"snapshot_ids": ids, "new_snapshot_id": new_id,
            "n_rows": int(new["r"]), "n_deletes_applied": int(n_deleted),
            "old_blocks": int(old["b"]), "new_blocks": int(new["b"]),
@@ -170,31 +169,6 @@ def _decodable_columns_expr():
         "c -> c.name)"))
 
 
-def _delete_snapshot_dir(io: TableIO, snapshot_id: str) -> None:
-    """Remove one snapshot's partition directory, fs-agnostically (the
-    same pyarrow.fs discipline as engine/direct.py task IO)."""
-    _drop_dir(f"{io.blocks_path}/snapshot_id={snapshot_id}")
-
-
-def _delete_deletes_dir(io: TableIO, snapshot_id: str) -> None:
-    """Remove one snapshot's delete-rows partition directory (see
-    TableIO.write_deletes — partitioned by snapshot_id exactly so this
-    purge is one atomic directory drop)."""
-    _drop_dir(f"{io.deletes_path}/snapshot_id={snapshot_id}")
-
-
-def _drop_dir(path: str) -> None:
-    from pyarrow import fs as pafs
-
-    try:
-        filesystem, p = pafs.FileSystem.from_uri(path)
-    except (ValueError, OSError):
-        filesystem, p = pafs.LocalFileSystem(), path
-    info = filesystem.get_file_info(p)
-    if info.type != pafs.FileType.NotFound:
-        filesystem.delete_dir(p)
-
-
 def list_snapshots(io: TableIO):
     """Per-snapshot inventory — blocks, parts, rows, encoded bytes,
     rows-per-block (the compaction signal: a streaming table shows
@@ -218,15 +192,6 @@ def list_snapshots(io: TableIO):
             .orderBy("snapshot_id"))
 
 
-def _fs_of(path: str):
-    from pyarrow import fs as pafs
-
-    try:
-        return pafs.FileSystem.from_uri(path)
-    except (ValueError, OSError):
-        return pafs.LocalFileSystem(), path
-
-
 def vacuum_table(io: TableIO, min_age_sec: float = 3600.0) -> dict:
     """Garbage-collect a table's crash residue — the janitor every
     long-lived table format ships (Iceberg's remove-orphan-files /
@@ -239,6 +204,10 @@ def vacuum_table(io: TableIO, min_age_sec: float = 3600.0) -> dict:
       a RUNNING job's in-flight temps safe — same contract as Delta's
       retention check; dotfile temps are already invisible to every
       reader, this reclaims the bytes);
+    * **stale staged snapshots**: files a killed driver or a zombie
+      task left in a hidden `.stage-*` directory (engine/direct.
+      write_snapshot) go under the same age guard and count as temps;
+      an old staging directory left without files is removed;
     * **orphaned delete rows**: a crash between compaction's
       blocks-directory drop and deletes-directory drop leaves delete
       bitmaps whose snapshot no longer exists. Their coordinates match
@@ -254,13 +223,14 @@ def vacuum_table(io: TableIO, min_age_sec: float = 3600.0) -> dict:
 
     removed_tmp = 0
     bytes_tmp = 0
-    fs, root = _fs_of(io.blocks_path)
+    fs, root = _fs_for(io.blocks_path)
     now = time.time()
     sel = pafs.FileSelector(root, recursive=True, allow_not_found=True)
     for info in fs.get_file_info(sel):
         if info.type != pafs.FileType.File:
             continue
-        if not info.base_name.endswith(".inprogress"):
+        if not (info.base_name.endswith(".inprogress")
+                or "/.stage-" in info.path):
             continue
         mtime = info.mtime.timestamp() if info.mtime else 0.0
         if now - mtime < min_age_sec:
@@ -270,11 +240,20 @@ def vacuum_table(io: TableIO, min_age_sec: float = 3600.0) -> dict:
         bytes_tmp += info.size or 0
 
     removed_del_snaps = []
-    dfs, droot = _fs_of(io.deletes_path)
+    dfs, droot = _fs_for(io.deletes_path)
     dsel = pafs.FileSelector(droot, recursive=False, allow_not_found=True)
-    live = {d.base_name for d in fs.get_file_info(
+    dirs = [d for d in fs.get_file_info(
         pafs.FileSelector(root, recursive=False, allow_not_found=True))
-        if d.type == pafs.FileType.Directory}
+        if d.type == pafs.FileType.Directory]
+    live = {d.base_name for d in dirs}
+    for d in dirs:
+        if (d.base_name.startswith(".stage-")
+                and now - (d.mtime.timestamp() if d.mtime else 0.0)
+                >= min_age_sec
+                and not any(i.type == pafs.FileType.File
+                            for i in fs.get_file_info(pafs.FileSelector(
+                                d.path, recursive=True)))):
+            fs.delete_dir(d.path)
     for info in dfs.get_file_info(dsel):
         if info.type != pafs.FileType.Directory:
             continue

@@ -4,14 +4,15 @@ The production design targets Iceberg tables (snapshot ids, atomic
 overwrite-by-partition, metadata-only reads). This sandbox has no Iceberg
 jars, so the same semantics are provided over parquet directories:
 
-* blocks live in a (snapshot_id, part_id) hive layout. The encode jobs
-  write each part's file in-task (engine/direct._write_part) and publish
-  it with a per-part sweep plus atomic move; write_blocks (DML,
-  compaction) uses Spark's DYNAMIC partition overwrite. Either way
+* blocks live in a (snapshot_id, part_id) hive layout. Encode jobs, DML
+  and compaction write each part's file in-task (engine/direct.
+  _write_part) and publish it with a per-part sweep plus atomic move, so
   re-running a partition replaces exactly its own files (idempotent,
   because block contents are deterministic functions of the input
   partition) — the parquet equivalent of an Iceberg
-  overwrite-partitions commit;
+  overwrite-partitions commit. DML and compaction stage the whole
+  snapshot in a hidden directory first and move its parts into place
+  only when every task succeeded (engine/direct.write_snapshot);
 * the input "snapshot id" is synthesized from the input file listing, the
   parquet stand-in for an Iceberg snapshot id.
 """
@@ -54,12 +55,11 @@ class TableIO:
     # -- blocks ---------------------------------------------------------
 
     def write_blocks(self, blocks: DataFrame) -> None:
-        # partitioned by (snapshot, partition): dynamic overwrite replaces
-        # exactly the re-encoded partitions of THIS snapshot and never
-        # touches other snapshots' data (streaming writes one snapshot per
-        # micro-batch into the same table)
-        # block payloads are already entropy-coded; parquet's default
-        # snappy pass wastes CPU re-compressing incompressible bytes
+        # JVM-writer baseline: perfbench and test fixtures; no engine path
+        # calls it on a path-level table. Spark's dynamic partition
+        # overwrite replaces exactly the (snapshot, partition) directories
+        # present in `blocks`; payloads are already entropy-coded, so the
+        # files are written uncompressed
         (blocks.write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
          .option("compression", "uncompressed")
@@ -130,7 +130,7 @@ class IcebergTableIO(TableIO):
     mapping is 1:1 with the parquet fallback:
 
     * write_blocks  -> df.writeTo(table).overwritePartitions()  (atomic
-      partition-level replace, the real Iceberg commit the parquet dynamic
+      partition-level replace, the real Iceberg commit the parquet per-part
       overwrite emulates)
     * snapshot id   -> the input table's current_snapshot_id() instead of a
       file-listing hash
@@ -151,18 +151,11 @@ class IcebergTableIO(TableIO):
         self.blocks_table = blocks_table
         self.checkpoint_table = checkpoint_table
 
-    def _no_deletes(self, op: str):
-        raise NotImplementedError(
-            f"IcebergTableIO does not implement {op}: position-delete "
-            "bitmaps, compaction and vacuum are path-level operations of "
-            "the parquet TableIO; with Iceberg, use the table format's "
-            "own row-level DML and maintenance procedures instead")
-
     def write_deletes(self, df: DataFrame) -> None:
-        self._no_deletes("write_deletes")
+        require_path_level(self, "write_deletes")
 
     def read_deletes(self) -> Optional[DataFrame]:
-        self._no_deletes("read_deletes")
+        require_path_level(self, "read_deletes")
 
     def has_deletes(self) -> bool:
         return False
@@ -196,10 +189,25 @@ class IcebergTableIO(TableIO):
         return self.spark.table(self.checkpoint_table)
 
 
+def require_path_level(io: TableIO, op: str) -> None:
+    """Fail before any write when `io` has no path-level access: DML and
+    compaction write task-side blocks files and delete bitmaps under
+    io.blocks_path / io.deletes_path."""
+    if not io.path_level:
+        raise NotImplementedError(
+            f"{type(io).__name__} does not implement {op}: row-level DML "
+            "(position-delete bitmaps), compaction and vacuum are "
+            "path-level operations of the parquet TableIO; with a table "
+            "format such as Iceberg, use its own row-level DML and "
+            "maintenance procedures instead")
+
+
 def _has_parquet(path: str) -> bool:
     if not os.path.isdir(path):
         return False
-    for root, _dirs, files in os.walk(path):
+    for root, dirs, files in os.walk(path):
+        # hidden directories (staging, _temporary) hold no table file
+        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
         if any(f.endswith(".parquet") for f in files):
             return True
     return False

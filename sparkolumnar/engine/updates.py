@@ -14,12 +14,14 @@ Commit protocol (ordered so every crash window re-runs to convergence):
    already wrote blocks derives the SAME id when re-run);
 2. matched rows are decoded LIVE (existing delete bitmaps applied — a
    previously deleted row is never resurrected) from the OLD snapshots
-   only, assignments applied, and encoded as the update snapshot.
-   write_blocks' dynamic (snapshot_id, part_id) overwrite makes this
-   step idempotent: a re-run re-derives identical rows from the
-   ORIGINAL stored rows (its own half-written output is excluded from
-   the scan), so even non-idempotent expressions like ``x = x + 1``
-   apply exactly once;
+   only, assignments applied, and encoded as the update snapshot by
+   the task-side blocks writer, staged so that a failed job publishes
+   nothing (engine/direct.write_snapshot); each committed part replaces
+   its (snapshot_id, part_id) directory's files with its own. That
+   makes this step idempotent: a re-run re-derives identical rows
+   from the ORIGINAL stored rows (its own half-written output is
+   excluded from the scan), so even non-idempotent expressions like
+   ``x = x + 1`` apply exactly once;
 3. delete bitmaps for the predicate are written over the old
    snapshots (bitmaps OR at read time — rewriting them is a no-op).
 
@@ -49,6 +51,9 @@ import hashlib
 from typing import Dict, Optional
 
 from pyspark.sql import functions as F
+
+from .direct import write_snapshot
+from .tableio import require_path_level
 
 UPDATE_PREFIX = "upd"
 
@@ -89,12 +94,14 @@ def update_where(io, filters, assignments: Dict[str, str],
     updates; compaction re-establishes global layout either way).
 
     Returns {"new_snapshot_id", "n_rows_updated", "n_blocks_matched",
-    "n_old_snapshots"}. n_rows_updated counts the rows encoded into
-    the update snapshot (== live matched rows)."""
+    "n_old_snapshots"}. n_rows_updated counts the rows the update
+    snapshot holds (== live matched rows), read from its blocks'
+    metadata, so a re-run of a committed update — which matches no live
+    row and writes nothing — reports the same count."""
     from .decode import decode_blocks, union_schema_of_blocks
-    from .deletes import compute_deletes
-    from .encode import encode_table
+    from .deletes import commit_deletes, compute_deletes
 
+    require_path_level(io, "update_where")
     if not filters:
         raise ValueError("update_where needs a predicate — refusing to "
                          "rewrite every row of the table implicitly")
@@ -116,10 +123,8 @@ def update_where(io, filters, assignments: Dict[str, str],
     if merge_schema:
         schema = union_schema_of_blocks(old_blocks)
         compat = True
-    deletes = (io.read_deletes()
-               if getattr(io, "path_level", False) else None)
     matched = decode_blocks(old_blocks, schema=schema, compat=compat,
-                            filters=filters, deletes=deletes)
+                            filters=filters, deletes=io.read_deletes())
     types = {f.name: f.dataType for f in matched.schema.fields}
     unknown = [c for c in assignments if c not in types]
     if unknown:
@@ -140,24 +145,17 @@ def update_where(io, filters, assignments: Dict[str, str],
             exprs.append(F.col(c))
     updated = matched.select(*exprs)
 
-    new_blocks = encode_table(updated, snapshot_id=uid, key=key,
-                              sort_within=key is not None,
-                              partitions=partitions)
-    io.write_blocks(new_blocks)
-    n_updated = int((io.read_blocks().where(F.col("snapshot_id") == uid)
-                     .agg(F.sum("n_rows")).collect()[0][0]) or 0)
+    write_snapshot(updated, io, uid, key=key, sort_within=key is not None,
+                   partitions=partitions)
+    n_updated = (io.read_blocks().where(F.col("snapshot_id") == uid)
+                 .agg(F.sum("n_rows")).collect()[0][0] or 0)
 
-    dels = compute_deletes(old_blocks, filters).persist()
-    try:
-        io.write_deletes(dels)
-        stats = dels.agg(F.count("*").alias("b"),
-                         F.sum("n_deleted").alias("r")).collect()[0]
-    finally:
-        dels.unpersist()
+    n_blocks, n_rows = commit_deletes(io, compute_deletes(old_blocks,
+                                                          filters))
     return {"new_snapshot_id": uid,
             "n_rows_updated": n_updated,
-            "n_blocks_matched": int(stats["b"] or 0),
-            "n_rows_matched_stored": int(stats["r"] or 0),
+            "n_blocks_matched": n_blocks,
+            "n_rows_matched_stored": n_rows,
             "n_old_snapshots": len(old_ids)}
 
 
@@ -188,10 +186,10 @@ def merge_upsert(io, source, on,
     so it requires an explicit id. Commit order is blocks-then-deletes
     (transient duplicates in the crash window, converging on re-run —
     same contract as update_where)."""
-    from .deletes import compute_deletes_by_keys
-    from .encode import encode_table
+    from .deletes import commit_deletes, compute_deletes_by_keys
     from .tableio import snapshot_of_input
 
+    require_path_level(io, "merge_upsert")
     ons = [on] if isinstance(on, str) else list(on)
     missing = [c for c in ons if c not in source.columns]
     if missing:
@@ -214,28 +212,19 @@ def merge_upsert(io, source, on,
             "replacement row would be ambiguous; dedupe the source "
             "first")
 
-    io.write_blocks(encode_table(source, snapshot_id=snapshot_id, key=key,
-                                 sort_within=key is not None,
-                                 partitions=partitions))
-    n_inserted = int((io.read_blocks()
-                      .where(F.col("snapshot_id") == snapshot_id)
-                      .agg(F.sum("n_rows")).collect()[0][0]) or 0)
+    n_inserted = sum(r["n_rows"] for r in write_snapshot(
+        source, io, snapshot_id, key=key, sort_within=key is not None,
+        partitions=partitions))
 
     # delete scan over everything EXCEPT the just-written snapshot (its
     # rows carry the very keys being merged — scanning it would delete
     # the new rows themselves)
     old_blocks = (io.read_blocks()
                   .where(F.col("snapshot_id") != snapshot_id))
-    dels = compute_deletes_by_keys(
+    n_blocks, n_rows = commit_deletes(io, compute_deletes_by_keys(
         old_blocks, source.select(*ons), ons,
-        broadcast_threshold=broadcast_threshold).persist()
-    try:
-        io.write_deletes(dels)
-        stats = dels.agg(F.count("*").alias("b"),
-                         F.sum("n_deleted").alias("r")).collect()[0]
-    finally:
-        dels.unpersist()
+        broadcast_threshold=broadcast_threshold))
     return {"new_snapshot_id": snapshot_id,
             "n_rows_inserted": n_inserted,
-            "n_rows_replaced_stored": int(stats["r"] or 0),
-            "n_blocks_matched": int(stats["b"] or 0)}
+            "n_rows_replaced_stored": n_rows,
+            "n_blocks_matched": n_blocks}

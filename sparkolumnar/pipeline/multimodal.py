@@ -41,9 +41,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
-MEDIA_META_SCHEMA = ("media_type string, width int, height int, "
-                     "n_bytes long, sha256 string")
-
 
 # --- real decoders (pure numpy, public formats) ------------------------------
 

@@ -157,41 +157,16 @@ def ser_bytes(v: bytes) -> bytes:
     return uvarint(len(v)) + bytes(v)
 
 
-def de_bytes(r: Reader) -> bytes:
-    n = r.read_uvarint()
-    return r.take(n)
-
-
 def ser_f64(v: float) -> bytes:
     return struct.pack("<d", v)
-
-
-def de_f64(r: Reader) -> float:
-    return struct.unpack("<d", r.take(8))[0]
 
 
 def ser_f32(v: float) -> bytes:
     return struct.pack("<f", v)
 
 
-def de_f32(r: Reader) -> float:
-    return struct.unpack("<f", r.take(4))[0]
-
-
-def ser_bool(v: bool) -> bytes:
-    return b"\x01" if v else b"\x00"
-
-
-def de_bool(r: Reader) -> bool:
-    return r.take(1) != b"\x00"
-
-
 def ser_u8(v: int) -> bytes:
     return bytes([int(v) & 0xFF])
-
-
-def de_u8(r: Reader) -> int:
-    return r.take(1)[0]
 
 
 # ---------------------------------------------------------------------------
@@ -465,12 +440,6 @@ def generic_encode(values: Sequence, ser: Callable = ser_u64) -> bytes:
     return bytes(out)
 
 
-def generic_decode(buf: bytes, de: Callable = de_u64) -> List:
-    r = Reader(buf)
-    n = r.read_uvarint()
-    return [de(r) for _ in range(n)]
-
-
 # ---------------------------------------------------------------------------
 # Container / table framing (derive/vec.rs:136-171, serde/ser.rs:46-113)
 # ---------------------------------------------------------------------------
@@ -535,11 +504,6 @@ def table(fields: Sequence[bytes], optional: Iterable[Tuple[int, bytes]] = ()) -
 # ---------------------------------------------------------------------------
 # Reference-size oracle
 # ---------------------------------------------------------------------------
-
-_REF_INT_CODECS = ("delta_rle", "rle", "dod", "generic")
-_REF_STR_CODECS = ("rle", "generic")
-_REF_BOOL_CODECS = ("bool_rle",)
-
 
 def reference_column_size(values: Sequence, kind: str) -> int:
     """Size in bytes of the *best* encoding available to the reference for

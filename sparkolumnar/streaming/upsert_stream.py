@@ -7,9 +7,10 @@ plus position-delete bitmaps masking the replaced/deleted stored rows
 (engine/updates.py merge_upsert, engine/deletes.py
 compute_deletes_by_keys). Exactly-once composes the same way as
 encode_stream: Structured Streaming replays a crashed micro-batch with
-the SAME batch id, the snapshot id is deterministic from it, the blocks
-write is a dynamic (snapshot, part) overwrite, and delete bitmaps OR to
-no change — so a replay converges instead of double-applying.
+the SAME batch id, the snapshot id is deterministic from it, each part
+of the staged blocks write replaces its own (snapshot, part) file, and
+delete bitmaps OR to no change — so a replay converges instead of
+double-applying.
 
 The reference is a batch library with no DML (SURVEY.md §2.2); this is
 engine-extension scope modeled on Delta/Iceberg CDC-merge pipelines.

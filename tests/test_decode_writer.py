@@ -156,17 +156,22 @@ def test_limit_with_predicate_counts_matching_rows(spark, table, tmp_path,
             offset, limit).to_pylist()
 
 
-def test_offset_past_the_end_leaves_no_part_files(spark, table, tmp_path,
-                                                  capsys, no_ipc_decode):
+def test_offset_past_the_end_leaves_one_empty_part(spark, table, tmp_path,
+                                                   capsys, no_ipc_decode):
+    """A window past the end reads no block; the earlier run's parts go
+    and one empty part keeps the output readable with its schema."""
     out = str(tmp_path / "dec")
     res = _decode_job(["--blocks", table.blocks_path, "--output", out],
                       capsys)
     assert res["rows"] == N and glob.glob(out + "/part-*.parquet")
+    names = _read_parts(out).column_names
     res = _decode_job(["--blocks", table.blocks_path, "--output", out,
                        "--limit", "10", "--offset", str(N)], capsys)
     assert res["rows"] == 0 and res["blocks_read"] == 0
     assert res["blocks_total"] > 0
-    assert glob.glob(out + "/*.parquet") == []
+    assert glob.glob(out + "/*.parquet") == [out + "/part-00000.parquet"]
+    back = spark.read.parquet(out)
+    assert back.count() == 0 and back.columns == names
 
 
 def test_output_overwrites_a_spark_written_directory(spark, table, tmp_path,

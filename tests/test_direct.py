@@ -525,15 +525,19 @@ def test_direct_decode_refiltered_run_removes_stale_parts(spark, pages_dir,
     encode_files_direct(spark, src, io, run_id="st")
     out = str(tmp_path / "dec")
     decode_files_direct(spark, io, out)
-    n_all = spark.read.parquet(out).count()
-    assert n_all == N_ROWS
-    # filter matching nothing: every part prunes, every file must go
+    full = spark.read.parquet(out)
+    names = full.columns
+    assert full.count() == N_ROWS
+    # filter matching nothing: every part prunes, every earlier file must
+    # go, and one empty part keeps the output readable with its schema
     res = decode_files_direct(spark, io, out,
                               filters=[("lang", "=", "no_such_lang")])
     assert res["n_rows"] == 0
     import glob
 
-    assert glob.glob(out + "/part-*.parquet") == []
+    assert glob.glob(out + "/part-*.parquet") == [out + "/part-00000.parquet"]
+    back = spark.read.parquet(out)
+    assert back.count() == 0 and back.columns == names
 
 
 def test_exact_mask_in_mixed_convertibility(spark):

@@ -1,5 +1,6 @@
-"""The one blocks-file writer (direct._write_part): what lineage.encode_job
-commits, what the files hold, and how a retried writing task behaves."""
+"""The one blocks-file writer (direct._write_part): what lineage.encode_job,
+DML and compaction commit, what the files hold, and how a retried
+writing task behaves."""
 
 import glob
 import os
@@ -7,13 +8,17 @@ import subprocess
 import sys
 import textwrap
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from sparkolumnar.datagen import pages_df
-from sparkolumnar.engine import encode_table, encode_table_direct_write
+from sparkolumnar.engine import (compact_snapshot, decode_blocks, encode_table,
+                                 encode_table_direct_write)
 from sparkolumnar.engine.lineage import encode_job, lineage_of
 from sparkolumnar.engine.tableio import TableIO
+from sparkolumnar.engine.updates import merge_upsert, update_where
 
 P = 4
 
@@ -48,8 +53,6 @@ def test_task_written_blocks_have_seq_statistics_only(spark, tmp_path):
     """Footer/page statistics only on `seq` (what the direct decode's
     `seq IN` row-group pruning reads): min/max copies of entropy-coded
     payloads are pure stored-bytes bloat."""
-    import pyarrow.parquet as pq
-
     df = _numeric_df(spark)
     task_io = TableIO(spark, str(tmp_path / "task"))
     encode_table_direct_write(df, task_io, partitions=2,
@@ -140,7 +143,7 @@ def test_table_format_io_commits_the_same_rows(spark, pages, tmp_path):
     assert ids(fmt_io) == ids(task_io)
 
 
-_RETRY_SCRIPT = textwrap.dedent("""
+_HARNESS = textwrap.dedent("""
     import glob, os, sys
     base = sys.argv[1]
     from pyspark import TaskContext
@@ -167,6 +170,13 @@ _RETRY_SCRIPT = textwrap.dedent("""
                 raise RuntimeError("injected first-attempt failure")
             yield b
 
+    def visible(root):
+        return sorted(os.path.relpath(f, root) for f in
+                      glob.glob(root + "/**/*", recursive=True)
+                      if os.path.isfile(f))
+""")
+
+_RETRY_SCRIPT = _HARNESS + textwrap.dedent("""
     def run(df, name):
         io = TableIO(spark, os.path.join(base, name))
         meta = encode_table_direct_write(
@@ -183,27 +193,251 @@ _RETRY_SCRIPT = textwrap.dedent("""
     _, _, _, clean_ids = run(src, "clean")
     assert ids == clean_ids and len(ids) == len(set(ids)), (ids, clean_ids)
     assert blocks.agg(F.sum("n_rows")).collect()[0][0] == N
-    visible = sorted(os.path.relpath(f, io.blocks_path) for f in
-                     glob.glob(io.blocks_path + "/**/*", recursive=True)
-                     if os.path.isfile(f))
-    assert visible == ["snapshot_id=s/part_id=0/direct-s-0.parquet",
-                       "snapshot_id=s/part_id=1/direct-s-1.parquet"], visible
+    got = visible(io.blocks_path)
+    assert got == ["snapshot_id=s/part_id=0/direct-s-0.parquet",
+                   "snapshot_id=s/part_id=1/direct-s-1.parquet"], got
+    spark.stop()
+    print("RETRY_OK")
+""")
+
+_MERGE_RETRY_SCRIPT = _HARNESS + textwrap.dedent("""
+    from sparkolumnar.engine.updates import merge_upsert
+
+    def run(df, name):
+        # stored ids N/2 .. 3N/2-1: the source replaces N/2 of them and
+        # inserts N/2 new ones
+        io = TableIO(spark, os.path.join(base, name))
+        old = spark.range(N // 2, N // 2 + N, numPartitions=2).selectExpr(
+            "id", "'old' AS s")
+        encode_table_direct_write(old, io, snapshot_id="b").collect()
+        st = merge_upsert(io, df, on="id", snapshot_id="m")
+        ids = sorted(r["block_id"] for r in io.read_blocks()
+                     .where(F.col("snapshot_id") == "m")
+                     .select("block_id").collect())
+        return io, st, ids
+
+    io, st, ids = run(src.mapInArrow(flaky, src.schema), "retry")
+    assert len(glob.glob(os.path.join(base, "failed-*"))) == 2
+    assert st["n_rows_inserted"] == N, st
+    assert st["n_rows_replaced_stored"] == N // 2, st
+    _, clean_st, clean_ids = run(src, "clean")
+    assert st == clean_st, (st, clean_st)
+    assert ids == clean_ids and len(ids) == len(set(ids)) > 2, (ids, clean_ids)
+    got = visible(os.path.join(io.blocks_path, "snapshot_id=m"))
+    assert got == ["part_id=0/direct-m-0.parquet",
+                   "part_id=1/direct-m-1.parquet"], got
     spark.stop()
     print("RETRY_OK")
 """)
 
 
-def test_writer_retry_is_exactly_once(tmp_path):
-    """A writing task that fails on its first attempt after a block has
-    reached the writer: the retried job succeeds, counts every row once,
-    reproduces a clean run's block ids and publishes no partial file.
-    Fresh JVM: local[2,2] allows one task retry."""
+def _run_harness(script, tmp_path):
+    """Run a retry script in a fresh JVM (local[2,2] allows one task
+    retry) and check it got through."""
     env = dict(os.environ)
     env["PYTHONPATH"] = os.pathsep.join(
         [os.path.dirname(os.path.dirname(os.path.abspath(__file__)))]
         + [env.get("PYTHONPATH", "")])
     out = subprocess.run(
-        [sys.executable, "-c", _RETRY_SCRIPT, str(tmp_path)],
+        [sys.executable, "-c", script, str(tmp_path)],
         capture_output=True, text=True, timeout=600, env=env)
     assert out.returncode == 0, out.stderr[-4000:]
     assert "RETRY_OK" in out.stdout
+
+
+def test_writer_retry_is_exactly_once(tmp_path):
+    """A writing task that fails on its first attempt after a block has
+    reached the writer: the retried job succeeds, counts every row once,
+    reproduces a clean run's block ids and publishes no partial file."""
+    _run_harness(_RETRY_SCRIPT, tmp_path)
+
+
+def test_merge_upsert_retry_is_exactly_once(tmp_path):
+    """merge_upsert whose source fails each task's first attempt after
+    one batch (in the insert write, the cardinality check and the key
+    scan alike): the merge succeeds, inserts every source row once,
+    replaces the matched stored rows, publishes one file per part and
+    reproduces a clean run's block ids."""
+    _run_harness(_MERGE_RETRY_SCRIPT, tmp_path)
+
+
+def _dml_table(spark, base, io_cls=TableIO):
+    """20000 stored rows as snapshot "b" (4 task-written parts), and a
+    merge source of 10000 rows, half of them matching stored keys."""
+    io = io_cls(spark, base)
+    encode_table_direct_write(_numeric_df(spark), io, partitions=4,
+                              snapshot_id="b").collect()
+    src = _numeric_df(spark).where("id < 10000").selectExpr(
+        "id + 15000 AS id", "qty", "price", "flag", "ship")
+    return io, src
+
+
+def _ids(io, snap):
+    return sorted(r["block_id"] for r in io.read_blocks()
+                  .where(F.col("snapshot_id") == snap)
+                  .select("block_id").collect())
+
+
+def _landed_rows(io, snap):
+    return io.read_blocks().where(F.col("snapshot_id") == snap).agg(
+        F.sum("n_rows")).collect()[0][0]
+
+
+def _jvm_written_ids(spark, tmp_path, name, df, **kw):
+    """Block ids of write_blocks(encode_table(df, **kw)) in a fresh table."""
+    io = TableIO(spark, str(tmp_path / name))
+    io.write_blocks(encode_table(df, **kw))
+    return _ids(io, kw["snapshot_id"])
+
+
+def test_dml_and_compaction_write_blocks_in_task(spark, tmp_path):
+    """update_where, merge_upsert and compact_snapshot land their new
+    snapshot through the task writer: one direct file per part, row
+    counts from the writing tasks equal to the landed rows, and the
+    block ids the JVM writer gets from the same encode arguments."""
+    io, src = _dml_table(spark, str(tmp_path / "t"))
+
+    def forbidden(*a, **k):
+        raise AssertionError("DML and compaction must not call write_blocks")
+
+    io.write_blocks = forbidden
+    upd = update_where(io, [("flag", "=", 3)], {"qty": "qty + 1000"},
+                       key="id", partitions=2)
+    mrg = merge_upsert(io, src, on="id", snapshot_id="m", key="id",
+                       partitions=2)
+    ids = ["b", upd["new_snapshot_id"], "m"]
+    dels = io.read_deletes()
+    cmp = compact_snapshot(io, ids, new_snapshot_id="c", key="id",
+                           partitions=2)
+    uid = upd["new_snapshot_id"]
+    for snap in (uid, "m", "c"):
+        root = os.path.join(io.blocks_path, f"snapshot_id={snap}")
+        assert sorted(os.listdir(root)) == ["part_id=0", "part_id=1"]
+        for p in (0, 1):
+            visible = [f for f in os.listdir(
+                os.path.join(root, f"part_id={p}")) if not f.startswith(".")]
+            assert visible == [f"direct-{snap}-{p}.parquet"]
+    flag3 = _numeric_df(spark).where("flag = 3")
+    assert upd["n_rows_updated"] == _landed_rows(io, uid) == flag3.count()
+    assert mrg["n_rows_inserted"] == _landed_rows(io, "m") == 10000
+    # stored matches: 5000 keys in "b" plus their updated copies
+    assert mrg["n_rows_replaced_stored"] == 5000 + flag3.where(
+        "id >= 15000").count()
+    assert cmp["n_rows"] == _landed_rows(io, "c") == 25000
+
+    blocks = io.read_blocks()
+    updated = decode_blocks(blocks.where(F.col("snapshot_id") == "b"),
+                            filters=[("flag", "=", 3)]).withColumn(
+        "qty", F.expr("qty + 1000").cast("bigint"))
+    live = decode_blocks(blocks.where(F.col("snapshot_id").isin(ids)),
+                         deletes=dels)
+    for snap, df in ((uid, updated), ("m", src), ("c", live)):
+        assert _ids(io, snap) == _jvm_written_ids(
+            spark, tmp_path, f"jvm-{snap}", df, snapshot_id=snap, key="id",
+            sort_within=True, partitions=2)
+
+
+def _tree(root):
+    """{path: bytes} of every file under root, hidden ones included."""
+    out = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            with open(os.path.join(d, f), "rb") as fh:
+                out[os.path.relpath(os.path.join(d, f), root)] = fh.read()
+    return out
+
+
+def test_dml_and_compaction_refuse_a_table_format_io(spark, tmp_path):
+    """Without path-level access, update_where, merge_upsert and
+    compact_snapshot raise before anything is written."""
+
+    class TableFormatIO(TableIO):
+        path_level = False
+
+    io, src = _dml_table(spark, str(tmp_path / "t"), TableFormatIO)
+    before = _tree(io.blocks_path)
+    for op in (lambda: update_where(io, [("flag", "=", 3)], {"qty": "0"}),
+               lambda: merge_upsert(io, src, on="id", snapshot_id="m"),
+               lambda: compact_snapshot(io, "b", partitions=1,
+                                        delete_old=True)):
+        with pytest.raises(NotImplementedError,
+                           match="TableFormatIO does not implement"):
+            op()
+    assert _tree(io.blocks_path) == before
+    assert not os.path.exists(io.deletes_path)
+
+
+def _visible_tree(root):
+    """_tree without hidden files and directories: what a reader sees."""
+    return {p: b for p, b in _tree(root).items()
+            if not any(c.startswith(".") for c in p.split(os.sep))}
+
+
+def _corrupt_last_block(path):
+    """Rewrite a blocks file with its last block's first stored column
+    checksum replaced, so decode(verify=True) fails on that block."""
+    t = pq.read_table(path)
+    rows = t.to_pylist()
+    max(rows, key=lambda r: r["seq"])["columns"][0]["checksum_in"] = "0" * 64
+    pq.write_table(pa.Table.from_pylist(rows, schema=t.schema), path,
+                   row_group_size=1, compression="none")
+
+
+def test_failed_dml_and_compaction_publish_nothing(spark, tmp_path):
+    """One task of each operation's write job fails after the others
+    finished (a local[N] master retries no task): update_where,
+    merge_upsert and compact_snapshot raise, the files a reader sees are
+    byte-unchanged and no delete bitmap is written."""
+    io, _ = _dml_table(spark, str(tmp_path / "t"))
+    before = _visible_tree(io.blocks_path)
+    # the task holding id 19999 waits for the other tasks, then raises
+    late_boom = ("IF(id = 19999 AND reflect('java.lang.Thread', 'sleep', "
+                 "CAST(3000 AS BIGINT)) IS NOT NULL, "
+                 "CAST(raise_error('boom') AS BIGINT), qty)")
+    with pytest.raises(Exception, match="boom"):
+        update_where(io, [("flag", "<", 7)], {"qty": late_boom})
+    assert _visible_tree(io.blocks_path) == before
+
+    marks = str(tmp_path / "marks")
+    os.makedirs(marks)
+
+    def boom_on_write(batches):
+        # the source's first evaluation (the MERGE cardinality check)
+        # passes; in the second, the insert write, partition 1 waits for
+        # partition 0, then raises
+        import time
+
+        from pyspark import TaskContext
+
+        pid = TaskContext.get().partitionId()
+        mark = os.path.join(marks, str(pid))
+        fail = pid == 1 and os.path.exists(mark)
+        open(mark, "w").close()
+        for b in batches:
+            if fail:
+                time.sleep(3)
+                raise RuntimeError("boom")
+            yield b
+
+    src = _numeric_df(spark, 10000).selectExpr(  # 2 non-empty partitions
+        "id + 15000 AS id", "qty", "price", "flag", "ship")
+    with pytest.raises(Exception, match="boom"):
+        merge_upsert(io, src.mapInArrow(boom_on_write, src.schema),
+                     on="id", snapshot_id="m")
+    assert sorted(os.listdir(marks)) == ["0", "1"]
+    assert _visible_tree(io.blocks_path) == before
+
+    # one many-block part whose last block is corrupt: its task fails
+    # after the tasks of "b"'s four small parts finished
+    encode_table_direct_write(_numeric_df(spark, 200000), io, partitions=1,
+                              snapshot_id="big").collect()
+    big = glob.glob(os.path.join(io.blocks_path, "snapshot_id=big",
+                                 "part_id=0", "*.parquet"))
+    assert len(big) == 1
+    _corrupt_last_block(big[0])
+    before = _visible_tree(io.blocks_path)
+    with pytest.raises(Exception, match="checksum mismatch"):
+        compact_snapshot(io, ["b", "big"], new_snapshot_id="c",
+                         delete_old=True)
+    assert _visible_tree(io.blocks_path) == before
+    assert not os.path.exists(io.deletes_path)

@@ -231,3 +231,48 @@ def test_vacuum_removes_stale_temps_and_orphan_deletes(spark, tmp_path):
     st2 = vacuum_table(io, min_age_sec=3600)
     assert st2["n_tmp_files_removed"] == 0
     assert st2["orphan_delete_snapshots_removed"] == []
+
+
+def test_vacuum_removes_stale_staged_snapshots(spark, tmp_path):
+    """Files left in a hidden `.stage-*` directory (a DML or compaction
+    job whose driver died before publishing) are invisible to readers
+    and reclaimed under the age guard; an emptied staging directory is
+    removed, a fresh one (a running job's) survives."""
+    import os
+    import shutil
+
+    import pandas as pd
+    from pyarrow import fs as pafs
+
+    from sparkolumnar.engine.direct import list_parquet_files
+    from sparkolumnar.engine.maintenance import vacuum_table
+
+    io = TableIO(spark, str(tmp_path / "t"))
+    df = spark.createDataFrame(pd.DataFrame({"k": range(100)}))
+    io.write_blocks(encode_table(df, snapshot_id="s1", partitions=1))
+    live = next(os.path.join(d, f) for d, _, fs in os.walk(io.blocks_path)
+                for f in fs if f.endswith(".parquet"))
+    staged = {}
+    for name, mtime in (("old", 1), ("new", None)):
+        p = os.path.join(io.blocks_path, f".stage-{name}", "snapshot_id=s2",
+                         "part_id=0", "direct-s2-0.parquet")
+        os.makedirs(os.path.dirname(p))
+        shutil.copy(live, p)
+        if mtime:  # the staged file and its staging directory
+            for q in (p, os.path.join(io.blocks_path, f".stage-{name}")):
+                os.utime(q, (mtime, mtime))
+        staged[name] = p
+    # staged parts are not part of the table, for Spark's listing and
+    # for the fs-native one of the direct paths
+    assert [r["snapshot_id"] for r in
+            io.read_blocks().select("snapshot_id").distinct().collect()] \
+        == ["s1"]
+    assert list_parquet_files(spark, io.blocks_path,
+                              pafs.LocalFileSystem()) == [live]
+
+    st = vacuum_table(io, min_age_sec=3600)
+    assert st["n_tmp_files_removed"] == 1
+    assert st["tmp_bytes_reclaimed"] == os.path.getsize(live)
+    assert not os.path.exists(os.path.join(io.blocks_path, ".stage-old"))
+    assert os.path.exists(staged["new"])
+    assert decode_blocks(io.read_blocks()).count() == 100

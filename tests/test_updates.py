@@ -3,6 +3,8 @@ rows + position-delete bitmaps over the old snapshots. The reference has
 no DML (columnar/src/lib.rs:114-133) — engine-extension scope; oracles
 are the equivalent DataFrame transforms on the original rows."""
 
+import os
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -87,6 +89,16 @@ def test_update_crash_window_rerun_converges(spark, tmp_path, docs):
                           F.col("n_chars") + 1000)
         .otherwise(F.col("n_chars"))))
     assert _by_id(_table(io)) == want
+    # the re-run replaced its half-commit part by part: one visible file
+    # per part of the update snapshot
+    uid = st["new_snapshot_id"]
+    root = os.path.join(io.blocks_path, f"snapshot_id={uid}")
+    parts = os.listdir(root)
+    assert parts
+    for d in parts:
+        visible = [f for f in os.listdir(os.path.join(root, d))
+                   if not f.startswith(".")]
+        assert visible == [f"direct-{uid}-{d.split('=')[1]}.parquet"]
 
 
 def test_chained_updates_compose(spark, tmp_path, docs):
