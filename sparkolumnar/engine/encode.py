@@ -339,8 +339,9 @@ _CLUSTER_MAX_BUCKETS = 65536      # sanity ceiling, NOT a parallelism cap:
 # layout change would keep old-layout committed parts while reassigning
 # rows to new parts — silently duplicating some rows and dropping those
 # now bucketed into skipped parts. A distinct snapshot id makes the
-# resume a fresh job instead. (v2 = r4's composite-boundary 4*p layout.)
-CLUSTER_LAYOUT_VERSION = 2
+# resume a fresh job instead. (v2 = r4's composite-boundary 4*p layout;
+# v3 = whole-partition strided boundary sample.)
+CLUSTER_LAYOUT_VERSION = 3
 
 
 def clustered_snapshot_id(base_snap: str, cluster_by,
@@ -364,36 +365,94 @@ def clustered_snapshot_id(base_snap: str, cluster_by,
     return h.hexdigest()[:16]
 
 
+_BOUNDARY_SAMPLE_ROWS = 8_192  # floor; the sample must out-resolve the
+#                                 bucket count, or quantile picks
+#                                 collapse adjacent boundaries
+_STRIDE_COL = "__sample_stride"
+
+
+def _strided_sample(df: DataFrame, cols: List[str],
+                    sample_rows: int) -> pa.Table:
+    """Deterministic whole-partition sample of `cols` for boundary
+    quantiles. Every partition keeps the rows at positions 0, s, 2s, ...
+    and doubles its stride s (dropping every other kept row) whenever
+    the kept rows pass 2k, k = sample_rows // n_partitions — one pass
+    over the cluster columns, at most ~2k rows held per task. Returns
+    the kept rows plus a `__sample_stride` column: each kept row stands
+    for that many rows of its partition, so quantiles weight partitions
+    by size. A boundary's weighted rank is then off by less than one
+    stride per range-ordered partition, where a head slice (the codec
+    planner's plan.sample_table) sees only the first rows of each
+    partition — on time-ordered input, a few narrow windows.
+    Deterministic for a fixed input snapshot and split layout."""
+    from pyspark.sql import types as T
+
+    sel = df.select(*cols)
+    k = max(64, sample_rows // max(1, sel.rdd.getNumPartitions()))
+
+    def keep_strided(batches):
+        stride, pos, kept, n_kept = 1, 0, [], 0
+        for batch in batches:
+            idx = np.arange((-pos) % stride, batch.num_rows, stride)
+            pos += batch.num_rows
+            kept.append(pa.Table.from_batches([batch]).take(idx))
+            n_kept += len(idx)
+            while n_kept > 2 * k:
+                # kept row j sits at position j*stride: keep the even j
+                t = pa.concat_tables(kept)
+                kept = [t.take(np.arange(0, t.num_rows, 2))]
+                n_kept = kept[0].num_rows
+                stride *= 2
+        if n_kept:
+            t = pa.concat_tables(kept)
+            t = t.append_column(_STRIDE_COL,
+                                pa.array(np.full(t.num_rows, stride)))
+            yield from t.to_batches()
+
+    schema = T.StructType(sel.schema.fields
+                          + [T.StructField(_STRIDE_COL, T.LongType())])
+    return sel.mapInArrow(keep_strided, schema).toArrow()
+
+
+def _quantile_bounds(keys: list, weights, n_buckets: int) -> list:
+    """<= n_buckets - 1 deduplicated boundaries: the sorted key tuple
+    at each k/n_buckets point of cumulative weight (the evenly-spaced
+    pick rows[k * len // n_buckets] when every weight is 1). Tuples
+    with a null component are skipped."""
+    order = sorted((i for i, t in enumerate(keys)
+                    if not any(v is None for v in t)),
+                   key=keys.__getitem__)
+    if not order:
+        return []
+    cum = np.cumsum(np.asarray(weights, np.int64)[order])
+    total = int(cum[-1])
+    out: list = []
+    for k in range(1, n_buckets):
+        j = int(np.searchsorted(cum, k * total // n_buckets, side="right"))
+        b = keys[order[min(len(order) - 1, j)]]
+        if not out or b != out[-1]:
+            out.append(b)
+    return out
+
+
 def _cluster_bucket_boundaries(df: DataFrame, cols: List[str],
                                n_buckets: int) -> list:
     """Deterministic quantile boundaries for cluster_by bucketing over
-    the COMPOSITE of all cluster columns (lexicographic tuples): sorted
-    evenly-spaced picks from the engine's cross-partition sample
-    (deterministic for a fixed input file listing — the resume
-    invariant), deduplicated. Returns <= n_buckets - 1 tuples; a row's
-    bucket is |{b : row_tuple > b}|.
+    the COMPOSITE of all cluster columns (lexicographic tuples): the
+    stride-weighted quantiles of a whole-partition strided sample
+    (_strided_sample; deterministic for a fixed input snapshot and split
+    layout — the resume invariant), deduplicated. Returns
+    <= n_buckets - 1 tuples; a row's bucket is |{b : row_tuple > b}|.
 
     Composite (not cols[0]-only) boundaries matter when the first
     cluster column is low-cardinality: cluster_by=["lang", "doc_id"]
     with 5 langs must still split into thousands of buckets — the
     doc_id component provides the split points within each lang."""
-    from .plan import sample_table
-
-    # the sample must out-resolve the bucket count, or quantile picks
-    # collapse adjacent boundaries
-    tbl = sample_table(df.select(*cols),
-                       sample_rows=max(8_192, 4 * n_buckets))
-    pycols = [tbl.column(i).to_pylist() for i in range(tbl.num_columns)]
-    rows = sorted(t for t in zip(*pycols)
-                  if not any(v is None for v in t))
-    if not rows:
-        return []
-    out: list = []
-    for k in range(1, n_buckets):
-        b = rows[min(len(rows) - 1, k * len(rows) // n_buckets)]
-        if not out or b != out[-1]:
-            out.append(b)
-    return out
+    tbl = _strided_sample(df, cols,
+                          max(_BOUNDARY_SAMPLE_ROWS, 4 * n_buckets))
+    pycols = [tbl.column(i).to_pylist() for i in range(len(cols))]
+    return _quantile_bounds(list(zip(*pycols)),
+                            tbl.column(_STRIDE_COL).to_pylist(), n_buckets)
 
 
 _ZORDER_BITS = 8  # 256 quantile ranks per dimension
@@ -401,29 +460,20 @@ _ZORDER_BITS = 8  # 256 quantile ranks per dimension
 
 def _zorder_rank_bounds(df: DataFrame, cols: List[str], bits: int):
     """Per-column INDEPENDENT quantile boundaries from one shared
-    deterministic sample — each column contributes its own 2^bits-rank
-    space to the interleave (unlike the lexicographic composite bounds,
-    where later columns only split within first-column ties). Returns
-    (per_col_bounds, sample_columns) — the raw sample comes back too so
-    the caller can derive z-value bucket boundaries from the SAME rows
-    (one sample pass total)."""
-    from .plan import sample_table
-
+    whole-partition strided sample (_strided_sample) — each column
+    contributes its own 2^bits-rank space to the interleave (unlike the
+    lexicographic composite bounds, where later columns only split
+    within first-column ties). Returns (per_col_bounds, sample_columns,
+    sample_strides) — the raw sample and its row weights come back too
+    so the caller can derive z-value bucket boundaries from the SAME
+    rows (one sample pass total)."""
     q = 1 << bits
-    tbl = sample_table(df.select(*cols), sample_rows=max(8_192, 4 * q))
+    tbl = _strided_sample(df, cols, max(_BOUNDARY_SAMPLE_ROWS, 4 * q))
     sample_cols = [tbl.column(i).to_pylist() for i in range(len(cols))]
-    per_col = []
-    for vals_all in sample_cols:
-        vals = sorted(v for v in vals_all if v is not None)
-        out: list = []
-        for k in range(1, q):
-            if not vals:
-                break
-            b = (vals[min(len(vals) - 1, k * len(vals) // q)],)
-            if not out or b != out[-1]:
-                out.append(b)
-        per_col.append(out)
-    return per_col, sample_cols
+    strides = tbl.column(_STRIDE_COL).to_pylist()
+    per_col = [_quantile_bounds([(v,) for v in vals], strides, q)
+               for vals in sample_cols]
+    return per_col, sample_cols, strides
 
 
 def _zorder_value_sql(rank_cols: List[str], bits: int) -> str:
@@ -666,10 +716,13 @@ def encode_table(df: DataFrame, key: Optional[str] = None,
     same snapshot can draw different boundaries, which would break the
     exactly-once resume protocol (a resumed run must reproduce partition
     k's exact contents). Instead the boundaries are quantiles of the
-    engine's own deterministic cross-partition sample (plan.sample_table)
-    over the COMPOSITE of all cluster columns, rows are bucketed with a
-    JVM binary-search when() tree (O(log buckets) per row), and buckets
-    are hash-shuffled — fully deterministic for a fixed input snapshot.
+    engine's own deterministic whole-partition strided sample
+    (_strided_sample: every partition keeps every s-th row, not the head
+    slice plan.sample_table gives the codec planner) over the COMPOSITE
+    of all cluster columns, rows are bucketed with a JVM binary-search
+    when() tree (O(log buckets) per row), and buckets are hash-shuffled
+    — fully deterministic for a fixed input snapshot and a fixed input
+    split layout.
     Several buckets per partition (4x, scaling with the partition count)
     keep the bucket->partition hash assignment balanced; blocks stay
     range-tight because rows are still sorted by the cluster columns
@@ -728,7 +781,8 @@ def layout_for_encode(df: DataFrame, key: Optional[str] = None,
         n_buckets = min(_CLUSTER_BUCKETS_PER_PART * p, _CLUSTER_MAX_BUCKETS)
         if cluster_layout == "zorder" and len(cols) > 1:
             bits = min(_ZORDER_BITS, 62 // len(cols))
-            per_col, sample_cols = _zorder_rank_bounds(df, cols, bits)
+            per_col, sample_cols, strides = _zorder_rank_bounds(df, cols,
+                                                                bits)
             rank_cols = []
             # materialize ranks as temp columns ONCE: embedding each
             # rank CASE tree into every interleave term would duplicate
@@ -741,14 +795,9 @@ def layout_for_encode(df: DataFrame, key: Optional[str] = None,
                 rank_cols.append(rc)
             df = df.withColumn("__z",
                                F.expr(_zorder_value_sql(rank_cols, bits)))
-            zs = sorted(_zorder_py_z(per_col, sample_cols, bits))
-            zb: list = []
-            for k in range(1, n_buckets):
-                if not zs:
-                    break
-                b = (zs[min(len(zs) - 1, k * len(zs) // n_buckets)],)
-                if not zb or b != zb[-1]:
-                    zb.append(b)
+            zb = _quantile_bounds(
+                [(z,) for z in _zorder_py_z(per_col, sample_cols, bits)],
+                strides, n_buckets)
             bucket = (_cluster_bucket_expr(["__z"], zb) if zb
                       else F.lit(0))
             df = (df.withColumn("__cluster_bucket", bucket)

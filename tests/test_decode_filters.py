@@ -63,6 +63,34 @@ def test_cluster_by_prune_rate_at_least_90pct(spark, clustered_blocks):
     assert surviving >= 1
 
 
+def test_cluster_bucket_boundaries_are_real_quantiles(spark):
+    """The cluster_by boundaries come from a whole-partition strided
+    sample, so on the time-ordered pages fixture each of 16 buckets holds
+    n/16 rows to within 2*P*s (P input partitions, s the final sample
+    stride): each boundary's stride-weighted rank is off by less than one
+    stride per partition, and a bucket has two boundaries. A head-slice
+    sample of each partition fails this by orders of magnitude."""
+    from sparkolumnar.engine.encode import (_BOUNDARY_SAMPLE_ROWS,
+                                            _STRIDE_COL,
+                                            _cluster_bucket_boundaries,
+                                            _cluster_bucket_expr,
+                                            _strided_sample)
+
+    pages = pages_df(spark, 48_000)
+    n = pages.count()
+    n_parts = pages.rdd.getNumPartitions()
+    stride = max(_strided_sample(pages, ["warc_ts"], _BOUNDARY_SAMPLE_ROWS)
+                 .column(_STRIDE_COL).to_pylist())
+    bounds = _cluster_bucket_boundaries(pages, ["warc_ts"], 16)
+    assert len(bounds) == 15
+    counts = [r["count"] for r in
+              pages.groupBy(_cluster_bucket_expr(["warc_ts"], bounds)
+                            .alias("b")).count().orderBy("b").collect()]
+    assert len(counts) == 16 and sum(counts) == n
+    slack = 2 * n_parts * stride
+    assert all(abs(c - n / 16) <= slack for c in counts), (counts, slack)
+
+
 def test_filters_one_sided_and_eq_ops(spark, clustered_blocks):
     pages, blocks = clustered_blocks
     mid = pages.selectExpr(
