@@ -70,20 +70,27 @@ def uvarint_decode(buf: np.ndarray, n: int = -1) -> Tuple[np.ndarray, int]:
     """Decode LEB128 varints from a uint8 array.
 
     Returns (values: uint64 array, bytes_consumed). If n >= 0, decodes
-    exactly n values; otherwise decodes to the end of the buffer.
+    exactly n values and scans only the first 10 * n bytes (a varint is
+    at most 10 bytes), so a header read costs O(n), not O(buffer): if
+    fewer than n varints end in a full 10 * n window, one of them is
+    longer than 10 bytes; in a shorter buffer, the stream is too short.
+    Otherwise decodes to the end of the buffer.
     """
     b = np.frombuffer(buf, dtype=np.uint8) if isinstance(buf, (bytes, memoryview, bytearray)) else buf
     if len(b) == 0:
         if n > 0:
             raise CodecError("varint stream too short")
         return np.empty(0, dtype=np.uint64), 0
-    is_end = (b & 0x80) == 0
-    ends = np.flatnonzero(is_end)
+    if n >= 0:
+        b = b[:10 * n]
+    ends = np.flatnonzero((b & 0x80) == 0)
     if n < 0:
         n = len(ends)
         if len(b) and (len(ends) == 0 or ends[-1] != len(b) - 1):
             raise CodecError("trailing bytes in varint stream")
     elif len(ends) < n:
+        if len(b) == 10 * n:
+            raise CodecError("varint longer than 10 bytes")
         raise CodecError("varint stream too short")
     ends = ends[:n]
     consumed = int(ends[-1]) + 1 if n else 0

@@ -40,6 +40,7 @@ scheme handling would grow.
 from __future__ import annotations
 
 import hashlib
+import os
 import posixpath
 from dataclasses import asdict
 from typing import List, Optional, Sequence
@@ -51,7 +52,7 @@ from pyspark.sql.pandas.types import from_arrow_schema
 
 from .encode import encode_batch
 from .selector import BALANCED
-from .tableio import TableIO
+from .tableio import TableIO, require_path_level
 
 DEFAULT_BATCH_ROWS = 32768
 
@@ -70,10 +71,12 @@ def _fs_for(path_or_uri: str, filesystem=None):
     wins (the path is used as-is within it — e.g. a SubTreeFileSystem
     with relative paths); otherwise scheme'd URIs resolve through
     pyarrow.fs.FileSystem.from_uri (s3://, hdfs://, gs://, file:), and
-    bare paths map to the local filesystem. This is the seam that makes
-    the direct paths storage-agnostic: every task-side open/write/rename
-    below goes through the returned filesystem, never through os.*
-    directly. pyarrow filesystems pickle, so they ride the task closure.
+    bare paths map to the local filesystem, made absolute (a path listed
+    on the driver then names the same file in a task). This is the seam
+    that makes the direct paths storage-agnostic: every task-side
+    open/write/rename below goes through the returned filesystem, never
+    through os.* directly. pyarrow filesystems pickle, so they ride the
+    task closure.
 
     Atomicity note: fs.move is an atomic rename on local/HDFS; object
     stores implement it as copy+delete, where the content-addressed
@@ -85,7 +88,7 @@ def _fs_for(path_or_uri: str, filesystem=None):
         return filesystem, path_or_uri
     if "://" in path_or_uri or path_or_uri.startswith("file:"):
         return pafs.FileSystem.from_uri(path_or_uri)
-    return pafs.LocalFileSystem(), path_or_uri
+    return pafs.LocalFileSystem(), os.path.abspath(path_or_uri)
 
 
 def list_parquet_files(spark: SparkSession, input_path: str,
@@ -109,6 +112,14 @@ def list_parquet_files(spark: SparkSession, input_path: str,
                         i.path[len(input_path.rstrip("/")):].split("/")))
     return sorted(_local_path(f)
                   for f in spark.read.parquet(input_path).inputFiles())
+
+
+def snapshot_ids(blocks_root: str, filesystem=None) -> set:
+    """snapshot_id values of a blocks table, read from the hive directory
+    names of its files (a pyarrow listing: no Spark job)."""
+    fs, root = _fs_for(blocks_root, filesystem)
+    return {_path_block_coords(f)[0]
+            for f in list_parquet_files(None, root, fs)} - {None}
 
 
 def _snapshot_of_files(files: Sequence[str], files_per_task: int = 1) -> str:
@@ -503,7 +514,14 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
     own output file (part-<k>.parquet, published by an atomic move of an
     attempt-unique temp, so a retried task idempotently replaces it).
     The decoded table bytes never cross JVM<->Python IPC nor the JVM
-    parquet writer. Files, and so output parts, are in (snapshot_id,
+    parquet writer. The driver lists the blocks files through the blocks
+    root's own pyarrow filesystem (list_parquet_files: hidden and `_`
+    paths skipped, as in Spark's listing), so a read runs no Spark job
+    besides its decode tasks; the tasks read the files through that same
+    filesystem, the output path resolves through its own. The listing
+    needs path-level access: without `blocks_root`, a TableIO without it
+    raises NotImplementedError (tableio.require_path_level) before any
+    task runs. Files, and so output parts, are in (snapshot_id,
     part_id) order. The output directory is overwritten: its visible
     parquet files (an earlier decode's, or a Spark job's part files)
     are deleted before any task starts; a read of a
@@ -565,10 +583,11 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
                          block_keep_py, decodable_fields,
                          filter_root_columns_of, make_decode_fn)
 
-    if filesystem is not None and blocks_root is not None:
-        files = list_parquet_files(spark, blocks_root, filesystem)
-    else:
-        files = [_local_path(f) for f in io.read_blocks().inputFiles()]
+    if blocks_root is None:
+        require_path_level(io, "decode_files_direct")
+        blocks_root = io.blocks_path
+    blocks_fs, blocks_root = _fs_for(blocks_root, filesystem)
+    files = list_parquet_files(spark, blocks_root, blocks_fs)
     if snapshots is not None:
         # snapshot-scoped read: snapshot_id is the first hive partition
         # key, so this prunes whole directories before any task launches
@@ -588,7 +607,7 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
         if target is not None:
             names = decodable = set(target.names)
         else:
-            metas = _first_block_columns(files, filesystem)
+            metas = _first_block_columns(files, blocks_fs)
             names = {m["name"] for m in metas}
             decodable = {f.name for f in decodable_fields(metas)}
         roots = filter_root_columns_of(groups, names)
@@ -641,8 +660,7 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
 
         from .blocks import payload_field, validity_field
 
-        rfs, rpath = _fs_for(path, filesystem)
-        with pq.ParquetFile(rfs.open_input_file(rpath)) as pf:
+        with pq.ParquetFile(blocks_fs.open_input_file(path)) as pf:
             cnt["total"] += pf.metadata.num_rows
             if seqs is None and groups:
                 meta = pf.read(columns=["seq", "n_rows", "columns"])
@@ -673,7 +691,7 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
                 # one row group per block (direct writers), so the seq
                 # filter prunes at row-group granularity via statistics
                 it = pads.dataset(
-                    rpath, format="parquet", filesystem=rfs
+                    path, format="parquet", filesystem=blocks_fs
                 ).to_batches(columns=read_cols,
                              filter=pads.field("seq").isin(seqs))
             sid, pid = _path_block_coords(path)
@@ -729,7 +747,7 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
             budgets = {(str(s), int(p), int(q)): w for (s, p, q), w in
                        _limit_budgets(blocks_df, limit, offset, del_agg,
                                       verify).items()}
-        n_read, n_total = len(budgets), _count_blocks(files, filesystem)
+        n_read, n_total = len(budgets), _count_blocks(files, blocks_fs)
         window = {}
         for s, p, q in budgets:
             window.setdefault((s, p), []).append(q)
@@ -786,7 +804,7 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
         # the output readable, with the schema a decode writes (the compat
         # target, else the first block's decodable columns) projected
         fields = (list(target) if target is not None else decodable_fields(
-            metas or _first_block_columns(files, filesystem)))
+            metas or _first_block_columns(files, blocks_fs)))
         empty = pa.RecordBatch.from_pylist([], schema=pa.schema(
             [f for f in fields if columns is None or f.name in columns]))
         _publish([empty], out_fs, f"{out_root}/part-00000.parquet",

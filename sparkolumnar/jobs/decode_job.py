@@ -5,12 +5,13 @@ Usage:
       --blocks /path/to/engine_dir/blocks --output /path/to/decoded \
       [--columns url,text] [--verify] [--limit N [--offset M]]
 
-Every read runs engine.direct.decode_files_direct: each task reads its
-blocks files with pyarrow, decodes them and writes its own output parquet
-file, so decoded rows never cross JVM<->Python IPC, and the job prints one
-JSON line {"rows", "blocks_read", "blocks_total"}. --output is
-overwritten. Requested and predicate columns are checked before any task
-starts.
+Every read runs engine.direct.decode_files_direct: the driver lists the
+blocks files with pyarrow, each task reads its files with pyarrow, decodes
+them and writes its own output parquet file, so decoded rows never cross
+JVM<->Python IPC and a read without --limit runs one Spark job; the job
+prints one JSON line {"rows", "blocks_read", "blocks_total"}. --output is
+overwritten. Requested and predicate columns, and --snapshot ids, are
+checked before any task starts.
 
 --limit N decodes only the first N rows in (snapshot_id, part_id, seq)
 order: only the window's blocks are read and partially-needed blocks
@@ -157,14 +158,14 @@ def main(argv=None) -> None:
     from sparkolumnar.engine.tableio import TableIO
 
     io = TableIO(spark, os.path.dirname(args.blocks.rstrip("/")))
-    deletes = None if args.ignore_deletes else io.read_deletes()
+    deletes = not args.ignore_deletes and io.has_deletes()
     snaps = args.snapshot.split(",") if args.snapshot else None
     if snaps is not None:
-        # validate up front (one metadata-only distinct) so a typo'd id
-        # fails loudly instead of decoding an empty table
-        have = {r["snapshot_id"] for r in
-                spark.read.parquet(args.blocks)
-                .select("snapshot_id").distinct().collect()}
+        from sparkolumnar.engine.direct import snapshot_ids
+
+        # validate up front (from the snapshot_id= directory names) so a
+        # typo'd id fails loudly instead of decoding an empty table
+        have = snapshot_ids(args.blocks)
         missing = [s for s in snaps if s not in have]
         if missing:
             raise ValueError(f"snapshots {missing} not in the table "
@@ -186,8 +187,9 @@ def main(argv=None) -> None:
         from sparkolumnar.engine.analyze import metadata_stats
 
         blocks = _scope(spark.read.parquet(args.blocks))
-        rows = metadata_stats(blocks, columns=cols,
-                              deletes=deletes).collect()
+        rows = metadata_stats(
+            blocks, columns=cols,
+            deletes=io.read_deletes() if deletes else None).collect()
         print(json.dumps({"columns": {
             r["column"]: dict(
                 {"n_blocks": r["n_blocks"], "n_rows": r["n_rows"],
@@ -196,7 +198,7 @@ def main(argv=None) -> None:
                  "max_f64": r["max_f64"], "min_str": r["min_str"],
                  "max_str": r["max_str"]},
                 **({"n_rows_live": r["n_rows_live"]}
-                   if deletes is not None else {}))
+                   if deletes else {}))
             for r in rows}}))
         return
     from sparkolumnar.engine.direct import decode_files_direct
@@ -215,7 +217,7 @@ def main(argv=None) -> None:
                               verify=args.verify, filters=filters,
                               schema=schema,
                               deletes_path=(io.deletes_path
-                                            if deletes is not None else None),
+                                            if deletes else None),
                               snapshots=snaps, limit=args.limit,
                               offset=args.offset)
     print(json.dumps({"rows": res["n_rows"],

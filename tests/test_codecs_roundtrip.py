@@ -258,3 +258,42 @@ def test_date32_roundtrip_all_int_codecs():
     ch = select_encode(arr)
     got = get_codec(ch.codec).decode(ch.payload, len(arr), arr.type)
     assert got.to_pylist() == arr.to_pylist()
+
+
+def test_uvarint_decode_n_scans_only_its_window():
+    """With n given, a header read scans at most 10 * n bytes: a
+    terabyte-long buffer (a stride-0 view, nothing allocated) decodes its
+    first 3 varints without touching the rest."""
+    from sparkolumnar.codecs.nputil import uvarint_decode
+
+    vals, used = uvarint_decode(np.broadcast_to(np.uint8(1), (1 << 40,)), 3)
+    assert vals.tolist() == [1, 1, 1] and used == 3
+    # a buffer of continuation bytes: the window holds no varint end
+    vals, used = uvarint_decode(np.broadcast_to(np.uint8(0x81), (1 << 40,)),
+                                0)
+    assert vals.tolist() == [] and used == 0
+
+
+def test_uvarint_decode_error_messages():
+    """Both malformed-stream errors survive the bounded scan: fewer than n
+    varint ends in a full 10 * n window means one varint is longer than
+    10 bytes; a buffer shorter than the window is too short."""
+    from sparkolumnar.codecs.nputil import CodecError, uvarint_decode
+
+    with pytest.raises(CodecError, match="varint longer than 10 bytes"):
+        uvarint_decode(np.array([0x80] * 11 + [0x01], np.uint8), 1)
+    with pytest.raises(CodecError, match="varint longer than 10 bytes"):
+        # the second varint runs past the 20-byte window
+        uvarint_decode(np.array([0x05] + [0x80] * 25 + [0x01], np.uint8), 2)
+    with pytest.raises(CodecError, match="varint stream too short"):
+        uvarint_decode(np.array([0x05, 0x80, 0x80], np.uint8), 2)
+    with pytest.raises(CodecError, match="varint stream too short"):
+        uvarint_decode(b"", 1)
+    with pytest.raises(CodecError, match="varint overflows 64 bits"):
+        uvarint_decode(np.array([0xFF] * 9 + [0x02], np.uint8), 1)
+    # a full stream still decodes to its end without n
+    buf = np.array([0x05, 0x96, 0x01], np.uint8)
+    vals, used = uvarint_decode(buf)
+    assert vals.tolist() == [5, 150] and used == 3
+    vals, used = uvarint_decode(buf, 2)
+    assert vals.tolist() == [5, 150] and used == 3

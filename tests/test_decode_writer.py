@@ -382,3 +382,100 @@ def test_decode_writer_retry_is_exactly_once(tmp_path):
         capture_output=True, text=True, timeout=600, env=env)
     assert out.returncode == 0, out.stderr[-4000:]
     assert "RETRY_OK" in out.stdout
+
+
+@pytest.mark.parametrize("argv", [["--verify"], ["--eq", "lang=en"],
+                                  ["--prefix", "txt=row 1"],
+                                  ["--columns", "k,txt"]])
+def test_one_spark_job_per_read(spark, table, tmp_path, capsys, argv):
+    """A read runs its decode tasks as one Spark job and nothing else:
+    the blocks files are listed through pyarrow, not through a
+    spark.read.parquet whose schema inference is a job of its own."""
+    sc = spark.sparkContext
+    group = "decode-read-" + "-".join(argv)
+    sc.setJobGroup(group, "decode_job read")
+    try:
+        res = _decode_job(["--blocks", table.blocks_path,
+                           "--output", str(tmp_path / "dec")] + argv, capsys)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert res["rows"] > 0
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def _codec_decode_log(monkeypatch):
+    """Record the arrow type of every column payload a codec decodes
+    (decode and decode_range), by wrapping what get_codec returns."""
+    import sparkolumnar.codecs as codecs
+
+    real = codecs.get_codec
+    log = []
+
+    class Logged:
+        def __init__(self, codec):
+            self._codec = codec
+
+        def __getattr__(self, name):
+            return getattr(self._codec, name)
+
+        def decode(self, payload, n, typ):
+            log.append(str(typ))
+            return self._codec.decode(payload, n, typ)
+
+        def decode_range(self, payload, n, typ, start, stop):
+            log.append(str(typ))
+            return self._codec.decode_range(payload, n, typ, start, stop)
+
+    monkeypatch.setattr(codecs, "get_codec", lambda name: Logged(real(name)))
+    return log
+
+
+@pytest.mark.parametrize("columns, compat", [(None, False), (["s"], False),
+                                             (["s"], True)])
+def test_filter_columns_decode_first(monkeypatch, columns, compat):
+    """Without verify, a kept block decodes its filter column first and
+    its other columns only when a row matches; with verify every column
+    of every kept block decodes (checksums cover whole columns). Both
+    paths return the same rows, DuckDB's for the same predicate; under a
+    compat target (which keeps the filter column and null-fills the
+    fields neither requested nor stored) too. One type per column, so
+    the logged types name the decoded columns."""
+    import duckdb
+
+    from sparkolumnar.engine.decode import make_decode_fn
+    from sparkolumnar.engine.encode import encode_batch
+
+    n, rows_per_block = 2000, 250
+    src = pa.table({
+        "k": pa.array([2 * i for i in range(n)], pa.int64()),
+        "x": pa.array([i * 0.5 for i in range(n)], pa.float64()),
+        "s": pa.array([None if i % 13 == 0 else f"s{i}" for i in range(n)],
+                      pa.string())})
+    blocks = [encode_batch(b, "lm", 0, seq) for seq, b in enumerate(
+        src.to_batches(max_chunksize=rows_per_block))]
+    # zone maps keep blocks 0, 2 (odd probes inside their k bounds, no
+    # match) and 4 (2400 = 2 * 1200 matches); the rest are pruned
+    filters = [("k", "in", [101, 1001, 2400])]
+    want = duckdb.sql(
+        "SELECT * FROM src WHERE k IN (101, 1001, 2400)").arrow()
+    target = None
+    if compat:
+        target = pa.schema(list(src.schema) + [pa.field("z", pa.int32())])
+        want = want.append_column("z", pa.nulls(want.num_rows, pa.int32()))
+        # fields outside the requested and filter columns are null-filled
+        want = want.set_column(1, "x", pa.nulls(want.num_rows, pa.float64()))
+    else:
+        want = want.select(columns or src.column_names)
+    want = want.to_pylist()
+    log = _codec_decode_log(monkeypatch)
+    got = {}
+    for verify in (False, True):
+        del log[:]
+        fn = make_decode_fn(verify=verify, columns=columns, target=target,
+                            groups=[filters])
+        got[verify] = [r for b in fn(iter(blocks)) for r in b.to_pylist()]
+        decoded = 3 if verify else 1  # blocks whose other columns decode
+        assert log.count("int64") == 3
+        assert log.count("string") == decoded
+        assert log.count("double") == (decoded if columns is None else 0)
+    assert got[False] == got[True] == want
