@@ -195,10 +195,12 @@ def make_decode_fn(verify: bool = False, columns: Optional[List[str]] = None,
 
     groups (normalized filters=, see _normalize_filters): the filter
     runs here, per block, on every read path — block_keep_py on the
-    metadata before any payload buffer is touched, then the projection
-    plus the filter's root columns decode, exact_filter_mask_py masks
-    the rows, and the columns only the filter needed are dropped, so
-    the batches carry exactly the requested columns. session_tz: the
+    metadata before any payload buffer is touched, then the filter's
+    root columns decode, exact_filter_mask_py masks the rows, the rest
+    of the projection decodes only in blocks with a match (every block
+    under verify; see _decode_masked), and the columns only the filter
+    needed are dropped, so the batches carry exactly the requested
+    columns. session_tz: the
     Spark session timezone the filter literals are read in."""
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
@@ -251,59 +253,53 @@ def make_decode_fn(verify: bool = False, columns: Optional[List[str]] = None,
 def _decode_masked(row, verify, columns, target, dmask, groups,
                    session_tz) -> pa.RecordBatch:
     """Decode a block's rows that survive its delete bitmap and the
-    filter. Without verify, the filter's root columns decode first
-    (late materialization): their exact mask, ANDed with the live rows,
+    filter. The filter's root columns decode first (late
+    materialization): their exact mask, ANDed with the live rows,
     decides whether the block's other columns decode at all, so a block
     whose zone maps and blooms could not prune it but which holds no
-    matching row costs only its filter columns. With verify, every
-    projected column decodes whole, so its checksum is recomputed over
-    the stored rows, and the masks apply afterwards. Either way the
-    filter-only columns are dropped unless a compat target keeps them
-    (its own fields). A (skip, take) budget applies only after this —
-    budgets count LIVE rows when deletes are present (decode_blocks
-    computed them from n_rows - n_deleted)."""
+    matching row costs only its filter columns. With verify the other
+    columns always decode, so every projected column's checksum is
+    recomputed over its stored rows. The filter-only columns are dropped
+    unless a compat target keeps them (its own fields). A (skip, take)
+    budget applies only after this — budgets count LIVE rows when
+    deletes are present (decode_blocks computed them from
+    n_rows - n_deleted)."""
     names = (set(target.names) if target is not None
              else {m["name"] for m in row["columns"]})
     roots = filter_root_columns_of(groups, names) if groups else []
     extra = ([c for c in roots if c not in columns]
              if columns is not None else [])
     cols = list(columns) + extra if extra else columns
+    fields = (list(target) if target is not None
+              else decodable_fields(row["columns"], cols))
     keep = None
     if dmask is not None:
         bits = np.unpackbits(np.frombuffer(dmask, np.uint8))[:row["n_rows"]]
         keep = ~bits.astype(bool)
-    if verify:
-        out = decode_block_row(row, verify=True, columns=cols, target=target)
-        if keep is not None:
-            out = out.filter(pa.array(keep))
-        if groups:
-            out = out.filter(exact_filter_mask_py(out, groups, session_tz))
+    decoded = {}
+    if groups:
+        first = decode_block_row(
+            row, verify=verify, columns=roots,
+            target=None if target is None else pa.schema(
+                [f for f in target if f.name in roots]))
+        match = exact_filter_mask_py(first, groups, session_tz
+                                     ).to_numpy(zero_copy_only=False)
+        keep = match if keep is None else keep & match
+        decoded = dict(zip(first.schema.names, first.columns))
+    if not (verify or keep.any()):
+        out = pa.RecordBatch.from_pylist([], schema=pa.schema(fields))
     else:
-        fields = (list(target) if target is not None
-                  else decodable_fields(row["columns"], cols))
-        decoded = {}
-        if groups:
-            first = decode_block_row(
-                row, columns=roots,
-                target=None if target is None else pa.schema(
-                    [f for f in target if f.name in roots]))
-            match = exact_filter_mask_py(first, groups, session_tz
-                                         ).to_numpy(zero_copy_only=False)
-            keep = match if keep is None else keep & match
-            decoded = dict(zip(first.schema.names, first.columns))
-        if not keep.any():
-            out = pa.RecordBatch.from_pylist([], schema=pa.schema(fields))
-        else:
-            # with a target, decode_block_row null-fills the fields
-            # outside `rest`: the root columns decoded above replace those
-            rest = [f.name for f in fields if f.name not in decoded
-                    and (cols is None or f.name in cols)]
-            other = decode_block_row(row, columns=rest, target=target)
-            decoded = {**dict(zip(other.schema.names, other.columns)),
-                       **decoded}
-            out = pa.RecordBatch.from_arrays(
-                [decoded[f.name] for f in fields],
-                schema=pa.schema(fields)).filter(pa.array(keep))
+        # with a target, decode_block_row null-fills the fields outside
+        # `rest`: the root columns decoded above replace those
+        rest = [f.name for f in fields if f.name not in decoded
+                and (cols is None or f.name in cols)]
+        other = decode_block_row(row, verify=verify, columns=rest,
+                                 target=target)
+        decoded = {**dict(zip(other.schema.names, other.columns)),
+                   **decoded}
+        out = pa.RecordBatch.from_arrays(
+            [decoded[f.name] for f in fields],
+            schema=pa.schema(fields)).filter(pa.array(keep))
     if target is None:
         out = out.drop_columns(extra)
     return out

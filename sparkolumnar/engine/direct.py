@@ -114,12 +114,18 @@ def list_parquet_files(spark: SparkSession, input_path: str,
                   for f in spark.read.parquet(input_path).inputFiles())
 
 
-def snapshot_ids(blocks_root: str, filesystem=None) -> set:
-    """snapshot_id values of a blocks table, read from the hive directory
-    names of its files (a pyarrow listing: no Spark job)."""
-    fs, root = _fs_for(blocks_root, filesystem)
-    return {_path_block_coords(f)[0]
-            for f in list_parquet_files(None, root, fs)} - {None}
+def snapshot_files(files: Sequence[str], snapshots) -> List[str]:
+    """The files of a blocks listing that belong to `snapshots` (each
+    path's snapshot_id= directory). An id with no file in the listing
+    raises ValueError naming the available ids, so a typo'd id fails
+    loudly instead of reading an empty table."""
+    have = {_path_block_coords(f)[0] for f in files} - {None}
+    wanted = [str(s) for s in snapshots]
+    missing = [s for s in wanted if s not in have]
+    if missing:
+        raise ValueError(f"snapshots {missing} not in the table "
+                         f"(available: {sorted(have)})")
+    return [f for f in files if _path_block_coords(f)[0] in wanted]
 
 
 def _snapshot_of_files(files: Sequence[str], files_per_task: int = 1) -> str:
@@ -531,7 +537,9 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
 
     Requested columns, and the filter's root columns, are checked on the
     driver before any task starts (against `schema` when given, else one
-    block's metadata); an unknown one raises ValueError.
+    block's metadata); an unknown one raises ValueError. So is every id
+    in `snapshots` (snapshot_files, against the listing's snapshot_id=
+    directories).
 
     filters: same predicate language as decode_blocks(filters=)
     (= == != < <= > >= between / IN lists / OR-of-conjunction groups),
@@ -591,8 +599,7 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
     if snapshots is not None:
         # snapshot-scoped read: snapshot_id is the first hive partition
         # key, so this prunes whole directories before any task launches
-        snaps = {str(s) for s in snapshots}
-        files = [f for f in files if _path_block_coords(f)[0] in snaps]
+        files = snapshot_files(files, snapshots)
     files.sort(key=lambda f: (_path_block_coords(f), f))
     groups = _normalize_filters(filters)
     target = None

@@ -159,25 +159,22 @@ def main(argv=None) -> None:
 
     io = TableIO(spark, os.path.dirname(args.blocks.rstrip("/")))
     deletes = not args.ignore_deletes and io.has_deletes()
+    # every branch checks the --snapshot ids against the file listing it
+    # reads (decode_files_direct's, or _scope's DataFrame's)
     snaps = args.snapshot.split(",") if args.snapshot else None
-    if snaps is not None:
-        from sparkolumnar.engine.direct import snapshot_ids
-
-        # validate up front (from the snapshot_id= directory names) so a
-        # typo'd id fails loudly instead of decoding an empty table
-        have = snapshot_ids(args.blocks)
-        missing = [s for s in snaps if s not in have]
-        if missing:
-            raise ValueError(f"snapshots {missing} not in the table "
-                             f"(available: {sorted(have)})")
 
     def _scope(blocks_df):
         if snaps is None:
             return blocks_df
-        # snapshot_id is the leading hive partition key: Catalyst turns
-        # this into PartitionFilters — unlisted directories never scan
         from pyspark.sql import functions as F
 
+        from sparkolumnar.engine.direct import snapshot_files
+
+        # check the ids against the DataFrame's own file listing (no
+        # Spark job); snapshot_id is the leading hive partition key, so
+        # Catalyst turns the filter into PartitionFilters — unlisted
+        # directories never scan
+        snapshot_files(blocks_df.inputFiles(), snaps)
         return blocks_df.where(F.col("snapshot_id").isin(snaps))
 
     if args.stats:

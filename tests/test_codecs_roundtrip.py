@@ -262,14 +262,15 @@ def test_date32_roundtrip_all_int_codecs():
 
 def test_uvarint_decode_n_scans_only_its_window():
     """With n given, a header read scans at most 10 * n bytes: a
-    terabyte-long buffer (a stride-0 view, nothing allocated) decodes its
-    first 3 varints without touching the rest."""
+    buffer of 2**60 bytes (a stride-0 view, nothing allocated; no
+    machine could back a full scan of it) decodes its first 3 varints
+    without touching the rest."""
     from sparkolumnar.codecs.nputil import uvarint_decode
 
-    vals, used = uvarint_decode(np.broadcast_to(np.uint8(1), (1 << 40,)), 3)
+    vals, used = uvarint_decode(np.broadcast_to(np.uint8(1), (1 << 60,)), 3)
     assert vals.tolist() == [1, 1, 1] and used == 3
     # a buffer of continuation bytes: the window holds no varint end
-    vals, used = uvarint_decode(np.broadcast_to(np.uint8(0x81), (1 << 40,)),
+    vals, used = uvarint_decode(np.broadcast_to(np.uint8(0x81), (1 << 60,)),
                                 0)
     assert vals.tolist() == [] and used == 0
 

@@ -294,3 +294,19 @@ def test_decode_job_snapshot_unknown_rejected(spark, tmp_path, capsys):
         decode_job.main(["--blocks", str(tmp_path / "t" / "blocks"),
                          "--output", str(tmp_path / "d"),
                          "--snapshot", "nope"])
+
+
+@pytest.mark.parametrize("flag", ["--stats", "--merge-schema"])
+def test_decode_job_snapshot_unknown_rejected_on_spark_reads(
+        spark, tmp_path, capsys, flag):
+    """--stats and --merge-schema read the table through a Spark
+    DataFrame; a typo'd --snapshot fails there too, naming the ids."""
+    from sparkolumnar.jobs import decode_job
+
+    io = TableIO(spark, str(tmp_path / "t"))
+    io.write_blocks(encode_table(pages_df(spark, 200), snapshot_id="s1",
+                                 partitions=1))
+    with pytest.raises(ValueError, match=r"\['nope'\].*available: \['s1'\]"):
+        decode_job.main(["--blocks", str(tmp_path / "t" / "blocks"),
+                         "--output", str(tmp_path / "d"),
+                         "--snapshot", "s1,nope", flag])
