@@ -11,7 +11,6 @@ from __future__ import annotations
 
 from typing import Iterator, List, Optional
 
-import numpy as np
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, types as T
@@ -172,6 +171,24 @@ COORD_COLS = ["snapshot_id", "part_id", "seq"]
 _DELETE_CLOSURE_MAX_BYTES = 32 << 20
 
 
+def block_rows(batch: pa.RecordBatch) -> Iterator[dict]:
+    """THE block-row loop over a blocks batch, one dict per block: the
+    metadata columns (and the _del_mask bitmap, n_rows/8 bytes) go
+    through to_pylist; the multi-MB payload and validity binaries are
+    exposed zero-copy as memoryviews over their Arrow buffers (None where
+    null) — to_pylist on those would copy every payload into a Python
+    bytes object before decoding."""
+    names = batch.schema.names
+    meta = [n for n in names if n in _BASE_COLS or n == DELETE_MASK_COL]
+    pay = [(n, batch.column(i)) for i, n in enumerate(names)
+           if n not in meta]
+    for j, row in enumerate(batch.select(meta).to_pylist()):
+        for name, col in pay:
+            s = col[j]
+            row[name] = memoryview(s.as_buffer()) if s.is_valid else None
+        yield row
+
+
 def make_decode_fn(verify: bool = False, columns: Optional[List[str]] = None,
                    target: Optional[pa.Schema] = None,
                    budgets: Optional[dict] = None,
@@ -195,28 +212,16 @@ def make_decode_fn(verify: bool = False, columns: Optional[List[str]] = None,
 
     groups (normalized filters=, see _normalize_filters): the filter
     runs here, per block, on every read path — block_keep_py on the
-    metadata before any payload buffer is touched, then the filter's
-    root columns decode, exact_filter_mask_py masks the rows, the rest
-    of the projection decodes only in blocks with a match (every block
+    metadata before any payload is decoded, then the filter's root
+    columns decode, exact_filter_mask_py masks the rows, the rest of
+    the projection decodes only in blocks with a match (every block
     under verify; see _decode_masked), and the columns only the filter
     needed are dropped, so the batches carry exactly the requested
-    columns. session_tz: the
-    Spark session timezone the filter literals are read in."""
+    columns. session_tz: the Spark session timezone the filter literals
+    are read in."""
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
-            names = b.schema.names
-            # metadata columns go through to_pylist (small structs); the
-            # multi-MB payload/validity binaries are accessed zero-copy via
-            # Arrow buffers — to_pylist on those would copy every payload
-            # into a Python bytes object before decoding. The delete
-            # bitmap rides with the metadata (n_rows/8 bytes — tiny next
-            # to payloads).
-            meta_rows = b.select(
-                [n for n in names
-                 if n in _BASE_COLS or n == DELETE_MASK_COL]).to_pylist()
-            pay_cols = [(n, b.column(i)) for i, n in enumerate(names)
-                        if n not in _BASE_COLS and n != DELETE_MASK_COL]
-            for j, row in enumerate(meta_rows):
+            for row in block_rows(b):
                 budget = None
                 if budgets is not None:
                     budget = budgets.get(
@@ -231,10 +236,6 @@ def make_decode_fn(verify: bool = False, columns: Optional[List[str]] = None,
                 if dmask is None and del_masks is not None:
                     dmask = del_masks.get(
                         (row["snapshot_id"], row["part_id"], row["seq"]))
-                for name, col in pay_cols:
-                    s = col[j]
-                    row[name] = (memoryview(s.as_buffer())
-                                 if s.is_valid else None)
                 if dmask is None and not groups:
                     out = decode_block_row(row, verify=verify,
                                            columns=columns, target=target,
@@ -250,42 +251,65 @@ def make_decode_fn(verify: bool = False, columns: Optional[List[str]] = None,
     return fn
 
 
+def filter_mask(row, groups, session_tz=None,
+                target: Optional[pa.Schema] = None, verify: bool = False):
+    """THE row-filter step of a kept block, run by every read
+    (_decode_masked, the direct limit count pass) and by the delete scan
+    (deletes.compute_deletes): decode the filter's root columns, null-fill
+    any root the block's schema generation lacks, apply
+    exact_filter_mask_py. The roots are those of `target` when given (the
+    compat read's schema, or the table's types for a delete): they decode
+    compat-cast to its types, and a missing one reads as all-null of its
+    type. Without a target they are the block's own, as stored. Returns
+    (bool mask, decoded roots batch)."""
+    names = (set(target.names) if target is not None
+             else {m["name"] for m in row["columns"]})
+    roots = filter_root_columns_of(groups, names)
+    first = decode_block_row(
+        row, verify=verify, columns=roots,
+        target=None if target is None else pa.schema(
+            [f for f in target if f.name in roots]))
+    return (exact_filter_mask_py(first, groups, session_tz)
+            .to_numpy(zero_copy_only=False), first)
+
+
+def _keep_mask(row, dmask, groups, session_tz, target=None, verify=False):
+    """The rows of a kept block a read returns: the live rows of its
+    delete bitmap `dmask`, ANDed with filter_mask under `groups`.
+    Returns (bool mask, or None when neither applies; the decoded
+    filter roots batch, or None)."""
+    from .deletes import live_rows
+
+    keep = None if dmask is None else live_rows(dmask, row["n_rows"])
+    first = None
+    if groups:
+        match, first = filter_mask(row, groups, session_tz, target, verify)
+        keep = match if keep is None else keep & match
+    return keep, first
+
+
 def _decode_masked(row, verify, columns, target, dmask, groups,
                    session_tz) -> pa.RecordBatch:
     """Decode a block's rows that survive its delete bitmap and the
     filter. The filter's root columns decode first (late
-    materialization): their exact mask, ANDed with the live rows,
-    decides whether the block's other columns decode at all, so a block
-    whose zone maps and blooms could not prune it but which holds no
-    matching row costs only its filter columns. With verify the other
+    materialization, filter_mask): their exact mask, ANDed with the live
+    rows, decides whether the block's other columns decode at all, so a
+    block whose zone maps and blooms could not prune it but which holds
+    no matching row costs only its filter columns. With verify the other
     columns always decode, so every projected column's checksum is
     recomputed over its stored rows. The filter-only columns are dropped
     unless a compat target keeps them (its own fields). A (skip, take)
     budget applies only after this — budgets count LIVE rows when
     deletes are present (decode_blocks computed them from
     n_rows - n_deleted)."""
-    names = (set(target.names) if target is not None
-             else {m["name"] for m in row["columns"]})
-    roots = filter_root_columns_of(groups, names) if groups else []
-    extra = ([c for c in roots if c not in columns]
+    keep, first = _keep_mask(row, dmask, groups, session_tz, target, verify)
+    decoded = {} if first is None else dict(zip(first.schema.names,
+                                                first.columns))
+    extra = ([c for c in decoded if c not in columns]
              if columns is not None else [])
     cols = list(columns) + extra if extra else columns
     fields = (list(target) if target is not None
               else decodable_fields(row["columns"], cols))
-    keep = None
-    if dmask is not None:
-        bits = np.unpackbits(np.frombuffer(dmask, np.uint8))[:row["n_rows"]]
-        keep = ~bits.astype(bool)
-    decoded = {}
-    if groups:
-        first = decode_block_row(
-            row, verify=verify, columns=roots,
-            target=None if target is None else pa.schema(
-                [f for f in target if f.name in roots]))
-        match = exact_filter_mask_py(first, groups, session_tz
-                                     ).to_numpy(zero_copy_only=False)
-        keep = match if keep is None else keep & match
-        decoded = dict(zip(first.schema.names, first.columns))
     if not (verify or keep.any()):
         out = pa.RecordBatch.from_pylist([], schema=pa.schema(fields))
     else:
@@ -533,32 +557,16 @@ def _window_budgets(blocks, to_skip: int, limit: int) -> dict:
     return budgets
 
 
-def _limit_budgets(blocks_df: DataFrame, limit: int, offset: int,
-                   del_agg: Optional[DataFrame] = None,
-                   verify: bool = False) -> dict:
-    """The limit window of a predicate-free read (decode_blocks and
-    direct.decode_files_direct): _prefix_budgets over `blocks_df`, with
-    each block's row count reduced by its delete popcount when `del_agg`
-    (deletes.aggregate_deletes) is given, so budgets count LIVE rows —
-    the decode fn mirrors this by masking first, then slicing the
-    (skip, take) window."""
-    from pyspark.sql import functions as F
+def _warn_partial_verify() -> None:
+    """Warn that a limit read's partially-decoded edge blocks skip
+    checksum verification."""
+    import warnings
 
-    if del_agg is not None:
-        blocks_df = (blocks_df.join(
-            F.broadcast(del_agg.select(*COORD_COLS, DELETE_COUNT_COL)),
-            COORD_COLS, "left")
-            .withColumn("n_rows", F.col("n_rows") - F.coalesce(
-                F.col(DELETE_COUNT_COL), F.lit(0))))
-    if verify:
-        import warnings
-
-        warnings.warn(
-            "decode with limit= and verify=True: partially-decoded edge "
-            "blocks skip checksum verification (checksums cover whole "
-            "columns); whole blocks in the window are verified",
-            stacklevel=3)
-    return _prefix_budgets(blocks_df, limit, offset)
+    warnings.warn(
+        "decode with limit= and verify=True: partially-decoded edge "
+        "blocks skip checksum verification (checksums cover whole "
+        "columns); whole blocks in the window are verified",
+        stacklevel=3)
 
 
 def _budget_range_pred(lo: tuple, hi: tuple):
@@ -1306,9 +1314,10 @@ def decode_blocks(blocks_df: DataFrame, schema: Optional[T.StructType] = None,
 
     deletes: optional merge-on-read position-delete rows (DELETES_SCHEMA,
     written by engine.deletes.delete_where / TableIO.read_deletes()).
-    Bitmaps are OR-aggregated per block and BROADCAST-joined onto the
-    block scan by the physically-unique (snapshot_id, part_id, seq)
-    coordinates — payload bytes never shuffle — and deleted rows are
+    Bitmaps are OR-aggregated per block and shipped in the task closure
+    (above _DELETE_CLOSURE_MAX_BYTES, broadcast-joined onto the block
+    scan by the physically-unique (snapshot_id, part_id, seq)
+    coordinates) — payload bytes never shuffle — and deleted rows are
     masked out AFTER decode and checksum verification (checksums cover
     the stored columns). Composes with filters (they see live rows
     only), compat, verify, projection, and limit/offset (budgets count
@@ -1374,7 +1383,18 @@ def decode_blocks(blocks_df: DataFrame, schema: Optional[T.StructType] = None,
         session_tz = _session_tz(blocks_df)
         blocks_df = _prune_blocks(blocks_df, groups)
     if limit is not None and not groups:
-        budgets = _limit_budgets(blocks_df, limit, offset, del_agg, verify)
+        # budgets count LIVE rows: each block's row count less its delete
+        # popcount (the decode fn masks first, then slices the window)
+        counted = blocks_df
+        if del_agg is not None:
+            counted = (blocks_df.join(
+                F.broadcast(del_agg.select(*COORD_COLS, DELETE_COUNT_COL)),
+                COORD_COLS, "left")
+                .withColumn("n_rows", F.col("n_rows") - F.coalesce(
+                    F.col(DELETE_COUNT_COL), F.lit(0))))
+        if verify:
+            _warn_partial_verify()
+        budgets = _prefix_budgets(counted, limit, offset)
         if budgets:
             keys = list(budgets)  # insertion order == sorted block order
             blocks_df = blocks_df.where(_budget_range_pred(keys[0], keys[-1]))

@@ -6,10 +6,11 @@ predicate's columns from blocks that survive the same zone/bloom/prefix
 pruning as a filtered read, evaluates the predicate exactly (the same
 exact_filter_mask_py every read path uses), and emits ONE small
 row per MATCHED block: the block coordinates plus an MSB-first position
-bitmap (bit i set = row i of the block is deleted). Readers OR all
-bitmaps per block and mask rows out AFTER decode — and after checksum
-verification, which covers the stored column as written —
-decode_blocks(deletes=...). compact_snapshot applies the bitmaps
+bitmap (bit i set = row i of the block is deleted). The bitmap format
+lives here only: pack_positions writes it, or_bitmaps merges a block's
+bitmaps, live_rows reads it. Readers OR all bitmaps per block and mask
+rows out AFTER decode — and after checksum verification, which covers
+the stored column as written. compact_snapshot applies the bitmaps
 physically and retires them.
 
 Scale notes (the 100 TB design):
@@ -17,13 +18,15 @@ Scale notes (the 100 TB design):
 * the delete scan shuffles NOTHING — blocks are pruned on metadata,
   only the predicate columns' payload bytes are read/decoded in-task,
   and the output is ~n_rows/8 bytes per matched block;
-* read-time apply is a BROADCAST join of the aggregated bitmaps onto
-  the block scan keyed by the physically-unique (snapshot_id, part_id,
-  seq) coordinates — the multi-MB payload bytes never shuffle. Bitmaps
-  are tiny (8 KiB per 64k-row block), but pervasive deletes across a
-  whole 100 TB table should be compacted away rather than broadcast
-  forever — the same operational rule Iceberg applies to its delete
-  files;
+* read-time apply never moves payload bytes: decode_job's tasks load
+  their own files' bitmaps in-task (direct.decode_files_direct), and
+  decode_blocks(deletes=) ships the OR'd bitmaps in the task closure,
+  falling back to a broadcast join keyed by the physically-unique
+  (snapshot_id, part_id, seq) coordinates only above
+  decode._DELETE_CLOSURE_MAX_BYTES. Bitmaps are tiny (8 KiB per
+  64k-row block), but pervasive deletes across a whole 100 TB table
+  should be compacted away rather than carried forever — the same
+  operational rule Iceberg applies to its delete files;
 * delete ops are idempotent: bitmaps OR at read time, so re-running a
   crashed delete appends an identical bitmap and changes nothing;
 * deletes are keyed by block COORDINATES (not content-addressed
@@ -44,7 +47,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .decode import COORD_COLS, DELETE_COUNT_COL, DELETE_MASK_COL
+from .decode import (COORD_COLS, DELETE_COUNT_COL, DELETE_MASK_COL,
+                     block_keep_py, block_rows, decode_block_row,
+                     filter_mask)
 
 DELETES_SCHEMA = T.StructType([
     T.StructField("block_id", T.StringType(), False),
@@ -69,69 +74,68 @@ _DELETES_ARROW = pa.schema([
 ])
 
 
-def _mark_rows_fn(groups, fcols, null_fill: dict, session_tz):
-    """mapInArrow fn over a (pruned, projected) block scan: decode the
-    predicate columns of each block, evaluate the predicate exactly, and
-    emit a position-bitmap row per block with >= 1 match. null_fill maps
-    predicate root columns to their arrow type so a schema generation
-    that predates the column evaluates it as all-null (the same
-    cross-generation semantics the filtered read has)."""
-    from .decode import (_BASE_COLS, block_keep_py, decode_block_row,
-                         exact_filter_mask_py)
+def pack_positions(mask) -> bytes:
+    """THE position-bitmap encoding: a bool mask over a block's stored
+    rows (True = deleted) as MSB-first bytes (np.packbits), bit i = row
+    i, length ceil(n_rows / 8)."""
+    return np.packbits(np.asarray(mask, bool)).tobytes()
 
+
+def or_bitmaps(bitmaps) -> bytes:
+    """OR of a block's position bitmaps (bitmaps of unequal length OR
+    over their common prefix): the merge every reader applies, so
+    overlapping or repeated delete ops stay exact."""
+    arrs = [np.frombuffer(b, np.uint8) for b in bitmaps]
+    acc = np.zeros(max(len(a) for a in arrs), np.uint8)
+    for a in arrs:
+        acc[:len(a)] |= a
+    return acc.tobytes()
+
+
+def live_rows(bitmap, n_rows: int) -> np.ndarray:
+    """Bool mask of the rows a position bitmap leaves live among a
+    block's `n_rows` (its popcount is n_rows - live_rows(...).sum())."""
+    bits = np.unpackbits(np.frombuffer(bitmap, np.uint8))[:n_rows]
+    return ~bits.astype(bool)
+
+
+def _emit_deletes(mask_of):
+    """mapInArrow fn over a block scan: mask_of(row) gives a block's
+    deleted rows as a bool mask (None: the block cannot match), and each
+    block with >= 1 deleted row emits one _DELETES_ARROW row."""
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.compute as pc
-
         for b in batches:
-            names = b.schema.names
-            meta_rows = b.select(
-                [n for n in names if n in _BASE_COLS]).to_pylist()
-            pay_cols = [(n, b.column(i)) for i, n in enumerate(names)
-                        if n not in _BASE_COLS]
             out = {f.name: [] for f in _DELETES_ARROW}
-            for j, row in enumerate(meta_rows):
-                if not block_keep_py(row["columns"], groups,
-                                     session_tz=session_tz,
-                                     n_rows=row["n_rows"]):
-                    continue
-                for name, col in pay_cols:
-                    s = col[j]
-                    row[name] = (memoryview(s.as_buffer())
-                                 if s.is_valid else None)
-                present = {m["name"] for m in row["columns"]}
-                have = [c for c in fcols if c in present]
-                n = row["n_rows"]
-                # a generation that predates EVERY predicate column still
-                # needs an n-row batch of nulls (IS NULL must match it)
-                arrays, names_out = [], []
-                if have:
-                    dec = decode_block_row(row, columns=have)
-                    arrays, names_out = list(dec.columns), list(
-                        dec.schema.names)
-                for c in fcols:
-                    if c not in present:
-                        arrays.append(pa.nulls(n, null_fill[c]))
-                        names_out.append(c)
-                dec = pa.RecordBatch.from_arrays(arrays, names=names_out)
-                mask = pc.fill_null(
-                    exact_filter_mask_py(dec, groups, session_tz), False)
-                bits = np.asarray(mask).astype(bool)
-                n_del = int(bits.sum())
+            for row in block_rows(b):
+                mask = mask_of(row)
+                n_del = 0 if mask is None else int(mask.sum())
                 if not n_del:
                     continue
-                out["block_id"].append(row["block_id"])
-                out["snapshot_id"].append(row["snapshot_id"])
-                out["part_id"].append(row["part_id"])
-                out["seq"].append(row["seq"])
-                out["n_rows"].append(n)
+                for c in ("block_id", "snapshot_id", "part_id", "seq",
+                          "n_rows"):
+                    out[c].append(row[c])
                 out["n_deleted"].append(n_del)
-                out["positions"].append(np.packbits(bits).tobytes())
+                out["positions"].append(pack_positions(mask))
             if out["block_id"]:
                 yield pa.RecordBatch.from_arrays(
                     [pa.array(out[f.name], f.type) for f in _DELETES_ARROW],
                     schema=_DELETES_ARROW)
 
     return fn
+
+
+def _predicate_mask(groups, target: pa.Schema, session_tz):
+    """Deleted rows of a block under a predicate: the blocks block_keep_py
+    keeps run the read path's filter step (decode.filter_mask) with the
+    table's types for the predicate's root columns as target, so a
+    schema generation that predates a column evaluates it as all-null
+    (the cross-generation semantics of a filtered read)."""
+    def mask(row):
+        if block_keep_py(row["columns"], groups, session_tz=session_tz,
+                         n_rows=row["n_rows"]):
+            return filter_mask(row, groups, session_tz, target)[0]
+
+    return mask
 
 
 def compute_deletes(blocks_df: DataFrame, filters) -> DataFrame:
@@ -171,65 +175,39 @@ def compute_deletes(blocks_df: DataFrame, filters) -> DataFrame:
         raise ValueError(
             f"delete predicate columns {unknown} not in the blocks table "
             f"(available: {sorted(types)})")
-    null_fill = {c: arrow_type_from_str(types[c]) for c in fcols}
+    target = pa.schema([pa.field(c, arrow_type_from_str(types[c]))
+                        for c in fcols])
     pruned = _prune_blocks(blocks_df, groups)
     return _scan_columns(pruned, fcols).mapInArrow(
-        _mark_rows_fn(groups, fcols, null_fill, _session_tz(blocks_df)),
+        _emit_deletes(_predicate_mask(groups, target,
+                                      _session_tz(blocks_df))),
         DELETES_SCHEMA)
 
 
-def _mark_keys_fn(on: str, keys_pa):
-    """mapInArrow fn: decode ONLY the key column of each block and emit a
-    bitmap row for rows whose key is in the broadcast key set (a pyarrow
-    array in the closure; vectorized pc.is_in per block — zero shuffle).
-    A null stored key never matches (SQL join semantics; the key set was
-    null-stripped by the caller). Blocks from a schema generation
-    without the key column cannot match and emit nothing."""
-    from .decode import _BASE_COLS, decode_block_row
+def _key_mask(on: str, keys_pa):
+    """Deleted rows of a block under a MERGE key set: decode ONLY the key
+    column and mark the rows whose key is in the broadcast key set (a
+    pyarrow array in the closure; vectorized pc.is_in per block — zero
+    shuffle). A null stored key never matches (SQL join semantics; the
+    key set was null-stripped by the caller). Blocks from a schema
+    generation without the key column cannot match."""
+    import pyarrow.compute as pc
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.compute as pc
+    cast_keys: dict = {}
 
-        cast_keys: dict = {}
-        for b in batches:
-            names = b.schema.names
-            meta_rows = b.select(
-                [n for n in names if n in _BASE_COLS]).to_pylist()
-            pay_cols = [(n, b.column(i)) for i, n in enumerate(names)
-                        if n not in _BASE_COLS]
-            out = {f.name: [] for f in _DELETES_ARROW}
-            for j, row in enumerate(meta_rows):
-                if not any(m["name"] == on for m in row["columns"]):
-                    continue
-                for name, col in pay_cols:
-                    s = col[j]
-                    row[name] = (memoryview(s.as_buffer())
-                                 if s.is_valid else None)
-                dec = decode_block_row(row, columns=[on])
-                vals = dec.column(0)
-                vset = cast_keys.get(str(vals.type))
-                if vset is None:
-                    vset = (keys_pa if keys_pa.type == vals.type
-                            else keys_pa.cast(vals.type))
-                    cast_keys[str(vals.type)] = vset
-                mask = pc.fill_null(pc.is_in(vals, value_set=vset), False)
-                bits = np.asarray(mask).astype(bool)
-                n_del = int(bits.sum())
-                if not n_del:
-                    continue
-                out["block_id"].append(row["block_id"])
-                out["snapshot_id"].append(row["snapshot_id"])
-                out["part_id"].append(row["part_id"])
-                out["seq"].append(row["seq"])
-                out["n_rows"].append(row["n_rows"])
-                out["n_deleted"].append(n_del)
-                out["positions"].append(np.packbits(bits).tobytes())
-            if out["block_id"]:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(out[f.name], f.type) for f in _DELETES_ARROW],
-                    schema=_DELETES_ARROW)
+    def mask(row):
+        if not any(m["name"] == on for m in row["columns"]):
+            return None
+        vals = decode_block_row(row, columns=[on]).column(0)
+        vset = cast_keys.get(str(vals.type))
+        if vset is None:
+            vset = (keys_pa if keys_pa.type == vals.type
+                    else keys_pa.cast(vals.type))
+            cast_keys[str(vals.type)] = vset
+        return np.asarray(pc.fill_null(pc.is_in(vals, value_set=vset),
+                                       False))
 
-    return fn
+    return mask
 
 
 def _emit_key_rows_fn(ons):
@@ -239,23 +217,12 @@ def _emit_key_rows_fn(ons):
     rows (a 64-char string per stored row would dominate the shuffle);
     the caller joins it back from the tiny blocks metadata after the
     per-block re-pack."""
-    from .decode import _BASE_COLS, decode_block_row
-
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
-            names = b.schema.names
-            meta_rows = b.select(
-                [n for n in names if n in _BASE_COLS]).to_pylist()
-            pay_cols = [(n, b.column(i)) for i, n in enumerate(names)
-                        if n not in _BASE_COLS]
-            for j, row in enumerate(meta_rows):
+            for row in block_rows(b):
                 present = {m["name"] for m in row["columns"]}
                 if any(c not in present for c in ons):
                     continue
-                for name, col in pay_cols:
-                    s = col[j]
-                    row[name] = (memoryview(s.as_buffer())
-                                 if s.is_valid else None)
                 dec = decode_block_row(row, columns=list(ons))
                 by_name = {n: dec.column(i)
                            for i, n in enumerate(dec.schema.names)}
@@ -319,7 +286,7 @@ def compute_deletes_by_keys(blocks_df: DataFrame, keys_df: DataFrame,
         if n_keys <= broadcast_threshold:
             keys_pa = keys_df.toArrow().column(0).combine_chunks()
             keys_pa = keys_pa.drop_null()
-            return scan.mapInArrow(_mark_keys_fn(ons[0], keys_pa),
+            return scan.mapInArrow(_emit_deletes(_key_mask(ons[0], keys_pa)),
                                    DELETES_SCHEMA)
 
     key_fields = [T.StructField(f"_key{i}", _spark_type_of(types[c]), True)
@@ -354,7 +321,7 @@ def compute_deletes_by_keys(blocks_df: DataFrame, keys_df: DataFrame,
             "seq": [pdf["seq"].iloc[0]],
             "n_rows": [n],
             "n_deleted": [int(bits.sum())],
-            "positions": [np.packbits(bits).tobytes()]})
+            "positions": [pack_positions(bits)]})
 
     packed = hit.groupBy(*COORD_COLS).applyInPandas(_pack, pack_schema)
     meta = blocks_df.select(*COORD_COLS, "block_id")
@@ -383,18 +350,14 @@ def aggregate_deletes(deletes_df: DataFrame) -> DataFrame:
     def _or_group(pdf):
         import pandas as pd
 
-        arrs = [np.frombuffer(b, np.uint8) for b in pdf["positions"]]
-        acc = np.zeros(max(len(a) for a in arrs), np.uint8)
-        for a in arrs:
-            acc[:len(a)] |= a
+        acc = or_bitmaps(pdf["positions"])
         n_rows = int(pdf["n_rows"].max())
-        n_del = int(np.unpackbits(acc)[:n_rows].sum())
         return pd.DataFrame({
             "snapshot_id": [pdf["snapshot_id"].iloc[0]],
             "part_id": [pdf["part_id"].iloc[0]],
             "seq": [pdf["seq"].iloc[0]],
-            DELETE_MASK_COL: [acc.tobytes()],
-            DELETE_COUNT_COL: [n_del]})
+            DELETE_MASK_COL: [acc],
+            DELETE_COUNT_COL: [n_rows - int(live_rows(acc, n_rows).sum())]})
 
     return (deletes_df.groupBy(*COORD_COLS)
             .applyInPandas(_or_group, out_schema))
@@ -404,8 +367,8 @@ def delete_where(io, filters, merge_schema: bool = False) -> dict:
     """Predicate delete against a TableIO table: compute position-delete
     bitmaps for every stored row matching `filters` and APPEND them to
     the table's deletes file set (<base>/deletes). No data block is
-    rewritten; readers that pass the deletes to decode_blocks(deletes=)
-    — the decode_job default — stop seeing the rows immediately;
+    rewritten; decode_job (which applies them by default) and
+    decode_blocks(deletes=) stop seeing the rows immediately;
     compact_snapshot makes it physical.
 
     Idempotent: re-running the same predicate appends bitmaps that OR to

@@ -29,8 +29,9 @@ move, so a retried task idempotently replaces its own output. The
 checkpoint rows come from the tasks' metadata (lineage.commit_parts).
 The blocks files land inside TableIO's hive layout
 (blocks/snapshot_id=<s>/part_id=<p>/) WITHOUT the two partition columns
-in the file, exactly as Spark writes them, so read_blocks()/decode_blocks
-see one coherent table regardless of which writer produced each part.
+in the file, exactly as Spark writes them, so a Spark scan of the blocks
+table and decode_blocks see one coherent table regardless of which
+writer produced each part.
 
 At real scale the local-path file access generalizes: pyarrow.dataset
 speaks s3/hdfs/gcs through fsspec/Arrow filesystems; only _local_path's
@@ -164,11 +165,12 @@ def _path_block_coords(path: str):
 
 def _load_seq_masks(deletes_path: str, sid, pid, filesystem) -> dict:
     """{seq: OR'd MSB-first delete bitmap} for one (snapshot, part) — the
-    in-task twin of deletes.aggregate_deletes, reading ONLY this
+    in-task twin of decode_blocks' per-block OR, reading ONLY this
     coordinate's delete rows (the snapshot_id directory is pruned by the
     hive partitioning, part_id by a row filter over the tiny rows)."""
-    import numpy as np
     import pyarrow.dataset as pads
+
+    from .deletes import or_bitmaps
 
     dfs, droot = _fs_for(deletes_path, filesystem)
     dset = pads.dataset(droot, format="parquet", partitioning="hive",
@@ -176,19 +178,11 @@ def _load_seq_masks(deletes_path: str, sid, pid, filesystem) -> dict:
     t = dset.to_table(columns=["seq", "positions"],
                       filter=((pads.field("snapshot_id") == sid)
                               & (pads.field("part_id") == pid)))
-    masks: dict = {}
+    by_seq: dict = {}
     for s, b in zip(t.column("seq").to_pylist(),
                     t.column("positions").to_pylist()):
-        a = np.frombuffer(b, np.uint8)
-        cur = masks.get(s)
-        if cur is None:
-            masks[s] = a.copy()
-        else:
-            if len(a) > len(cur):
-                cur, a = a.copy(), cur
-                masks[s] = cur
-            cur[:len(a)] |= a
-    return {s: a.tobytes() for s, a in masks.items()}
+        by_seq.setdefault(s, []).append(b)
+    return {s: or_bitmaps(bs) for s, bs in by_seq.items()}
 
 
 def _append_del_masks(batch_iter, seq_masks: dict):
@@ -554,18 +548,19 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
     output holds exactly `columns`, as on the IPC path.
 
     limit=n (optionally with offset=m) writes only rows [m, m + n) in
-    (snapshot_id, part_id, seq, row) order, as decode_blocks(limit=):
-    without filters the window is decode._limit_budgets' per-block
-    (skip, take) map (live rows under deletes), edge blocks decode only
-    their range and verify skips them (checksums cover whole columns);
-    with filters the limit counts MATCHING rows — a first in-task pass
-    decodes only the filter's root columns of the blocks block_keep_py
-    keeps and returns their match counts, the driver turns them into
-    windows over matching rows, and the decode pass slices each block
-    after its exact mask. Either way only the window's (snapshot_id,
-    part_id) files are listed into tasks and only its blocks' row groups
-    are read; blocks_read is then the window's block count and
-    blocks_total is counted from the files' footers.
+    (snapshot_id, part_id, seq, row) order, as decode_blocks(limit=),
+    in two Spark jobs whatever the shape. A first in-task pass counts
+    the rows each block returns: its n_rows less its delete popcount,
+    read from the metadata and bitmaps alone, and with filters only the
+    matches — only the filter's root columns of the blocks block_keep_py
+    keeps decode, so the limit counts MATCHING rows. The driver walks
+    those counts into per-block (skip, take) windows
+    (decode._window_budgets), and the decode pass reads only the
+    window's (snapshot_id, part_id) files and its blocks' row groups.
+    A block without deletes or filters decodes only its window's range
+    (verify then skips edge blocks: checksums cover whole columns);
+    otherwise it is masked, then sliced. blocks_read is the window's
+    block count and blocks_total is counted from the files' footers.
 
     schema: optional Spark StructType for SCHEMA-EVOLVED tables (snapshots
     with different column sets). Every task then decodes compat against
@@ -587,8 +582,9 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
     Returns {"n_rows", "n_parts", "n_blocks_read", "n_blocks_total"}."""
     from pyarrow import fs as pafs
 
-    from .decode import (_limit_budgets, _normalize_filters, _window_budgets,
-                         block_keep_py, decodable_fields,
+    from .decode import (DELETE_MASK_COL, _keep_mask, _normalize_filters,
+                         _warn_partial_verify, _window_budgets,
+                         block_keep_py, block_rows, decodable_fields,
                          filter_root_columns_of, make_decode_fn)
 
     if blocks_root is None:
@@ -715,45 +711,32 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
     budgets = window = None
     n_read = n_total = None  # limit reads count blocks on the driver
     if limit is not None:
-        if groups:
-            def count(_, paths):
-                # per kept block, the rows the exact filter (and the
-                # delete bitmaps) let through; only root columns decode
-                fn = make_decode_fn(columns=roots, target=target,
-                                    groups=groups, session_tz=session_tz)
-                cnt, del_cache, found = {"read": 0, "total": 0}, {}, []
-                for path in paths:
-                    sid, pid = _path_block_coords(path)
-                    for bb in block_batches(path, roots, None, cnt,
-                                            del_cache):
-                        for j, q in enumerate(bb.column("seq").to_pylist()):
-                            n = sum(o.num_rows for o in fn([bb.slice(j, 1)]))
-                            if n:
-                                found.append({"snapshot_id": sid,
-                                              "part_id": pid, "seq": q,
-                                              "n": n})
-                return pa.RecordBatch.from_pylist(found, schema=_MATCH_COUNTS)
+        def count(_, paths):
+            # per block, the rows the delete bitmaps and the exact filter
+            # let through; only the filter's root columns decode
+            cnt, del_cache, found = {"read": 0, "total": 0}, {}, []
+            for path in paths:
+                sid, pid = _path_block_coords(path)
+                for bb in block_batches(path, roots, None, cnt, del_cache):
+                    for row in block_rows(bb):
+                        keep, _ = _keep_mask(
+                            row, row.get(DELETE_MASK_COL), groups,
+                            session_tz, target)
+                        n = row["n_rows"] if keep is None else int(
+                            keep.sum())
+                        if n:
+                            found.append({"snapshot_id": sid,
+                                          "part_id": pid,
+                                          "seq": row["seq"], "n": n})
+            return pa.RecordBatch.from_pylist(found, schema=_MATCH_COUNTS)
 
-            counts = _run_parts(spark, _file_groups(files, files_per_task),
-                                count, _MATCH_COUNTS)
-            budgets = _window_budgets(sorted(
-                ((r["snapshot_id"], r["part_id"], r["seq"]), r["n"])
-                for r in counts), offset, limit)
-        else:
-            blocks_df = io.read_blocks()
-            if snapshots is not None:
-                from pyspark.sql import functions as F
-
-                blocks_df = blocks_df.where(
-                    F.col("snapshot_id").isin(sorted(snaps)))
-            del_agg = None
-            if deletes_path is not None:
-                from .deletes import aggregate_deletes
-
-                del_agg = aggregate_deletes(spark.read.parquet(deletes_path))
-            budgets = {(str(s), int(p), int(q)): w for (s, p, q), w in
-                       _limit_budgets(blocks_df, limit, offset, del_agg,
-                                      verify).items()}
+        if verify and not groups:
+            _warn_partial_verify()
+        counts = _run_parts(spark, _file_groups(files, files_per_task),
+                            count, _MATCH_COUNTS)
+        budgets = _window_budgets(sorted(
+            ((r["snapshot_id"], r["part_id"], r["seq"]), r["n"])
+            for r in counts), offset, limit)
         n_read, n_total = len(budgets), _count_blocks(files, blocks_fs)
         window = {}
         for s, p, q in budgets:
@@ -848,8 +831,8 @@ def encode_table_direct_write(df, io: TableIO, key: Optional[str] = None,
     Returns a driver-small metadata DataFrame
     (part_id, n_blocks, n_rows, bytes_in, bytes_out); call .collect()
     (or aggregate) to run the job. The blocks land in io.blocks_path (or
-    blocks_root, as in encode_files_direct) and read back through
-    io.read_blocks() like any other snapshot.
+    blocks_root, as in encode_files_direct) and read back through the
+    TableIO like any other snapshot.
     """
     import pyarrow.parquet  # noqa: F401  (fail fast on driver if missing)
 

@@ -14,11 +14,12 @@ overwritten. Requested and predicate columns, and --snapshot ids, are
 checked before any task starts.
 
 --limit N decodes only the first N rows in (snapshot_id, part_id, seq)
-order: only the window's blocks are read and partially-needed blocks
-prefix-decode (the reference's take_n_finalize) — a preview read never
-materializes the whole table's payloads. With merge-on-read deletes the
-window counts live rows; combined with predicates, the limit counts
-MATCHING rows (filter first, then limit).
+order, in two Spark jobs whatever else is given: an in-task pass counts
+each block's rows, then only the window's blocks are read and
+partially-needed blocks prefix-decode (the reference's take_n_finalize)
+— a preview read never materializes the whole table's payloads. With
+merge-on-read deletes the window counts live rows; combined with
+predicates, the limit counts MATCHING rows (filter first, then limit).
 """
 
 from __future__ import annotations

@@ -25,9 +25,10 @@ BLOCK_ROWS = 400
 LANGS = ["en", "de", "fr", "es", "it"]
 
 
-def _encode(spark, base):
-    """Task-written blocks table: 3 parts of ~5 blocks each."""
-    pdf = pd.DataFrame({"k": range(N),
+def _encode(spark, base, snapshot_id="w1", k0=0):
+    """Task-written blocks table: 3 parts of ~5 blocks each (appended to
+    `base` as snapshot `snapshot_id`, keys from k0)."""
+    pdf = pd.DataFrame({"k": range(k0, k0 + N),
                         "lang": [LANGS[i * 7 % 11 % 5] for i in range(N)],
                         "txt": [f"row {i} " * (i % 4) for i in range(N)]})
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
@@ -36,7 +37,8 @@ def _encode(spark, base):
     try:
         io = TableIO(spark, base)
         encode_table_direct_write(spark.createDataFrame(pdf), io, key="k",
-                                  partitions=3, snapshot_id="w1").collect()
+                                  partitions=3,
+                                  snapshot_id=snapshot_id).collect()
     finally:
         spark.conf.set(key, old)
     return io
@@ -57,9 +59,24 @@ def deleted_table(spark, tmp_path_factory):
     return io
 
 
-def _in_coordinate_order(io) -> pa.Table:
-    """The table's live rows in (snapshot_id, part_id, seq, row) order,
-    decoded driver-side block by block."""
+@pytest.fixture(scope="module")
+def two_snapshot_table(spark, tmp_path_factory):
+    """Snapshots w1 and w2 (w2's keys follow w1's), then deletes that hit
+    both: lang = de, and a key range across the w1/w2 boundary."""
+    from sparkolumnar.engine.deletes import delete_where
+
+    base = str(tmp_path_factory.mktemp("dec_writer_snaps") / "t")
+    _encode(spark, base)
+    io = _encode(spark, base, snapshot_id="w2", k0=N)
+    delete_where(io, [("lang", "=", "de")])
+    delete_where(io, [("k", "between", N - 500, N + 499)])
+    return io
+
+
+def _in_coordinate_order(io, snapshot=None) -> pa.Table:
+    """The table's live rows (of `snapshot` only, when given) in
+    (snapshot_id, part_id, seq, row) order, decoded driver-side block by
+    block."""
     import pyarrow.dataset as pads
 
     from sparkolumnar.engine.decode import DELETE_MASK_COL
@@ -72,6 +89,8 @@ def _in_coordinate_order(io) -> pa.Table:
                  for r in aggregate_deletes(io.read_deletes()).collect()}
     rows = pads.dataset(io.blocks_path, format="parquet",
                         partitioning="hive").to_table().to_pylist()
+    if snapshot is not None:
+        rows = [r for r in rows if r["snapshot_id"] == snapshot]
     out = []
     for r in sorted(rows, key=lambda r: (r["snapshot_id"], r["part_id"],
                                          r["seq"])):
@@ -401,6 +420,73 @@ def test_one_spark_job_per_read(spark, table, tmp_path, capsys, argv):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert res["rows"] > 0
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+@pytest.mark.parametrize("fixture, argv", [
+    ("table", ["--limit", "100"]),
+    ("deleted_table", ["--limit", "100", "--offset", "130"]),
+    ("table", ["--eq", "lang=en", "--limit", "100"]),
+    ("two_snapshot_table", ["--limit", "100", "--snapshot", "w2"]),
+])
+def test_two_spark_jobs_per_limit_read(spark, request, tmp_path, capsys,
+                                       fixture, argv):
+    """A limit read runs an in-task count pass and the decode, with or
+    without predicates, deletes or --snapshot, and no other Spark job."""
+    io = request.getfixturevalue(fixture)
+    sc = spark.sparkContext
+    group = "decode-limit-" + "-".join(argv)
+    sc.setJobGroup(group, "decode_job limit read")
+    try:
+        res = _decode_job(["--blocks", io.blocks_path,
+                           "--output", str(tmp_path / "dec")] + argv, capsys)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert res["rows"] == 100
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+
+
+@pytest.mark.parametrize("limit, offset", [(250, 0), (700, 130)])
+def test_limit_reads_scoped_by_snapshot(spark, two_snapshot_table, tmp_path,
+                                        capsys, no_ipc_decode, limit, offset):
+    """--limit (and --offset) with --snapshot: the window runs over that
+    snapshot's live rows only, in coordinate order."""
+    io = two_snapshot_table
+    for snap in ("w1", "w2"):
+        want = _in_coordinate_order(io, snap).slice(offset, limit)
+        out = str(tmp_path / snap)
+        argv = ["--blocks", io.blocks_path, "--output", out, "--limit",
+                str(limit), "--snapshot", snap]
+        if offset:
+            argv += ["--offset", str(offset)]
+        res = _decode_job(argv, capsys)
+        got = _read_parts(out)
+        assert res["rows"] == got.num_rows == want.num_rows == limit
+        assert got.to_pylist() == want.to_pylist()
+
+
+def test_broadcast_join_deletes_match_the_closure_path(spark, deleted_table,
+                                                       monkeypatch):
+    """decode_blocks joins the delete bitmaps onto the scan as a _del_mask
+    column when they are too large to ship in the task closure: the
+    verify read, a filtered read and a limit/offset read return the
+    closure path's rows."""
+    import sparkolumnar.engine.decode as dec
+
+    io = deleted_table
+    reads = [dict(verify=True), dict(filters=[("lang", "=", "en")]),
+             dict(limit=300, offset=1200)]
+
+    def keys(kw):
+        return sorted(r["k"] for r in decode_blocks(
+            io.read_blocks(), deletes=io.read_deletes(), **kw).collect())
+
+    closure = [keys(kw) for kw in reads]
+    monkeypatch.setattr(dec, "_DELETE_CLOSURE_MAX_BYTES", -1)
+    joined = [keys(kw) for kw in reads]
+    live = _in_coordinate_order(io)
+    assert closure[0] == sorted(live.column("k").to_pylist())
+    assert len(closure[2]) == 300
+    assert joined == closure
 
 
 def _codec_decode_log(monkeypatch):

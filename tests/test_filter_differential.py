@@ -1,10 +1,11 @@
 """Differential tests of the one meaning of filters=: for random DNF
 predicates over random nullable Arrow tables, the IPC read
 (decode_blocks), the direct read (decode_files_direct) and DuckDB over
-the same Arrow table return the same rows. A cheaper in-process twin
-runs many more examples through the two functions every path shares:
-block_keep_py never drops a block holding a DuckDB-matched row, and
-exact_filter_mask_py selects exactly DuckDB's rows.
+the same Arrow table return the same rows, and a delete with the same
+predicate (compute_deletes) marks exactly those rows. A cheaper
+in-process twin runs many more examples through the two functions every
+path shares: block_keep_py never drops a block holding a DuckDB-matched
+row, and exact_filter_mask_py selects exactly DuckDB's rows.
 
 DuckDB reads the Arrow table into a native table first: a query straight
 over an Arrow scan pushes comparisons down into Arrow compute (IEEE
@@ -16,6 +17,7 @@ import datetime as dt
 from decimal import Decimal
 
 import duckdb
+import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 from hypothesis import HealthCheck, given, settings, strategies as st
@@ -23,6 +25,7 @@ from hypothesis import HealthCheck, given, settings, strategies as st
 from sparkolumnar.engine import decode_blocks, decode_files_direct, encode_table
 from sparkolumnar.engine.decode import (block_keep_py, decode_block_row,
                                         exact_filter_mask_py)
+from sparkolumnar.engine.deletes import compute_deletes
 from sparkolumnar.engine.encode import encode_batch
 from sparkolumnar.engine.tableio import TableIO
 
@@ -158,6 +161,10 @@ def test_ipc_direct_and_duckdb_agree_on_random_dnf(spark, tmp_path_factory,
                                  cluster_by="k", partitions=3,
                                  snapshot_id="diff"))
     blocks = io.read_blocks()
+    # each block's keys in stored row order, for the delete bitmaps
+    keys_at = {(r["snapshot_id"], r["part_id"], r["seq"]):
+               decode_block_row(r, columns=["k"]).column(0).to_pylist()
+               for r in blocks.toArrow().to_pylist()}
     for groups in predicates:
         want = _duckdb_keys(table, groups)
         ipc = {r["k"] for r in
@@ -168,4 +175,11 @@ def test_ipc_direct_and_duckdb_agree_on_random_dnf(spark, tmp_path_factory,
                             filters=groups)
         direct = {k for f in out.glob("*.parquet")
                   for k in pq.read_table(f).column("k").to_pylist()}
-        assert ipc == direct == want, (groups, ipc, direct, want)
+        deleted = {k for d in compute_deletes(blocks, groups).collect()
+                   for k, bit in zip(
+                       keys_at[(d["snapshot_id"], d["part_id"], d["seq"])],
+                       np.unpackbits(np.frombuffer(d["positions"],
+                                                   np.uint8)))
+                   if bit}
+        assert ipc == direct == deleted == want, (
+            groups, ipc, direct, deleted, want)
