@@ -258,8 +258,8 @@ def filter_mask(row, groups, session_tz=None,
     (deletes.compute_deletes): decode the filter's root columns, null-fill
     any root the block's schema generation lacks, apply
     exact_filter_mask_py. The roots are those of `target` when given (the
-    compat read's schema, or the table's types for a delete): they decode
-    compat-cast to its types, and a missing one reads as all-null of its
+    compat read's schema, or a delete's root types for the block): they
+    decode compat-cast to its types, and a missing one reads as all-null of its
     type. Without a target they are the block's own, as stored. Returns
     (bool mask, decoded roots batch)."""
     names = (set(target.names) if target is not None
@@ -441,6 +441,21 @@ def _widen_types(type_strs):
     return merged
 
 
+def _column_type_sets(blocks_df: DataFrame) -> list:
+    """Rows (name, pos, types), ordered by (pos, name): each column of ALL
+    blocks' metadata, its first position in a block and its set of arrow
+    type strings — one metadata-only distributed aggregate."""
+    from pyspark.sql import functions as F
+
+    return (blocks_df
+            .select(F.posexplode("columns").alias("pos", "c"))
+            .where(F.col("c.codec") != SKETCH_CODEC)
+            .groupBy(F.col("c.name").alias("name"))
+            .agg(F.min("pos").alias("pos"),
+                 F.collect_set("c.arrow_type").alias("types"))
+            .orderBy("pos", "name").collect())
+
+
 def union_schema_of_blocks(blocks_df: DataFrame) -> T.StructType:
     """Union Spark schema across ALL blocks' metadata — for tables whose
     snapshots span schema generations (streaming schema evolution), where
@@ -454,15 +469,7 @@ def union_schema_of_blocks(blocks_df: DataFrame) -> T.StructType:
     struct generations (a struct may gain or lose fields; missing fields
     null-fill at decode), recursively through list elements and map
     values; any other conflict raises."""
-    from pyspark.sql import functions as F
-
-    rows = (blocks_df
-            .select(F.posexplode("columns").alias("pos", "c"))
-            .where(F.col("c.codec") != SKETCH_CODEC)
-            .groupBy(F.col("c.name").alias("name"))
-            .agg(F.min("pos").alias("pos"),
-                 F.collect_set("c.arrow_type").alias("types"))
-            .orderBy("pos", "name").collect())
+    rows = _column_type_sets(blocks_df)
     if not rows:
         raise ValueError("blocks table is empty; pass an explicit schema")
     fields = []

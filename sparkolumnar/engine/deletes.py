@@ -124,15 +124,25 @@ def _emit_deletes(mask_of):
     return fn
 
 
-def _predicate_mask(groups, target: pa.Schema, session_tz):
+def _predicate_mask(groups, roots: dict, session_tz):
     """Deleted rows of a block under a predicate: the blocks block_keep_py
-    keeps run the read path's filter step (decode.filter_mask) with the
-    table's types for the predicate's root columns as target, so a
-    schema generation that predates a column evaluates it as all-null
-    (the cross-generation semantics of a filtered read)."""
+    keeps run the read path's filter step (decode.filter_mask). `roots`
+    maps each predicate root column to its arrow types across ALL blocks;
+    it evaluates at their widest (decode._widen_types, the type a
+    merge_schema read decodes it at), else at the block's stored type,
+    and as all-null in a generation that predates it."""
+    from .decode import _widen_types, arrow_type_from_str
+
+    wide = {c: _widen_types(ts) for c, ts in roots.items()}
+
     def mask(row):
         if block_keep_py(row["columns"], groups, session_tz=session_tz,
                          n_rows=row["n_rows"]):
+            stored = {m["name"]: m["arrow_type"] for m in row["columns"]}
+            target = pa.schema([
+                pa.field(c, arrow_type_from_str(stored.get(c, ts[0]))
+                         if wide[c] is None else wide[c])
+                for c, ts in roots.items()])
             return filter_mask(row, groups, session_tz, target)[0]
 
     return mask
@@ -149,7 +159,9 @@ def compute_deletes(blocks_df: DataFrame, filters) -> DataFrame:
     A block whose schema generation predates a predicate column
     evaluates that column as all-null (null comparisons never match —
     IS NULL deletes DO reach old generations, exactly like the read
-    path's cross-generation filter semantics).
+    path's cross-generation filter semantics). A column whose type
+    widened across generations (int -> long, float -> double) evaluates
+    at the wide type in every block, as a merge_schema read decodes it.
 
     blocks_df must be MATERIALIZED blocks (TableIO.read_blocks — the
     delete_where path — or a persisted/collected DataFrame), never a
@@ -160,26 +172,25 @@ def compute_deletes(blocks_df: DataFrame, filters) -> DataFrame:
     partition ids (Spark concatenates union partitions), silently
     producing bitmaps that match no block at read time. Stored tables
     pin their coordinates at write; that is the supported shape."""
-    from .decode import (_blocks_arrow_types, _normalize_filters,
+    from .decode import (_column_type_sets, _normalize_filters,
                          _prune_blocks, _scan_columns, _session_tz,
-                         arrow_type_from_str, filter_root_columns_of)
+                         filter_root_columns_of)
 
     if not filters:
         raise ValueError("delete_where needs a predicate — refusing to "
                          "delete every row of the table implicitly")
     groups = _normalize_filters(filters)
-    types = _blocks_arrow_types(blocks_df)
+    types = {r["name"]: sorted(r["types"])
+             for r in _column_type_sets(blocks_df)}
     fcols = filter_root_columns_of(filters, types)
     unknown = [c for c in fcols if c not in types]
     if unknown:
         raise ValueError(
             f"delete predicate columns {unknown} not in the blocks table "
             f"(available: {sorted(types)})")
-    target = pa.schema([pa.field(c, arrow_type_from_str(types[c]))
-                        for c in fcols])
     pruned = _prune_blocks(blocks_df, groups)
     return _scan_columns(pruned, fcols).mapInArrow(
-        _emit_deletes(_predicate_mask(groups, target,
+        _emit_deletes(_predicate_mask(groups, {c: types[c] for c in fcols},
                                       _session_tz(blocks_df))),
         DELETES_SCHEMA)
 

@@ -231,6 +231,8 @@ _MATCH_COUNTS = pa.schema([pa.field("snapshot_id", pa.string()),
                            pa.field("part_id", pa.int32()),
                            pa.field("seq", pa.int32()),
                            pa.field("n", pa.int64())])
+# the block metadata fields the decode fn reads with each block's payload
+_ROW_META = ("block_id", "seq", "n_rows", "columns")
 
 
 def _sweep(fs, target: str) -> None:
@@ -652,12 +654,14 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
         scan_want = list(scan_want) + [c for c in roots
                                        if c not in scan_want]
 
-    def block_batches(path, want, seqs, cnt, del_cache, coords=False):
-        """One blocks file's block rows for the decode fn: the payload
-        and validity fields of `want` (None = all) of the blocks in
-        `seqs`, or without `seqs` of those block_keep_py keeps (a
-        metadata-only pass first), delete bitmaps and (coords=True) the
-        file's coordinates appended. Counts blocks into `cnt`."""
+    def block_batches(path, want, seqs, cnt, del_cache, coords=False,
+                      meta_cols=_ROW_META):
+        """One blocks file's block rows for the decode fn: the
+        `meta_cols` fields and the payload and validity fields of `want`
+        (None = all) of the blocks in `seqs`, or without `seqs` of those
+        block_keep_py keeps (a metadata-only pass first), delete bitmaps
+        and (coords=True) the file's coordinates appended. Counts blocks
+        into `cnt`."""
         import pyarrow.dataset as pads
         import pyarrow.parquet as pq
 
@@ -683,8 +687,7 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
                 # columns' payload bytes are never read from disk
                 have = set(pf.schema_arrow.names)
                 read_cols = (
-                    [c for c in ("block_id", "seq", "n_rows", "columns")
-                     if c in have]
+                    [c for c in meta_cols if c in have]
                     + [f for c in want
                        for f in (payload_field(c), validity_field(c))
                        if f in have])
@@ -713,11 +716,14 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
     if limit is not None:
         def count(_, paths):
             # per block, the rows the delete bitmaps and the exact filter
-            # let through; only the filter's root columns decode
+            # let through; only the filter's root columns decode, and
+            # without a filter only seq and n_rows are read
             cnt, del_cache, found = {"read": 0, "total": 0}, {}, []
+            meta_cols = _ROW_META if groups else ("seq", "n_rows")
             for path in paths:
                 sid, pid = _path_block_coords(path)
-                for bb in block_batches(path, roots, None, cnt, del_cache):
+                for bb in block_batches(path, roots, None, cnt, del_cache,
+                                        meta_cols=meta_cols):
                     for row in block_rows(bb):
                         keep, _ = _keep_mask(
                             row, row.get(DELETE_MASK_COL), groups,

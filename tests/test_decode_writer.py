@@ -403,46 +403,39 @@ def test_decode_writer_retry_is_exactly_once(tmp_path):
     assert "RETRY_OK" in out.stdout
 
 
-@pytest.mark.parametrize("argv", [["--verify"], ["--eq", "lang=en"],
-                                  ["--prefix", "txt=row 1"],
-                                  ["--columns", "k,txt"]])
-def test_one_spark_job_per_read(spark, table, tmp_path, capsys, argv):
-    """A read runs its decode tasks as one Spark job and nothing else:
-    the blocks files are listed through pyarrow, not through a
-    spark.read.parquet whose schema inference is a job of its own."""
-    sc = spark.sparkContext
-    group = "decode-read-" + "-".join(argv)
-    sc.setJobGroup(group, "decode_job read")
-    try:
-        res = _decode_job(["--blocks", table.blocks_path,
-                           "--output", str(tmp_path / "dec")] + argv, capsys)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert res["rows"] > 0
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
-
-
-@pytest.mark.parametrize("fixture, argv", [
+_READS = [["--verify"], ["--eq", "lang=en"], ["--prefix", "txt=row 1"],
+          ["--columns", "k,txt"]]
+_LIMIT_READS = [
     ("table", ["--limit", "100"]),
     ("deleted_table", ["--limit", "100", "--offset", "130"]),
     ("table", ["--eq", "lang=en", "--limit", "100"]),
     ("two_snapshot_table", ["--limit", "100", "--snapshot", "w2"]),
-])
-def test_two_spark_jobs_per_limit_read(spark, request, tmp_path, capsys,
-                                       fixture, argv):
-    """A limit read runs an in-task count pass and the decode, with or
-    without predicates, deletes or --snapshot, and no other Spark job."""
+]
+
+
+@pytest.mark.parametrize("fixture, argv, jobs", [
+    pytest.param("table", argv, 1, id=f"argv{i}")
+    for i, argv in enumerate(_READS)] + [
+    pytest.param(fixture, argv, 2, id=f"limit{i}")
+    for i, (fixture, argv) in enumerate(_LIMIT_READS)])
+def test_one_spark_job_per_read(spark, request, tmp_path, capsys, fixture,
+                                argv, jobs):
+    """A read runs its decode tasks as one Spark job and nothing else:
+    the blocks files are listed through pyarrow, not through a
+    spark.read.parquet whose schema inference is a job of its own. A
+    limit read adds one in-task count pass, with or without predicates,
+    deletes or --snapshot."""
     io = request.getfixturevalue(fixture)
     sc = spark.sparkContext
-    group = "decode-limit-" + "-".join(argv)
-    sc.setJobGroup(group, "decode_job limit read")
+    group = "decode-read-" + "-".join(argv)
+    sc.setJobGroup(group, "decode_job read")
     try:
         res = _decode_job(["--blocks", io.blocks_path,
                            "--output", str(tmp_path / "dec")] + argv, capsys)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert res["rows"] == 100
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+    assert res["rows"] == 100 if "--limit" in argv else res["rows"] > 0
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
 
 
 @pytest.mark.parametrize("limit, offset", [(250, 0), (700, 130)])

@@ -169,6 +169,55 @@ def test_delete_on_evolved_column_null_semantics(spark, tmp_path):
     assert sorted(r["k"] for r in out2.collect()) == list(range(10, 15))
 
 
+@pytest.mark.parametrize("narrow_rows, wide_rows", [(3000, 6), (6, 3000)],
+                         ids=["narrow_big", "wide_big"])
+@pytest.mark.parametrize("pred", [
+    [("x", "=", 5_000_000_000)],
+    [("x", "<", 4_000_000_000)],
+    [("f", "=", 1.0000000001)],
+    [("f", ">", 1.0)],
+], ids=["x_eq_wide", "x_lt_wide", "f_eq_wide", "f_gt"])
+def test_delete_on_widened_column_matches_duckdb(spark, tmp_path, pred,
+                                                  narrow_rows, wide_rows):
+    """A predicate on a column whose type widened across generations
+    (int -> long, float -> double) is evaluated at the wide type in
+    every block: the deleted keys are DuckDB's over the widened union,
+    and the merge_schema read's filter selects the same keys. Either
+    generation is the larger file, so either one's block is the first a
+    scan returns."""
+    import duckdb
+
+    from sparkolumnar.engine.decode import union_schema_of_blocks
+
+    narrow = pd.DataFrame({
+        "k": range(narrow_rows),
+        "x": np.arange(narrow_rows, dtype=np.int32),
+        "f": np.resize(np.float32([1.0, 1.5, 2.0, 1.0, 0.5, 1.0]),
+                       narrow_rows)})
+    wide = pd.DataFrame({
+        "k": range(narrow_rows, narrow_rows + wide_rows),
+        "x": np.resize([5_000_000_000, 3, -7, 4_000_000_001, 1, 8],
+                       wide_rows),
+        "f": np.resize([1.0000000001, 1.0, 2.5, 1.0000000001, 0.25, 1.0],
+                       wide_rows)})
+    io = TableIO(spark, str(tmp_path / "wide"))
+    for sid, pdf, ddl in [("g0", narrow, "k long, x int, f float"),
+                          ("g1", wide, "k long, x long, f double")]:
+        io.write_blocks(encode_table(spark.createDataFrame(pdf, ddl),
+                                     snapshot_id=sid, partitions=1))
+    rows = pd.concat([narrow.astype({"x": "int64", "f": "float64"}), wide])
+    (col, op, v), = pred
+    want = sorted(duckdb.sql(
+        f"SELECT k FROM rows WHERE {col} {op} {v!r}").fetchnumpy()["k"])
+    blocks = io.read_blocks(merge_schema=True)
+    sch = union_schema_of_blocks(blocks)
+    live = decode_blocks(blocks, schema=sch, compat=True,
+                         deletes=compute_deletes(blocks, pred))
+    assert sorted(set(rows["k"]) - {r["k"] for r in live.collect()}) == want
+    read = decode_blocks(blocks, schema=sch, compat=True, filters=pred)
+    assert sorted(r["k"] for r in read.collect()) == want
+
+
 def test_bitmap_bit_order_pinned(spark):
     """Bit i (MSB-first, np.packbits) = row i of the block's stored
     order — pinned so delete files stay readable across versions."""
