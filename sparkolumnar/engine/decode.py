@@ -9,7 +9,7 @@ reference's round-trip property re-expressed as a distributed invariant.
 
 from __future__ import annotations
 
-from typing import Iterator, List, Optional
+from typing import Iterator, List, NamedTuple, Optional
 
 import pyarrow as pa
 
@@ -79,10 +79,13 @@ def decode_block_row(row: dict, verify: bool = False,
     mirroring the reference's indexed-optional-column semantics
     (columnar_derive/src/serde/de.rs:215-243): block columns absent from
     the target are ignored (forward compat); target columns absent from the
-    block are null-filled (backward compat).
+    block are null-filled (backward compat). With `columns` too, the
+    batch holds the target's fields among `columns`.
     """
     from ..codecs import get_codec
 
+    if target is not None and columns is not None:
+        target = pa.schema([f for f in target if f.name in columns])
     n = row["n_rows"]
     # budget: None (whole block) or (skip, take) row window within it
     if budget is None:
@@ -232,10 +235,7 @@ def make_decode_fn(verify: bool = False, columns: Optional[List[str]] = None,
                         row["columns"], groups, session_tz=session_tz,
                         n_rows=row["n_rows"]):
                     continue
-                dmask = row.pop(DELETE_MASK_COL, None)
-                if dmask is None and del_masks is not None:
-                    dmask = del_masks.get(
-                        (row["snapshot_id"], row["part_id"], row["seq"]))
+                dmask = _delete_mask(row, del_masks)
                 if dmask is None and not groups:
                     out = decode_block_row(row, verify=verify,
                                            columns=columns, target=target,
@@ -249,6 +249,15 @@ def make_decode_fn(verify: bool = False, columns: Optional[List[str]] = None,
                     yield out
 
     return fn
+
+
+def _delete_mask(row, del_masks: Optional[dict]):
+    """A block row's OR'd delete bitmap: its joined _del_mask column, else
+    its entry in the closure-shipped `del_masks`, else None."""
+    dmask = row.get(DELETE_MASK_COL)
+    if dmask is None and del_masks is not None:
+        dmask = del_masks.get((row["snapshot_id"], row["part_id"], row["seq"]))
+    return dmask
 
 
 def filter_mask(row, groups, session_tz=None,
@@ -288,6 +297,37 @@ def _keep_mask(row, dmask, groups, session_tz, target=None, verify=False):
     return keep, first
 
 
+# the count step's output: the rows each block returns to a limit read
+MATCH_COUNTS = pa.schema([pa.field("snapshot_id", pa.string()),
+                          pa.field("part_id", pa.int32()),
+                          pa.field("seq", pa.int32()),
+                          pa.field("n", pa.int64())])
+
+
+def block_counts(batches, groups, session_tz=None,
+                 target: Optional[pa.Schema] = None,
+                 del_masks: Optional[dict] = None) -> Iterator[dict]:
+    """THE count step of a limit read, run in-task by decode_blocks' count
+    job and decode_files_direct's count pass: for each block row of
+    `batches` (carrying its snapshot_id, part_id and seq), the rows it
+    returns — its live rows (_keep_mask over its delete bitmap), and
+    under `groups` only the matches among them, from the filter's root
+    columns of the blocks block_keep_py keeps. Yields one MATCH_COUNTS
+    row per block returning any."""
+    for b in batches:
+        for row in block_rows(b):
+            if groups and not block_keep_py(
+                    row["columns"], groups, session_tz=session_tz,
+                    n_rows=row["n_rows"]):
+                continue
+            keep, _ = _keep_mask(row, _delete_mask(row, del_masks), groups,
+                                 session_tz, target)
+            n = row["n_rows"] if keep is None else int(keep.sum())
+            if n:
+                yield {"snapshot_id": row["snapshot_id"],
+                       "part_id": row["part_id"], "seq": row["seq"], "n": n}
+
+
 def _decode_masked(row, verify, columns, target, dmask, groups,
                    session_tz) -> pa.RecordBatch:
     """Decode a block's rows that survive its delete bitmap and the
@@ -297,19 +337,17 @@ def _decode_masked(row, verify, columns, target, dmask, groups,
     block whose zone maps and blooms could not prune it but which holds
     no matching row costs only its filter columns. With verify the other
     columns always decode, so every projected column's checksum is
-    recomputed over its stored rows. The filter-only columns are dropped
-    unless a compat target keeps them (its own fields). A (skip, take)
-    budget applies only after this — budgets count LIVE rows when
-    deletes are present (decode_blocks computed them from
-    n_rows - n_deleted)."""
+    recomputed over its stored rows. The filter-only columns are dropped.
+    A (skip, take) budget applies only after this — budgets count LIVE
+    rows, and with a filter only the matching ones (block_counts)."""
     keep, first = _keep_mask(row, dmask, groups, session_tz, target, verify)
     decoded = {} if first is None else dict(zip(first.schema.names,
                                                 first.columns))
     extra = ([c for c in decoded if c not in columns]
              if columns is not None else [])
     cols = list(columns) + extra if extra else columns
-    fields = (list(target) if target is not None
-              else decodable_fields(row["columns"], cols))
+    fields = (decodable_fields(row["columns"], cols) if target is None
+              else [f for f in target if cols is None or f.name in cols])
     if not (verify or keep.any()):
         out = pa.RecordBatch.from_pylist([], schema=pa.schema(fields))
     else:
@@ -324,9 +362,7 @@ def _decode_masked(row, verify, columns, target, dmask, groups,
         out = pa.RecordBatch.from_arrays(
             [decoded[f.name] for f in fields],
             schema=pa.schema(fields)).filter(pa.array(keep))
-    if target is None:
-        out = out.drop_columns(extra)
-    return out
+    return out.drop_columns(extra)
 
 
 def decodable_fields(metas, columns=None) -> List[pa.Field]:
@@ -338,24 +374,99 @@ def decodable_fields(metas, columns=None) -> List[pa.Field]:
             and (columns is None or m["name"] in columns)]
 
 
-def schema_of_blocks(blocks_df: DataFrame,
-                     columns: Optional[List[str]] = None) -> T.StructType:
-    """Spark schema of the decoded table, read from one block's metadata
-    (driver-side, payload columns pruned away)."""
+class ReadPlan(NamedTuple):
+    """What plan_read decides for one read."""
+    groups: list  # normalized filters (_normalize_filters)
+    target: Optional[pa.Schema]  # compat target: requested + filter roots
+    roots: List[str]  # the filter's root columns (filter_root_columns_of)
+    scan: Optional[List[str]]  # columns whose payloads the scan reads
+    fields: List[pa.Field]  # the decoded output's fields
+
+
+def plan_read(metas, columns: Optional[List[str]] = None,
+              schema: Optional[T.StructType] = None, compat: bool = False,
+              filters=None) -> ReadPlan:
+    """THE read planner of decode_blocks, decode_stream and
+    decode_files_direct, from one block's `columns` metadata `metas` ([]
+    for an empty table, which has nothing to check).
+
+    compat=True with a `schema` decodes against its fields as the compat
+    target (decode_block_row), narrowed to the requested columns plus
+    the filter's root columns. Requested columns are checked against the
+    target, else the block's decodable columns; filter roots against the
+    target, else every column of the block. An unknown one raises
+    ValueError before any decode task starts. The scan reads the
+    payloads of the target's fields, else of the requested columns plus
+    the filter roots (None: every column). The output holds the target's
+    fields, else the block's decodable columns, among `columns` when
+    given."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    groups = _normalize_filters(filters)
+    target = None
+    if compat and schema is not None:
+        target = pa.schema([pa.field(f.name, to_arrow_type(f.dataType))
+                            for f in schema.fields])
+        names = decodable = set(target.names)
+    else:
+        names = {m["name"] for m in metas}
+        decodable = {f.name for f in decodable_fields(metas)}
+    roots = filter_root_columns_of(groups, names)
+    if names:
+        missing = [c for c in columns or () if c not in decodable]
+        if missing:
+            raise ValueError(
+                f"requested columns {missing} not in the blocks table "
+                f"(available: {sorted(decodable)})")
+        bad = [c for c in roots if c not in names]
+        if bad and target is not None:
+            raise ValueError(
+                f"compat decode with filters: filter columns {bad} "
+                f"must be part of the provided schema")
+        if bad:
+            raise ValueError(
+                f"filter columns {bad} not in the blocks table "
+                f"(available: {sorted(names)})")
+    if target is not None and columns is not None:
+        target = pa.schema([f for f in target
+                            if f.name in columns or f.name in roots])
+    if target is not None:
+        scan = target.names
+        fields = [f for f in target if columns is None or f.name in columns]
+    else:
+        scan = (None if columns is None else
+                list(columns) + [c for c in roots if c not in columns])
+        fields = decodable_fields(metas, columns)
+    return ReadPlan(groups, target, roots, scan, fields)
+
+
+def _sample_block_columns(blocks_df: DataFrame) -> list:
+    """The `columns` metadata (name, arrow_type and codec of each entry)
+    of one block, [] for an empty table: the sample a DataFrame read
+    plans from, one limit(1) job over metadata alone (payload columns
+    pruned away)."""
     row = (blocks_df.selectExpr(
         "transform(columns, c -> named_struct('name', c.name, "
         "'arrow_type', c.arrow_type, 'codec', c.codec)) AS metas")
         .limit(1).collect())
-    if not row:
+    return row[0]["metas"] if row else []
+
+
+def _decoded_schema(metas, plan: ReadPlan) -> T.StructType:
+    """Spark schema of a planned read's output; an empty table has none
+    to infer."""
+    if not metas:
         raise ValueError("blocks table is empty; pass an explicit schema")
-    metas = row[0]["metas"]
-    fields = [T.StructField(f.name, from_arrow_type(f.type), True)
-              for f in decodable_fields(metas, columns)]
-    if columns is not None and not fields:
-        raise ValueError(
-            f"none of the requested columns {list(columns)} exist in the "
-            f"blocks table (available: {[m['name'] for m in metas]})")
-    return T.StructType(fields)
+    return T.StructType([T.StructField(f.name, from_arrow_type(f.type), True)
+                         for f in plan.fields])
+
+
+def schema_of_blocks(blocks_df: DataFrame,
+                     columns: Optional[List[str]] = None) -> T.StructType:
+    """Spark schema of the decoded table (of `columns` when given), as a
+    read plans it from one block's metadata."""
+    metas = _sample_block_columns(blocks_df)
+    return _decoded_schema(metas, plan_read(metas, columns))
 
 
 def _widen_numeric(a: pa.DataType, b: pa.DataType):
@@ -489,62 +600,6 @@ def union_schema_of_blocks(blocks_df: DataFrame) -> T.StructType:
     return T.StructType(fields)
 
 
-def _prefix_budgets(blocks_df: DataFrame, limit: int,
-                    offset: int = 0) -> dict:
-    """Per-block (skip, take) row windows covering rows
-    [offset, offset + limit) in (part_id, seq) order, keyed by the unique
-    (snapshot_id, part_id, seq) coordinates.
-
-    Distributed two-level scheme — the driver never walks per-block
-    metadata outside the window (a toLocalIterator over every block
-    preceding a large offset would make the driver the bottleneck at
-    ~10^8 blocks):
-
-      1. one metadata-only job aggregates row counts per
-         (snapshot_id, part_id) — driver rows ∝ physical partitions,
-         not blocks (payload columns pruned away by the wide layout);
-      2. the driver prefix-sums the sorted partition counts to find the
-         contiguous partition range overlapping the row window;
-      3. a second job, bounded to exactly that partition range by a
-         constant-size pushed predicate, fetches only the window
-         partitions' block coordinates for the exact per-block split.
-    """
-    from pyspark.sql import functions as F
-
-    per_part = (blocks_df.groupBy("snapshot_id", "part_id")
-                .agg(F.sum("n_rows").alias("rows")).collect())
-    per_part.sort(key=lambda r: (r["snapshot_id"], int(r["part_id"])))
-    needed = []
-    rows_before = 0  # rows in partitions preceding the first needed one
-    cum = 0
-    for r in per_part:
-        n = int(r["rows"])
-        if cum + n <= offset:
-            cum += n
-            rows_before = cum
-            continue
-        needed.append((r["snapshot_id"], int(r["part_id"])))
-        cum += n
-        if cum >= offset + limit:
-            break
-    if not needed:
-        return {}
-    # the needed partitions are CONTIGUOUS in (snapshot_id, part_id)
-    # order, so a lexicographic range predicate selects them exactly,
-    # stays constant-size, and pushes down to the metadata scan
-    s, p = F.col("snapshot_id"), F.col("part_id")
-    (s0, p0), (s1, p1) = needed[0], needed[-1]
-    ge = (s > s0) | ((s == s0) & (p >= p0))
-    le = (s < s1) | ((s == s1) & (p <= p1))
-    blk = (blocks_df.where(ge & le)
-           .select("snapshot_id", "part_id", "seq", "n_rows").collect())
-    blk.sort(key=lambda r: (r["snapshot_id"], int(r["part_id"]),
-                            int(r["seq"])))
-    return _window_budgets(
-        (((r["snapshot_id"], int(r["part_id"]), int(r["seq"])),
-          int(r["n_rows"])) for r in blk), offset - rows_before, limit)
-
-
 def _window_budgets(blocks, to_skip: int, limit: int) -> dict:
     """THE row-window walk: (skip, take) per block covering `limit` rows
     after the first `to_skip`, over (coordinate, row count) pairs in
@@ -564,22 +619,31 @@ def _window_budgets(blocks, to_skip: int, limit: int) -> dict:
     return budgets
 
 
-def _warn_partial_verify() -> None:
-    """Warn that a limit read's partially-decoded edge blocks skip
-    checksum verification."""
-    import warnings
+def _limit_window(counts, limit: int, offset: int = 0, verify=False,
+                  groups=None) -> dict:
+    """THE limit window of every read: per-block (skip, take) covering
+    rows [offset, offset + limit) in (snapshot_id, part_id, seq, row)
+    order, from the count step's rows (block_counts) in any order. Warns
+    when verify=True meets a window whose edge blocks decode only their
+    range (no filter), which skips their checksums (checksums cover whole
+    columns; whole blocks in the window are verified)."""
+    if verify and not groups:
+        import warnings
 
-    warnings.warn(
-        "decode with limit= and verify=True: partially-decoded edge "
-        "blocks skip checksum verification (checksums cover whole "
-        "columns); whole blocks in the window are verified",
-        stacklevel=3)
+        warnings.warn(
+            "decode with limit= and verify=True: partially-decoded edge "
+            "blocks skip checksum verification (checksums cover whole "
+            "columns); whole blocks in the window are verified",
+            stacklevel=3)
+    return _window_budgets(sorted(
+        ((r["snapshot_id"], r["part_id"], r["seq"]), r["n"])
+        for r in counts), offset, limit)
 
 
 def _budget_range_pred(lo: tuple, hi: tuple):
     """Scan predicate selecting blocks whose (snapshot_id, part_id, seq)
     lies in the closed lexicographic range [lo, hi]. The selected window is
-    CONTIGUOUS in that order by construction (_prefix_budgets walks the
+    CONTIGUOUS in that order by construction (_window_budgets walks the
     sorted block list), so a constant-size range comparison replaces a
     potentially-huge isin literal — and its leaf comparisons push down to
     the parquet scan no matter how many blocks the window spans."""
@@ -704,17 +768,6 @@ from functools import lru_cache as _lru_cache  # noqa: E402
 @_lru_cache(maxsize=4096)
 def _canon_zone_value_cached(value, arrow_type_str, session_tz):
     return _canon_zone_value_impl(value, arrow_type_str, session_tz)
-
-
-def _blocks_arrow_types(blocks_df: DataFrame) -> dict:
-    """{column name: arrow type string} from one block's metadata
-    (driver-side, payload columns pruned away)."""
-    row = (blocks_df.selectExpr("columns.name as names",
-                                "columns.arrow_type as types")
-           .limit(1).collect())
-    if not row:
-        return {}
-    return dict(zip(row[0]["names"], row[0]["types"]))
 
 
 _FILTER_OPS = ("between", "=", "==", "!=", ">=", "<=", ">", "<", "in",
@@ -1280,10 +1333,16 @@ def decode_blocks(blocks_df: DataFrame, schema: Optional[T.StructType] = None,
                   deletes: Optional[DataFrame] = None) -> DataFrame:
     """Decode a blocks DataFrame back into the original table.
 
-    columns: optional projection — only these columns' payload/validity
-    fields are selected, so the parquet scan never reads the other
-    columns' bytes (per-column payload fields make pruning a plain
-    Catalyst projection).
+    The read is planned from one block's metadata (plan_read, one
+    metadata-only job), as decode_stream and decode_files_direct plan
+    theirs.
+
+    columns: optional projection — the output holds exactly these
+    columns, and only their payload/validity fields (plus the filter's)
+    are selected, so the parquet scan never reads the other columns'
+    bytes (per-column payload fields make pruning a plain Catalyst
+    projection). A column the block metadata (or, with compat, the
+    schema) lacks raises ValueError.
 
     filters: optional list of predicates, each a tuple
         (column, op, value)            op in  = == != >= <= > <
@@ -1317,7 +1376,9 @@ def decode_blocks(blocks_df: DataFrame, schema: Optional[T.StructType] = None,
     compat=True enables schema evolution against the provided `schema`:
     block columns unknown to the schema are ignored, schema columns missing
     from a block are null-filled (the reference's indexed-optional-column
-    forward/backward compatibility, re-expressed).
+    forward/backward compatibility, re-expressed). With `columns`, only
+    the requested columns (and the filter's) decode, and the output holds
+    the requested ones, with the types the schema gives them.
 
     deletes: optional merge-on-read position-delete rows (DELETES_SCHEMA,
     written by engine.deletes.delete_where / TableIO.read_deletes()).
@@ -1330,87 +1391,43 @@ def decode_blocks(blocks_df: DataFrame, schema: Optional[T.StructType] = None,
     only), compat, verify, projection, and limit/offset (budgets count
     LIVE rows).
 
-    limit=n (optionally with offset=m) decodes only rows
-    [m, m + n) of the table (blocks ordered by snapshot_id, part_id, seq)
-    — the reference's take_n_finalize / lazy iteration re-expressed
-    distributedly: a metadata-only pass picks the needed blocks +
-    per-block (skip, take) windows keyed by the unique
-    (snapshot_id, part_id, seq) coordinates, the payload scan is filtered
-    to the window's contiguous coordinate range (a constant-size pushed
-    predicate, so other blocks' payload bytes are never read), and inside
-    a partially-needed block each codec decodes only the value range
-    (rle/delta_rle cap run expansion, split touches only the range's
-    body bytes, zstd only the covering frames). Partial edge blocks skip checksum verification
-    (checksums cover whole columns; whole blocks in the window are still
-    verified) — a warning is emitted when verify=True is combined with
-    limit=. When filters are also given, limit counts MATCHING rows:
-    the blocks are pruned and exact-filtered first, then limited.
+    limit=n (optionally with offset=m) decodes only rows [m, m + n) in
+    (snapshot_id, part_id, seq, row) order — the rows decode_job
+    --limit/--offset writes — the reference's take_n_finalize / lazy
+    iteration re-expressed distributedly. A count job runs the count step
+    in-task (block_counts: each block's live rows, and with filters its
+    matching rows, from the filter's root columns only), the driver walks
+    the counts into per-block (skip, take) windows keyed by the unique
+    (snapshot_id, part_id, seq) coordinates (_limit_window), and the
+    payload scan is filtered to the window's contiguous coordinate range
+    (a constant-size pushed predicate, so other blocks' payload bytes are
+    never read). Without filters or deletes, a partially-needed block
+    decodes only its range (rle/delta_rle cap run expansion, split
+    touches only the range's body bytes, zstd only the covering frames),
+    skipping checksum verification (checksums cover whole columns; whole
+    blocks in the window are still verified) — a warning is emitted when
+    verify=True is combined with such a window; otherwise it is masked,
+    then sliced.
     """
     from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import from_arrow_schema
 
-    target = None
-    budgets = None
-    groups = _normalize_filters(filters)
-    session_tz = None
-    del_agg = None
-    if deletes is not None:
-        from .deletes import aggregate_deletes
-
-        del_agg = aggregate_deletes(deletes)
+    # planned before pruning or a limit window can empty the frame: an
+    # empty result, not an error
+    metas = _sample_block_columns(blocks_df)
+    plan = plan_read(metas, columns, schema, compat, filters)
+    groups = plan.groups
     if schema is None:
-        # inferred before pruning or a limit window can empty the frame:
-        # an empty result, not an error
-        schema = schema_of_blocks(blocks_df, columns)
-    elif compat:
-        from pyspark.sql.pandas.types import to_arrow_type
-
-        target = pa.schema([pa.field(f.name, to_arrow_type(f.dataType))
-                            for f in schema.fields])
-    # the scan projection: the output columns plus the filter's roots
-    wanted = list(columns) if columns is not None else None
-    if wanted is None and target is not None:
-        wanted = [f.name for f in target]
+        schema = _decoded_schema(metas, plan)
+    elif plan.target is not None:
+        names = {f.name for f in plan.fields}
+        schema = T.StructType([f for f in schema.fields if f.name in names])
+    session_tz = None
     if groups:
-        types = _blocks_arrow_types(blocks_df)
-        roots = filter_root_columns_of(groups, types)
-        if target is not None:
-            missing = [c for c in roots if c not in target.names]
-            if missing:
-                raise ValueError(
-                    f"compat decode with filters: filter columns {missing} "
-                    f"must be part of the provided schema")
-        elif types:
-            unknown = [c for c in roots if c not in types]
-            if unknown:
-                raise ValueError(
-                    f"filter columns {unknown} not in the blocks table "
-                    f"(available: {sorted(types)})")
-        if wanted is not None:
-            wanted += [c for c in roots if c not in wanted]
         session_tz = _session_tz(blocks_df)
         blocks_df = _prune_blocks(blocks_df, groups)
-    if limit is not None and not groups:
-        # budgets count LIVE rows: each block's row count less its delete
-        # popcount (the decode fn masks first, then slices the window)
-        counted = blocks_df
-        if del_agg is not None:
-            counted = (blocks_df.join(
-                F.broadcast(del_agg.select(*COORD_COLS, DELETE_COUNT_COL)),
-                COORD_COLS, "left")
-                .withColumn("n_rows", F.col("n_rows") - F.coalesce(
-                    F.col(DELETE_COUNT_COL), F.lit(0))))
-        if verify:
-            _warn_partial_verify()
-        budgets = _prefix_budgets(counted, limit, offset)
-        if budgets:
-            keys = list(budgets)  # insertion order == sorted block order
-            blocks_df = blocks_df.where(_budget_range_pred(keys[0], keys[-1]))
-        else:
-            blocks_df = blocks_df.where(F.lit(False))
-    if wanted is not None:
-        blocks_df = _scan_columns(blocks_df, wanted)
-    del_masks = None
-    if del_agg is not None:
+    del_masks = del_join = None
+    if deletes is not None:
         # preferred: ship the OR'd bitmaps in the task closure (they are
         # n_rows/8 bytes per TOUCHED block) — the multi-MB payload
         # binaries then never traverse a join operator, which measured
@@ -1419,10 +1436,11 @@ def decode_blocks(blocks_df: DataFrame, schema: Optional[T.StructType] = None,
         # joining a _del_mask column onto the scan only when the bitmap
         # set is too large to ship (pervasive deletes across a huge
         # table — the state Iceberg tells you to compact away too).
+        from .deletes import aggregate_deletes
+
+        del_agg = aggregate_deletes(deletes)
         size = del_agg.agg(
-            F.count("*").alias("b"),
-            F.sum(F.octet_length(DELETE_MASK_COL)).alias("sz")
-        ).collect()[0]
+            F.sum(F.octet_length(DELETE_MASK_COL)).alias("sz")).collect()[0]
         if int(size["sz"] or 0) <= _DELETE_CLOSURE_MAX_BYTES:
             del_masks = {
                 (r["snapshot_id"], r["part_id"], r["seq"]):
@@ -1433,14 +1451,32 @@ def decode_blocks(blocks_df: DataFrame, schema: Optional[T.StructType] = None,
             # coordinates: the payload scan never shuffles, each task
             # looks its blocks' bitmaps up locally (Iceberg's per-task
             # delete-file loading)
-            blocks_df = blocks_df.join(
-                F.broadcast(del_agg.select(*COORD_COLS, DELETE_MASK_COL)),
-                COORD_COLS, "left")
-    out = blocks_df.mapInArrow(
-        make_decode_fn(verify, columns, target, budgets, del_masks,
+            del_join = F.broadcast(
+                del_agg.select(*COORD_COLS, DELETE_MASK_COL))
+
+    def scan(df):
+        return df if del_join is None else df.join(del_join, COORD_COLS,
+                                                   "left")
+
+    budgets = None
+    if limit is not None:
+        counted = (_scan_columns(blocks_df, plan.roots) if groups
+                   else blocks_df.select(*COORD_COLS, "n_rows"))
+
+        def count(batches):
+            for b in batches:
+                yield pa.RecordBatch.from_pylist(list(block_counts(
+                    [b], groups, session_tz, plan.target, del_masks)),
+                    schema=MATCH_COUNTS)
+
+        budgets = _limit_window(
+            scan(counted).mapInArrow(count, from_arrow_schema(MATCH_COUNTS))
+            .collect(), limit, offset, verify, groups)
+        keys = list(budgets)  # insertion order == sorted block order
+        blocks_df = blocks_df.where(
+            _budget_range_pred(keys[0], keys[-1]) if keys else F.lit(False))
+    if plan.scan is not None:
+        blocks_df = _scan_columns(blocks_df, plan.scan)
+    return scan(blocks_df).mapInArrow(
+        make_decode_fn(verify, columns, plan.target, budgets, del_masks,
                        groups, session_tz), schema)
-    if groups and limit is not None:
-        if offset:
-            out = out.offset(offset)
-        out = out.limit(limit)
-    return out

@@ -195,48 +195,56 @@ def compute_deletes(blocks_df: DataFrame, filters) -> DataFrame:
         DELETES_SCHEMA)
 
 
-def _key_mask(on: str, keys_pa):
+def _key_mask(on: str, keys_pa, wide):
     """Deleted rows of a block under a MERGE key set: decode ONLY the key
     column and mark the rows whose key is in the broadcast key set (a
     pyarrow array in the closure; vectorized pc.is_in per block — zero
-    shuffle). A null stored key never matches (SQL join semantics; the
-    key set was null-stripped by the caller). Blocks from a schema
-    generation without the key column cannot match."""
+    shuffle). Keys compare at the wider of the key set's type and the
+    key column's type `wide` (its widest across every block, or None
+    when its types do not widen: the block's stored type), so a key never
+    casts down to a narrower generation's type. A null stored key never
+    matches (SQL join semantics; the key set was null-stripped by the
+    caller). Blocks from a schema generation without the key column
+    cannot match."""
     import pyarrow.compute as pc
+
+    from .decode import _merge_arrow_types, arrow_type_from_str
 
     cast_keys: dict = {}
 
     def mask(row):
-        if not any(m["name"] == on for m in row["columns"]):
+        stored = {m["name"]: m["arrow_type"] for m in row["columns"]}
+        if on not in stored:
             return None
-        vals = decode_block_row(row, columns=[on]).column(0)
-        vset = cast_keys.get(str(vals.type))
+        typ = wide or arrow_type_from_str(stored[on])
+        typ = _merge_arrow_types(typ, keys_pa.type) or typ
+        vals = decode_block_row(row, columns=[on], target=pa.schema(
+            [pa.field(on, typ)])).column(0)
+        vset = cast_keys.get(str(typ))
         if vset is None:
-            vset = (keys_pa if keys_pa.type == vals.type
-                    else keys_pa.cast(vals.type))
-            cast_keys[str(vals.type)] = vset
+            vset = cast_keys[str(typ)] = keys_pa.cast(typ)
         return np.asarray(pc.fill_null(pc.is_in(vals, value_set=vset),
                                        False))
 
     return mask
 
 
-def _emit_key_rows_fn(ons):
-    """mapInArrow fn: decode ONLY the key column(s) and emit one
-    (coords, pos, keys...) row per stored row — the probe side of the
-    shuffle-join delete path. block_id deliberately does NOT ride these
-    rows (a 64-char string per stored row would dominate the shuffle);
-    the caller joins it back from the tiny blocks metadata after the
-    per-block re-pack."""
+def _emit_key_rows_fn(key_types: pa.Schema):
+    """mapInArrow fn: decode ONLY the key column(s), at `key_types`, and
+    emit one (coords, pos, keys...) row per stored row — the probe side
+    of the shuffle-join delete path. block_id deliberately does NOT ride
+    these rows (a 64-char string per stored row would dominate the
+    shuffle); the caller joins it back from the tiny blocks metadata
+    after the per-block re-pack."""
+    ons = key_types.names
+
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
             for row in block_rows(b):
                 present = {m["name"] for m in row["columns"]}
                 if any(c not in present for c in ons):
                     continue
-                dec = decode_block_row(row, columns=list(ons))
-                by_name = {n: dec.column(i)
-                           for i, n in enumerate(dec.schema.names)}
+                dec = decode_block_row(row, columns=ons, target=key_types)
                 n = row["n_rows"]
                 yield pa.RecordBatch.from_arrays(
                     [pa.array([row["snapshot_id"]] * n),
@@ -244,7 +252,7 @@ def _emit_key_rows_fn(ons):
                      pa.array(np.full(n, row["seq"], np.int32)),
                      pa.array(np.full(n, n, np.int64)),
                      pa.array(np.arange(n, dtype=np.int64))]
-                    + [by_name[c] for c in ons],
+                    + dec.columns,
                     names=["snapshot_id", "part_id", "seq",
                            "n_rows", "_pos"]
                     + [f"_key{i}" for i in range(len(ons))])
@@ -278,12 +286,19 @@ def compute_deletes_by_keys(blocks_df: DataFrame, keys_df: DataFrame,
 
     A row with a NULL in ANY key component never matches (SQL join
     semantics). Blocks from a schema generation missing a key column
-    cannot match. blocks_df must be materialized blocks (see
-    compute_deletes)."""
-    from .decode import _blocks_arrow_types, _scan_columns
+    cannot match. A key column whose type widened across generations
+    (int -> long, float -> double) compares at its widest type in every
+    block (decode._widen_types over one metadata-only aggregate, as
+    compute_deletes evaluates a predicate). blocks_df must be
+    materialized blocks (see compute_deletes)."""
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    from .decode import (_column_type_sets, _scan_columns, _widen_types,
+                         arrow_type_from_str)
 
     ons = [on] if isinstance(on, str) else list(on)
-    types = _blocks_arrow_types(blocks_df)
+    types = {r["name"]: sorted(r["types"])
+             for r in _column_type_sets(blocks_df)}
     missing = [c for c in ons if c not in types]
     if missing:
         raise ValueError(f"merge key(s) {missing} not in the blocks "
@@ -297,13 +312,17 @@ def compute_deletes_by_keys(blocks_df: DataFrame, keys_df: DataFrame,
         if n_keys <= broadcast_threshold:
             keys_pa = keys_df.toArrow().column(0).combine_chunks()
             keys_pa = keys_pa.drop_null()
-            return scan.mapInArrow(_emit_deletes(_key_mask(ons[0], keys_pa)),
-                                   DELETES_SCHEMA)
+            return scan.mapInArrow(_emit_deletes(_key_mask(
+                ons[0], keys_pa, _widen_types(types[ons[0]]))),
+                DELETES_SCHEMA)
 
-    key_fields = [T.StructField(f"_key{i}", _spark_type_of(types[c]), True)
-                  for i, c in enumerate(ons)]
+    key_types = pa.schema([pa.field(c, _widen_types(types[c])
+                                    or arrow_type_from_str(types[c][0]))
+                           for c in ons])
+    key_fields = [T.StructField(f"_key{i}", from_arrow_type(f.type), True)
+                  for i, f in enumerate(key_types)]
     rows = scan.mapInArrow(
-        _emit_key_rows_fn(ons),
+        _emit_key_rows_fn(key_types),
         T.StructType([f for f in DELETES_SCHEMA
                       if f.name not in ("block_id", "n_deleted",
                                         "positions")]
@@ -338,15 +357,6 @@ def compute_deletes_by_keys(blocks_df: DataFrame, keys_df: DataFrame,
     meta = blocks_df.select(*COORD_COLS, "block_id")
     return (packed.join(F.broadcast(meta), COORD_COLS, "inner")
             .select(*[f.name for f in DELETES_SCHEMA]))
-
-
-def _spark_type_of(arrow_type_str: str):
-    """Spark DataType for a stored column's arrow type string."""
-    from pyspark.sql.pandas.types import from_arrow_type
-
-    from .decode import arrow_type_from_str
-
-    return from_arrow_type(arrow_type_from_str(arrow_type_str))
 
 
 def aggregate_deletes(deletes_df: DataFrame) -> DataFrame:

@@ -227,10 +227,6 @@ _DECODE_META = pa.schema([pa.field("part_id", pa.int32()),
                           pa.field("n_rows", pa.int64()),
                           pa.field("n_blocks_read", pa.int64()),
                           pa.field("n_blocks_total", pa.int64())])
-_MATCH_COUNTS = pa.schema([pa.field("snapshot_id", pa.string()),
-                           pa.field("part_id", pa.int32()),
-                           pa.field("seq", pa.int32()),
-                           pa.field("n", pa.int64())])
 # the block metadata fields the decode fn reads with each block's payload
 _ROW_META = ("block_id", "seq", "n_rows", "columns")
 
@@ -461,9 +457,8 @@ def encode_files_direct(spark: SparkSession, input_path: str, io: TableIO,
 
 def _first_block_columns(files: Sequence[str], filesystem=None) -> list:
     """Column metadata of the first block in `files` ([] for an empty
-    table), read driver-side from one row group's `columns` leaf: what a
-    decode's requested and filter columns are checked against, the same
-    one-block sample as decode.schema_of_blocks."""
+    table), read driver-side from one row group's `columns` leaf: the
+    block decode_files_direct plans its read from (decode.plan_read)."""
     import pyarrow.parquet as pq
 
     for f in files:
@@ -531,11 +526,13 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
     part-00000.parquet carrying the output schema, so the directory
     still reads back as a (zero-row) table.
 
-    Requested columns, and the filter's root columns, are checked on the
-    driver before any task starts (against `schema` when given, else one
-    block's metadata); an unknown one raises ValueError. So is every id
-    in `snapshots` (snapshot_files, against the listing's snapshot_id=
-    directories).
+    The read is planned by decode.plan_read, the planner of every read
+    path, from the first block's metadata (_first_block_columns, read
+    with pyarrow): requested columns, and the filter's root columns, are
+    checked on the driver before any task starts (against `schema` when
+    given, else that block's metadata); an unknown one raises ValueError.
+    So is every id in `snapshots` (snapshot_files, against the listing's
+    snapshot_id= directories).
 
     filters: same predicate language as decode_blocks(filters=)
     (= == != < <= > >= between / IN lists / OR-of-conjunction groups),
@@ -547,17 +544,16 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
     per block, so pruned blocks' payload bytes stay on disk), and the
     shared decode function (make_decode_fn) applies the exact row
     predicate and drops the filter-only columns before the write — the
-    output holds exactly `columns`, as on the IPC path.
+    output holds exactly `columns`.
 
     limit=n (optionally with offset=m) writes only rows [m, m + n) in
-    (snapshot_id, part_id, seq, row) order, as decode_blocks(limit=),
-    in two Spark jobs whatever the shape. A first in-task pass counts
-    the rows each block returns: its n_rows less its delete popcount,
+    (snapshot_id, part_id, seq, row) order, in two Spark jobs whatever
+    the shape. A first pass runs the count step in-task
+    (decode.block_counts: each block's n_rows less its delete popcount,
     read from the metadata and bitmaps alone, and with filters only the
-    matches — only the filter's root columns of the blocks block_keep_py
-    keeps decode, so the limit counts MATCHING rows. The driver walks
-    those counts into per-block (skip, take) windows
-    (decode._window_budgets), and the decode pass reads only the
+    matches, from the filter's root columns of the blocks block_keep_py
+    keeps). The driver walks those counts into per-block (skip, take)
+    windows (decode._limit_window), and the decode pass reads only the
     window's (snapshot_id, part_id) files and its blocks' row groups.
     A block without deletes or filters decodes only its window's range
     (verify then skips edge blocks: checksums cover whole columns);
@@ -584,10 +580,8 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
     Returns {"n_rows", "n_parts", "n_blocks_read", "n_blocks_total"}."""
     from pyarrow import fs as pafs
 
-    from .decode import (DELETE_MASK_COL, _keep_mask, _normalize_filters,
-                         _warn_partial_verify, _window_budgets,
-                         block_keep_py, block_rows, decodable_fields,
-                         filter_root_columns_of, make_decode_fn)
+    from .decode import (MATCH_COUNTS, _limit_window, block_counts,
+                         block_keep_py, make_decode_fn, plan_read)
 
     if blocks_root is None:
         require_path_level(io, "decode_files_direct")
@@ -599,60 +593,15 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
         # key, so this prunes whole directories before any task launches
         files = snapshot_files(files, snapshots)
     files.sort(key=lambda f: (_path_block_coords(f), f))
-    groups = _normalize_filters(filters)
-    target = None
-    if schema is not None:
-        from pyspark.sql.pandas.types import to_arrow_type
-
-        target = pa.schema([pa.field(f.name, to_arrow_type(f.dataType))
-                            for f in schema.fields])
-    roots: List[str] = []
-    metas = None  # the first block's column metadata, read once if needed
-    if columns is not None or groups:
-        if target is not None:
-            names = decodable = set(target.names)
-        else:
-            metas = _first_block_columns(files, blocks_fs)
-            names = {m["name"] for m in metas}
-            decodable = {f.name for f in decodable_fields(metas)}
-        roots = filter_root_columns_of(groups, names)
-        if names:  # an empty table has nothing to check or decode
-            missing = [c for c in columns or () if c not in decodable]
-            if missing:
-                raise ValueError(
-                    f"requested columns {missing} not in the blocks table "
-                    f"(available: {sorted(decodable)})")
-            bad = [c for c in roots if c not in names]
-            if bad and target is not None:
-                raise ValueError(
-                    f"compat decode with filters: filter columns {bad} "
-                    f"must be part of the provided schema")
-            if bad:
-                raise ValueError(
-                    f"filter columns {bad} not in the blocks table "
-                    f"(available: {sorted(names)})")
-    out_cols = None
-    if target is not None and columns is not None:
-        # compat decode fills every target field: decode the requested
-        # and filter columns only, and write the requested ones
-        target = pa.schema([f for f in target
-                            if f.name in columns or f.name in roots])
-        out_cols = [f.name for f in target if f.name in columns]
+    plan = plan_read(_first_block_columns(files, blocks_fs), columns,
+                     schema, schema is not None, filters)
+    groups, target, roots = plan.groups, plan.target, plan.roots
     session_tz = None
     if groups:
         try:
             session_tz = spark.conf.get("spark.sql.session.timeZone")
         except Exception:
             session_tz = None
-    # scan projection: explicit columns, else the compat target's fields
-    # (other generations' payload bytes then stay on disk), plus the
-    # filter's root columns, which decode in-task too
-    scan_want = columns
-    if scan_want is None and target is not None:
-        scan_want = target.names
-    if scan_want is not None:
-        scan_want = list(scan_want) + [c for c in roots
-                                       if c not in scan_want]
 
     def block_batches(path, want, seqs, cnt, del_cache, coords=False,
                       meta_cols=_ROW_META):
@@ -715,34 +664,18 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
     n_read = n_total = None  # limit reads count blocks on the driver
     if limit is not None:
         def count(_, paths):
-            # per block, the rows the delete bitmaps and the exact filter
-            # let through; only the filter's root columns decode, and
             # without a filter only seq and n_rows are read
-            cnt, del_cache, found = {"read": 0, "total": 0}, {}, []
+            cnt, del_cache = {"read": 0, "total": 0}, {}
             meta_cols = _ROW_META if groups else ("seq", "n_rows")
-            for path in paths:
-                sid, pid = _path_block_coords(path)
-                for bb in block_batches(path, roots, None, cnt, del_cache,
-                                        meta_cols=meta_cols):
-                    for row in block_rows(bb):
-                        keep, _ = _keep_mask(
-                            row, row.get(DELETE_MASK_COL), groups,
-                            session_tz, target)
-                        n = row["n_rows"] if keep is None else int(
-                            keep.sum())
-                        if n:
-                            found.append({"snapshot_id": sid,
-                                          "part_id": pid,
-                                          "seq": row["seq"], "n": n})
-            return pa.RecordBatch.from_pylist(found, schema=_MATCH_COUNTS)
+            return pa.RecordBatch.from_pylist(list(block_counts(
+                (bb for path in paths for bb in block_batches(
+                    path, roots, None, cnt, del_cache, coords=True,
+                    meta_cols=meta_cols)),
+                groups, session_tz, target)), schema=MATCH_COUNTS)
 
-        if verify and not groups:
-            _warn_partial_verify()
-        counts = _run_parts(spark, _file_groups(files, files_per_task),
-                            count, _MATCH_COUNTS)
-        budgets = _window_budgets(sorted(
-            ((r["snapshot_id"], r["part_id"], r["seq"]), r["n"])
-            for r in counts), offset, limit)
+        budgets = _limit_window(
+            _run_parts(spark, _file_groups(files, files_per_task), count,
+                       MATCH_COUNTS), limit, offset, verify, groups)
         n_read, n_total = len(budgets), _count_blocks(files, blocks_fs)
         window = {}
         for s, p, q in budgets:
@@ -775,11 +708,9 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
             for path in paths:
                 seqs = (None if window is None
                         else window[_path_block_coords(path)])
-                for out in fn(block_batches(path, scan_want, seqs, cnt,
+                for out in fn(block_batches(path, plan.scan, seqs, cnt,
                                             del_cache,
                                             coords=budgets is not None)):
-                    if out_cols is not None:
-                        out = out.select(out_cols)
                     cnt["rows"] += out.num_rows
                     yield out
 
@@ -797,12 +728,8 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
     n_rows = sum(r["n_rows"] for r in meta)
     if not n_rows and n_total:
         # every row filtered, pruned or offset away: one empty part keeps
-        # the output readable, with the schema a decode writes (the compat
-        # target, else the first block's decodable columns) projected
-        fields = (list(target) if target is not None else decodable_fields(
-            metas or _first_block_columns(files, blocks_fs)))
-        empty = pa.RecordBatch.from_pylist([], schema=pa.schema(
-            [f for f in fields if columns is None or f.name in columns]))
+        # the output readable, with the schema a decode writes
+        empty = pa.RecordBatch.from_pylist([], schema=pa.schema(plan.fields))
         _publish([empty], out_fs, f"{out_root}/part-00000.parquet",
                  compression="snappy")
     return {"n_rows": n_rows, "n_parts": len(meta),

@@ -19,8 +19,8 @@ from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession, types as T
 
-from ..engine.decode import (_normalize_filters, make_decode_fn,
-                             schema_of_blocks)
+from ..engine.decode import (_decoded_schema, _sample_block_columns,
+                             _scan_columns, make_decode_fn, plan_read)
 
 
 def decode_stream(spark: SparkSession, blocks_path: str,
@@ -30,8 +30,10 @@ def decode_stream(spark: SparkSession, blocks_path: str,
                   filters=None) -> DataFrame:
     """Streaming DataFrame of decoded rows from a blocks directory.
 
-    The decoded-output schema must be known up front for a stream; it is
-    inferred from the existing blocks (or pass `schema`).
+    The read is planned, and the decoded-output schema inferred (unless
+    `schema` is passed), from one existing block's metadata with the
+    batch reads' planner (decode.plan_read): a requested or filter
+    column that block lacks raises ValueError before the stream starts.
 
     filters: same predicate list as decode_blocks(filters=), evaluated
     in the decode task exactly as on the batch paths: block_keep_py
@@ -42,22 +44,18 @@ def decode_stream(spark: SparkSession, blocks_path: str,
     that keeps pruned payloads out of the scan is a driver-side job and
     does not apply to a stream.)
     """
-    groups = _normalize_filters(filters)
     static = spark.read.parquet(blocks_path)
+    metas = _sample_block_columns(static)
+    plan = plan_read(metas, columns, filters=filters)
     if schema is None:
-        schema = schema_of_blocks(static, columns)
+        schema = _decoded_schema(metas, plan)
     stream = (spark.readStream.schema(static.schema)
               .option("maxFilesPerTrigger", 16)
               .parquet(blocks_path))
-    if columns is not None:
-        from ..engine.decode import (_blocks_arrow_types, _scan_columns,
-                                     filter_root_columns_of)
-
-        roots = filter_root_columns_of(groups, _blocks_arrow_types(static))
-        stream = _scan_columns(
-            stream, list(columns) + [c for c in roots if c not in columns])
+    if plan.scan is not None:
+        stream = _scan_columns(stream, plan.scan)
     session_tz = (spark.conf.get("spark.sql.session.timeZone")
-                  if groups else None)
+                  if plan.groups else None)
     return stream.mapInArrow(
-        make_decode_fn(verify, columns, groups=groups,
+        make_decode_fn(verify, columns, groups=plan.groups,
                        session_tz=session_tz), schema)

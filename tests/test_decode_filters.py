@@ -9,9 +9,14 @@ from pyspark.sql import functions as F
 
 from sparkolumnar.datagen import pages_df
 from sparkolumnar.engine import decode_blocks, encode_table
-from sparkolumnar.engine.decode import (_blocks_arrow_types, _prune_blocks,
+from sparkolumnar.engine.decode import (_prune_blocks, _sample_block_columns,
                                         block_keep_py)
 from sparkolumnar.engine.tableio import TableIO
+
+
+def _arrow_types(blocks) -> dict:
+    """{column: arrow type string} of one block's metadata entries."""
+    return {m["name"]: m["arrow_type"] for m in _sample_block_columns(blocks)}
 
 
 def _assert_pruning_sound(blocks, filters, pred, n_match):
@@ -161,11 +166,27 @@ def test_pruned_payloads_never_reach_the_decode_udf(spark, clustered_blocks):
 
 
 def test_filters_limit_counts_matching_rows(spark, clustered_blocks):
+    """limit= with filters returns the first 17 matching rows in
+    (snapshot_id, part_id, seq, row) order."""
+    from sparkolumnar.engine.blocks import payload_field, validity_field
+    from sparkolumnar.engine.decode import COORD_COLS, decode_block_row
+
     pages, blocks = clustered_blocks
     out = decode_blocks(blocks, filters=[("lang", "=", "en")], limit=17)
     rows = out.collect()
     assert len(rows) == 17
     assert all(r["lang"] == "en" for r in rows)
+    stored = blocks.orderBy(*COORD_COLS).select(
+        *COORD_COLS, "n_rows", "columns",
+        *[f(c) for c in ("url", "lang")
+          for f in (payload_field, validity_field)]).toArrow()
+    want = []
+    for r in stored.to_pylist():
+        b = decode_block_row(r, columns=["url", "lang"]).to_pylist()
+        want += [x["url"] for x in b if x["lang"] == "en"]
+        if len(want) >= 17:
+            break
+    assert sorted(r["url"] for r in rows) == sorted(want[:17])
 
 
 def test_filters_unknown_column_never_prunes_blocks(spark, clustered_blocks):
@@ -718,7 +739,7 @@ def test_struct_child_zone_maps_prune_and_match(spark):
     blocks = encode_table(df, cluster_by=["meta.n_chars", "id"],
                           partitions=4, snapshot_id="stz").cache()
     total = blocks.count()
-    types = _blocks_arrow_types(blocks)
+    types = _arrow_types(blocks)
     assert types.get("meta.n_chars") == "int64"
     assert types.get("meta.lang") == "string"
     dec = decode_blocks(blocks).cache()
@@ -859,7 +880,7 @@ def test_map_key_zone_maps_prune_and_match(spark):
     blocks = encode_table(df, cluster_by=["id"], partitions=4,
                           snapshot_id="mapz").cache()
     total = blocks.count()
-    types = _blocks_arrow_types(blocks)
+    types = _arrow_types(blocks)
     assert types.get("attrs.source") == "string"
     dec = decode_blocks(blocks).cache()
     cases = [
@@ -890,7 +911,7 @@ def test_map_key_zone_maps_prune_and_match(spark):
             F.concat(F.lit("k"), F.col("id").cast("string")),
             F.lit("v")).alias("m"))
     b2 = encode_table(big, partitions=2, snapshot_id="mapzbig")
-    t2 = _blocks_arrow_types(b2)
+    t2 = _arrow_types(b2)
     assert not any(k.startswith("m.") for k in t2)
     got2 = decode_blocks(b2, filters=[("m.k5", "=", "v")])
     assert got2.count() == 1

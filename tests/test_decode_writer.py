@@ -171,8 +171,13 @@ def test_limit_with_predicate_counts_matching_rows(spark, table, tmp_path,
         keys = got.column("k").to_pylist()
         assert res["rows"] == len(keys) == len(set(keys)) == limit
         assert got.column_names == ["k", "txt"]
-        assert got.to_pylist() == match.select(["k", "txt"]).slice(
-            offset, limit).to_pylist()
+        want = match.select(["k", "txt"]).slice(offset, limit)
+        assert got.to_pylist() == want.to_pylist()
+        ipc = decode_blocks(table.read_blocks(), columns=["k", "txt"],
+                            filters=[("lang", "=", "en")], limit=limit,
+                            offset=offset).toArrow()
+        assert (sorted(ipc.column("k").to_pylist())
+                == sorted(want.column("k").to_pylist()))
 
 
 def test_offset_past_the_end_leaves_one_empty_part(spark, table, tmp_path,
@@ -213,9 +218,17 @@ def test_output_overwrites_a_spark_written_directory(spark, table, tmp_path,
     (["--columns", "nope", "--merge-schema"], r"requested columns \['nope'\]"),
     (["--eq", "nope=x"], r"filter columns \['nope'\]"),
     (["--eq", "nope=x", "--merge-schema"], "must be part of the provided"),
+    # decode_blocks keyword arguments: the same planner, the same errors
+    (dict(columns=["k", "nope"]), r"requested columns \['nope'\]"),
+    (dict(filters=[("nope", "=", "x")]), r"filter columns \['nope'\]"),
 ])
 def test_unknown_columns_fail_before_any_task(spark, table, tmp_path,
                                               monkeypatch, argv, match):
+    """decode_job (argument lists) and decode_blocks (keyword arguments)
+    reject an unknown requested or filter column before any decode task
+    starts."""
+    from pyspark.sql import DataFrame
+
     import sparkolumnar.engine.direct as direct
     from sparkolumnar.jobs import decode_job
 
@@ -223,9 +236,27 @@ def test_unknown_columns_fail_before_any_task(spark, table, tmp_path,
         raise AssertionError("decode tasks were started")
 
     monkeypatch.setattr(direct, "_run_parts", no_tasks)
+    blocks = table.read_blocks()
+    monkeypatch.setattr(DataFrame, "mapInArrow", no_tasks)
     with pytest.raises(ValueError, match=match):
-        decode_job.main(["--blocks", table.blocks_path,
-                         "--output", str(tmp_path / "dec")] + argv)
+        if isinstance(argv, dict):
+            decode_blocks(blocks, **argv)
+        else:
+            decode_job.main(["--blocks", table.blocks_path,
+                             "--output", str(tmp_path / "dec")] + argv)
+
+
+def test_compat_columns_decode_only_the_requested_columns(spark, table):
+    """decode_blocks(compat=True, columns=) returns the requested columns
+    only, with their stored values, as decode_job --merge-schema
+    --columns writes them."""
+    from sparkolumnar.engine.decode import union_schema_of_blocks
+
+    blocks = table.read_blocks()
+    out = decode_blocks(blocks, schema=union_schema_of_blocks(blocks),
+                        compat=True, columns=["k"]).toArrow()
+    assert out.column_names == ["k"]
+    assert sorted(out.column("k").to_pylist()) == list(range(N))
 
 
 def test_decode_output_streams_one_row_group_per_block(spark, table,
@@ -438,6 +469,26 @@ def test_one_spark_job_per_read(spark, request, tmp_path, capsys, fixture,
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
 
 
+@pytest.mark.parametrize("kw, jobs", [
+    ({}, 1), (dict(filters=[("lang", "=", "en")]), 2), (dict(limit=100), 2),
+    (dict(filters=[("lang", "=", "en")], limit=100), 3)],
+    ids=["plain", "filters", "limit", "filters_limit"])
+def test_decode_blocks_planning_jobs(spark, table, kw, jobs):
+    """decode_blocks plans from one metadata sample job; a filter adds the
+    pruning pass and a limit the count job, before the decode runs."""
+    blocks = table.read_blocks()
+    sc = spark.sparkContext
+    group = "decode-blocks-" + "-".join(sorted(kw))
+    sc.setJobGroup(group, "decode_blocks planning")
+    try:
+        out = decode_blocks(blocks, **kw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
+    n_en = sum(LANGS[i * 7 % 11 % 5] == "en" for i in range(N))
+    assert out.count() == (100 if "limit" in kw else n_en if kw else N)
+
+
 @pytest.mark.parametrize("limit, offset", [(250, 0), (700, 130)])
 def test_limit_reads_scoped_by_snapshot(spark, two_snapshot_table, tmp_path,
                                         capsys, no_ipc_decode, limit, offset):
@@ -510,15 +561,15 @@ def _codec_decode_log(monkeypatch):
 
 
 @pytest.mark.parametrize("columns, compat", [(None, False), (["s"], False),
-                                             (["s"], True)])
+                                             (["s", "z"], True)])
 def test_filter_columns_decode_first(monkeypatch, columns, compat):
     """Without verify, a kept block decodes its filter column first and
     its other columns only when a row matches; with verify every column
     of every kept block decodes (checksums cover whole columns). Both
     paths return the same rows, DuckDB's for the same predicate; under a
-    compat target (which keeps the filter column and null-fills the
-    fields neither requested nor stored) too. One type per column, so
-    the logged types name the decoded columns."""
+    compat target (which null-fills a requested field no block stores)
+    too. One type per column, so the logged types name the decoded
+    columns."""
     import duckdb
 
     from sparkolumnar.engine.decode import make_decode_fn
@@ -541,10 +592,7 @@ def test_filter_columns_decode_first(monkeypatch, columns, compat):
     if compat:
         target = pa.schema(list(src.schema) + [pa.field("z", pa.int32())])
         want = want.append_column("z", pa.nulls(want.num_rows, pa.int32()))
-        # fields outside the requested and filter columns are null-filled
-        want = want.set_column(1, "x", pa.nulls(want.num_rows, pa.float64()))
-    else:
-        want = want.select(columns or src.column_names)
+    want = want.select(columns or src.column_names)
     want = want.to_pylist()
     log = _codec_decode_log(monkeypatch)
     got = {}

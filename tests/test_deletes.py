@@ -11,7 +11,9 @@ from pyspark.sql import functions as F
 
 from sparkolumnar.engine import decode_blocks, encode_table
 from sparkolumnar.engine.deletes import (aggregate_deletes,
-                                         compute_deletes, delete_where)
+                                         compute_deletes,
+                                         compute_deletes_by_keys,
+                                         delete_where)
 from sparkolumnar.engine.tableio import TableIO
 
 
@@ -216,6 +218,21 @@ def test_delete_on_widened_column_matches_duckdb(spark, tmp_path, pred,
     assert sorted(set(rows["k"]) - {r["k"] for r in live.collect()}) == want
     read = decode_blocks(blocks, schema=sch, compat=True, filters=pred)
     assert sorted(r["k"] for r in read.collect()) == want
+    if op != "=":
+        return
+    # a MERGE key set compares at the widest type too: f = 1.0000000001
+    # deletes no float 1.0 row, x = 5000000000 does not overflow int32
+    keys = spark.range(1).selectExpr(
+        f"CAST({v!r} AS {'bigint' if col == 'x' else 'double'}) AS {col}")
+    joined = sorted(duckdb.sql(
+        f"SELECT k FROM rows JOIN (SELECT {v!r} AS {col}) kk USING ({col})"
+    ).fetchnumpy()["k"])
+    for threshold in (500_000, 0):  # broadcast, then shuffle-join path
+        live = decode_blocks(blocks, schema=sch, compat=True,
+                             deletes=compute_deletes_by_keys(
+                                 blocks, keys, col, threshold))
+        assert sorted(set(rows["k"]) - {r["k"] for r in live.collect()}
+                      ) == joined, threshold
 
 
 def test_bitmap_bit_order_pinned(spark):

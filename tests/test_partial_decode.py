@@ -100,18 +100,10 @@ def test_decode_blocks_limit(spark):
     assert ("PartitionFilters" in plan and "snapshot_id" in plan
             and "part_id" in plan), plan
     assert "seq" in plan, plan
-    # fewer blocks scanned than exist
-    from sparkolumnar.engine.decode import _prefix_budgets
-    budgets = _prefix_budgets(blocks, 25)
-    assert len(budgets) < n_blocks
-    assert sum(t for _, t in budgets.values()) == 25
     # offset pagination: rows [30, 55) == full[30:55]
     page = decode_blocks(blocks, limit=25, offset=30).collect()
     full55 = decode_blocks(blocks).limit(55).collect()
     assert page == full55[30:]
-    # offset past a whole block skips it entirely
-    big = _prefix_budgets(blocks, 5, offset=blocks.collect()[0]["n_rows"] + 3)
-    assert all(s >= 0 for s, _ in big.values())
 
 
 def test_decode_prefix_property_all_codecs():
@@ -177,24 +169,13 @@ def test_fsst_range_needs_only_range_bytes():
         assert got.equals(arr.slice(start, stop - start)), case
 
 
-def test_prefix_budgets_distributed_large_offset(spark):
-    """_prefix_budgets over 100k synthetic block-metadata rows: the
-    two-level (per-partition aggregate -> windowed block fetch) scheme
-    must equal the naive single-walk reference for any offset, including
-    offsets deep into the table — without the driver iterating per-block
-    metadata outside the window."""
-    from pyspark.sql import functions as F
-
-    from sparkolumnar.engine.decode import _prefix_budgets
+def test_window_budgets_large_offset():
+    """_window_budgets over 100k synthetic blocks in coordinate order
+    equals the naive single-walk reference for any offset, including
+    offsets deep into the table and past its end."""
+    from sparkolumnar.engine.decode import _window_budgets
 
     n_parts, blocks_per_part = 200, 500  # 100k blocks
-    meta = (spark.range(n_parts * blocks_per_part)
-            .select((F.col("id") / blocks_per_part).cast("int")
-                    .alias("part_id"),
-                    (F.col("id") % blocks_per_part).cast("int").alias("seq"),
-                    (F.col("id") % 7 + 1).alias("n_rows"))
-            .withColumn("snapshot_id", F.lit("s")))
-
     rows = [(("s"), int(p), int(q), int(p * blocks_per_part + q) % 7 + 1)
             for p in range(n_parts) for q in range(blocks_per_part)]
 
@@ -216,5 +197,6 @@ def test_prefix_budgets_distributed_large_offset(spark):
     for limit, offset in [(25, 0), (10, 3), (40, total // 2),
                           (13, total - 20), (5, total + 10),
                           (1000, 399_990)]:
-        got = _prefix_budgets(meta, limit, offset)
+        got = _window_budgets((((s, p, q), nb) for s, p, q, nb in rows),
+                              offset, limit)
         assert got == reference(limit, offset), (limit, offset)
