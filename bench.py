@@ -210,7 +210,7 @@ def run_bench(spark, sf_dir: str, pages_rows: int = PAGES_ROWS):
     # end-to-end comparable
     import shutil
 
-    from sparkolumnar.engine import encode_table_direct_write
+    from sparkolumnar.engine import write_snapshot
     from sparkolumnar.engine.tableio import TableIO
 
     hybrid_dir = "/tmp/sparkolumnar_bench_hybrid"
@@ -220,11 +220,8 @@ def run_bench(spark, sf_dir: str, pages_rows: int = PAGES_ROWS):
     hybrid_io = TableIO(spark, hybrid_dir)
 
     def do_hybrid():
-        (encode_table_direct_write(pages, hybrid_io, key="url",
-                                   snapshot_id="bench_hy",
-                                   sort_within=True, plan=plan,
-                                   partitions=ncpu)
-         .select(F.sum("n_rows")).collect())
+        write_snapshot(pages, hybrid_io, "bench_hy", key="url",
+                       sort_within=True, plan=plan, partitions=ncpu)
 
     clock("pages_encode_hybrid", do_hybrid, repeats=4, quiet=True)
     extras["hybrid_encode_gbps"] = round(

@@ -54,7 +54,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     try:
         from sparkolumnar.datagen import pages_df
-        from sparkolumnar.engine import encode_table_direct_write
+        from sparkolumnar.engine import write_snapshot
         from sparkolumnar.engine.plan import build_plan
         from sparkolumnar.engine.tableio import TableIO
 
@@ -79,12 +79,9 @@ def main() -> int:
             d = tempfile.mkdtemp(prefix=f"sparkolumnar_cluster_{args.label}_")
             io = TableIO(spark, d)
             t0 = time.time()
-            (encode_table_direct_write(
-                pages, io, key="url",
-                snapshot_id=f"c{args.label}_{trial}",
-                sort_within=True, plan=plan,
-                partitions=max(total_cores, 2))
-             .select(F.sum("n_rows")).collect())
+            write_snapshot(pages, io, f"c{args.label}_{trial}", key="url",
+                           sort_within=True, plan=plan,
+                           partitions=max(total_cores, 2))
             dt = time.time() - t0
             shutil.rmtree(d, ignore_errors=True)
             best = dt if best is None else min(best, dt)

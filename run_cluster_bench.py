@@ -65,7 +65,7 @@ def main() -> int:
     eff = round(best["n4"]["gbps"] / (4 * best["n1"]["gbps"]), 3)
     out = {"rows": rows, "rounds": rounds, "master": master,
            "workers": "4 x 2-core JVMs, disjoint taskset pins",
-           "path": "hybrid (encode_table_direct_write, durable blocks)",
+           "path": "hybrid (write_snapshot, durable blocks)",
            "one_executor": best["n1"], "four_executors": best["n4"],
            "executor_scaling_efficiency_1_to_4": eff}
     print(json.dumps(out))

@@ -65,22 +65,20 @@ def run_level(cpus: int, rows: int, mode: str,
         for trial in range(2):
             if path == "hybrid":
                 # the production write path: Spark layout + task-side
-                # blocks write (encode_table_direct_write) — the whole
+                # blocks write (write_snapshot) — the whole
                 # job INCLUDING the durable blocks output, no IPC-out leg
                 import shutil
                 import tempfile
 
-                from sparkolumnar.engine import encode_table_direct_write
+                from sparkolumnar.engine import write_snapshot
                 from sparkolumnar.engine.tableio import TableIO
 
                 d = tempfile.mkdtemp(prefix=f"sparkolumnar_scale_{cpus}_")
                 io = TableIO(spark, d)
                 t0 = time.time()
-                (encode_table_direct_write(
-                    pages, io, key="url", snapshot_id=f"s{cpus}_{trial}",
-                    sort_within=True, plan=plan, mode=mode,
-                    partitions=cpus)
-                 .select(F.sum("n_rows")).collect())
+                write_snapshot(pages, io, f"s{cpus}_{trial}", key="url",
+                               sort_within=True, plan=plan, mode=mode,
+                               partitions=cpus)
                 dt = time.time() - t0
                 shutil.rmtree(d, ignore_errors=True)
             else:

@@ -269,8 +269,10 @@ def filter_mask(row, groups, session_tz=None,
     exact_filter_mask_py. The roots are those of `target` when given (the
     compat read's schema, or a delete's root types for the block): they
     decode compat-cast to its types, and a missing one reads as all-null of its
-    type. Without a target they are the block's own, as stored. Returns
-    (bool mask, decoded roots batch)."""
+    type. Without a target they are the block's own, as stored, and a
+    missing one reads as all-null (a comparison matches no row, is_null
+    every row); it is not part of the returned batch. Returns (bool mask,
+    decoded roots batch)."""
     names = (set(target.names) if target is not None
              else {m["name"] for m in row["columns"]})
     roots = filter_root_columns_of(groups, names)
@@ -278,7 +280,11 @@ def filter_mask(row, groups, session_tz=None,
         row, verify=verify, columns=roots,
         target=None if target is None else pa.schema(
             [f for f in target if f.name in roots]))
-    return (exact_filter_mask_py(first, groups, session_tz)
+    missing = [c for c in roots if c not in names]
+    probe = first if not missing else pa.RecordBatch.from_arrays(
+        first.columns + [pa.nulls(row["n_rows"])] * len(missing),
+        names=first.schema.names + missing)
+    return (exact_filter_mask_py(probe, groups, session_tz)
             .to_numpy(zero_copy_only=False), first)
 
 

@@ -273,10 +273,11 @@ def compute_deletes_by_keys(blocks_df: DataFrame, keys_df: DataFrame,
     Two physical strategies:
 
     * single-column key with <= broadcast_threshold distinct values:
-      the keys ship to every task (Arrow-collected once, vectorized
-      pc.is_in per block) — each block scan decodes ONLY the key column
-      and emits its bitmap in-task, ZERO shuffle (Iceberg's broadcast
-      MERGE shape);
+      the keys ship to every task (one Arrow collect of at most
+      broadcast_threshold + 1 keys both picks this strategy and ships
+      them; vectorized pc.is_in per block) — each block scan decodes
+      ONLY the key column and emits its bitmap in-task, ZERO shuffle
+      (Iceberg's broadcast MERGE shape);
     * otherwise (big key set, or composite keys): each block emits
       slim (coords, pos, keys) rows for a left-semi shuffle join
       against the keys, surviving positions re-pack to bitmaps per
@@ -308,10 +309,11 @@ def compute_deletes_by_keys(blocks_df: DataFrame, keys_df: DataFrame,
     keys_df = keys_df.distinct()
     scan = _scan_columns(blocks_df, ons)
     if len(ons) == 1:
-        n_keys = keys_df.count()
-        if n_keys <= broadcast_threshold:
-            keys_pa = keys_df.toArrow().column(0).combine_chunks()
-            keys_pa = keys_pa.drop_null()
+        # one evaluation of the key set decides and ships it: a probe
+        # one row past the threshold
+        probe = keys_df.limit(broadcast_threshold + 1).toArrow()
+        if probe.num_rows <= broadcast_threshold:
+            keys_pa = probe.column(0).combine_chunks().drop_null()
             return scan.mapInArrow(_emit_deletes(_key_mask(
                 ons[0], keys_pa, _widen_types(types[ons[0]]))),
                 DELETES_SCHEMA)

@@ -9,10 +9,9 @@ serialization is the dominant cost the engine controls.
 Every encode task writes its own blocks file through ONE writer
 (_write_part) and returns only a per-part metadata row to the driver:
 
-  * encode_table_direct_write: the Spark plan owns the layout (hash
-    shuffle / range clustering — row transport), the task writes. This
-    is how lineage.encode_job lands blocks on a path-level TableIO, and
-    through write_snapshot (staged, all-or-nothing) how DML
+  * write_snapshot: the Spark plan owns the layout (hash shuffle / range
+    clustering — row transport), the task writes. This is how
+    lineage.encode_job lands blocks on a path-level TableIO, and how DML
     (updates.update_where/merge_upsert) and compaction
     (maintenance.compact_snapshot) do, so the encoded payloads never
     cross the IPC-out leg nor the JVM writer.
@@ -21,12 +20,16 @@ Every encode task writes its own blocks file through ONE writer
     files with pyarrow (no JVM scan, no IPC-in).
   * decode_files_direct: decode-to-parquet, the same shape in reverse.
 
-Exactly-once: a part's blocks file name is a pure function of
-(snapshot_id, part_id); the writer stages it under an attempt-unique
-hidden temp, sweeps the part directory's other visible files (residue of
-a crashed, never-checkpointed attempt) and publishes with an atomic
-move, so a retried task idempotently replaces its own output. The
-checkpoint rows come from the tasks' metadata (lineage.commit_parts).
+Exactly-once, all-or-nothing: a part's blocks file name is a pure
+function of (snapshot_id, part_id). Both encode writers publish through
+ONE step (_staged): the tasks write their parts into a job-unique hidden
+`.stage-*` directory (each through an attempt-unique hidden temp and an
+atomic move, so a retried task idempotently replaces its own output),
+and only once the whole job succeeded does the driver move each part
+into place, sweeping its part directory's other visible files (residue
+of a crashed, never-checkpointed run). A failed job publishes nothing.
+The checkpoint rows come from the tasks' metadata (lineage.commit_parts),
+appended after the publish.
 The blocks files land inside TableIO's hive layout
 (blocks/snapshot_id=<s>/part_id=<p>/) WITHOUT the two partition columns
 in the file, exactly as Spark writes them, so a Spark scan of the blocks
@@ -233,7 +236,7 @@ _ROW_META = ("block_id", "seq", "n_rows", "columns")
 
 def _sweep(fs, target: str) -> None:
     """Delete the other visible files of `target`'s directory: the
-    per-part dynamic overwrite before a publish."""
+    per-part dynamic overwrite before _staged publishes a part."""
     from pyarrow import fs as pafs
 
     for info in fs.get_file_info(
@@ -250,14 +253,11 @@ def _drop_dir(fs, path: str) -> None:
         fs.delete_dir(path)
 
 
-def _publish(batches, fs, target: str, sweep: bool = False,
-             **writer_opts) -> None:
+def _publish(batches, fs, target: str, **writer_opts) -> None:
     """THE task-side parquet writer: stream `batches` through one
     ParquetWriter into an attempt-unique hidden temp next to `target`
     (holding one batch at a time) and publish it with an atomic move.
-    sweep=True first deletes the target directory's other visible files
-    (per-part dynamic overwrite). No batch: nothing is written or
-    swept."""
+    No batch: nothing is written."""
     import pyarrow.parquet as pq
 
     target_dir = posixpath.dirname(target)
@@ -273,11 +273,8 @@ def _publish(batches, fs, target: str, sweep: bool = False,
     finally:
         if writer is not None:
             writer.close()
-    if writer is None:
-        return
-    if sweep:
-        _sweep(fs, target)
-    fs.move(tmp, target)
+    if writer is not None:
+        fs.move(tmp, target)
 
 
 def _part_file(snap: str, pid: int) -> str:
@@ -291,9 +288,8 @@ def _write_part(blocks, fs, blocks_root: str, snap: str, pid: int) -> dict:
     (encode_batch output, one row each) into
     <blocks_root>/snapshot_id=<snap>/part_id=<pid>/direct-<snap>-<pid>
     .parquet and return the part's metadata row (n_blocks == 0: nothing
-    written, nothing swept). Only a crashed, never-checkpointed attempt
-    can have left other visible files in the part directory; they are
-    swept before the publish.
+    written). The encode writers pass a stage directory as blocks_root
+    (_staged), which publishes the part into the live table.
 
     One row group per block, so per-row-group `seq` statistics let a
     filtered decode (decode_files_direct filters=) skip pruned blocks'
@@ -315,7 +311,7 @@ def _write_part(blocks, fs, blocks_root: str, snap: str, pid: int) -> dict:
             meta["bytes_out"] += sum(c["bytes_out"] for c in cols)
             yield enc.drop_columns(["snapshot_id", "part_id"])
 
-    _publish(rows(), fs, target, sweep=True, compression="none",
+    _publish(rows(), fs, target, compression="none",
              write_statistics=["seq"], use_dictionary=False)
     return meta
 
@@ -362,6 +358,7 @@ def encode_files_direct(spark: SparkSession, input_path: str, io: TableIO,
     scan, the codec work AND the blocks write all inside the task (zero
     table bytes over JVM<->Python IPC). One part = `files_per_task` input
     files; resume skips committed parts exactly like lineage.encode_job.
+    The parts are published all-or-nothing (_staged), then checkpointed.
 
     filesystem: optional pyarrow filesystem for the task-side file IO
     (reads of the input parquet and writes of the blocks files); without
@@ -400,21 +397,13 @@ def encode_files_direct(spark: SparkSession, input_path: str, io: TableIO,
         return asdict(commit_parts(spark, io, snap, len(done), [], run_id))
     if plan == "auto":
         if filesystem is not None:
-            # driver-side bounded sample through the filesystem (Spark
-            # cannot scan fs-native relative paths): head slices of up
-            # to 8 evenly-strided files, same planner as build_plan
-            import pyarrow.parquet as pq
+            # driver-side sample through the filesystem (Spark cannot
+            # scan fs-native relative paths): the head slices build_plan
+            # samples of a bare local parquet scan, same planner
+            from .plan import parquet_heads, plan_from_sample
 
-            from .plan import plan_from_sample
-
-            step = max(1, len(files) // 8)
-            parts = []
-            for f in files[::step][:8]:
-                pf = pq.ParquetFile(filesystem.open_input_file(f))
-                for b in pf.iter_batches(batch_size=2048, columns=columns):
-                    parts.append(b)
-                    break
-                pf.close()
+            parts = parquet_heads(files, filesystem.open_input_file,
+                                  columns=columns)
             # all sampled files empty: no plan (per-batch selector runs
             # standalone) — from_batches([]) without a schema would raise
             plan = (plan_from_sample(pa.Table.from_batches(parts),
@@ -427,8 +416,7 @@ def encode_files_direct(spark: SparkSession, input_path: str, io: TableIO,
             if columns is not None:
                 df = df.select(*columns)
             plan = build_plan(df, mode=mode)
-    if blocks_root is None:
-        blocks_root = io.blocks_path
+    bfs, broot = _fs_for(blocks_root or io.blocks_path, filesystem)
 
     def encoded(paths, pid):
         import pyarrow.parquet as pq
@@ -444,14 +432,16 @@ def encode_files_direct(spark: SparkSession, input_path: str, io: TableIO,
                                            plan=plan)
                         seq += 1
 
-    def work(pid, paths):
-        # an empty part is still committed (no file is written)
-        bfs, broot = _fs_for(blocks_root, filesystem)
-        return pa.RecordBatch.from_pylist(
-            [_write_part(encoded(paths, pid), bfs, broot, snap, pid)],
-            schema=_PART_META)
+    def run(stage):
+        def work(pid, paths):
+            # an empty part is still committed (no file is written)
+            return pa.RecordBatch.from_pylist(
+                [_write_part(encoded(paths, pid), bfs, stage, snap, pid)],
+                schema=_PART_META)
 
-    meta = _run_parts(spark, pending, work, _PART_META)
+        return _run_parts(spark, pending, work, _PART_META)
+
+    meta = _staged(bfs, broot, run)
     return asdict(commit_parts(spark, io, snap, len(done), meta, run_id))
 
 
@@ -736,87 +726,65 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
             "n_blocks_read": n_read, "n_blocks_total": n_total}
 
 
-def encode_table_direct_write(df, io: TableIO, key: Optional[str] = None,
-                              partitions: Optional[int] = None,
-                              sort_within: bool = False,
-                              snapshot_id: str = "", mode: str = BALANCED,
-                              plan=None, overrides=None, cluster_by=None,
-                              cluster_layout: str = "range",
-                              skip_parts=None,
-                              sketches: Optional[bool] = None,
-                              filesystem=None,
-                              blocks_root: Optional[str] = None):
-    """Encode with task-side blocks writes: the Spark plan still owns the
-    layout (salted-hash shuffle / deterministic range clustering — row
-    transport that a scan-in-UDF path cannot do), but each task WRITES
-    its partition's blocks file itself (_write_part) and returns only
-    metadata rows. Compared to encode_table + io.write_blocks this
-    removes the IPC-out leg (the encoded payloads never travel back to
-    the JVM) and the JVM parquet writer. lineage.encode_job, DML and
-    compaction run it on every path-level TableIO.
-
-    Exactly-once: the output file name is a pure function of
-    (snapshot_id, partitionId), the write is temp + atomic move, and any
-    stale files of the same partition directory are removed before the
-    move. Parts in skip_parts and parts with no rows write nothing and
-    return no row.
-
-    Returns a driver-small metadata DataFrame
-    (part_id, n_blocks, n_rows, bytes_in, bytes_out); call .collect()
-    (or aggregate) to run the job. The blocks land in io.blocks_path (or
-    blocks_root, as in encode_files_direct) and read back through the
-    TableIO like any other snapshot.
-    """
-    import pyarrow.parquet  # noqa: F401  (fail fast on driver if missing)
-
+def write_snapshot(df, io: TableIO, snapshot_id: str, **layout) -> list:
+    """THE blocks writer over a DataFrame (lineage.encode_job on a
+    path-level TableIO, DML, compaction): the Spark plan owns the layout
+    (encode.prepare_encode — salted-hash shuffle / deterministic range
+    clustering, the row transport a scan-in-UDF path cannot do), and
+    each task writes its partition's blocks file itself (_write_part)
+    and returns only its metadata row, so the encoded payloads cross
+    neither the IPC-out leg nor the JVM parquet writer. `layout` takes
+    encode_table's arguments. The parts are published all-or-nothing
+    (_staged). Parts in skip_parts and parts with no rows write nothing
+    and return no row. Returns the tasks' metadata rows (part_id,
+    n_blocks, n_rows, bytes_in, bytes_out); the blocks read back through
+    the TableIO like any other snapshot."""
     from pyspark import TaskContext
 
-    from .encode import check_overrides, layout_for_encode, make_encode_fn
-    from .selector import FAST
+    from .encode import prepare_encode
 
-    check_overrides(overrides)
-    if sketches is None:
-        sketches = mode != FAST
-    df = layout_for_encode(df, key=key, partitions=partitions,
-                           sort_within=sort_within, cluster_by=cluster_by,
-                           cluster_layout=cluster_layout)
-    blocks_root = blocks_root or io.blocks_path
-    snap = snapshot_id
-    inner = make_encode_fn(snap, mode, skip_parts, plan, overrides, sketches)
+    df, encode = prepare_encode(df, snapshot_id=snapshot_id, **layout)
+    fs, root = _fs_for(io.blocks_path)
 
-    def work(batches):
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        bfs, broot = _fs_for(blocks_root, filesystem)
-        meta = _write_part(inner(batches), bfs, broot, snap, pid)
-        if meta["n_blocks"]:
-            yield pa.RecordBatch.from_pylist([meta], schema=_PART_META)
+    def run(stage):
+        def work(batches):
+            ctx = TaskContext.get()
+            pid = ctx.partitionId() if ctx is not None else 0
+            meta = _write_part(encode(batches), fs, stage, snapshot_id, pid)
+            if meta["n_blocks"]:
+                yield pa.RecordBatch.from_pylist([meta], schema=_PART_META)
 
-    return df.mapInArrow(work, from_arrow_schema(_PART_META))
+        return df.mapInArrow(work, from_arrow_schema(_PART_META)).collect()
+
+    return _staged(fs, root, run)
 
 
-def write_snapshot(df, io: TableIO, snapshot_id: str, **layout) -> list:
-    """All-or-nothing encode of `df` as one snapshot (DML, compaction):
-    the tasks write their parts into a job-unique hidden staging
-    directory, and only once all succeeded does the driver move each
-    part file into place (sweeping its part directory). A failed job
-    publishes nothing; a zombie attempt leaves only hidden files, which
-    vacuum_table reclaims. Returns the tasks' metadata rows."""
+def _staged(fs, root: str, write):
+    """THE publish step of every engine write of a path-level table:
+    `write(stage)` runs the job, whose tasks write each part under the
+    job-unique hidden directory `stage` (<root>/.stage-<uuid>) at the
+    part's final path relative to `root`. Only once it returned does
+    each staged file move into place, after a sweep of its destination
+    part directory's other visible files; the stage is dropped either
+    way. A failed job publishes nothing; a zombie attempt leaves only
+    hidden files, which vacuum_table reclaims. Returns what `write`
+    returned."""
     import uuid
 
-    stage = f"{io.blocks_path.rstrip('/')}/.stage-{uuid.uuid4().hex[:16]}"
-    fs, stage_root = _fs_for(stage)
-    _, root = _fs_for(io.blocks_path)
+    from pyarrow import fs as pafs
+
+    stage = posixpath.join(root, f".stage-{uuid.uuid4().hex[:16]}")
     try:
-        parts = encode_table_direct_write(
-            df, io, snapshot_id=snapshot_id, blocks_root=stage,
-            **layout).collect()
-        for r in parts:
-            rel = _part_file(snapshot_id, r["part_id"])
-            target = posixpath.join(root, rel)
-            fs.create_dir(posixpath.dirname(target), recursive=True)
-            _sweep(fs, target)
-            fs.move(posixpath.join(stage_root, rel), target)
+        out = write(stage)
+        for info in fs.get_file_info(pafs.FileSelector(
+                stage, recursive=True, allow_not_found=True)):
+            if (info.type == pafs.FileType.File
+                    and not info.base_name.startswith(".")):
+                target = posixpath.join(
+                    root, posixpath.relpath(info.path, stage))
+                fs.create_dir(posixpath.dirname(target), recursive=True)
+                _sweep(fs, target)
+                fs.move(info.path, target)
     finally:
-        _drop_dir(fs, stage_root)
-    return parts
+        _drop_dir(fs, stage)
+    return out

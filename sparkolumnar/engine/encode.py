@@ -665,25 +665,6 @@ def check_overrides(overrides) -> None:
                          f"encode; choose from: {', '.join(ok)}")
 
 
-def make_encode_fn(snapshot_id: str, mode: str,
-                   skip_parts: Optional[Set[int]] = None, plan=None,
-                   overrides=None, sketches: bool = True):
-    skip = skip_parts or set()
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        if pid in skip:
-            return
-        for seq, batch in enumerate(batches):
-            if batch.num_rows == 0:
-                continue
-            yield encode_batch(batch, snapshot_id, pid, seq, mode, plan=plan,
-                               overrides=overrides, sketches=sketches)
-
-    return fn
-
-
 def encode_table(df: DataFrame, key: Optional[str] = None,
                  partitions: Optional[int] = None, sort_within: bool = False,
                  snapshot_id: str = "", mode: str = BALANCED,
@@ -735,17 +716,42 @@ def encode_table(df: DataFrame, key: Optional[str] = None,
     overrides: {column: codec} forces codecs per column (the reference's
     per-field strategy attribute, applied at runtime); see check_overrides.
     """
+    df, fn = prepare_encode(
+        df, snapshot_id, mode, skip_parts, plan, overrides, sketches,
+        key=key, partitions=partitions, sort_within=sort_within, salt=salt,
+        cluster_by=cluster_by, cluster_layout=cluster_layout)
+    return df.mapInArrow(fn, blocks_schema(df.columns))
+
+
+def prepare_encode(df: DataFrame, snapshot_id: str = "",
+                   mode: str = BALANCED, skip_parts=None, plan=None,
+                   overrides=None, sketches: Optional[bool] = None,
+                   **layout):
+    """THE prologue of every encode (encode_table and the blocks writer
+    direct.write_snapshot), so the two cannot drift: check the overrides,
+    default `sketches` by mode, lay `df` out (layout_for_encode's
+    `layout` arguments) and build the in-task encode function, which
+    skips the partitions in skip_parts and encodes each non-empty Arrow
+    batch of a partition as one block. Arguments as encode_table's.
+    Returns (laid-out df, encode function)."""
     check_overrides(overrides)
     if sketches is None:
         sketches = mode != FAST
-    df = layout_for_encode(df, key=key, partitions=partitions,
-                           sort_within=sort_within, salt=salt,
-                           cluster_by=cluster_by,
-                           cluster_layout=cluster_layout)
-    return df.mapInArrow(
-        make_encode_fn(snapshot_id, mode, skip_parts, plan, overrides,
-                       sketches),
-        blocks_schema([f.name for f in df.schema.fields]))
+    df = layout_for_encode(df, **layout)
+    skip = skip_parts or set()
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        ctx = TaskContext.get()
+        pid = ctx.partitionId() if ctx is not None else 0
+        if pid in skip:
+            return
+        for seq, batch in enumerate(batches):
+            if batch.num_rows == 0:
+                continue
+            yield encode_batch(batch, snapshot_id, pid, seq, mode, plan=plan,
+                               overrides=overrides, sketches=sketches)
+
+    return df, fn
 
 
 def layout_for_encode(df: DataFrame, key: Optional[str] = None,

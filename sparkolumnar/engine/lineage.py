@@ -10,16 +10,19 @@ Protocol:
  2. A run skips partitions already present in the checkpoint table for this
     snapshot (the skip set is evaluated INSIDE the encode UDF — zero rows
     flow for completed partitions).
- 3. Each encode task writes its partition's blocks file itself
-    (direct._write_part: attempt-unique hidden temp, sweep of the part
-    directory's stale files, atomic move onto a name that is a pure
-    function of (snapshot, partition)) and returns the part's metrics.
-    Re-encoding a partition replaces its own file byte-for-byte
-    (content-addressed block_ids), so a crash between blocks-commit and
-    checkpoint-commit cannot duplicate data — the retry overwrites
-    idempotently. Exactly-once output follows without any coordination
-    beyond the checkpoint append. A TableIO without path-level access
-    (Iceberg) lands blocks through its own write_blocks commit instead.
+ 3. Each encode task writes its partition's blocks file itself into a
+    job-unique hidden stage (direct.write_snapshot: attempt-unique
+    hidden temp, atomic move onto a name that is a pure function of
+    (snapshot, partition)) and returns the part's metrics; only once
+    the whole job succeeded does the driver move the parts into place,
+    sweeping each part directory's stale files (direct._staged), so a
+    failed job publishes nothing. Re-encoding a partition replaces its
+    own file byte-for-byte (content-addressed block_ids), so a crash
+    between blocks-commit and checkpoint-commit cannot duplicate data —
+    the retry overwrites idempotently. Exactly-once output follows
+    without any coordination beyond the checkpoint append. A TableIO
+    without path-level access (Iceberg) lands blocks through its own
+    write_blocks commit instead.
  4. The checkpoint row carries the per-partition metrics the tasks
     returned (commit_parts); fine-grained per-column lineage is a
     payload-pruned projection of the blocks table itself (lineage_of).
@@ -34,7 +37,7 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 
-from .direct import encode_table_direct_write
+from .direct import write_snapshot
 from .encode import check_overrides, encode_table
 from .selector import BALANCED
 from .tableio import TableIO, snapshot_of_input
@@ -112,7 +115,7 @@ def encode_job(spark, input_df: DataFrame, io: TableIO, key: Optional[str] = "ur
               skip_parts=skip, plan=plan, overrides=overrides,
               cluster_by=cluster_by, cluster_layout=cluster_layout)
     if io.path_level:
-        parts = encode_table_direct_write(input_df, io, **kw).collect()
+        parts = write_snapshot(input_df, io, **kw)
     else:
         io.write_blocks(encode_table(input_df, **kw))
         parts = _landed_parts(io, snap, skip)

@@ -10,10 +10,11 @@ the way — the routine production maintenance any 100 TB table needs.
 
 Safety order: the new snapshot is fully written and row-count-verified
 against the old snapshot's metadata BEFORE the old directory is removed
-(delete_old=True). The write is staged (engine/direct.write_snapshot):
-a failed compaction job publishes no part, and a crash mid-compact
-leaves the old snapshots readable and the compact re-runnable (each
-part of the new snapshot is replaced deterministically).
+(delete_old=True). The write is staged (engine/direct.write_snapshot,
+published by direct._staged): a failed compaction job publishes no
+part, and a crash mid-compact leaves the old snapshots readable and the
+compact re-runnable (each part of the new snapshot is replaced
+deterministically).
 
 Layout note: compaction re-runs the row layout from scratch — pass key=
 (hash+sort) or cluster_by= to re-establish row order, or the rewrite is
@@ -205,8 +206,9 @@ def vacuum_table(io: TableIO, min_age_sec: float = 3600.0) -> dict:
       retention check; dotfile temps are already invisible to every
       reader, this reclaims the bytes);
     * **stale staged snapshots**: files a killed driver or a zombie
-      task left in a hidden `.stage-*` directory (engine/direct.
-      write_snapshot) go under the same age guard and count as temps;
+      task left in a hidden `.stage-*` directory (engine/direct._staged,
+      the publish step of every encode, DML and compaction write) go
+      under the same age guard and count as temps;
       an old staging directory left without files is removed;
     * **orphaned delete rows**: a crash between compaction's
       blocks-directory drop and deletes-directory drop leaves delete

@@ -215,34 +215,10 @@ def sample_local_parquet(df, sample_rows: int = DEFAULT_SAMPLE_ROWS
     paths = _local_paths_of(files)
     if paths is None:
         return None
-    want = min(len(paths), _SAMPLE_PARTS)
-    step = max(1, len(paths) // want)
-    picks = paths[::step][:want]
-    per_file = max(64, sample_rows // max(1, want))
-
-    import pyarrow.parquet as pq
-
-    def head(path):
-        pf = pq.ParquetFile(path)
-        got, batches = 0, []
-        for b in pf.iter_batches(batch_size=per_file):
-            take = min(b.num_rows, per_file - got)
-            if take > 0:
-                batches.append(b.slice(0, take))
-            got += take
-            if got >= per_file:
-                break
-        pf.close()
-        return batches
-
-    from concurrent.futures import ThreadPoolExecutor
-
     try:
-        with ThreadPoolExecutor(max_workers=min(8, len(picks))) as pool:
-            parts = list(pool.map(head, picks))
+        batches = parquet_heads(paths, lambda p: p, sample_rows)
     except Exception:
         return None  # unreadable/odd file: Spark's reader may still cope
-    batches = [b for bs in parts for b in bs]
     if not batches:
         return None
     # the Spark sample is the one that sees what lives outside the files
@@ -260,6 +236,39 @@ def sample_local_parquet(df, sample_rows: int = DEFAULT_SAMPLE_ROWS
             != dict(zip(want.names, want.types))):
         return None
     return sample
+
+
+def parquet_heads(paths, open_file, sample_rows: int = DEFAULT_SAMPLE_ROWS,
+                  columns=None) -> list:
+    """THE driver-side parquet head sampler (sample_local_parquet, and
+    encode_files_direct through an explicit filesystem): the head slices
+    of up to _SAMPLE_PARTS evenly-strided files of `paths`, about
+    sample_rows rows in all, each file opened as open_file(path)
+    (anything pyarrow.parquet.ParquetFile reads). Returns the slices'
+    batches in file order."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    import pyarrow.parquet as pq
+
+    want = min(len(paths), _SAMPLE_PARTS)
+    step = max(1, len(paths) // want)
+    picks = paths[::step][:want]
+    per_file = max(64, sample_rows // max(1, want))
+
+    def head(path):
+        got, batches = 0, []
+        with pq.ParquetFile(open_file(path)) as pf:
+            for b in pf.iter_batches(batch_size=per_file, columns=columns):
+                take = min(b.num_rows, per_file - got)
+                if take > 0:
+                    batches.append(b.slice(0, take))
+                got += take
+                if got >= per_file:
+                    break
+        return batches
+
+    with ThreadPoolExecutor(max_workers=min(8, len(picks))) as pool:
+        return [b for bs in pool.map(head, picks) for b in bs]
 
 
 def build_plan(df, mode: str = BALANCED,

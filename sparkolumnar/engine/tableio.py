@@ -6,13 +6,13 @@ jars, so the same semantics are provided over parquet directories:
 
 * blocks live in a (snapshot_id, part_id) hive layout. Encode jobs, DML
   and compaction write each part's file in-task (engine/direct.
-  _write_part) and publish it with a per-part sweep plus atomic move, so
-  re-running a partition replaces exactly its own files (idempotent,
-  because block contents are deterministic functions of the input
-  partition) — the parquet equivalent of an Iceberg
-  overwrite-partitions commit. DML and compaction stage the whole
-  snapshot in a hidden directory first and move its parts into place
-  only when every task succeeded (engine/direct.write_snapshot);
+  _write_part) into a hidden stage directory, and only once every task
+  succeeded are the parts published, each with a per-part sweep plus
+  atomic move (engine/direct._staged), so re-running a partition
+  replaces exactly its own files (idempotent, because block contents
+  are deterministic functions of the input partition) and a failed job
+  publishes nothing — the parquet equivalent of an Iceberg
+  overwrite-partitions commit;
 * the input "snapshot id" is synthesized from the input file listing, the
   parquet stand-in for an Iceberg snapshot id.
 """

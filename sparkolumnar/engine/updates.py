@@ -15,9 +15,10 @@ Commit protocol (ordered so every crash window re-runs to convergence):
 2. matched rows are decoded LIVE (existing delete bitmaps applied — a
    previously deleted row is never resurrected) from the OLD snapshots
    only, assignments applied, and encoded as the update snapshot by
-   the task-side blocks writer, staged so that a failed job publishes
-   nothing (engine/direct.write_snapshot); each committed part replaces
-   its (snapshot_id, part_id) directory's files with its own. That
+   the task-side blocks writer (engine/direct.write_snapshot), whose
+   parts are staged and published only after the job succeeded, so a
+   failed job publishes nothing; each published part replaces its
+   (snapshot_id, part_id) directory's files with its own. That
    makes this step idempotent: a re-run re-derives identical rows
    from the ORIGINAL stored rows (its own half-written output is
    excluded from the scan), so even non-idempotent expressions like

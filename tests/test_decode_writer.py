@@ -16,7 +16,7 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 
-from sparkolumnar.engine import encode_table_direct_write
+from sparkolumnar.engine import write_snapshot
 from sparkolumnar.engine.decode import decode_block_row, decode_blocks
 from sparkolumnar.engine.tableio import TableIO
 
@@ -36,9 +36,8 @@ def _encode(spark, base, snapshot_id="w1", k0=0):
     spark.conf.set(key, str(BLOCK_ROWS))
     try:
         io = TableIO(spark, base)
-        encode_table_direct_write(spark.createDataFrame(pdf), io, key="k",
-                                  partitions=3,
-                                  snapshot_id=snapshot_id).collect()
+        write_snapshot(spark.createDataFrame(pdf), io, snapshot_id,
+                       key="k", partitions=3)
     finally:
         spark.conf.set(key, old)
     return io
@@ -325,8 +324,7 @@ _RETRY_SCRIPT = textwrap.dedent("""
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
         .config("spark.ui.enabled", "false")
         .getOrCreate())
-    from sparkolumnar.engine import (decode_files_direct,
-                                     encode_table_direct_write)
+    from sparkolumnar.engine import decode_files_direct, write_snapshot
     from sparkolumnar.engine.tableio import TableIO
 
     class Flaky(pafs.FileSystemHandler):
@@ -395,8 +393,7 @@ _RETRY_SCRIPT = textwrap.dedent("""
     io = TableIO(spark, os.path.join(base, "t"))
     src = spark.range(0, N, numPartitions=2).selectExpr(
         "id", "cast(id * 7 % 13 AS string) AS s")
-    encode_table_direct_write(src, io, key=None, partitions=None,
-                              snapshot_id="s").collect()
+    write_snapshot(src, io, "s", key=None, partitions=None)
     clean = os.path.join(base, "clean")
     decode_files_direct(spark, io, clean, verify=True)
     fail_after = min(os.path.getsize(f) for f in

@@ -204,17 +204,16 @@ def test_direct_encoded_blocks_support_filters_pruning(spark, pages_dir,
 
 
 def test_hybrid_direct_write_encode(spark, pages_dir, tmp_path):
-    """encode_table_direct_write: Spark layout (url-hash shuffle + sort),
-    task-side blocks write — table must round-trip bit-identically and
-    read back as a normal blocks table."""
-    from sparkolumnar.engine.direct import encode_table_direct_write
+    """write_snapshot: Spark layout (url-hash shuffle + sort), task-side
+    blocks write — table must round-trip bit-identically and read back
+    as a normal blocks table."""
+    from sparkolumnar.engine.direct import write_snapshot
 
     src = _pages_path(pages_dir)
     raw = spark.read.parquet(src)
     io = TableIO(spark, str(tmp_path / "th"))
-    meta = encode_table_direct_write(raw, io, key="url", partitions=4,
-                                     sort_within=True,
-                                     snapshot_id="hyb").collect()
+    meta = write_snapshot(raw, io, "hyb", key="url", partitions=4,
+                          sort_within=True)
     assert len(meta) == 4
     assert sum(r["n_rows"] for r in meta) == N_ROWS
     assert sum(r["bytes_out"] for r in meta) < sum(r["bytes_in"] for r in meta)
@@ -224,8 +223,8 @@ def test_hybrid_direct_write_encode(spark, pages_dir, tmp_path):
     assert dec.select("url", "text").exceptAll(
         raw.select("url", "text")).count() == 0
     # re-running the same snapshot overwrites idempotently (no dupes)
-    encode_table_direct_write(raw, io, key="url", partitions=4,
-                              sort_within=True, snapshot_id="hyb").collect()
+    write_snapshot(raw, io, "hyb", key="url", partitions=4,
+                   sort_within=True)
     assert io.read_blocks().agg(F.sum("n_rows")).collect()[0][0] == N_ROWS
 
 
@@ -236,13 +235,12 @@ def test_inprogress_leftovers_are_invisible_and_cleaned(spark, pages_dir,
     must clean stale artifacts (dynamic-overwrite semantics)."""
     import os
 
-    from sparkolumnar.engine.direct import encode_table_direct_write
+    from sparkolumnar.engine.direct import write_snapshot
 
     src = _pages_path(pages_dir)
     raw = spark.read.parquet(src)
     io = TableIO(spark, str(tmp_path / "tc2"))
-    encode_table_direct_write(raw, io, key="url", partitions=2,
-                              snapshot_id="cc").collect()
+    write_snapshot(raw, io, "cc", key="url", partitions=2)
     part_dir = os.path.join(io.blocks_path, "snapshot_id=cc", "part_id=0")
     # simulate a crashed attempt: a half-written temp + a stale visible file
     with open(os.path.join(part_dir, ".direct-cc-0.inprogress"), "wb") as f:
@@ -252,8 +250,7 @@ def test_inprogress_leftovers_are_invisible_and_cleaned(spark, pages_dir,
         f.write(b"")  # zero-byte parquet would break a scan if read
     # the dot-file is invisible; the stale empty .parquet WOULD break the
     # scan - a re-run of the snapshot must remove it
-    encode_table_direct_write(raw, io, key="url", partitions=2,
-                              snapshot_id="cc").collect()
+    write_snapshot(raw, io, "cc", key="url", partitions=2)
     assert not os.path.exists(stale)
     blocks = io.read_blocks()
     assert blocks.agg(F.sum("n_rows")).collect()[0][0] == N_ROWS
@@ -289,6 +286,17 @@ def test_direct_paths_through_explicit_filesystem(spark, tmp_path):
     r = encode_files_direct(spark, rel_src, io, filesystem=sub,
                             blocks_root="t/blocks", run_id="fs1")
     assert r["n_rows"] == 3000
+    # the driver samples through the filesystem what build_plan samples
+    # of a local scan: the same plan, so the same bytes in every part
+    local_io = TableIO(spark, str(tmp_path / "local"))
+    encode_files_direct(spark, src, local_io, run_id="local")
+
+    def part_bytes(t):
+        return sorted((c["part_id"], c["bytes_out"])
+                      for c in t.read_checkpoint().collect())
+
+    assert part_bytes(io) == part_bytes(local_io)
+    assert len(part_bytes(io)) > 1
 
     blocks = spark.read.parquet(str(tmp_path / "t" / "blocks"))
     dec = decode_blocks(blocks).select("url", "text")
@@ -485,7 +493,7 @@ def test_hybrid_job_resume_and_crash_recovery(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from sparkolumnar.datagen import pages_df
-    from sparkolumnar.engine import encode_table_direct_write
+    from sparkolumnar.engine import write_snapshot
     from sparkolumnar.engine.lineage import encode_job
 
     pages = pages_df(spark, 3000, cache_dir=str(tmp_path / "pg"))
@@ -493,9 +501,7 @@ def test_hybrid_job_resume_and_crash_recovery(spark, tmp_path):
 
     # simulate a crash: blocks land (task-side writes), checkpoint never
     # does — the next job run must redo and overwrite, not duplicate
-    (encode_table_direct_write(pages, io, key="url", snapshot_id="crash",
-                               partitions=4)
-     .select(F.sum("n_rows")).collect())
+    write_snapshot(pages, io, "crash", key="url", partitions=4)
     # the "crashed" snapshot has blocks but zero checkpointed parts
     assert io.committed_parts("crash") == set()
 

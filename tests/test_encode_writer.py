@@ -1,6 +1,6 @@
-"""The one blocks-file writer (direct._write_part): what lineage.encode_job,
-DML and compaction commit, what the files hold, and how a retried
-writing task behaves."""
+"""The one blocks writer (direct.write_snapshot): what lineage.encode_job,
+DML and compaction commit, what the files hold, how a retried writing
+task behaves and what a failed job publishes."""
 
 import glob
 import os
@@ -14,8 +14,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from sparkolumnar.datagen import pages_df
-from sparkolumnar.engine import (compact_snapshot, decode_blocks, encode_table,
-                                 encode_table_direct_write)
+from sparkolumnar.engine import (compact_snapshot, decode_blocks,
+                                 encode_files_direct, encode_table,
+                                 write_snapshot)
 from sparkolumnar.engine.lineage import encode_job, lineage_of
 from sparkolumnar.engine.tableio import TableIO
 from sparkolumnar.engine.updates import merge_upsert, update_where
@@ -55,8 +56,7 @@ def test_task_written_blocks_have_seq_statistics_only(spark, tmp_path):
     payloads are pure stored-bytes bloat."""
     df = _numeric_df(spark)
     task_io = TableIO(spark, str(tmp_path / "task"))
-    encode_table_direct_write(df, task_io, partitions=2,
-                              snapshot_id="n").collect()
+    write_snapshot(df, task_io, "n", partitions=2)
     files = glob.glob(task_io.blocks_path + "/*/*/*.parquet")
     assert len(files) == 2
     for f in files:
@@ -152,7 +152,7 @@ _HARNESS = textwrap.dedent("""
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
         .config("spark.ui.enabled", "false")
         .getOrCreate())
-    from sparkolumnar.engine import encode_table_direct_write
+    from sparkolumnar.engine import write_snapshot
     from sparkolumnar.engine.tableio import TableIO
 
     N = 2000
@@ -179,8 +179,7 @@ _HARNESS = textwrap.dedent("""
 _RETRY_SCRIPT = _HARNESS + textwrap.dedent("""
     def run(df, name):
         io = TableIO(spark, os.path.join(base, name))
-        meta = encode_table_direct_write(
-            df, io, key=None, partitions=None, snapshot_id="s").collect()
+        meta = write_snapshot(df, io, "s", key=None, partitions=None)
         blocks = io.read_blocks()
         ids = sorted(r["block_id"] for r in
                      blocks.select("block_id").collect())
@@ -209,7 +208,7 @@ _MERGE_RETRY_SCRIPT = _HARNESS + textwrap.dedent("""
         io = TableIO(spark, os.path.join(base, name))
         old = spark.range(N // 2, N // 2 + N, numPartitions=2).selectExpr(
             "id", "'old' AS s")
-        encode_table_direct_write(old, io, snapshot_id="b").collect()
+        write_snapshot(old, io, "b")
         st = merge_upsert(io, df, on="id", snapshot_id="m")
         ids = sorted(r["block_id"] for r in io.read_blocks()
                      .where(F.col("snapshot_id") == "m")
@@ -265,8 +264,7 @@ def _dml_table(spark, base, io_cls=TableIO):
     """20000 stored rows as snapshot "b" (4 task-written parts), and a
     merge source of 10000 rows, half of them matching stored keys."""
     io = io_cls(spark, base)
-    encode_table_direct_write(_numeric_df(spark), io, partitions=4,
-                              snapshot_id="b").collect()
+    write_snapshot(_numeric_df(spark), io, "b", partitions=4)
     src = _numeric_df(spark).where("id < 10000").selectExpr(
         "id + 15000 AS id", "qty", "price", "flag", "ship")
     return io, src
@@ -386,8 +384,9 @@ def _corrupt_last_block(path):
 def test_failed_dml_and_compaction_publish_nothing(spark, tmp_path):
     """One task of each operation's write job fails after the others
     finished (a local[N] master retries no task): update_where,
-    merge_upsert and compact_snapshot raise, the files a reader sees are
-    byte-unchanged and no delete bitmap is written."""
+    merge_upsert, compact_snapshot, lineage.encode_job and
+    encode_files_direct raise, the files a reader sees are byte-unchanged,
+    no delete bitmap or checkpoint row is written and no stage is left."""
     io, _ = _dml_table(spark, str(tmp_path / "t"))
     before = _visible_tree(io.blocks_path)
     # the task holding id 19999 waits for the other tasks, then raises
@@ -429,8 +428,7 @@ def test_failed_dml_and_compaction_publish_nothing(spark, tmp_path):
 
     # one many-block part whose last block is corrupt: its task fails
     # after the tasks of "b"'s four small parts finished
-    encode_table_direct_write(_numeric_df(spark, 200000), io, partitions=1,
-                              snapshot_id="big").collect()
+    write_snapshot(_numeric_df(spark, 200000), io, "big", partitions=1)
     big = glob.glob(os.path.join(io.blocks_path, "snapshot_id=big",
                                  "part_id=0", "*.parquet"))
     assert len(big) == 1
@@ -441,3 +439,31 @@ def test_failed_dml_and_compaction_publish_nothing(spark, tmp_path):
                          delete_old=True)
     assert _visible_tree(io.blocks_path) == before
     assert not os.path.exists(io.deletes_path)
+
+    class LatePlan:
+        # a codec plan whose lookups in partition 1 wait for the other
+        # tasks, then raise: the encode jobs' writing tasks fail late
+        def get(self, name):
+            import time
+
+            from pyspark import TaskContext
+
+            if TaskContext.get().partitionId() == 1:
+                time.sleep(3)
+                raise RuntimeError("boom")
+            return None
+
+    src = str(tmp_path / "src")
+    _numeric_df(spark).write.parquet(src)  # 2 files: 2 parts
+    for snap, run in (
+            ("e", lambda: encode_job(spark, _numeric_df(spark), io, key="id",
+                                     partitions=P, snapshot_id="e",
+                                     plan=LatePlan())),
+            ("f", lambda: encode_files_direct(spark, src, io,
+                                              snapshot_id="f",
+                                              plan=LatePlan()))):
+        with pytest.raises(Exception, match="boom"):
+            run()
+        assert _visible_tree(io.blocks_path) == before
+        assert io.committed_parts(snap) == set()
+    assert not glob.glob(os.path.join(io.blocks_path, ".stage-*"))

@@ -2,7 +2,9 @@
 predicates over random nullable Arrow tables, the IPC read
 (decode_blocks), the direct read (decode_files_direct) and DuckDB over
 the same Arrow table return the same rows, and a delete with the same
-predicate (compute_deletes) marks exactly those rows. A cheaper
+predicate (compute_deletes) marks exactly those rows. The stored table
+has two schema generations, the second without some filter columns,
+which every path reads as null without a compat target. A cheaper
 in-process twin runs many more examples through the two functions every
 path shares: block_keep_py never drops a block holding a DuckDB-matched
 row, and exact_filter_mask_py selects exactly DuckDB's rows.
@@ -19,6 +21,7 @@ from decimal import Decimal
 import duckdb
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from hypothesis import HealthCheck, given, settings, strategies as st
 
@@ -156,17 +159,26 @@ def test_ipc_direct_and_duckdb_agree_on_random_dnf(spark, tmp_path_factory,
                                                   table, predicates):
     base = tmp_path_factory.mktemp("diff")
     io = TableIO(spark, str(base / "t"))
-    # clustered on k so blocks cover disjoint row ranges and prune
-    io.write_blocks(encode_table(spark.createDataFrame(table),
-                                 cluster_by="k", partitions=3,
-                                 snapshot_id="diff"))
+    # snapshot "a" holds every column and comes first in (snapshot,
+    # part) order, so both reads plan from its blocks; "b" repeats the
+    # rows under new keys without `i` and the struct `m`, whose filter
+    # leaves then read as null (DuckDB sees the null-filled union)
+    old = table.set_column(0, "k", pc.add(table.column("k"), 1000))
+    union = pa.concat_tables([table, old.set_column(
+        1, "i", pa.nulls(len(old), pa.int64())).set_column(
+        6, "m", pa.nulls(len(old), old.schema.field("m").type))])
+    for snap, gen in (("a", table), ("b", old.drop_columns(["i", "m"]))):
+        # clustered on k so blocks cover disjoint row ranges and prune
+        io.write_blocks(encode_table(spark.createDataFrame(gen),
+                                     cluster_by="k", partitions=3,
+                                     snapshot_id=snap))
     blocks = io.read_blocks()
     # each block's keys in stored row order, for the delete bitmaps
     keys_at = {(r["snapshot_id"], r["part_id"], r["seq"]):
                decode_block_row(r, columns=["k"]).column(0).to_pylist()
                for r in blocks.toArrow().to_pylist()}
     for groups in predicates:
-        want = _duckdb_keys(table, groups)
+        want = _duckdb_keys(union, groups)
         ipc = {r["k"] for r in
                decode_blocks(blocks, columns=["k"], filters=groups)
                .collect()}

@@ -255,6 +255,35 @@ def test_merge_upsert_shuffle_join_path(spark, tmp_path, docs):
     assert _by_id(_table(io)) == _by_id(_merge_twin(docs, source))
 
 
+def test_merge_upsert_evaluates_its_source_three_times(spark, tmp_path):
+    """A broadcast MERGE evaluates its source once per step that reads
+    it: the cardinality check, the insert write and one probe of the key
+    set, which both picks the broadcast path and ships the keys."""
+    from sparkolumnar.engine.updates import merge_upsert
+
+    io = TableIO(spark, str(tmp_path / "t"))
+    io.write_blocks(encode_table(
+        spark.range(0, 2000, numPartitions=2).selectExpr("id", "id % 5 AS v"),
+        snapshot_id="b", partitions=2))
+    marks = str(tmp_path / "marks")
+    os.makedirs(marks)
+
+    def mark(batches):
+        # one file per evaluation of the (one-partition) source
+        import uuid
+
+        open(os.path.join(marks, uuid.uuid4().hex), "w").close()
+        yield from batches
+
+    src = spark.range(1500, 2500, numPartitions=1).selectExpr("id",
+                                                              "id % 3 AS v")
+    st = merge_upsert(io, src.mapInArrow(mark, src.schema), on="id",
+                      snapshot_id="m")
+    assert (st["n_rows_inserted"], st["n_rows_replaced_stored"]) == (1000,
+                                                                     500)
+    assert len(os.listdir(marks)) == 3
+
+
 def test_merge_key_nulls_and_string_keys(spark, tmp_path):
     """NULL stored keys never match (SQL join semantics); string-typed
     keys go through pc.is_in with an exact-type value set."""
