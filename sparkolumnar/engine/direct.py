@@ -26,8 +26,9 @@ ONE step (_staged): the tasks write their parts into a job-unique hidden
 `.stage-*` directory (each through an attempt-unique hidden temp and an
 atomic move, so a retried task idempotently replaces its own output),
 and only once the whole job succeeded does the driver move each part
-into place, sweeping its part directory's other visible files (residue
-of a crashed, never-checkpointed run). A failed job publishes nothing.
+the tasks' metadata rows name into place, sweeping its part directory's
+other visible files (residue of a crashed, never-checkpointed run). A
+failed job publishes nothing.
 The checkpoint rows come from the tasks' metadata (lineage.commit_parts),
 appended after the publish.
 The blocks files land inside TableIO's hive layout
@@ -46,11 +47,17 @@ from __future__ import annotations
 import hashlib
 import os
 import posixpath
+import threading
+import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict
 from typing import List, Optional, Sequence
 
 import pyarrow as pa
+import pyarrow.parquet as pq
+from pyarrow import fs as pafs
 
+from pyspark import TaskContext
 from pyspark.sql import SparkSession
 from pyspark.sql.pandas.types import from_arrow_schema
 
@@ -59,6 +66,10 @@ from .selector import BALANCED
 from .tableio import TableIO, require_path_level
 
 DEFAULT_BATCH_ROWS = 32768
+# _staged: a running job's marker interval (well under vacuum_table's
+# min_age_sec) and the number of concurrent part moves
+_STAGE_HEARTBEAT_SEC = 60.0
+_PUBLISH_THREADS = 8
 
 
 def _local_path(uri: str) -> str:
@@ -86,8 +97,6 @@ def _fs_for(path_or_uri: str, filesystem=None):
     stores implement it as copy+delete, where the content-addressed
     deterministic target name keeps retries idempotent even without
     rename atomicity."""
-    from pyarrow import fs as pafs
-
     if filesystem is not None:
         return filesystem, path_or_uri
     if "://" in path_or_uri or path_or_uri.startswith("file:"):
@@ -104,8 +113,6 @@ def list_parquet_files(spark: SparkSession, input_path: str,
     path resolution is involved anywhere in the direct pipeline. Hidden
     files and directories are skipped, as in Spark's listing."""
     if filesystem is not None:
-        from pyarrow import fs as pafs
-
         infos = filesystem.get_file_info(
             pafs.FileSelector(input_path, recursive=True))
         return sorted(
@@ -207,8 +214,6 @@ def _task_attempt_token() -> str:
     temp path would interleave their writes and the move could publish
     a corrupt file. Unique temp + deterministic target keeps the publish
     atomic: whichever attempt renames last wins with a COMPLETE file."""
-    from pyspark import TaskContext
-
     ctx = TaskContext.get()
     return str(ctx.taskAttemptId()) if ctx is not None else "local"
 
@@ -237,8 +242,6 @@ _ROW_META = ("block_id", "seq", "n_rows", "columns")
 def _sweep(fs, target: str) -> None:
     """Delete the other visible files of `target`'s directory: the
     per-part dynamic overwrite before _staged publishes a part."""
-    from pyarrow import fs as pafs
-
     for info in fs.get_file_info(
             pafs.FileSelector(posixpath.dirname(target))):
         if info.path != target and not info.base_name.startswith("."):
@@ -247,8 +250,6 @@ def _sweep(fs, target: str) -> None:
 
 def _drop_dir(fs, path: str) -> None:
     """Remove a directory tree if it exists."""
-    from pyarrow import fs as pafs
-
     if fs.get_file_info(path).type != pafs.FileType.NotFound:
         fs.delete_dir(path)
 
@@ -258,8 +259,6 @@ def _publish(batches, fs, target: str, **writer_opts) -> None:
     ParquetWriter into an attempt-unique hidden temp next to `target`
     (holding one batch at a time) and publish it with an atomic move.
     No batch: nothing is written."""
-    import pyarrow.parquet as pq
-
     target_dir = posixpath.dirname(target)
     tmp = _temp_path(target)
     writer = None
@@ -288,8 +287,10 @@ def _write_part(blocks, fs, blocks_root: str, snap: str, pid: int) -> dict:
     (encode_batch output, one row each) into
     <blocks_root>/snapshot_id=<snap>/part_id=<pid>/direct-<snap>-<pid>
     .parquet and return the part's metadata row (n_blocks == 0: nothing
-    written). The encode writers pass a stage directory as blocks_root
-    (_staged), which publishes the part into the live table.
+    written). The encode writers pass their job's stage as blocks_root
+    (_staged), which publishes the part into the live table; a stage
+    that is gone (the job failed and _staged dropped it) raises before
+    the write, so a killed task still running recreates nothing.
 
     One row group per block, so per-row-group `seq` statistics let a
     filtered decode (decode_files_direct filters=) skip pruned blocks'
@@ -304,6 +305,9 @@ def _write_part(blocks, fs, blocks_root: str, snap: str, pid: int) -> dict:
 
     def rows():
         for enc in blocks:
+            if not meta["n_blocks"] and fs.get_file_info(
+                    blocks_root).type == pafs.FileType.NotFound:
+                raise RuntimeError(f"{blocks_root} is gone: its job ended")
             cols = enc.column("columns")[0].as_py()
             meta["n_blocks"] += 1
             meta["n_rows"] += enc.column("n_rows")[0].as_py()
@@ -419,8 +423,6 @@ def encode_files_direct(spark: SparkSession, input_path: str, io: TableIO,
     bfs, broot = _fs_for(blocks_root or io.blocks_path, filesystem)
 
     def encoded(paths, pid):
-        import pyarrow.parquet as pq
-
         seq = 0
         for path in paths:
             rfs, rpath = _fs_for(path, filesystem)
@@ -441,7 +443,7 @@ def encode_files_direct(spark: SparkSession, input_path: str, io: TableIO,
 
         return _run_parts(spark, pending, work, _PART_META)
 
-    meta = _staged(bfs, broot, run)
+    meta = _staged(bfs, broot, snap, run)
     return asdict(commit_parts(spark, io, snap, len(done), meta, run_id))
 
 
@@ -449,8 +451,6 @@ def _first_block_columns(files: Sequence[str], filesystem=None) -> list:
     """Column metadata of the first block in `files` ([] for an empty
     table), read driver-side from one row group's `columns` leaf: the
     block decode_files_direct plans its read from (decode.plan_read)."""
-    import pyarrow.parquet as pq
-
     for f in files:
         fs, path = _fs_for(f, filesystem)
         with pq.ParquetFile(fs.open_input_file(path)) as pf:
@@ -462,8 +462,6 @@ def _first_block_columns(files: Sequence[str], filesystem=None) -> list:
 
 def _count_blocks(files: Sequence[str], filesystem=None) -> int:
     """Blocks in `files`, from their footers (one row per block)."""
-    import pyarrow.parquet as pq
-
     n = 0
     for f in files:
         fs, path = _fs_for(f, filesystem)
@@ -568,8 +566,6 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
     the in-task twin of decode_blocks(deletes=), zero IPC preserved.
 
     Returns {"n_rows", "n_parts", "n_blocks_read", "n_blocks_total"}."""
-    from pyarrow import fs as pafs
-
     from .decode import (MATCH_COUNTS, _limit_window, block_counts,
                          block_keep_py, make_decode_fn, plan_read)
 
@@ -602,7 +598,6 @@ def decode_files_direct(spark: SparkSession, io: TableIO, output_path: str,
         and (coords=True) the file's coordinates appended. Counts blocks
         into `cnt`."""
         import pyarrow.dataset as pads
-        import pyarrow.parquet as pq
 
         from .blocks import payload_field, validity_field
 
@@ -739,8 +734,6 @@ def write_snapshot(df, io: TableIO, snapshot_id: str, **layout) -> list:
     and return no row. Returns the tasks' metadata rows (part_id,
     n_blocks, n_rows, bytes_in, bytes_out); the blocks read back through
     the TableIO like any other snapshot."""
-    from pyspark import TaskContext
-
     from .encode import prepare_encode
 
     df, encode = prepare_encode(df, snapshot_id=snapshot_id, **layout)
@@ -756,35 +749,57 @@ def write_snapshot(df, io: TableIO, snapshot_id: str, **layout) -> list:
 
         return df.mapInArrow(work, from_arrow_schema(_PART_META)).collect()
 
-    return _staged(fs, root, run)
+    return _staged(fs, root, snapshot_id, run)
 
 
-def _staged(fs, root: str, write):
-    """THE publish step of every engine write of a path-level table:
-    `write(stage)` runs the job, whose tasks write each part under the
-    job-unique hidden directory `stage` (<root>/.stage-<uuid>) at the
-    part's final path relative to `root`. Only once it returned does
-    each staged file move into place, after a sweep of its destination
-    part directory's other visible files; the stage is dropped either
-    way. A failed job publishes nothing; a zombie attempt leaves only
-    hidden files, which vacuum_table reclaims. Returns what `write`
-    returned."""
-    import uuid
-
-    from pyarrow import fs as pafs
-
+def _staged(fs, root: str, snap: str, write):
+    """THE publish step of every engine write of a path-level table.
+    `write(stage)` runs the job: its tasks write each part under the
+    job-unique hidden `stage` (<root>/.stage-<uuid>) at its _part_file
+    path, and it returns their metadata rows. Only then does each row's
+    part move into place (on a thread pool: an object store's move is a
+    copy and a delete), after a sweep of its part directory's other
+    visible files; a row whose staged file is gone raises before any
+    move. While the job runs, the stage's `.job` marker is rewritten
+    every _STAGE_HEARTBEAT_SEC, which keeps vacuum_table off it. The
+    stage is dropped either way: a failed job publishes nothing, and a
+    zombie task that starts its write after the drop finds no stage
+    and writes nothing (_write_part). Returns the rows."""
     stage = posixpath.join(root, f".stage-{uuid.uuid4().hex[:16]}")
+    marker = posixpath.join(stage, ".job")
+    fs.create_dir(stage, recursive=True)
+    fs.open_output_stream(marker).close()
+    stop = threading.Event()
+
+    def heartbeat():
+        while not stop.wait(_STAGE_HEARTBEAT_SEC):
+            try:
+                fs.open_output_stream(marker).close()
+            except OSError:  # a missed beat; the next one retries
+                pass
+
+    beat = threading.Thread(target=heartbeat, daemon=True)
+    beat.start()
     try:
         out = write(stage)
-        for info in fs.get_file_info(pafs.FileSelector(
-                stage, recursive=True, allow_not_found=True)):
-            if (info.type == pafs.FileType.File
-                    and not info.base_name.startswith(".")):
-                target = posixpath.join(
-                    root, posixpath.relpath(info.path, stage))
-                fs.create_dir(posixpath.dirname(target), recursive=True)
-                _sweep(fs, target)
-                fs.move(info.path, target)
+        parts = [_part_file(snap, r["part_id"]) for r in out
+                 if r["n_blocks"]]
+        missing = [i.path for i in fs.get_file_info(
+            [posixpath.join(stage, p) for p in parts])
+            if i.type != pafs.FileType.File]
+        if missing:
+            raise FileNotFoundError(f"staged parts missing: {missing}")
+
+        def publish(part):
+            target = posixpath.join(root, part)
+            fs.create_dir(posixpath.dirname(target), recursive=True)
+            _sweep(fs, target)
+            fs.move(posixpath.join(stage, part), target)
+
+        with ThreadPoolExecutor(_PUBLISH_THREADS) as pool:
+            list(pool.map(publish, parts))
     finally:
+        stop.set()
+        beat.join()
         _drop_dir(fs, stage)
     return out

@@ -24,7 +24,11 @@ key="url"; identical rows either way).
 """
 from __future__ import annotations
 
+import time
+import warnings
 from typing import Optional
+
+from pyarrow import fs as pafs
 
 from pyspark.sql import functions as F
 
@@ -153,8 +157,6 @@ def compact_snapshot(io: TableIO, snapshot_id: str,
                f"snapshots {ids!r} are still live, full-table reads now "
                "double-serve these rows until they are deleted "
                "(pass delete_old=True / --delete-old)")
-        import warnings
-
         warnings.warn(msg)
         out["warning"] = msg
     return out
@@ -205,11 +207,14 @@ def vacuum_table(io: TableIO, min_age_sec: float = 3600.0) -> dict:
       a RUNNING job's in-flight temps safe — same contract as Delta's
       retention check; dotfile temps are already invisible to every
       reader, this reclaims the bytes);
-    * **stale staged snapshots**: files a killed driver or a zombie
-      task left in a hidden `.stage-*` directory (engine/direct._staged,
-      the publish step of every encode, DML and compaction write) go
-      under the same age guard and count as temps;
-      an old staging directory left without files is removed;
+    * **stale staged snapshots**: a hidden `.stage-*` directory
+      (engine/direct._staged, the publish step of every encode, DML and
+      compaction write) that a killed driver or a zombie task left is
+      removed whole once its NEWEST file (and the directory itself) is
+      older than min_age_sec; its files count as temps. The age is the
+      stage's, not each file's: a running job rewrites a marker in its
+      stage every direct._STAGE_HEARTBEAT_SEC, so a part it staged
+      long ago is never deleted under it;
     * **orphaned delete rows**: a crash between compaction's
       blocks-directory drop and deletes-directory drop leaves delete
       bitmaps whose snapshot no longer exists. Their coordinates match
@@ -219,27 +224,27 @@ def vacuum_table(io: TableIO, min_age_sec: float = 3600.0) -> dict:
 
     Driver-side metadata/listing work only (pyarrow.fs, storage-
     agnostic) — no payload byte is read. Returns counts. Idempotent."""
-    import time
-
-    from pyarrow import fs as pafs
-
     removed_tmp = 0
     bytes_tmp = 0
     fs, root = _fs_for(io.blocks_path)
     now = time.time()
+
+    def age(info):
+        return now - (info.mtime.timestamp() if info.mtime else 0.0)
+
+    stages = {}  # top-level .stage-* directory name -> its files
     sel = pafs.FileSelector(root, recursive=True, allow_not_found=True)
     for info in fs.get_file_info(sel):
         if info.type != pafs.FileType.File:
             continue
-        if not (info.base_name.endswith(".inprogress")
-                or "/.stage-" in info.path):
-            continue
-        mtime = info.mtime.timestamp() if info.mtime else 0.0
-        if now - mtime < min_age_sec:
-            continue
-        fs.delete_file(info.path)
-        removed_tmp += 1
-        bytes_tmp += info.size or 0
+        top = info.path[len(root):].lstrip("/").split("/", 1)[0]
+        if top.startswith(".stage-"):
+            stages.setdefault(top, []).append(info)
+        elif (info.base_name.endswith(".inprogress")
+              and age(info) >= min_age_sec):
+            fs.delete_file(info.path)
+            removed_tmp += 1
+            bytes_tmp += info.size or 0
 
     removed_del_snaps = []
     dfs, droot = _fs_for(io.deletes_path)
@@ -249,13 +254,12 @@ def vacuum_table(io: TableIO, min_age_sec: float = 3600.0) -> dict:
         if d.type == pafs.FileType.Directory]
     live = {d.base_name for d in dirs}
     for d in dirs:
+        files = stages.get(d.base_name, [])
         if (d.base_name.startswith(".stage-")
-                and now - (d.mtime.timestamp() if d.mtime else 0.0)
-                >= min_age_sec
-                and not any(i.type == pafs.FileType.File
-                            for i in fs.get_file_info(pafs.FileSelector(
-                                d.path, recursive=True)))):
+                and all(age(i) >= min_age_sec for i in [d, *files])):
             fs.delete_dir(d.path)
+            removed_tmp += len(files)
+            bytes_tmp += sum(i.size or 0 for i in files)
     for info in dfs.get_file_info(dsel):
         if info.type != pafs.FileType.Directory:
             continue

@@ -467,3 +467,79 @@ def test_failed_dml_and_compaction_publish_nothing(spark, tmp_path):
         assert _visible_tree(io.blocks_path) == before
         assert io.committed_parts(snap) == set()
     assert not glob.glob(os.path.join(io.blocks_path, ".stage-*"))
+
+
+@pytest.mark.parametrize("act", ["vacuum", "delete"])
+def test_staged_part_under_a_running_job(spark, tmp_path, monkeypatch, act):
+    """Partition 0's part is staged while partition 1 still runs.
+    vacuum: the part file, the stage's marker and the stage directory
+    are aged 2 h, and vacuum_table (1 h guard) runs after a few
+    heartbeats: it removes nothing, and the job publishes and
+    checkpoints both parts. delete: the staged file is deleted; the job
+    raises before it publishes or checkpoints anything."""
+    import threading
+    import time
+
+    from sparkolumnar.engine import direct
+    from sparkolumnar.engine.maintenance import vacuum_table
+
+    monkeypatch.setattr(direct, "_STAGE_HEARTBEAT_SEC", 0.2)
+    io = TableIO(spark, str(tmp_path / "t"))
+    src = str(tmp_path / "src")
+    _numeric_df(spark).write.parquet(src)  # 2 files: 2 parts
+    go = str(tmp_path / "go")
+
+    class WaitPlan:
+        # a codec plan whose lookups in partition 1 wait for the test's
+        # go file, so the job is still running while the test acts
+        def get(self, name):
+            import time
+
+            from pyspark import TaskContext
+
+            deadline = time.time() + 120
+            while (TaskContext.get().partitionId() == 1
+                   and not os.path.exists(go) and time.time() < deadline):
+                time.sleep(0.1)
+            return None
+
+    out = {}
+
+    def run():
+        try:
+            out["result"] = encode_files_direct(spark, src, io,
+                                                snapshot_id="s",
+                                                plan=WaitPlan())
+        except Exception as e:  # noqa: BLE001 - asserted below
+            out["error"] = e
+
+    job = threading.Thread(target=run)
+    job.start()
+    pattern = os.path.join(io.blocks_path, ".stage-*", "snapshot_id=s",
+                           "part_id=0", "direct-s-0.parquet")
+    deadline = time.time() + 120
+    while not glob.glob(pattern) and time.time() < deadline:
+        time.sleep(0.1)
+    (part0,) = glob.glob(pattern)
+    stage = os.path.dirname(os.path.dirname(os.path.dirname(part0)))
+    if act == "vacuum":
+        old = time.time() - 7200
+        for p in (part0, os.path.join(stage, ".job"), stage):
+            os.utime(p, (old, old))
+        time.sleep(1)
+        assert vacuum_table(io)["n_tmp_files_removed"] == 0
+    else:
+        os.remove(part0)
+    open(go, "w").close()
+    job.join()
+    if act == "vacuum":
+        assert out["result"]["parts_encoded"] == 2
+        assert io.committed_parts("s") == {0, 1}
+        assert decode_blocks(io.read_blocks(), columns=["id"]).count() \
+            == 20000
+    else:
+        assert isinstance(out["error"], FileNotFoundError), out
+        assert "direct-s-0.parquet" in str(out["error"])
+        assert _visible_tree(io.blocks_path) == {}
+        assert io.committed_parts("s") == set()
+    assert not glob.glob(os.path.join(io.blocks_path, ".stage-*"))

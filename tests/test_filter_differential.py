@@ -159,10 +159,15 @@ def test_ipc_direct_and_duckdb_agree_on_random_dnf(spark, tmp_path_factory,
                                                   table, predicates):
     base = tmp_path_factory.mktemp("diff")
     io = TableIO(spark, str(base / "t"))
-    # snapshot "a" holds every column and comes first in (snapshot,
-    # part) order, so both reads plan from its blocks; "b" repeats the
-    # rows under new keys without `i` and the struct `m`, whose filter
-    # leaves then read as null (DuckDB sees the null-filled union)
+    # snapshot "a" holds every column; "b" repeats the rows under keys
+    # shifted by 1000 without `i` and the struct `m`, whose filter
+    # leaves then read as null (DuckDB sees the null-filled union). Both
+    # reads plan from an "a" block: decode_files_direct from the first
+    # file in (snapshot, part) order, decode_blocks from the first row
+    # of the Spark scan, which opens the largest file first. That is an
+    # "a" file: the clustering boundaries shift with the keys, so part j
+    # holds the same rows in both snapshots, and "a" stores two more
+    # columns, so each "a" file is larger than "b"'s file of its part.
     old = table.set_column(0, "k", pc.add(table.column("k"), 1000))
     union = pa.concat_tables([table, old.set_column(
         1, "i", pa.nulls(len(old), pa.int64())).set_column(

@@ -236,8 +236,9 @@ def test_vacuum_removes_stale_temps_and_orphan_deletes(spark, tmp_path):
 def test_vacuum_removes_stale_staged_snapshots(spark, tmp_path):
     """Files left in a hidden `.stage-*` directory (a DML or compaction
     job whose driver died before publishing) are invisible to readers
-    and reclaimed under the age guard; an emptied staging directory is
-    removed, a fresh one (a running job's) survives."""
+    and reclaimed under the age guard, the staging directory with them;
+    a fresh one survives, and so does one holding an old part next to a
+    fresh job marker (a running job's heartbeat)."""
     import os
     import shutil
 
@@ -253,13 +254,16 @@ def test_vacuum_removes_stale_staged_snapshots(spark, tmp_path):
     live = next(os.path.join(d, f) for d, _, fs in os.walk(io.blocks_path)
                 for f in fs if f.endswith(".parquet"))
     staged = {}
-    for name, mtime in (("old", 1), ("new", None)):
-        p = os.path.join(io.blocks_path, f".stage-{name}", "snapshot_id=s2",
-                         "part_id=0", "direct-s2-0.parquet")
+    for name, mtime in (("old", 1), ("new", None), ("running", 1)):
+        stage = os.path.join(io.blocks_path, f".stage-{name}")
+        p = os.path.join(stage, "snapshot_id=s2", "part_id=0",
+                         "direct-s2-0.parquet")
         os.makedirs(os.path.dirname(p))
         shutil.copy(live, p)
+        if name == "running":
+            open(os.path.join(stage, ".job"), "w").close()
         if mtime:  # the staged file and its staging directory
-            for q in (p, os.path.join(io.blocks_path, f".stage-{name}")):
+            for q in (p, stage):
                 os.utime(q, (mtime, mtime))
         staged[name] = p
     # staged parts are not part of the table, for Spark's listing and
@@ -275,4 +279,5 @@ def test_vacuum_removes_stale_staged_snapshots(spark, tmp_path):
     assert st["tmp_bytes_reclaimed"] == os.path.getsize(live)
     assert not os.path.exists(os.path.join(io.blocks_path, ".stage-old"))
     assert os.path.exists(staged["new"])
+    assert os.path.exists(staged["running"])
     assert decode_blocks(io.read_blocks()).count() == 100

@@ -1,7 +1,7 @@
 """A part file reaches a live part directory through one publish step:
 under sparkolumnar/, `_sweep(` is called only by the staged-publish
-helper (direct._staged), and `.move(` only by the task-side writer
-(direct._publish) and that helper. A task that swept or moved files
+helper (the per-part `publish` closure of direct._staged), and `.move(`
+only by the task-side writer (direct._publish) and that closure. A task that swept or moved files
 into the live table itself would make a failed job's finished parts
 visible; ast finds such a call without running the code (stdlib only)."""
 
@@ -9,18 +9,20 @@ import ast
 import pathlib
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
-CALLERS = {"_sweep": {"_staged"}, "move": {"_publish", "_staged"}}
+CALLERS = {"_sweep": {"_staged.publish"},
+           "move": {"_publish", "_staged.publish"}}
 
 
 def _calls(path):
-    """(called name, innermost enclosing function, line) of every call
-    in `path` of a name in CALLERS, as a bare name or an attribute."""
+    """(called name, dotted name of the innermost enclosing function,
+    line) of every call in `path` of a name in CALLERS, as a bare name
+    or an attribute."""
     out = []
 
     def visit(node, fn):
         for child in ast.iter_child_nodes(node):
             if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                visit(child, child.name)
+                visit(child, f"{fn}.{child.name}" if fn else child.name)
                 continue
             if isinstance(child, ast.Call):
                 f = child.func
@@ -43,5 +45,5 @@ def test_only_the_publish_step_sweeps_or_moves():
     assert {p: cs for p, cs in stray.items() if cs} == {}
     direct = {(name, fn) for name, fn, _ in
               calls["sparkolumnar/engine/direct.py"]}
-    assert direct == {("_sweep", "_staged"), ("move", "_publish"),
-                      ("move", "_staged")}
+    assert direct == {("_sweep", "_staged.publish"), ("move", "_publish"),
+                      ("move", "_staged.publish")}
